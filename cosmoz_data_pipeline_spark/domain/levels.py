@@ -26,13 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators import bucketed_window
 from ..operators.asof import asof_join_both
-from ..operators.bucketed_window import (
-    BUCKET_SECS,
-    bucketed_auto,
-    bucketed_lag,
-    overlap_buckets,
-)
+from ..operators.bucketed_window import BUCKET_SECS, bucketed_auto, bucketed_lag
 from . import physics
 
 # payload columns compared by the duplicate detector. The reference
@@ -59,265 +55,20 @@ RAW_PAYLOAD = (
 
 LEVEL1_FIELDS = RAW_PAYLOAD[:-1]  # sans flag (recomputed)
 
-# Round-9 A/B hook (tools/level1_dupw_ab.py): the duplicate-detector
-# window partitions by (site_no, all 15 payload columns) — a 16-field
-# composite sort key whose leading column has 8 distinct values, so
-# Spark's 8-byte sort-prefix comparison resolves almost nothing and
-# every comparison walks the wide key field by field. LEVEL4_STAGES
-# .json localizes the level pipeline's superlinear decade exponent to
-# exactly this stage (level1 prefix: 5.96 s → 79.9 s, alpha=1.127,
-# while the bare site_no sort floor runs alpha=0.722). The variant
-# partitions by (xxhash64(payload), site_no) and orders by
-# (payload struct, time): the 8-byte hash prefix now resolves nearly
-# every comparison, identical payload rows stay CONTIGUOUS within the
-# hash partition (so lag() still walks the same-payload series), and
-# a null-safe struct equality on the lagged row makes hash collisions
-# harmless — two different payloads sharing a hash are separated by
-# the struct sort and fail the equality, so the pair semantics are
-# EXACT, not probabilistic. ADOPTED round 9 on the isolated-stage A/B
-# (LEVEL1_DUPW_AB.json, x1000, 3 repeats interleaved, identical
-# 86 813 180 output rows every run): level1 best-of-3 52.1 s (hash)
-# vs 66.1 s (composite), steady-state 52 s vs 76 s (1.47x); the full
-# level4 pipeline measured 123.9 s vs 128.1 s best-of-2 (downstream
-# stages dilute the stage win). True/False force either variant.
-#
-# CORPUS-GATED round 10 (None = auto, same >=128-partition gate as
-# the bucketed shapes): BENCH_AB_r10.json (3 repeats x 3 passes,
-# r8-final vs r10) showed the hash layout costs a consistent
-# ~5-13 % on the sf0.1 level pipeline (xxhash64 over 16 columns per
-# row dominates when the composite sort is already cheap), while the
-# 1.47x stage win only exists where the per-site sort is the
-# bottleneck. Small corpora keep the composite window; at-scale
-# corpora get the hash prefix — exactly the SimHash-blocking
-# precedent (corpus-scaled physical shape, fixed semantics).
-LEVEL1_DUPW_HASH: bool | None = None
-
-# Round-10 scale shape (VERDICT r9 task 2): the per-site sequence
-# windows — level1's lag(count) over partitionBy(site_no) and
-# level4's ±3h range frame — are 8-task sorts whose per-task volume
-# grows linearly with per-site history (19.3 GiB mem + 5.5 GiB disk
-# of sort spill in the level1 prefix at x1000, LEVEL4_STAGES.json; no
-# partition count splits a sort keyed on 8 values). The bucketed
-# variants (operators/bucketed_window.py) compute the identical rows
-# through balanced (site, week-bucket) groups plus a tiny boundary
-# exchange. None = auto: engage when the frame's own input-file bytes
-# say the corpus has outgrown the key count (>= 512 MiB — x1000
-# engages, sf0.1/x100 keep the fused single-window plan at small
-# scale; round 11 moved the basis off the session-global
-# shuffle-partition proxy, see bucketed_window.bucketed_auto).
-# Identity pinned variant-vs-variant by tests/test_bucketed_window.py.
-#
-# ADJUDICATED round 10 (tools/level_bucketed_ab.py, interleaved
-# noop-forced, 2 repeats):
-# - LEVEL1_SEQ_BUCKETED: ADOPTED (auto). LEVEL_BUCKETED_AB.json at
-#   x1000: level1 prefix 67.6 s -> 21.5 s (3.14x) with the sort spill
-#   RETIRED (18.0 GiB mem + 5.1 GiB disk -> zero); 1.14x even at
-#   x100; full level4 171.7 s -> 137.3 s (1.25x) riding on it.
-# - LEVEL4_FRAME_BUCKETED: MEASURED OUT (default False). With the
-#   seq win held fixed, the ±3h halo shape LOSES at x1000
-#   (LEVEL_FRAME_AB.json: plain frame 124.6 s vs halo 181.0 s,
-#   identical spill columns): level3's input to the frame is 5
-#   narrow columns, so the 8-task range sort is cheap, while the
-#   halo pays an explode + a second full hash shuffle of the same
-#   rows. The hook stays for a wider-row / denser-cadence deployment
-#   where the per-site frame sort would spill.
-LEVEL1_SEQ_BUCKETED: bool | None = None
-LEVEL4_FRAME_BUCKETED: bool | None = False
-
-# Round-12 second-session lever: level1 is the level pipeline's
-# largest single x1000 stage (82.6 s prefix, LEVEL4_STAGES.json) and
-# pays TWO full wide-fact shuffles — the (site, week) sequence-lag
-# exchange and the (payload-hash, site) duplicate-window exchange.
-# The FUSED SCAN collapses them to one wide shuffle + a small one:
-#
-#   pass 1 (one (site, week-bucket) exchange): prev_count via the
-#   bucketed_lag logic inlined, PLUS a ±29-min same-hash CANDIDATE
-#   screen — occurrences of xxhash64(site, payload) in a ±1740 s
-#   range frame (bucket-edge rows additionally probe the adjacent
-#   buckets' 29-min tail/head hash SETS, one tiny aggregate row per
-#   (site, week), broadcast back like the lag boundary).
-#   pass 2 (exact confirm): the ORIGINAL hash-prefixed duplicate
-#   window runs verbatim on the candidate subset only.
-#
-# Exactness: the screen is a SUPERSET of every row that shares
-# (site, payload) with another row ≤29 min away (hash equality is
-# implied by payload equality; edge sets and non-empty-bucket
-# chaining only over-include). Restricting the original dup logic to
-# any superset S that is closed over ≤29-min same-payload neighbors
-# yields identical drops: a row's immediate same-payload predecessor
-# is in S whenever it is ≤29 min away (both flagged by the screen),
-# so the in-subset lag sees the same neighbor; when it is >29 min
-# away, any farther in-subset predecessor is older still and the row
-# stays kept either way. Rows outside S are kept, as the full window
-# would keep them. Hash collisions only enlarge S; the confirm pass
-# compares full payloads (null-safe struct equality), so drops are
-# exact, never probabilistic.
-#
-# At the domain's data shape ~2/7 of rows are candidates (the
-# injected duplicates and their sources), so the second wide exchange
-# shrinks ~3.5x; on corpora with realistic (rare) duplication it
-# approaches zero. Identity pinned by tests/test_level1_dup_subset.py.
-#
-# MEASURED OUT round 12 (LEVEL1_DUPSUBSET_AB.json, interleaved x1000,
-# 3 repeats): steady-state level1 prefix reads 40.6/45.8 s (twowin)
-# vs 97.6/194.9 s (subset) — the byte saving is real but the
-# cand/rest filter-union split makes Spark evaluate the expensive
-# pass-1 window subtree TWICE (one per branch; AQE reuses the
-# exchange but not the window evaluation above it), and the ±29-min
-# collect_list screen frames are interpreted per row. Avoiding the
-# double-eval requires either materializing the full wide fact
-# (persist at 100 TB scale) or folding exact payload comparison into
-# the frame buffer (per-row wide-struct collection, plus a
-# nondeterministic tiebreak to reproduce the oracle-pinned
-# equal-time lag semantics) — both trade a ~5 GiB shuffle saving for
-# costs the A/B says exceed it. The hook stays for a deployment with
-# near-zero duplicate rates AND a cheap materialization layer; the
-# shipped shape remains LEVEL1_SEQ_BUCKETED + LEVEL1_DUPW_HASH.
-LEVEL1_DUP_SUBSET: bool | None = False
-
-_DUP_WINDOW_SECS = 29 * 60
-
-
-def _level1_fused_scan(raw: DataFrame) -> DataFrame:
-    """raw + prev_count + is_duplicate through one (site, week-bucket)
-    exchange and a candidate-subset confirm — see LEVEL1_DUP_SUBSET.
-    Reference semantics unchanged (cosmoz_process_levels.py:340-429)."""
-    R = _DUP_WINDOW_SECS
-    secs = F.col("time").cast("long")
-    with_b = raw.withColumn(
-        "__bkt", F.floor(secs / F.lit(BUCKET_SECS)).cast("long")
-    ).withColumn("__hh", F.xxhash64("site_no", *RAW_PAYLOAD))
-
-    w_in = Window.partitionBy("site_no", "__bkt").orderBy("time")
-    w_rng = (
-        Window.partitionBy("site_no", "__bkt")
-        .orderBy(secs)
-        .rangeBetween(-R, R)
-    )
-    # occurrences of my hash within ±29 min (incl. self and all
-    # equal-time peers — range frames include every order-value tie,
-    # which keeps the screen a superset at ties)
-    near = F.size(
-        F.filter(
-            F.collect_list("__hh").over(w_rng), lambda x: x == F.col("__hh")
-        )
-    )
-
-    bstart = F.col("__bkt") * F.lit(BUCKET_SECS)
-    bend = (F.col("__bkt") + 1) * F.lit(BUCKET_SECS)
-    # one row per (site, week): lag boundary value + edge hash sets
-    tails = with_b.groupBy("site_no", "__bkt").agg(
-        F.max_by("count", secs).alias("__tail_count"),
-        F.collect_set(F.when(secs >= bend - R, F.col("__hh"))).alias("__tail_set"),
-        F.collect_set(F.when(secs < bstart + R, F.col("__hh"))).alias("__head_set"),
-    )
-    w_chain = Window.partitionBy("site_no").orderBy("__bkt")
-    chained = tails.select(
-        "site_no",
-        "__bkt",
-        F.lag("__tail_count").over(w_chain).alias("__pc_b"),
-        F.lag("__tail_set").over(w_chain).alias("__prev_tail"),
-        F.lead("__head_set").over(w_chain).alias("__next_head"),
-    )
-
-    out = (
-        with_b.withColumn("__rn", F.row_number().over(w_in))
-        .withColumn("prev_count", F.lag("count").over(w_in))
-        .withColumn("__near", near)
-        .join(F.broadcast(chained), ["site_no", "__bkt"], "left")
-        .withColumn(
-            "prev_count",
-            F.when(F.col("__rn") == 1, F.col("__pc_b")).otherwise(
-                F.col("prev_count")
-            ),
-        )
-        .withColumn(
-            "__cand",
-            (F.col("__near") >= 2)
-            | (
-                (secs < bstart + R)
-                & F.coalesce(
-                    F.array_contains("__prev_tail", F.col("__hh")), F.lit(False)
-                )
-            )
-            | (
-                (secs >= bend - R)
-                & F.coalesce(
-                    F.array_contains("__next_head", F.col("__hh")), F.lit(False)
-                )
-            ),
-        )
-        .drop("__rn", "__near", "__pc_b", "__prev_tail", "__next_head", "__bkt")
-    )
-
-    # exact confirm: the original hash-prefixed duplicate window,
-    # verbatim, over the candidate subset only (prev_count already
-    # attached; non-candidates are provably never duplicates)
-    pay = F.struct(*[F.col(c) for c in RAW_PAYLOAD])
-    dupw = Window.partitionBy("__hh", "site_no").orderBy(pay, "time")
-    prev_pay = F.lag(pay).over(dupw)
-    cand = (
-        out.where(F.col("__cand"))
-        .withColumn(
-            "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag("time").over(dupw))
-        )
-        .withColumn(
-            "is_duplicate",
-            F.col("__pt").isNotNull()
-            & (F.col("__pt") >= F.col("time") - F.expr("INTERVAL 29 MINUTE")),
-        )
-        .drop("__pt")
-    )
-    rest = out.where(~F.col("__cand")).withColumn("is_duplicate", F.lit(False))
-    return cand.unionByName(rest).drop("__hh", "__cand")
-
-# Round-12/13 lever (LEVEL4_STAGES.json round12_clean_reprobe): the
-# level pipeline's x1000 cost after the level1 prefix lives in
-# level2's temporal attachments — the 100M-row wide fact re-shuffles
-# for the hour-grain intensity join, the day-grain SILO join and the
-# as-of union SEPARATELY (+123 s and +20.4 GiB shuffle over level1).
-# At x1000 the hour table is ~23M rows (one per site-hour, growing
-# linearly with history — NOT broadcastable), so both grain joins are
-# sort-merge joins that each pay a full fact exchange + sort.
-#
-# The FUSED shape resolves all four attachments in ONE shuffle: union
-# the fact probe rows with (a) the intensity value rows (as the as-of
-# union already did), (b) the per-(site, hour) pick rows anchored at
-# their HOUR START, and (c) the per-(site, day) SILO pick rows
-# anchored at their DAY START; hash-shuffle once on
-# (site_no[, week-bucket]); then running last(..., ignorenulls)
-# windows resolve in-partition:
-#   - hour match:  last hour-pick struct, gated hr == my hour
-#   - SILO day:    last day-pick struct, gated day == my date
-#   - as-of bw/fw: the asof_join_both machinery, inlined
-# Anchoring a pick at its period start makes every fact row of the
-# period scan AFTER its pick row (picks order before probes at equal
-# time), so the running last IS the equi-join, row for row. The
-# session pins UTC (session.py) and the 7-day bucket width is a
-# multiple of 86400 s, so hour/day periods never straddle a bucket —
-# the pick structs need no cross-bucket carry (guarded in code); only
-# the as-of values carry across buckets, exactly as in asof_join_both.
-# The extra union rows are narrow (the fact's payload columns ride as
-# nulls) and scan-local; the win is retiring TWO full wide-fact
-# exchanges + their sorts. None = auto (same frame-input-bytes gate
-# as the other scale shapes); identity pinned by
-# tests/test_level2_fused.py across fused×window-shape variants.
-#
-# ADOPTED round 12 on the interleaved x1000 A/B (LEVEL2_FUSED_AB
-# .json, 3 repeats, shipped auto defaults on every other flag):
-# level2 prefix best 159.1 s -> 121.0 s (1.31x) with fused's WORST
-# run (139.0 s) beating joined's best, -16% shuffle bytes (33.3 ->
-# 27.9 GiB), zero spill both, and far lower exposure to the ~2.4x
-# large-shuffle I/O bimodality (joined swung 159-347 s across its
-# three runs; fused 121-139 s). The x100 cells in the artifact
-# measure a FORCED variant below the gate (x100 events = 184 MiB
-# < 512 MiB) that never ships; see the artifact's adjudication_note,
-# including why the one fast joined level4 x1000 reading is a
-# drift-window artifact (inconsistent with its own prefix).
-LEVEL2_FUSED_TEMPORAL: bool | None = None
-
-# the shared corpus gate lives with the operator
-_bucketed_auto = bucketed_auto
+# Physical shape. Each level has one logical definition and exactly two
+# physical shapes, chosen once per chain by one scale decision ``big``
+# (the chain entries at the bottom of this module measure it):
+# - small (every corpus below BUCKETED_MIN_INPUT_BYTES): per-site
+#   windows — plain lag, the composite-key duplicate window, level2's
+#   two grain joins plus one as-of union;
+# - big: balanced (site, week-bucket) groups, because a window keyed on
+#   ~8 sites cannot be split by any partition count and spills at
+#   x1000 — bucketed_lag for prev_count (LEVEL_BUCKETED_AB.json), the
+#   hash-prefixed duplicate window (LEVEL1_DUPW_AB.json) and the fused
+#   bucketed level2 attach (LEVEL2_FUSED_AB.json, LEVEL_ASOF_AB.json).
+# level4's plain ±3h frame serves both. Measured out and deleted:
+# level4's bucketed halo frame (LEVEL_FRAME_AB.json) and level1's
+# duplicate-candidate scan (LEVEL1_DUPSUBSET_AB.json).
 
 _ORD2, _SRC2, _BKT2 = "__l2_ord", "__l2_src", "__l2_bkt"
 
@@ -327,10 +78,19 @@ def _fused_temporal_attach(
     int_slim: DataFrame,
     hourly: DataFrame,
     silo_pick: DataFrame,
-    scale_hint: bool | None = None,
 ) -> DataFrame:
     """level2's hour-grain, day-grain and both as-of attachments in a
-    single (site_no[, week-bucket]) shuffle — see LEVEL2_FUSED_TEMPORAL.
+    single (site_no, week-bucket) shuffle — the big shape, which
+    retires two wide-fact grain-join exchanges (LEVEL2_FUSED_AB.json).
+
+    The fact rows are unioned with the intensity value rows, the
+    per-(site, hour) pick rows anchored at their hour start and the
+    per-(site, day) SILO pick rows anchored at their day start; running
+    last(..., ignorenulls) windows then resolve every attachment in
+    partition. Picks order before probes at equal time, so every fact
+    row of a period scans after its pick and the running last is the
+    equi-join, row for row. Hours and days never straddle a day-aligned
+    bucket (UTC session), so only the as-of values carry across buckets.
 
     Output = ``fact`` columns + intensity_hour, n_hour_rows,
     silo_temperature, silo_humidity, intensity_bw, intensity_fw —
@@ -338,9 +98,6 @@ def _fused_temporal_attach(
     cosmoz_process_levels.py:201-216 SILO day, :251-257 hour match,
     :263-274 as-of fallbacks).
     """
-    from ..operators import asof
-    from ..operators.bucketed_window import BUCKET_SECS
-
     fact_cols = fact.columns
     hs_t = "struct<hr:timestamp,ih:double,nh:bigint>"
     ds_t = "struct<day:date,st:double,sh:double>"
@@ -401,96 +158,66 @@ def _fused_temporal_attach(
     )
     u = lhs.unionByName(rhs_iv).unionByName(rhs_h).unionByName(rhs_d)
 
-    if asof.ASOF_BUCKETED is not None:
-        bucketed = asof.ASOF_BUCKETED
-    elif scale_hint is not None:
-        # caller knows the corpus scale when the fact frame has no
-        # file lineage the auto gate could size (the scan-local
-        # level1: data enters through per-file kernels over
-        # spark.range, so inputFiles() is empty — round 15)
-        bucketed = scale_hint
-    else:
-        bucketed = _bucketed_auto(u)
-    if bucketed:
-        if BUCKET_SECS % 86400:
-            raise ValueError(
-                f"fused level2 requires day-aligned buckets, got {BUCKET_SECS}s"
-            )
-        u = u.withColumn(
-            _BKT2, F.floor(F.col(_ORD2).cast("long") / F.lit(BUCKET_SECS)).cast("long")
+    if BUCKET_SECS % 86400:
+        raise ValueError(
+            f"fused level2 requires day-aligned buckets, got {BUCKET_SECS}s"
         )
-        wb_in = (
-            Window.partitionBy("site_no", _BKT2)
-            .orderBy(F.col(_ORD2).asc(), F.col(_SRC2).asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wf_in = (
-            Window.partitionBy("site_no", _BKT2)
-            .orderBy(F.col(_ORD2).desc(), F.col(_SRC2).desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        # as-of carry across buckets (asof_join_both's tail/carry,
-        # single value column); picks never need one — period-aligned
-        nn = F.when(F.col("__iv").isNotNull(), F.col(_ORD2))
-        tails = u.groupBy("site_no", _BKT2).agg(
-            F.max_by("__iv", nn).alias("__tl_bw"),
-            F.min_by("__iv", nn).alias("__tl_fw"),
-        )
-        w_bw = (
-            Window.partitionBy("site_no")
-            .orderBy(F.col(_BKT2).asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_fw = (
-            Window.partitionBy("site_no")
-            .orderBy(F.col(_BKT2).desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carries = tails.select(
-            "site_no",
-            _BKT2,
-            F.last("__tl_bw", ignorenulls=True).over(w_bw).alias("__cr_bw"),
-            F.last("__tl_fw", ignorenulls=True).over(w_fw).alias("__cr_fw"),
-        )
-        resolved = (
-            u.select(
-                *fact_cols,
-                _SRC2,
-                _BKT2,
-                F.last("__iv", ignorenulls=True).over(wb_in).alias("__in_bw"),
-                F.last("__iv", ignorenulls=True).over(wf_in).alias("__in_fw"),
-                F.last("__hs", ignorenulls=True).over(wb_in).alias("__h"),
-                F.last("__ds", ignorenulls=True).over(wb_in).alias("__d"),
-            )
-            .join(F.broadcast(carries), ["site_no", _BKT2], "left")
-            .select(
-                *fact_cols,
-                _SRC2,
-                F.coalesce("__in_bw", "__cr_bw").alias("__bw"),
-                F.coalesce("__in_fw", "__cr_fw").alias("__fw"),
-                "__h",
-                "__d",
-            )
-        )
-    else:
-        wb = (
-            Window.partitionBy("site_no")
-            .orderBy(F.col(_ORD2).asc(), F.col(_SRC2).asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wf = (
-            Window.partitionBy("site_no")
-            .orderBy(F.col(_ORD2).desc(), F.col(_SRC2).desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        resolved = u.select(
+    u = u.withColumn(
+        _BKT2, F.floor(F.col(_ORD2).cast("long") / F.lit(BUCKET_SECS)).cast("long")
+    )
+    wb_in = (
+        Window.partitionBy("site_no", _BKT2)
+        .orderBy(F.col(_ORD2).asc(), F.col(_SRC2).asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wf_in = (
+        Window.partitionBy("site_no", _BKT2)
+        .orderBy(F.col(_ORD2).desc(), F.col(_SRC2).desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    # as-of carry across buckets (asof_join_both's tail/carry,
+    # single value column); picks never need one — period-aligned
+    nn = F.when(F.col("__iv").isNotNull(), F.col(_ORD2))
+    tails = u.groupBy("site_no", _BKT2).agg(
+        F.max_by("__iv", nn).alias("__tl_bw"),
+        F.min_by("__iv", nn).alias("__tl_fw"),
+    )
+    w_bw = (
+        Window.partitionBy("site_no")
+        .orderBy(F.col(_BKT2).asc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_fw = (
+        Window.partitionBy("site_no")
+        .orderBy(F.col(_BKT2).desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    carries = tails.select(
+        "site_no",
+        _BKT2,
+        F.last("__tl_bw", ignorenulls=True).over(w_bw).alias("__cr_bw"),
+        F.last("__tl_fw", ignorenulls=True).over(w_fw).alias("__cr_fw"),
+    )
+    resolved = (
+        u.select(
             *fact_cols,
             _SRC2,
-            F.last("__iv", ignorenulls=True).over(wb).alias("__bw"),
-            F.last("__iv", ignorenulls=True).over(wf).alias("__fw"),
-            F.last("__hs", ignorenulls=True).over(wb).alias("__h"),
-            F.last("__ds", ignorenulls=True).over(wb).alias("__d"),
+            _BKT2,
+            F.last("__iv", ignorenulls=True).over(wb_in).alias("__in_bw"),
+            F.last("__iv", ignorenulls=True).over(wf_in).alias("__in_fw"),
+            F.last("__hs", ignorenulls=True).over(wb_in).alias("__h"),
+            F.last("__ds", ignorenulls=True).over(wb_in).alias("__d"),
         )
+        .join(F.broadcast(carries), ["site_no", _BKT2], "left")
+        .select(
+            *fact_cols,
+            _SRC2,
+            F.coalesce("__in_bw", "__cr_bw").alias("__bw"),
+            F.coalesce("__in_fw", "__cr_fw").alias("__fw"),
+            "__h",
+            "__d",
+        )
+    )
 
     out = resolved.where(F.col(_SRC2) == 1)
     hr_gate = F.col("__h")["hr"] == F.date_trunc("hour", F.col("time"))
@@ -551,7 +278,7 @@ def raw_to_level1_scan_local(spark, sink_path: str) -> DataFrame:
     return _finish_level1(flagged)
 
 
-def raw_to_level1(raw: DataFrame) -> DataFrame:
+def raw_to_level1(raw: DataFrame, *, big: bool) -> DataFrame:
     """raw_values → level1: 29-min exact-duplicate drop, first-row
     skip, ±20 % count-jump / low-battery flag ladder
     (cosmoz_process_levels.py:340-429; raw->level1.sql:88-96).
@@ -566,58 +293,32 @@ def raw_to_level1(raw: DataFrame) -> DataFrame:
     prev_count comes from DIFFERENCE() over the unfiltered series
     (:357-360, :389 — duplicates still consume their diff), i.e. a
     plain lag over raw order including duplicate rows.
+
+    ``big`` picks the physical shape (module comment); the rows are
+    identical either way.
     """
-    dup_subset = (
-        _bucketed_auto(raw) if LEVEL1_DUP_SUBSET is None else LEVEL1_DUP_SUBSET
-    )
-    if dup_subset:
-        # scale shape (LEVEL1_DUP_SUBSET): prev_count + candidate
-        # screen in ONE wide exchange, exact dup confirm on the
-        # subset — subsumes the two flags below
-        return _finish_level1(_level1_fused_scan(raw))
-    bucketed = (
-        _bucketed_auto(raw) if LEVEL1_SEQ_BUCKETED is None else LEVEL1_SEQ_BUCKETED
-    )
-    if bucketed:
-        # scale shape (LEVEL1_SEQ_BUCKETED): identical prev_count
-        # series through balanced (site, week) groups + boundary
-        # exchange instead of the 8-task per-site sort
+    if big:
+        # prev_count through balanced (site, week) groups + a boundary
+        # exchange. The duplicate window partitions by a payload hash,
+        # whose 8-byte sort prefix resolves nearly every comparison;
+        # identical payloads stay contiguous under the struct order,
+        # and the null-safe equality makes hash collisions harmless.
         with_prev = bucketed_lag(raw, ["site_no"], "time", ["count"], ["prev_count"])
-    else:
-        seq = Window.partitionBy("site_no").orderBy("time")
-        with_prev = raw.withColumn("prev_count", F.lag("count").over(seq))
-    dupw_hash = (
-        _bucketed_auto(raw) if LEVEL1_DUPW_HASH is None else LEVEL1_DUPW_HASH
-    )
-    if dupw_hash:
-        # hash-prefixed duplicate window (see LEVEL1_DUPW_HASH): same
-        # groups, same lag series, exact equality — only the physical
-        # sort-key layout changes
         pay = F.struct(*[F.col(c) for c in RAW_PAYLOAD])
         dupw = Window.partitionBy(
             F.xxhash64("site_no", *RAW_PAYLOAD), "site_no"
         ).orderBy(pay, "time")
-        prev_pay = F.lag(pay).over(dupw)
-        flagged = with_prev.withColumn(
-            "prev_same_payload_time",
-            F.when(prev_pay.eqNullSafe(pay), F.lag("time").over(dupw)),
-        ).withColumn(
-            "is_duplicate",
-            F.col("prev_same_payload_time").isNotNull()
-            & (
-                F.col("prev_same_payload_time")
-                >= F.col("time") - F.expr("INTERVAL 29 MINUTE")
-            ),
-        )
+        prev_time = F.when(F.lag(pay).over(dupw).eqNullSafe(pay), F.lag("time").over(dupw))
     else:
+        seq = Window.partitionBy("site_no").orderBy("time")
+        with_prev = raw.withColumn("prev_count", F.lag("count").over(seq))
         dupw = Window.partitionBy("site_no", *RAW_PAYLOAD).orderBy("time")
-        flagged = with_prev.withColumn(
-            "prev_same_payload_time", F.lag("time").over(dupw)
-        ).withColumn(
-            "is_duplicate",
-            F.col("prev_same_payload_time").isNotNull()
-            & (F.col("prev_same_payload_time") >= F.col("time") - F.expr("INTERVAL 29 MINUTE")),
-        )
+        prev_time = F.lag("time").over(dupw)
+    flagged = with_prev.withColumn("prev_same_payload_time", prev_time).withColumn(
+        "is_duplicate",
+        F.col("prev_same_payload_time").isNotNull()
+        & (F.col("prev_same_payload_time") >= F.col("time") - F.expr("INTERVAL 29 MINUTE")),
+    )
     return _finish_level1(flagged)
 
 
@@ -626,7 +327,8 @@ def level1_to_level2(
     intensity: DataFrame,
     silo_data: DataFrame,
     all_stations: DataFrame,
-    scale_hint: bool | None = None,
+    *,
+    big: bool,
 ) -> DataFrame:
     """level1 → level2: pressure / water-vapour / intensity corrections
     (cosmoz_process_levels.py:171-314; level1->level2.sql).
@@ -642,6 +344,9 @@ def level1_to_level2(
       as-of joins (operators/asof.py), composed with coalesce in the
       reference's priority order;
     - station constants (:181, :195, :283-287) → broadcast hash join.
+
+    ``big`` swaps the grain joins and the as-of union for the fused
+    bucketed attach (``_fused_temporal_attach``); same rows.
     """
     stations = F.broadcast(
         all_stations.select(
@@ -668,21 +373,8 @@ def level1_to_level2(
         )
     )
 
-    if LEVEL2_FUSED_TEMPORAL is not None:
-        fused = LEVEL2_FUSED_TEMPORAL
-    elif scale_hint is not None:
-        # explicit corpus-scale hint for fact frames without file
-        # lineage (scan-local level1 — see _fused_temporal_attach)
-        fused = scale_hint
-    else:
-        fused = _bucketed_auto(level1)
-    if fused:
-        # scale shape (LEVEL2_FUSED_TEMPORAL): all four temporal
-        # attachments in ONE (site, week-bucket) shuffle instead of
-        # two wide-fact grain-join exchanges + the as-of union
-        enriched = _fused_temporal_attach(
-            level1, int_slim, hourly, silo_pick, scale_hint=scale_hint
-        )
+    if big:
+        enriched = _fused_temporal_attach(level1, int_slim, hourly, silo_pick)
     else:
         enriched = (
             level1.withColumn("hr", F.date_trunc("hour", "time"))
@@ -792,44 +484,20 @@ def level3_to_level4(
     """
     valid = level3.where(F.col("flag") == 0)
     secs = F.col("time").cast("long")
-    bucketed = (
-        _bucketed_auto(level3)
-        if LEVEL4_FRAME_BUCKETED is None
-        else LEVEL4_FRAME_BUCKETED
-    )
-
+    frame = Window.partitionBy("site_no").orderBy(secs).rangeBetween(-10801, 10801)
     # one window aggregate per column: materialize the capped frame
     # array ONCE, then fold over the column reference — an expression
     # that inlines slice(collect_list(...)) at each use point would run
     # the window aggregate 3× per column
-    def _frame_select(df, frame):
-        return df.select(
-            "time",
-            "site_no",
-            "soil_moist",
-            "effective_depth",
-            "rainfall",
-            *[c for c in ("__own", "__bkt") if c in df.columns],
-            F.slice(F.collect_list("soil_moist").over(frame), 1, 7).alias("_sm_l"),
-            F.slice(F.collect_list("effective_depth").over(frame), 1, 7).alias("_ed_l"),
-        )
-
-    if bucketed:
-        # scale shape (LEVEL4_FRAME_BUCKETED): identical ±3h frames
-        # through (site, week) groups with a ±3h halo of adjacent-
-        # bucket copies; only owner rows are emitted
-        exploded, owner = overlap_buckets(valid, "time", 10801)
-        frame = (
-            Window.partitionBy("site_no", "__bkt")
-            .orderBy(secs)
-            .rangeBetween(-10801, 10801)
-        )
-        windowed = _frame_select(exploded, frame).where(owner).drop("__own", "__bkt")
-    else:
-        frame = (
-            Window.partitionBy("site_no").orderBy(secs).rangeBetween(-10801, 10801)
-        )
-        windowed = _frame_select(valid, frame)
+    windowed = valid.select(
+        "time",
+        "site_no",
+        "soil_moist",
+        "effective_depth",
+        "rainfall",
+        F.slice(F.collect_list("soil_moist").over(frame), 1, 7).alias("_sm_l"),
+        F.slice(F.collect_list("effective_depth").over(frame), 1, 7).alias("_ed_l"),
+    )
 
     def fold_mean(arr: str, own: str) -> F.Column:
         total = F.aggregate(F.col(arr), F.lit(0.0), lambda acc, x: acc + x)
@@ -858,6 +526,22 @@ def level3_to_level4(
     return out
 
 
+def _levels_2_to_4(
+    l1: DataFrame,
+    intensity: DataFrame,
+    silo_data: DataFrame,
+    all_stations: DataFrame,
+    spec_mode: bool,
+    big: bool,
+) -> dict[str, DataFrame]:
+    """The tail both chain entries share, so one scale decision
+    engages the same shapes on either route."""
+    l2 = level1_to_level2(l1, intensity, silo_data, all_stations, big=big)
+    l3 = level2_to_level3(l2, all_stations)
+    l4 = level3_to_level4(l3, all_stations, spec_mode=spec_mode)
+    return {"level1": l1, "level2": l2, "level3": l3, "level4": l4}
+
+
 def run_pipeline(
     raw: DataFrame,
     intensity: DataFrame,
@@ -865,12 +549,11 @@ def run_pipeline(
     all_stations: DataFrame,
     spec_mode: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full four-level pipeline as one lazily-composed logical plan."""
-    l1 = raw_to_level1(raw)
-    l2 = level1_to_level2(l1, intensity, silo_data, all_stations)
-    l3 = level2_to_level3(l2, all_stations)
-    l4 = level3_to_level4(l3, all_stations, spec_mode=spec_mode)
-    return {"level1": l1, "level2": l2, "level3": l3, "level4": l4}
+    """Full four-level pipeline as one lazily-composed logical plan.
+    The scale decision is the bytes of the files behind ``raw``."""
+    big = bucketed_auto(raw)
+    l1 = raw_to_level1(raw, big=big)
+    return _levels_2_to_4(l1, intensity, silo_data, all_stations, spec_mode, big)
 
 
 def run_pipeline_scan_local(
@@ -881,24 +564,15 @@ def run_pipeline_scan_local(
     all_stations: DataFrame,
     spec_mode: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full pipeline over a layout-contracted raw SINK (round 15,
-    VERDICT r14 task 1): the level1 prefix runs the adopted scan-local
-    shape (zero wide sequence shuffles, LEVEL1_SCANLOCAL_AB /
-    LEVEL1_ZONERG_AB), and levels 2-4 are the unchanged transforms.
-    Because the scan-local level1 enters through per-file kernels over
-    ``spark.range`` — no file lineage for ``bucketed_auto`` to size —
-    the downstream scale gates take an explicit hint derived from the
-    sink's own bytes, the same 512 MiB crossover the file-backed gates
-    use, so level2 engages exactly the shapes it would over a
-    file-backed level1 of the same corpus."""
-    from ..operators.bucketed_window import BUCKETED_MIN_INPUT_BYTES
+    """Full pipeline over a layout-contracted raw SINK: the level1
+    prefix runs the scan-local shape (zero wide sequence shuffles,
+    LEVEL1_SCANLOCAL_AB / LEVEL1_ZONERG_AB) and levels 2-4 are the
+    shared tail. The scan-local level1 enters through per-file kernels
+    over ``spark.range``, so it has no file lineage to size; the scale
+    decision is the sink's own bytes against the same crossover
+    ``bucketed_auto`` uses."""
     from ..session import _path_bytes
 
-    big = _path_bytes(sink_path, spark) >= BUCKETED_MIN_INPUT_BYTES
+    big = _path_bytes(sink_path, spark) >= bucketed_window.BUCKETED_MIN_INPUT_BYTES
     l1 = raw_to_level1_scan_local(spark, sink_path)
-    l2 = level1_to_level2(
-        l1, intensity, silo_data, all_stations, scale_hint=big
-    )
-    l3 = level2_to_level3(l2, all_stations)
-    l4 = level3_to_level4(l3, all_stations, spec_mode=spec_mode)
-    return {"level1": l1, "level2": l2, "level3": l3, "level4": l4}
+    return _levels_2_to_4(l1, intensity, silo_data, all_stations, spec_mode, big)

@@ -27,66 +27,11 @@ from pyspark.sql import functions as F
 
 _SRC = "__asof_src"
 _ORD = "__asof_ord"
-_BKT = "__asof_bkt"
 
-# Round-10 scale shape (the level2 as-of was the remaining per-site
-# spill after the level1 window was bucketed: the union's
-# partitionBy(site_no) running-last sorts ~12.5M wide rows per task
-# at x1000). Bucketed variant: the SAME union, windowed within
-# (key, week-bucket) — balanced hash groups — plus a per-bucket tail
-# carry: each bucket's last (backward) / first (forward) non-null
-# value row is aggregated map-side, chained through a running
-# last(ignorenulls) over the TINY per-bucket table (earlier buckets
-# for backward, later for forward), broadcast-joined back, and
-# coalesced behind the in-bucket running last. Per-column independent
-# carry matches last(col, ignorenulls)'s per-column semantics; ties
-# at equal time stay INSIDE one bucket (same floor), so the scan-order
-# tie rules are untouched. Identity pinned by
-# tests/test_bucketed_window.py (domain corpus + sparse/null/empty-
-# bucket synthetics). None = auto (bucketed_window.bucketed_auto).
-# ADOPTED round 10 on the interleaved x1000 A/B (LEVEL_ASOF_AB.json,
-# --asof-only: seq bucketing held on, frame at its shipped plain
-# default; bucketed won both interleaved repeats of both stages):
-# level2 prefix 107.4 s -> 89.6 s (1.20x), full level4 111.9 s ->
-# 100.5 s (1.11x) with the pipeline's LAST remaining x1000 spill
-# retired (13.1 GiB mem + 3.6 GiB disk -> zero).
-#
-# That adoption governs the UNION as-of (asof_join_both) only — its
-# key is site_no, 8 values, the per-key sort no partition count can
-# split. The single-direction asof_join ships on user-grained keys
-# (j05/j06: ~thousands of users), where partitionBy(key) is already
-# balanced and the carry's extra groupBy + join is pure overhead.
-ASOF_BUCKETED: bool | None = None
-
-# MEASURED OUT for the single-direction path (round 10,
-# ASOF_SINGLE_AB.json, tools/asof_single_ab.py — interleaved x100 +
-# x1000, 2 repeats, both directions, identical 40 000 138 rows): the
-# bucketed shape LOSES at every decade on the event corpus's
-# 2000-key as-of (x1000 backward 5.5 s plain vs 7.7 s bucketed,
-# forward 4.7 s vs 7.2 s; x100 ratios 0.68/0.73) — the key space is
-# already 60x the core count, so the plain window is balanced and
-# the tail-carry join only adds work. Default False keeps the plain
-# window at every corpus size; None opts into the shared corpus
-# gate and True forces (the hook for a deployment whose asof_join
-# keys are genuinely low-cardinality — identity across variants is
-# pinned by tests/test_bucketed_window.py either way).
-ASOF_SINGLE_BUCKETED: bool | None = False
-
-
-def _asof_bucketed(df) -> bool:
-    from .bucketed_window import bucketed_auto
-
-    return bucketed_auto(df) if ASOF_BUCKETED is None else ASOF_BUCKETED
-
-
-def _asof_single_bucketed(df) -> bool:
-    from .bucketed_window import bucketed_auto
-
-    return (
-        bucketed_auto(df)
-        if ASOF_SINGLE_BUCKETED is None
-        else ASOF_SINGLE_BUCKETED
-    )
+# One physical shape per operator: a per-key window. The bucketed
+# (key, week-bucket) + tail-carry shape lost on user-grained keys
+# (ASOF_SINGLE_AB.json); the level chain's site-keyed as-of carry lives
+# in its fused level2 attach (domain/levels.py, LEVEL_ASOF_AB.json).
 
 
 def asof_join(
@@ -150,58 +95,6 @@ def asof_join(
         # non-strict (visible), after the probe for strict (hidden)
         order = [F.col(_ORD).desc(), F.col(_SRC).asc() if not strict else F.col(_SRC).desc()]
 
-    if _asof_single_bucketed(unioned):
-        # bucketed shape (ASOF_SINGLE_BUCKETED — measured OUT as a
-        # default, forced hook only; see module comment): in-bucket
-        # running last + per-bucket tail carry. Strictness only
-        # reorders probe-vs-value ties at EQUAL time, which share a
-        # bucket by construction, so the carry (strictly earlier/later
-        # buckets) is strictness-blind.
-        from .bucketed_window import BUCKET_SECS
-
-        u = unioned.withColumn(
-            _BKT, F.floor(F.col(_ORD).cast("long") / F.lit(BUCKET_SECS)).cast("long")
-        )
-        w_in = (
-            Window.partitionBy(*on, _BKT)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        nn = lambda c: F.when(F.col(c).isNotNull(), F.col(_ORD))  # noqa: E731
-        tail_agg = F.max_by if direction == "backward" else F.min_by
-        tails = u.groupBy(*on, _BKT).agg(
-            *[tail_agg(c, nn(c)).alias(f"__tl_{c}") for c in out_cols]
-        )
-        w_carry = (
-            Window.partitionBy(*on)
-            .orderBy(F.col(_BKT).asc() if direction == "backward" else F.col(_BKT).desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carries = tails.select(
-            *on,
-            _BKT,
-            *[
-                F.last(f"__tl_{c}", ignorenulls=True).over(w_carry).alias(f"__cr_{c}")
-                for c in out_cols
-            ],
-        )
-        picked_in = [
-            F.last(c, ignorenulls=True).over(w_in).alias(f"__in_{c}") for c in out_cols
-        ]
-        resolved = (
-            u.select(*left_cols, _ORD, _SRC, _BKT, *picked_in)
-            .join(F.broadcast(carries), [*on, _BKT], "left")
-            .select(
-                *left_cols,
-                _SRC,
-                *[
-                    F.coalesce(f"__in_{c}", f"__cr_{c}").alias(c)
-                    for c in out_cols
-                ],
-            )
-        )
-        return resolved.where(F.col(_SRC) == 1).drop(_SRC)
-
     frame = Window.partitionBy(*on).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     picked = [F.last(c, ignorenulls=True).over(frame).alias(c) for c in out_cols]
 
@@ -257,84 +150,6 @@ def asof_join_both(
         *[F.col(v).alias(v + "__v") for v in values],
     )
     unioned = lhs.unionByName(rhs)
-
-    if _asof_bucketed(unioned):
-        # scale shape (ASOF_BUCKETED): identical picks through
-        # (key, week-bucket) groups + per-bucket tail carry
-        from .bucketed_window import BUCKET_SECS
-
-        u = unioned.withColumn(
-            _BKT, F.floor(F.col(_ORD).cast("long") / F.lit(BUCKET_SECS)).cast("long")
-        )
-        bw_in = (
-            Window.partitionBy(*on, _BKT)
-            .orderBy(F.col(_ORD).asc(), F.col(_SRC).asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        # tie-blind forward, same scan order as the plain frame below
-        fw_in = (
-            Window.partitionBy(*on, _BKT)
-            .orderBy(F.col(_ORD).desc(), F.col(_SRC).desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        # per-bucket tails: latest (bw) / earliest (fw) non-null value
-        # per column — probe rows carry null v__v and never contribute;
-        # the null ordering key makes max_by/min_by skip a row exactly
-        # when last(ignorenulls) would
-        nn = lambda v: F.when(F.col(v + "__v").isNotNull(), F.col(_ORD))  # noqa: E731
-        tails = u.groupBy(*on, _BKT).agg(
-            *[F.max_by(v + "__v", nn(v)).alias(f"__tl_bw_{v}") for v in values],
-            *[F.min_by(v + "__v", nn(v)).alias(f"__tl_fw_{v}") for v in values],
-        )
-        # carry: the nearest non-null tail among STRICTLY earlier
-        # (bw) / later (fw) buckets — a window over the tiny
-        # one-row-per-(key, week) table
-        w_bw = (
-            Window.partitionBy(*on)
-            .orderBy(F.col(_BKT).asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_fw = (
-            Window.partitionBy(*on)
-            .orderBy(F.col(_BKT).desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carries = tails.select(
-            *on,
-            _BKT,
-            *[
-                F.last(f"__tl_bw_{v}", ignorenulls=True).over(w_bw).alias(f"__cr_bw_{v}")
-                for v in values
-            ],
-            *[
-                F.last(f"__tl_fw_{v}", ignorenulls=True).over(w_fw).alias(f"__cr_fw_{v}")
-                for v in values
-            ],
-        )
-        picked_in = [
-            F.last(v + "__v", ignorenulls=True).over(bw_in).alias(f"__in_bw_{v}")
-            for v in values
-        ] + [
-            F.last(v + "__v", ignorenulls=True).over(fw_in).alias(f"__in_fw_{v}")
-            for v in values
-        ]
-        resolved = (
-            u.select(*left_cols, _ORD, _SRC, _BKT, *picked_in)
-            .join(F.broadcast(carries), [*on, _BKT], "left")
-            .select(
-                *left_cols,
-                _SRC,
-                *[
-                    F.coalesce(f"__in_bw_{v}", f"__cr_bw_{v}").alias(c)
-                    for v, c in zip(values, bw_cols)
-                ],
-                *[
-                    F.coalesce(f"__in_fw_{v}", f"__cr_fw_{v}").alias(c)
-                    for v, c in zip(values, fw_cols)
-                ],
-            )
-        )
-        return resolved.where(F.col(_SRC) == 1).drop(_SRC)
 
     bw_frame = (
         Window.partitionBy(*on)

@@ -1,5 +1,5 @@
 """Scale-safe per-key sequence windows via time-bucketing + boundary
-exchange (round 10, VERDICT r9 task 2).
+exchange, and the one scale gate that picks the level chain's shape.
 
 The domain keys everything on ~22 sites (reference
 pipeline/all_stations.tsv; one OS process per site,
@@ -11,25 +11,15 @@ the level1 prefix alone (LEVEL4_STAGES.json): no partition count can
 split a sort keyed on 8 values.
 
 The fix is the standard two-pass shape, in plain DataFrame ops:
-
-- ``bucketed_lag``: lag-1 over (keys, time) = an in-bucket lag over
-  ``(keys, floor(time/W))`` — one BALANCED hash shuffle, small
-  per-group sorts — plus a boundary exchange: each bucket's max-time
-  row (one row per key per bucket, map-side-combined aggregate) is
-  chained through a window over the TINY per-bucket table so every
-  bucket knows its predecessor bucket's tail, then broadcast-joined
-  back; a bucket's first row takes the boundary value, every other
-  row its in-bucket lag. Row-for-row identical to the single-key
-  window (pinned by tests/test_bucketed_window.py).
-
-- ``overlap_buckets``: the replicate-the-halo half of a bounded
-  range frame (level4's ±3h mean): each row is exploded into its own
-  bucket plus any adjacent bucket whose owner rows could need it
-  (|t - edge| < radius), the frame is evaluated per (keys, bucket)
-  over owners+halo, and only owner rows are kept. Exact for any
-  frame radius <= W - the halo covers every row a frame anchored in
-  the bucket can reach, and each source row appears exactly once per
-  anchor bucket (owner XOR halo copy).
+``bucketed_lag``: lag-1 over (keys, time) = an in-bucket lag over
+``(keys, floor(time/W))`` — one BALANCED hash shuffle, small
+per-group sorts — plus a boundary exchange: each bucket's max-time
+row (one row per key per bucket, map-side-combined aggregate) is
+chained through a window over the TINY per-bucket table so every
+bucket knows its predecessor bucket's tail, then broadcast-joined
+back; a bucket's first row takes the boundary value, every other
+row its in-bucket lag. Row-for-row identical to the single-key
+window (pinned by tests/test_bucketed_window.py).
 
 Bucket width W: fixed 7 days. The per-(key, bucket) group is then
 cadence-bounded (504 rows at the domain's 20-min grid; ~10k at a
@@ -44,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BUCKET_SECS = 7 * 86400
@@ -61,21 +51,18 @@ BUCKETED_MIN_INPUT_BYTES = 512 << 20
 
 
 def bucketed_auto(df: DataFrame) -> bool:
-    """Shared auto-gate for the bucketed window shapes: engage when
-    the bytes of the files actually backing ``df``'s plan
+    """The level chain's scale decision (``levels.run_pipeline``'s
+    ``big``; catalog_ext's IVF assign gate reuses it): True when the
+    bytes of the files actually backing ``df``'s plan
     (``df.inputFiles()``, sized through session._path_bytes' memo)
     exceed BUCKETED_MIN_INPUT_BYTES.
 
-    Round 11 (ADVICE r10): the previous basis — the session-global
-    ``spark.sql.shuffle.partitions`` ceiling — was the same
-    session-order-dependent bug class round 10 fixed in the neardup
-    prescreen gate: a session that had loaded OTHER corpora first (or
-    had autosize off) flipped the plan shape. A frame's input-file
-    bytes are a property of the frame itself — deterministic per
-    corpus no matter what else the session loaded. Frames with no
-    file lineage (in-memory test frames, streams) size to 0 and keep
-    the small-scale shape; the identity tests force both variants
-    explicitly."""
+    A frame's input-file bytes are a property of the frame itself, so
+    the decision does not depend on what else the session loaded (the
+    session-global shuffle-partition basis it replaced did). Frames
+    with no file lineage (in-memory test frames, streams) size to 0
+    and keep the small-scale shape; the identity tests pass both
+    values of ``big`` explicitly."""
     from urllib.parse import unquote, urlparse
 
     from ..session import _path_bytes
@@ -160,43 +147,3 @@ def bucketed_lag(
             n, F.when(F.col("__rn") == 1, F.col(f"__prev_{c}")).otherwise(F.col(n))
         )
     return out.drop("__bkt", "__rn", *[f"__prev_{c}" for c in cols])
-
-
-def overlap_buckets(
-    df: DataFrame,
-    time_col: str,
-    radius_secs: int,
-    bucket_secs: int = BUCKET_SECS,
-) -> tuple[DataFrame, Column]:
-    """Explode ``df`` into (owner ∪ halo) rows per time bucket for a
-    centered range frame of ``radius_secs``: returns (exploded_df,
-    owner_predicate). Evaluate the frame over
-    ``Window.partitionBy(*keys, "__bkt")`` on the exploded frame and
-    keep only rows satisfying the predicate — each owner row's
-    [t-radius, t+radius] frame then sees exactly the rows the
-    unbucketed per-key frame saw, each exactly once.
-
-    Requires ``radius_secs <= bucket_secs`` (the halo only reaches
-    adjacent buckets); raises otherwise rather than silently losing
-    frame rows.
-    """
-    if radius_secs > bucket_secs:
-        raise ValueError(
-            f"radius {radius_secs}s exceeds bucket width {bucket_secs}s: "
-            "halo would need non-adjacent buckets"
-        )
-    secs = F.col(time_col).cast("long")
-    b = F.floor(secs / F.lit(bucket_secs)).cast("long")
-    # a row at t is needed by owners of bucket b-1 iff t - radius can
-    # reach below the bucket floor (t < b·W + radius), by b+1 iff
-    # t + radius reaches the next floor (t >= (b+1)·W - radius);
-    # integer seconds make both bounds exact for the inclusive frame
-    targets = F.array_compact(
-        F.array(
-            b,
-            F.when(secs < b * bucket_secs + radius_secs, b - 1),
-            F.when(secs >= (b + 1) * bucket_secs - radius_secs, b + 1),
-        )
-    )
-    exploded = df.withColumn("__own", b).withColumn("__bkt", F.explode(targets))
-    return exploded, F.col("__bkt") == F.col("__own")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.operators.asof import asof_join, asof_join_both
@@ -94,3 +95,42 @@ def test_both_directions_fused(spark):
     assert plan.count("Exchange") == 1
     assert plan.count("Sort [") == 2
     assert "Following" not in plan
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("strict", [False, True])
+def test_sparse_values_nulls_and_ties(spark, direction, strict):
+    """Value rows every 9 days (empty weeks between), a NULL value
+    mid-series (skipped, as last(ignorenulls) does) and one value row
+    exactly on a probe time (rt == lt), against a per-row scan."""
+    base = dt.datetime(2021, 1, 1)
+    probes = [base + dt.timedelta(hours=6 * i) for i in range(120)]
+    vals = [
+        (base + dt.timedelta(days=9 * i, hours=2), None if i == 3 else float(i))
+        for i in range(8)
+    ]
+    vals.append((base + dt.timedelta(hours=6 * 40), 999.0))  # rt == lt
+    left = spark.createDataFrame(
+        [("A", t, i) for i, t in enumerate(probes)],
+        "site_no string, time timestamp, seq int",
+    )
+    right = spark.createDataFrame(
+        [("A", t, v) for t, v in vals], "site_no string, time timestamp, v double"
+    )
+    got = {
+        r.seq: r.v_asof
+        for r in asof_join(
+            left, right, on=["site_no"], left_time="time", right_time="time",
+            values=["v"], direction=direction, strict=strict,
+        ).collect()
+    }
+
+    def want(lt):
+        if direction == "backward":
+            ok = [(rt, v) for rt, v in vals if v is not None and (rt < lt if strict else rt <= lt)]
+            return max(ok)[1] if ok else None
+        ok = [(rt, v) for rt, v in vals if v is not None and (rt > lt if strict else rt >= lt)]
+        return min(ok)[1] if ok else None
+
+    assert got == {i: want(t) for i, t in enumerate(probes)}
+

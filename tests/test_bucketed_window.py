@@ -1,26 +1,24 @@
-"""The bucketed sequence-window shapes (operators/bucketed_window.py,
-levels.LEVEL1_SEQ_BUCKETED / LEVEL4_FRAME_BUCKETED) are physical plan
-changes only: lag-1 through (key, week-bucket) groups + boundary
-exchange, and the ±3h range frame through owner+halo bucket copies,
-must produce row-for-row what the plain per-key windows produce —
-including across empty buckets, null lagged values, and frame rows
-that straddle bucket edges.
+"""The bucketed sequence window (operators/bucketed_window.py) and the
+level chain's big shape are physical plan changes only: lag-1 through
+(key, week-bucket) groups + boundary exchange must produce row-for-row
+what the plain per-key window produces — including across empty
+buckets and null lagged values — and the chain's big shape must
+produce the small shape's rows. The scale decision itself reads the
+frame's own input bytes, and both chain entries take it the same way.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
-from cosmoz_data_pipeline_spark.operators.bucketed_window import (
-    bucketed_lag,
-    overlap_buckets,
-)
+from cosmoz_data_pipeline_spark.operators import bucketed_window as bw
+from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_lag
+from cosmoz_data_pipeline_spark.operators.scan_local import write_time_tiled
 
 
 def _rows(df):
@@ -30,25 +28,14 @@ def _rows(df):
     )
 
 
-@pytest.fixture()
-def seq_flags():
-    from cosmoz_data_pipeline_spark.operators import asof
-
-    s1, s4, sa = (
-        levels.LEVEL1_SEQ_BUCKETED,
-        levels.LEVEL4_FRAME_BUCKETED,
-        asof.ASOF_BUCKETED,
+def _chain(d, big: bool) -> dict:
+    """The four levels in one explicit shape."""
+    l1 = levels.raw_to_level1(d["raw_values"], big=big)
+    l2 = levels.level1_to_level2(
+        l1, d["intensity"], d["silo_data"], d["all_stations"], big=big
     )
-
-    def _set(on: bool):
-        levels.LEVEL1_SEQ_BUCKETED = on
-        levels.LEVEL4_FRAME_BUCKETED = on
-        asof.ASOF_BUCKETED = on
-
-    yield _set
-    levels.LEVEL1_SEQ_BUCKETED = s1
-    levels.LEVEL4_FRAME_BUCKETED = s4
-    asof.ASOF_BUCKETED = sa
+    l4 = levels.level3_to_level4(levels.level2_to_level3(l2, d["all_stations"]))
+    return {"level1": l1, "level2": l2, "level4": l4}
 
 
 def _ts(h, m=0, day=1):
@@ -94,131 +81,11 @@ def test_bucketed_lag_tiny_buckets_every_row_a_boundary(spark):
     assert _rows(buck) == _rows(plain)
 
 
-def test_overlap_buckets_frame_identity(spark):
-    # rows hugging bucket edges from both sides; ±2h frame, 4h buckets
-    rows = []
-    for s in ("A", "B"):
-        for i in range(60):
-            rows.append((s, _ts(0) + dt.timedelta(minutes=17 * i), float(i)))
-    df = spark.createDataFrame(rows, "site_no string, time timestamp, v double")
-    secs = F.col("time").cast("long")
-    radius = 7200
-    plain = df.select(
-        "site_no",
-        "time",
-        F.collect_list("v")
-        .over(
-            Window.partitionBy("site_no").orderBy(secs).rangeBetween(-radius, radius)
-        )
-        .alias("fr"),
-    )
-    exploded, owner = overlap_buckets(df, "time", radius, bucket_secs=14400)
-    buck = (
-        exploded.select(
-            "site_no",
-            "time",
-            "__own",
-            "__bkt",
-            F.collect_list("v")
-            .over(
-                Window.partitionBy("site_no", "__bkt")
-                .orderBy(secs)
-                .rangeBetween(-radius, radius)
-            )
-            .alias("fr"),
-        )
-        .where(owner)
-        .drop("__own", "__bkt")
-    )
-    assert _rows(buck) == _rows(plain)
-
-
-def test_overlap_radius_beyond_bucket_raises(spark):
-    df = spark.createDataFrame([("A", _ts(0), 1.0)], "site_no string, time timestamp, v double")
-    with pytest.raises(ValueError):
-        overlap_buckets(df, "time", radius_secs=99999, bucket_secs=3600)
-
-
-def test_levels_identical_on_domain_corpus(spark, sf_dir, seq_flags):
-    d = load_domain(spark, sf_dir)
-    seq_flags(False)
-    base1 = _rows(levels.raw_to_level1(d["raw_values"]))
-    base4 = _rows(
-        levels.run_pipeline(
-            d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"]
-        )["level4"]
-    )
-    assert base1 and base4
-    seq_flags(True)
-    assert _rows(levels.raw_to_level1(d["raw_values"])) == base1
-    assert (
-        _rows(
-            levels.run_pipeline(
-                d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"]
-            )["level4"]
-        )
-        == base4
-    )
-
-
-def test_auto_gate_reads_frame_input_bytes(spark, sf_dir, tmp_path):
-    # round 11 (ADVICE r10): the gate basis is the frame's OWN input
-    # bytes — session state (shuffle-partition conf, other corpora
-    # loaded first) must not flip the plan shape
-    from cosmoz_data_pipeline_spark.operators import bucketed_window as bw
-
-    # in-memory frame: no file lineage -> small-scale shape
-    assert levels._bucketed_auto(spark.range(1)) is False
-    # a real (small) scan stays below the crossover…
-    small = spark.read.parquet(f"{sf_dir}/events.parquet")
-    assert levels._bucketed_auto(small) is False
-    # …regardless of the session-global conf the retired proxy read
-    spark.conf.set("spark.sql.shuffle.partitions", "256")
-    try:
-        assert levels._bucketed_auto(small) is False
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # and the same frame engages once its inputs cross the threshold
-    shipped = bw.BUCKETED_MIN_INPUT_BYTES
-    bw.BUCKETED_MIN_INPUT_BYTES = 1
-    try:
-        assert levels._bucketed_auto(small) is True
-        # derived frames inherit their source files
-        assert levels._bucketed_auto(small.select("user_id").limit(3)) is True
-    finally:
-        bw.BUCKETED_MIN_INPUT_BYTES = shipped
-
-
-@pytest.fixture()
-def asof_flag():
-    from cosmoz_data_pipeline_spark.operators import asof
-
-    shipped = asof.ASOF_BUCKETED
-
-    def _set(on: bool):
-        asof.ASOF_BUCKETED = on
-
-    yield _set
-    asof.ASOF_BUCKETED = shipped
-
-
-@pytest.fixture()
-def asof_single_flag():
-    from cosmoz_data_pipeline_spark.operators import asof
-
-    shipped = asof.ASOF_SINGLE_BUCKETED
-
-    def _set(on: bool):
-        asof.ASOF_SINGLE_BUCKETED = on
-
-    yield _set
-    asof.ASOF_SINGLE_BUCKETED = shipped
-
-
-def test_asof_both_bucketed_identity(spark, asof_flag):
+def test_asof_both_bucketed_identity(spark):
     """Sparse value series across empty weeks, null values mid-series,
     and rt == lt ties in both directions (visible backward, hidden
-    forward) — the bucketed carry must reproduce every pick."""
+    forward) — the fused carry must reproduce every pick of a per-row
+    scan."""
     from cosmoz_data_pipeline_spark.operators.asof import asof_join_both
 
     base = dt.datetime(2021, 1, 1)
@@ -243,52 +110,86 @@ def test_asof_both_bucketed_identity(spark, asof_flag):
     right = spark.createDataFrame(
         vals, "site_no string, time timestamp, intensity double"
     )
-
-    def _run():
-        out = asof_join_both(
-            left, right, on=["site_no"], left_time="time", right_time="time",
-            values=["intensity"],
-        )
-        return _rows(out)
-
-    asof_flag(False)
-    base_rows = _run()
-    assert base_rows
-    asof_flag(True)
-    assert _run() == base_rows
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-@pytest.mark.parametrize("strict", [False, True])
-def test_asof_single_bucketed_identity(spark, asof_single_flag, direction, strict):
-    from cosmoz_data_pipeline_spark.operators.asof import asof_join
-
-    base = dt.datetime(2021, 1, 1)
-    left = spark.createDataFrame(
-        [("A", base + dt.timedelta(hours=6 * i), i) for i in range(120)],
-        "site_no string, time timestamp, seq int",
+    out = asof_join_both(
+        left, right, on=["site_no"], left_time="time", right_time="time",
+        values=["intensity"],
     )
-    vals = [("A", base + dt.timedelta(days=9 * i, hours=2),
-             None if i == 3 else float(i)) for i in range(8)]
-    vals.append(("A", base + dt.timedelta(hours=6 * 40), 999.0))  # rt == lt
-    right = spark.createDataFrame(
-        vals, "site_no string, time timestamp, v double"
-    )
+    got = {(r.site_no, r.seq): (r.intensity_bw, r.intensity_fw) for r in out.collect()}
 
-    def _run():
-        return _rows(
-            asof_join(
-                left, right, on=["site_no"], left_time="time",
-                right_time="time", values=["v"],
-                direction=direction, strict=strict,
-            )
-        )
+    def want(s, lt):
+        ok = [(rt, v) for k, rt, v in vals if k == s and v is not None]
+        bwd = [p for p in ok if p[0] <= lt]
+        fwd = [p for p in ok if p[0] > lt]
+        return (max(bwd)[1] if bwd else None, min(fwd)[1] if fwd else None)
 
-    asof_single_flag(False)
-    base_rows = _run()
-    assert base_rows
-    asof_single_flag(True)
-    assert _run() == base_rows
+    assert got == {(s, i): want(s, t) for s, t, i in probes}
+    # the ties are visible backward only
+    assert got[("A", 10)] == (555.0, 100.0)
+    assert got[("B", 150)][0] == 777.0
+
+
+def test_levels_identical_on_domain_corpus(spark, sf_dir):
+    d = load_domain(spark, sf_dir)
+    small, big = _chain(d, big=False), _chain(d, big=True)
+    for level in ("level1", "level2", "level4"):
+        base = _rows(small[level])
+        assert base
+        assert _rows(big[level]) == base
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_one_scale_decision_on_both_entry_routes(spark, sf_dir, tmp_path, monkeypatch):
+    """run_pipeline sizes its raw files, run_pipeline_scan_local its
+    sink; with the crossover at 1 byte both must build level2 with the
+    fused bucketed attach (its ``__l2_bkt`` column) and still produce
+    the small shape's level4 rows."""
+    d = load_domain(spark, sf_dir)
+    dims = (d["intensity"], d["silo_data"], d["all_stations"])
+    sink = str(tmp_path / "sink")
+    write_time_tiled(d["raw_values"], sink, 4)
+
+    small = levels.run_pipeline(d["raw_values"], *dims)
+    assert "__l2_bkt" not in _analyzed(small["level2"])
+    base4 = _rows(small["level4"])
+    assert base4
+
+    monkeypatch.setattr(bw, "BUCKETED_MIN_INPUT_BYTES", 1)
+    for out in (
+        levels.run_pipeline(d["raw_values"], *dims),
+        levels.run_pipeline_scan_local(spark, sink, *dims),
+    ):
+        assert "__l2_bkt" in _analyzed(out["level2"])
+        assert _rows(out["level4"]) == base4
+
+
+def test_auto_gate_reads_frame_input_bytes(spark, sf_dir, tmp_path):
+    # round 11 (ADVICE r10): the gate basis is the frame's OWN input
+    # bytes — session state (shuffle-partition conf, other corpora
+    # loaded first) must not flip the plan shape
+
+    # in-memory frame: no file lineage -> small-scale shape
+    assert bw.bucketed_auto(spark.range(1)) is False
+    # a real (small) scan stays below the crossover…
+    small = spark.read.parquet(f"{sf_dir}/events.parquet")
+    assert bw.bucketed_auto(small) is False
+    # …regardless of the session-global conf the retired proxy read
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
+    try:
+        assert bw.bucketed_auto(small) is False
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # and the same frame engages once its inputs cross the threshold
+    shipped = bw.BUCKETED_MIN_INPUT_BYTES
+    bw.BUCKETED_MIN_INPUT_BYTES = 1
+    try:
+        assert bw.bucketed_auto(small) is True
+        # derived frames inherit their source files
+        assert bw.bucketed_auto(small.select("user_id").limit(3)) is True
+    finally:
+        bw.BUCKETED_MIN_INPUT_BYTES = shipped
 
 
 def test_auto_gate_decodes_percent_encoded_paths(spark, sf_dir, tmp_path, capfd):
@@ -297,8 +198,6 @@ def test_auto_gate_decodes_percent_encoded_paths(spark, sf_dir, tmp_path, capfd)
     # gate must decode it before the stat or a large corpus silently
     # keeps the small-scale plan
     import shutil
-
-    from cosmoz_data_pipeline_spark.operators import bucketed_window as bw
 
     d = tmp_path / "data dir"
     d.mkdir()
@@ -319,8 +218,6 @@ def test_auto_gate_warns_on_sizing_failure(spark, sf_dir, capfd):
     # stderr — silently keeping the small-scale plan at cluster scale
     # is the silent-perf-degradation class _path_bytes already warns
     # about — and still fall back to False (plan stays correct)
-    from cosmoz_data_pipeline_spark.operators import bucketed_window as bw
-
     class Boom:
         @property
         def sparkSession(self):

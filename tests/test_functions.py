@@ -115,9 +115,10 @@ def test_hour_match_with_null_intensity_stops_at_hour(spark):
         "site_no int, beta double, ref_pressure double, ref_intensity double, "
         "latit_scaling double, elev_scaling double",
     )
-    row = level1_to_level2(l1, intensity, silo, stations).collect()[0]
-    # hour row existed with NULL value -> corr 1.0, NOT 123/100
-    assert row.intensity_corr == 1.0
+    for big in (False, True):
+        row = level1_to_level2(l1, intensity, silo, stations, big=big).collect()[0]
+        # hour row existed with NULL value -> corr 1.0, NOT 123/100
+        assert row.intensity_corr == 1.0
 
 
 def test_srp_planes_scale_with_corpus():

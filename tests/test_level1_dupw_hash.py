@@ -1,52 +1,41 @@
-"""The hash-prefixed duplicate window (levels.LEVEL1_DUPW_HASH) is a
-physical sort-key layout change: partitionBy(xxhash64(payload),
-site_no) + orderBy(payload struct, time) + null-safe struct equality
-on the lagged row must produce exactly the rows the composite-key
-window (partitionBy(site_no, *payload) + orderBy(time)) produces —
-identical payloads stay contiguous inside the hash partition, a
-different-payload neighbor means first-of-group in BOTH layouts, and
-collisions are separated by the struct sort and fail the equality.
+"""level1's big shape is a physical layout change: the bucketed
+prev_count lag plus the hash-prefixed duplicate window
+(partitionBy(xxhash64(payload), site_no) + orderBy(payload struct,
+time) + null-safe struct equality on the lagged row) must produce
+exactly the rows of the small shape (plain lag + composite-key window
+partitionBy(site_no, *payload) + orderBy(time)) — identical payloads
+stay contiguous inside the hash partition, a different-payload
+neighbor means first-of-group in BOTH layouts, and collisions are
+separated by the struct sort and fail the equality.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
+from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
+from cosmoz_data_pipeline_spark.operators.bucketed_window import BUCKET_SECS
 
 
-@pytest.fixture()
-def dupw_hash():
-    shipped = levels.LEVEL1_DUPW_HASH
-
-    def _set(on: bool):
-        levels.LEVEL1_DUPW_HASH = on
-
-    yield _set
-    levels.LEVEL1_DUPW_HASH = shipped
-
-
-def _l1_rows(spark, raw):
-    out = levels.raw_to_level1(raw)
+def _l1_rows(raw, big: bool):
+    out = levels.raw_to_level1(raw, big=big)
     return sorted(
         (tuple(r) for r in out.select(*sorted(out.columns)).collect()),
         key=lambda t: tuple((x is None, x) for x in t),
     )
 
 
-def test_identical_on_domain_corpus(spark, sf_dir, dupw_hash):
+def test_identical_on_domain_corpus(spark, sf_dir):
     raw = load_domain(spark, sf_dir)["raw_values"]
-    dupw_hash(False)
-    base = _l1_rows(spark, raw)
+    base = _l1_rows(raw, big=False)
     assert base
-    dupw_hash(True)
-    assert _l1_rows(spark, raw) == base
+    assert _l1_rows(raw, big=True) == base
 
 
-def test_identical_with_null_payload_fields(spark, dupw_hash):
+def test_identical_with_null_payload_fields(spark):
     # the synthetic domain has no null payload values, but the
     # reference's raw feed can — null-safe equality must group nulls
     # exactly like window PARTITION BY does (null == null for grouping)
@@ -90,15 +79,88 @@ def test_identical_with_null_payload_fields(spark, dupw_hash):
         "external_temperature double, external_humidity double"
     )
     raw = spark.createDataFrame(rows, schema)
-    dupw_hash(False)
-    base = _l1_rows(spark, raw)
-    dupw_hash(True)
-    hashed = _l1_rows(spark, raw)
-    assert hashed == base
-    # and pin the expected semantics, not just cross-variant identity:
+    base = _l1_rows(raw, big=False)
+    assert _l1_rows(raw, big=True) == base
+    # and pin the expected semantics, not just cross-shape identity:
     # minute 0 dropped (null prev_count), minute 10 dropped (29-min dup
     # of 0), minute 45 kept (35 min past its last identical row),
     # minute 50 kept (different rain), minute 55 kept (first of the
     # null-battery group), minute 60 dropped (5-min dup of 55)
-    time_idx = sorted(levels.raw_to_level1(raw).columns).index("time")
+    time_idx = sorted(levels.raw_to_level1(raw, big=False).columns).index("time")
     assert sorted(t[time_idx].minute for t in base) == [45, 50, 55]
+
+
+def test_bucket_edges_and_chains(spark):
+    """Adversarial grid around a week-bucket edge of the big shape:
+    duplicates straddling it in both directions, a >29-min
+    same-payload pair, an equal-payload chain, an equal-time pair, and
+    a same-count pair that differs in one payload field."""
+    b = 3 * BUCKET_SECS  # an arbitrary bucket boundary (epoch secs)
+    rows = []
+
+    def add(t, site, count, battery=12.0, tag=1.0):
+        rows.append((t, site, 0, count, battery, tag))
+
+    # same-payload pair straddling the boundary, 20 min apart -> dup
+    add(b - 600, 1, 1500), add(b + 600, 1, 1500)
+    # same payload, 40 min apart across the boundary -> kept
+    add(b - 1200, 2, 1600), add(b + 1200, 2, 1600)
+    # row just BEFORE the boundary whose duplicate is after it
+    add(b - 60, 3, 1700), add(b + 900, 3, 1700)
+    # in-bucket chain: t, +20m, +40m (each consecutive gap <=29m)
+    add(b + 7200, 4, 1800), add(b + 8400, 4, 1800), add(b + 9600, 4, 1800)
+    # equal-time same-payload pair
+    add(b + 20000, 5, 1900), add(b + 20000, 5, 1900)
+    # same count, different battery -> NOT a duplicate
+    add(b + 30000, 6, 2000, battery=11.0), add(b + 31200, 6, 2000, battery=12.5)
+    # sequence context rows so prev_count is non-null for the cases
+    for t, s in ((b - 3000, 1), (b - 3600, 2), (b - 2400, 3), (b + 6000, 4),
+                 (b + 18000, 5), (b + 28000, 6)):
+        add(t, s, 1000 + s)
+
+    raw = spark.createDataFrame(
+        rows, "secs long, site_no int, flag int, count long, battery double, vwc1 double"
+    ).select(
+        F.col("secs").cast("timestamp").alias("time"),
+        "site_no",
+        "flag",
+        "count",
+        F.lit(950.0).alias("pressure1"),
+        F.lit(21.0).alias("internal_temperature"),
+        F.lit(31.0).alias("internal_humidity"),
+        "battery",
+        F.lit(16.0).alias("tube_temperature"),
+        F.lit(21.0).alias("tube_humidity"),
+        F.lit(0.0).alias("rain"),
+        "vwc1",
+        F.lit(1.0).alias("vwc2"),
+        F.lit(1.0).alias("vwc3"),
+        F.lit(949.0).alias("pressure2"),
+        F.lit(10.0).alias("external_temperature"),
+        F.lit(50.0).alias("external_humidity"),
+    )
+
+    assert _l1_rows(raw, big=True) == _l1_rows(raw, big=False)
+    # sanity on the scenario itself — assert the specific kept/dropped
+    # (site, epoch-sec) outcomes, not just "something dropped"
+    kept = [
+        (r["s"], r["t"])
+        for r in levels.raw_to_level1(raw, big=True)
+        .select(F.col("site_no").alias("s"), F.unix_timestamp("time").alias("t"))
+        .collect()
+    ]
+    kept_set = set(kept)
+    assert len(kept) == len(kept_set)  # equal-time dup pair collapsed to one
+    # 20-min straddler: first kept, duplicate dropped
+    assert (1, b - 600) in kept_set and (1, b + 600) not in kept_set
+    # 40-min same-payload pair: both kept (outside the 29-min window)
+    assert (2, b - 1200) in kept_set and (2, b + 1200) in kept_set
+    # forward-edge straddler (16 min): duplicate after the boundary dropped
+    assert (3, b - 60) in kept_set and (3, b + 900) not in kept_set
+    # chain reduced to its head
+    assert (4, b + 7200) in kept_set
+    assert (4, b + 8400) not in kept_set and (4, b + 9600) not in kept_set
+    # equal-time pair: exactly one survivor
+    assert (5, b + 20000) in kept_set
+    # same count but different battery: NOT duplicates, both kept
+    assert (6, b + 30000) in kept_set and (6, b + 31200) in kept_set

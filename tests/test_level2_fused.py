@@ -1,23 +1,22 @@
-"""LEVEL2_FUSED_TEMPORAL (domain/levels.py) is a physical reshape
-only: resolving level2's hour-grain intensity match, day-grain SILO
-pick and both as-of fallbacks through ONE (site[, week-bucket])
-shuffle must produce row-for-row what the three-join shape produces —
-including hour gaps (backward as-of), the late-starting site 3
-(forward as-of), the intensity-less site 8 (corr = 1.0), silo days
-missing / at 13:00, and as-of values carried across week buckets.
+"""level2's big shape (domain/levels.py ``_fused_temporal_attach``) is
+a physical reshape only: resolving the hour-grain intensity match,
+day-grain SILO pick and both as-of fallbacks through ONE (site,
+week-bucket) shuffle must produce row-for-row what the small
+three-join shape produces — including hour gaps (backward as-of), the
+late-starting site 3 (forward as-of), the intensity-less site 8
+(corr = 1.0), silo days missing / at 13:00, and as-of values carried
+across empty week buckets past null values.
 
-Corpus: sf0.01 (spans ~17 days = 3 week-buckets, so the fused
-bucketed variant's cross-bucket as-of carry is actually exercised;
-sf0.001 fits in one bucket).
+Corpus: sf0.01 (spans ~17 days = 3 week-buckets, so the cross-bucket
+as-of carry is actually exercised; sf0.001 fits in one bucket).
 """
 
 from __future__ import annotations
 
-import pytest
+import datetime as dt
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
-from cosmoz_data_pipeline_spark.operators import asof
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -29,42 +28,51 @@ def _rows(df):
     )
 
 
-@pytest.fixture()
-def fused_flags():
-    shipped = (levels.LEVEL2_FUSED_TEMPORAL, asof.ASOF_BUCKETED)
-
-    def _set(fused, asof_bucketed):
-        levels.LEVEL2_FUSED_TEMPORAL = fused
-        asof.ASOF_BUCKETED = asof_bucketed
-
-    yield _set
-    levels.LEVEL2_FUSED_TEMPORAL, asof.ASOF_BUCKETED = shipped
+def _chain(d, big: bool):
+    l1 = levels.raw_to_level1(d["raw_values"], big=big)
+    l2 = levels.level1_to_level2(
+        l1, d["intensity"], d["silo_data"], d["all_stations"], big=big
+    )
+    return l2, levels.level3_to_level4(levels.level2_to_level3(l2, d["all_stations"]))
 
 
-def test_level2_fused_identity_on_domain_corpus(spark, fused_flags):
+def test_level2_fused_identity_on_domain_corpus(spark):
     d = load_domain(spark, SF_DIR)
-    args = (d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"])
-
-    fused_flags(False, False)
-    base2 = _rows(levels.run_pipeline(*args)["level2"])
-    base4 = _rows(levels.run_pipeline(*args)["level4"])
+    base2, base4 = (_rows(df) for df in _chain(d, big=False))
     assert base2 and base4
-
-    # fused + plain per-site windows
-    fused_flags(True, False)
-    assert _rows(levels.run_pipeline(*args)["level2"]) == base2
-
-    # fused + bucketed windows (the at-scale shape): cross-bucket
-    # as-of carry + in-bucket pick gates, end to end through level4
-    fused_flags(True, True)
-    assert _rows(levels.run_pipeline(*args)["level2"]) == base2
-    assert _rows(levels.run_pipeline(*args)["level4"]) == base4
+    # cross-bucket as-of carry + in-bucket pick gates, end to end
+    # through level4
+    big2, big4 = (_rows(df) for df in _chain(d, big=True))
+    assert big2 == base2
+    assert big4 == base4
 
 
-def test_level2_fused_pick_gates_edge_times(spark, fused_flags):
+def test_level2_fused_pick_gates_edge_times(spark):
     """Fact rows exactly AT an hour/day start must see their pick row
     (picks order before probes at equal time), and a fused day gate
-    must not leak a neighboring day's SILO row across midnight."""
+    must not leak a neighboring day's SILO row across midnight.
+
+    Site 2 drives the bucketed as-of carry: value rows sparse across
+    empty week-buckets, a null value mid-series (skipped by the carry
+    as by last(ignorenulls)), and value rows exactly at probe times
+    (rt == lt: visible backward, hidden forward, and matched by the
+    hour pick first)."""
+    base_t = dt.datetime(2021, 1, 1)
+    fmt = "%Y-%m-%d %H:%M:%S"
+    probes2 = [
+        ((base_t + dt.timedelta(hours=6 * i)).strftime(fmt), 2) for i in range(200)
+    ]
+    vals2 = [
+        (
+            (base_t + dt.timedelta(days=11 * i, hours=1)).strftime(fmt),
+            2,
+            None if i == 4 else 100.0 * (i + 1),
+        )
+        for i in range(6)
+    ] + [
+        ((base_t + dt.timedelta(hours=6 * 10)).strftime(fmt), 2, 555.0),
+        ((base_t + dt.timedelta(hours=6 * 150)).strftime(fmt), 2, 777.0),
+    ]
     raw = spark.createDataFrame(
         [
             # site 1: reading exactly at hour + day start
@@ -73,7 +81,8 @@ def test_level2_fused_pick_gates_edge_times(spark, fused_flags):
             ("2021-01-04 05:10:00", 1),
             # site 1: reading the day after the only silo day
             ("2021-01-05 00:00:00", 1),
-        ],
+        ]
+        + probes2,
         "t string, site_no int",
     ).selectExpr(
         "CAST(t AS TIMESTAMP) AS time",
@@ -95,7 +104,7 @@ def test_level2_fused_pick_gates_edge_times(spark, fused_flags):
         "5e1 AS external_humidity",
     )
     intensity = spark.createDataFrame(
-        [("2021-01-04 00:00:00", 1, 120.0)],
+        [("2021-01-04 00:00:00", 1, 120.0)] + vals2,
         "t string, site_no int, intensity double",
     ).selectExpr("CAST(t AS TIMESTAMP) AS time", "site_no", "intensity")
     silo = spark.createDataFrame(
@@ -108,18 +117,22 @@ def test_level2_fused_pick_gates_edge_times(spark, fused_flags):
         "average_humidity",
     )
     stations = spark.createDataFrame(
-        [(1, 6.5e-3, 9.55e2, 1.17e2, 0.61, 1.02)],
+        [(1, 6.5e-3, 9.55e2, 1.17e2, 0.61, 1.02), (2, 6.5e-3, 9.55e2, 1e2, 0.61, 1.02)],
         "site_no int, beta double, ref_pressure double, "
         "ref_intensity double, latit_scaling double, elev_scaling double",
     )
 
-    def run():
+    def run(big):
         # raw rows here are already deduped/flagged level1-shaped input
-        return _rows(levels.level1_to_level2(raw, intensity, silo, stations))
+        return levels.level1_to_level2(raw, intensity, silo, stations, big=big)
 
-    fused_flags(False, False)
-    base = run()
-    fused_flags(True, False)
-    assert run() == base
-    fused_flags(True, True)
-    assert run() == base
+    base = _rows(run(False))
+    assert _rows(run(True)) == base
+    # site 2 picks every non-null value: 100-400 by as-of (the first
+    # probe forward, later ones carried backward across empty weeks and
+    # past the null), 555 and 777 by their hour
+    corr2 = {
+        r["intensity_corr"]
+        for r in run(True).where("site_no = 2").select("intensity_corr").collect()
+    }
+    assert corr2 == {1.0, 2.0, 3.0, 4.0, 5.55, 7.77}

@@ -65,7 +65,7 @@ def test_scan_local_identity_on_domain_corpus(spark, tmp_path, n_files):
     makes per-site file spans comparable to the 29-min window, so the
     boundary stitch and zone fix both fire constantly."""
     raw = load_domain(spark, SF_DIR)["raw_values"]
-    base = _rows(levels.raw_to_level1(raw))
+    base = _rows(levels.raw_to_level1(raw, big=False))
     assert base
     path = str(tmp_path / f"sink_{n_files}")
     write_time_tiled(raw, path, n_files)
@@ -99,7 +99,7 @@ def test_scan_local_boundary_grid(spark, tmp_path):
         add(t, s, 1000 + s)
 
     raw = _mini_raw(spark, rows)
-    base = _rows(levels.raw_to_level1(raw))
+    base = _rows(levels.raw_to_level1(raw, big=False))
     for n_files in (2, 8):
         path = str(tmp_path / f"grid_{n_files}")
         write_time_tiled(raw, path, n_files)
@@ -131,7 +131,7 @@ def test_scan_local_short_files_multi_file_lookback(spark, tmp_path):
     # duplicate of row i=5's payload, 24 min later (12 steps)
     rows.append((b + 5 * 120 + 1440, 1, 0, 1005, 12.0, 1.0))
     raw = _mini_raw(spark, rows)
-    base = _rows(levels.raw_to_level1(raw))
+    base = _rows(levels.raw_to_level1(raw, big=False))
     path = str(tmp_path / "short")
     write_time_tiled(raw, path, 16)
     assert _rows(levels.raw_to_level1_scan_local(spark, path)) == base

@@ -2,7 +2,15 @@
 PLANS.md — the ".explain until it's the plan you'd want" evidence,
 reviewable without running Spark. Each section also one-lines the
 health signals the plan tests assert (codegen spans, broadcast joins,
-absence of cartesian/nested-loop joins).
+absence of cartesian/nested-loop joins). Expression ids (``#123``) and
+plan ids (``plan_id=45``) depend on what the session built before, and
+AQE numbers query stages and codegen stages (``ShuffleQueryStage 5``,
+``*(6)``) in the order its stages happen to finish; all four are
+written as fixed tokens, so two regenerations of the same code diff
+cleanly and a diff across commits shows only plan changes. (A join
+whose two sides are both broadcastable can still flip its build side
+between runs: AQE picks it from whichever side finished first.) Input
+paths are written relative to the corpus directory, as ``<sf_dir>``.
 
 Usage: python tools/explain_all.py [sf_dir]   (default sf0.01)
 """
@@ -10,6 +18,7 @@ Usage: python tools/explain_all.py [sf_dir]   (default sf0.01)
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,14 +27,32 @@ from cosmoz_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from cosmoz_data_pipeline_spark.session import build_session  # noqa: E402
 
 
+_RUN_ORDER_IDS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"QueryStage \d+"), "QueryStage N"),
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+)
+
+
+def normalize_ids(plan: str) -> str:
+    """Replace ids that depend on session history or AQE stage order
+    by fixed tokens."""
+    for pattern, token in _RUN_ORDER_IDS:
+        plan = pattern.sub(token, plan)
+    return plan
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = os.path.abspath(sf_dir)
     spark = build_session(app_name="cosmoz-explain")
     spark.sparkContext.setLogLevel("ERROR")
     out = [
         "# Physical plans (executed, AQE-final) — full registry",
         "",
-        f"Generated by `tools/explain_all.py {sf_dir}`. Signals per query:",
+        f"Generated by `tools/explain_all.py` over `{os.path.basename(sf_dir)}`",
+        "(input paths written as `<sf_dir>`). Signals per query:",
         "`WSCG` = whole-stage-codegen spans (`*(n)` markers), `BHJ`/`SMJ` =",
         "broadcast/sort-merge joins, `XP` = shuffle exchanges.",
         "`CartesianProduct` must never appear. `BroadcastNestedLoopJoin` is",
@@ -52,7 +79,8 @@ def main() -> None:
             f"cartesian={'CartesianProduct' in plan} "
             f"bnlj={'BroadcastNestedLoopJoin' in plan}"
         )
-        out += [f"## {name}", "", f"`{signals}`", "", "```", plan.rstrip(), "```", ""]
+        text = normalize_ids(plan).replace(sf_dir, "<sf_dir>")
+        out += [f"## {name}", "", f"`{signals}`", "", "```", text.rstrip(), "```", ""]
         release_persists()
         spark.catalog.clearCache()
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cosmoz_data_pipeline_spark.domain import levels  # noqa: E402
 from cosmoz_data_pipeline_spark.domain.synth import load_domain  # noqa: E402
+from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_auto  # noqa: E402
 from cosmoz_data_pipeline_spark.operators.scan_local import (  # noqa: E402
     write_time_tiled,
 )
@@ -88,7 +89,8 @@ def ensure_sink(spark, sf_dir: str, mult: int, n_files: int) -> str:
 
 def _variant(spark, which: str, sink: str):
     if which == "A":
-        return levels.raw_to_level1(spark.read.parquet(sink))
+        raw = spark.read.parquet(sink)
+        return levels.raw_to_level1(raw, big=bucketed_auto(raw))
     return levels.raw_to_level1_scan_local(spark, sink)
 
 

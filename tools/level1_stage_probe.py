@@ -3,9 +3,9 @@ round 14: LEVEL4_STAGES.json's refresh shows the level1 prefix is the
 dominant x1000 marginal of the level pipeline — +77.3 s of level4's
 ~100 s, alpha 1.195 x100->x1000, reproduced across two probe runs —
 while the fused level2 exchange adds only +12 s and the +-3h frame
-+19 s). Times COLD PREFIXES of raw->level1 under the shipped auto
-gates (bucketed (site, week) lag + hash-prefixed duplicate window at
-scale) via a noop write (count() would prune the window columns):
++19 s). Times COLD PREFIXES of raw->level1 in the shape run_pipeline
+picks (bucketed (site, week) lag + hash-prefixed duplicate window when
+big) via a noop write (count() would prune the window columns):
 
   scan — raw_values parquet scan (count; nothing to prune)
   lag  — + the bucketed_lag prev_count exchange, all columns
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from cosmoz_data_pipeline_spark.domain import levels  # noqa: E402
 from cosmoz_data_pipeline_spark.domain.synth import load_domain  # noqa: E402
 from cosmoz_data_pipeline_spark.operators.bucketed_window import (  # noqa: E402
+    bucketed_auto,
     bucketed_lag,
 )
 from cosmoz_data_pipeline_spark.sentinel import (  # noqa: E402
@@ -66,12 +67,12 @@ def _sink(sf_dir):
 
 
 def _with_prev(raw):
-    # the shipped at-scale lag shape (LEVEL1_SEQ_BUCKETED auto)
+    # raw_to_level1's big-shape prev_count lag
     return bucketed_lag(raw, ["site_no"], "time", ["count"], ["prev_count"])
 
 
 def _dup_flagged(raw):
-    # the shipped at-scale duplicate window (LEVEL1_DUPW_HASH auto)
+    # raw_to_level1's big-shape duplicate window
     from pyspark.sql import Window
 
     pay = F.struct(*[F.col(c) for c in levels.RAW_PAYLOAD])
@@ -83,6 +84,11 @@ def _dup_flagged(raw):
         "prev_same_payload_time",
         F.when(prev_pay.eqNullSafe(pay), F.lag("time").over(dupw)),
     )
+
+
+def _level1(raw):
+    # the shape run_pipeline picks for this corpus
+    return levels.raw_to_level1(raw, big=bucketed_auto(raw))
 
 
 def _timed(spark, rec, key, df_fn, force="noop"):
@@ -135,7 +141,7 @@ def main() -> None:
         _timed(spark, rec, "scan", lambda: _raw(spark, d), force="count")
         _timed(spark, rec, "lag", lambda: _with_prev(_raw(spark, d)))
         _timed(spark, rec, "dupw", lambda: _dup_flagged(_raw(spark, d)))
-        _timed(spark, rec, "l1", lambda: levels.raw_to_level1(_raw(spark, d)))
+        _timed(spark, rec, "l1", lambda: _level1(_raw(spark, d)))
         # round 14: scan-local stages over the materialized sink
         # (operators/scan_local.py, LEVEL1_SCANLOCAL_AB.json) — the
         # window-shape prefixes above read the derived view; these read
@@ -193,7 +199,7 @@ def main() -> None:
                 spark,
                 rec,
                 "sink_read_l1",
-                lambda: levels.raw_to_level1(spark.read.parquet(sink)),
+                lambda: _level1(spark.read.parquet(sink)),
             )
         rec["sentinel_sec"] = snt
         if io_pre is not None:
