@@ -5,9 +5,58 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
-from cosmoz_data_pipeline_spark.cli import _resolve_since, process_levels, read_level
+from cosmoz_data_pipeline_spark.cli import (
+    LEVELS,
+    _resolve_since,
+    process_levels,
+    read_level,
+)
+
+SF01 = "/root/testdata/sf0.01"
+SINCE_ALL = "1970-01-01 00:00:00"
+LEVEL4_VALUES = (
+    "soil_moist", "effective_depth", "rainfall", "soil_moist_filtered", "depth_filtered",
+)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _tag_jobs(spark) -> dict[str, set[int]]:
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    return {
+        name: set(tracker.getJobIdsForTag(f"cosmoz-level-{name}")) for name in LEVELS
+    }
+
+
+@pytest.fixture(scope="module")
+def sf01_backfill(spark, tmp_path_factory):
+    """One sf0.01 backfill under a caller job group, with the level-tag
+    job ids it added and the cache state it left behind."""
+    # start from an empty cache: other tests' registry queries persist
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    out = tmp_path_factory.mktemp("sf01").joinpath("levels").as_posix()
+    before = _tag_jobs(spark)
+    sc.setJobGroup("cosmoz-test-backfill", "sf0.01 backfill")
+    try:
+        process_levels(spark, SF01, out, since=SINCE_ALL)
+    finally:
+        sc._jsc.clearJobGroup()
+    after = _tag_jobs(spark)
+    group = set(sc._jsc.sc().statusTracker().getJobIdsForGroup("cosmoz-test-backfill"))
+    return {
+        "out": out,
+        "tag_jobs": {name: after[name] - before[name] for name in LEVELS},
+        "group_jobs": group,
+        "cache_empty": _cache_empty(spark),
+        "caller_tags": set(sc.getJobTags()),
+    }
 
 
 def test_resolve_since_timestamp_wins():
@@ -94,3 +143,53 @@ def test_golden_ab_temp_workflow(spark, sf_dir, tmp_path):
     spark.read.parquet(l1t + "_new").write.mode("overwrite").parquet(l1t)
     report = golden_ab_report(spark, out, names=("level1",))
     assert not report["level1"]["ok"]
+
+
+def test_backfill_matches_oracles(spark, sf01_backfill):
+    """The written level4 values equal the level4 oracle and every
+    level's row count equals its oracle's."""
+    from cosmoz_data_pipeline_spark.domain import oracles
+    from tools.compare import compare, duckdb_connection
+
+    out = sf01_backfill["out"]
+    con = duckdb_connection(SF01)
+    # the registry view's format: timestamps as text, values to 6 places
+    view = read_level(spark, out, "level4").select(
+        F.date_format("time", "yyyy-MM-dd HH:mm:ss").alias("time"),
+        "site_no",
+        *(F.round(c, 6).alias(c) for c in LEVEL4_VALUES),
+    )
+    ok, msg = compare(view, oracles.LEVEL4_ORACLE, con)
+    assert ok, msg
+    for name in LEVELS:
+        oracle_sql = getattr(oracles, f"{name.upper()}_ORACLE")
+        want = con.execute(f"SELECT count(*) FROM ({oracle_sql})").fetchone()[0]
+        assert read_level(spark, out, name).count() == want, name
+
+
+def test_levels_written_under_per_level_tags(sf01_backfill):
+    """Every level's write runs jobs under its own tag, inside the
+    caller's job group, and leaves no tag on the caller's thread."""
+    tag_jobs = sf01_backfill["tag_jobs"]
+    assert all(tag_jobs[name] for name in LEVELS), tag_jobs
+    assert set().union(*tag_jobs.values()) <= sf01_backfill["group_jobs"]
+    assert sf01_backfill["caller_tags"] == set()
+
+
+def test_persisted_levels_released(spark, sf_dir, tmp_path, sf01_backfill):
+    """No persisted level outlives the call: not after a backfill, and
+    not after one level's write fails while the others commit."""
+    assert sf01_backfill["cache_empty"]
+
+    spark.catalog.clearCache()
+    out = tmp_path / "levels"
+    out.mkdir()
+    # level2's sink is a regular file, so its write must fail
+    (out / "level2").write_text("not a directory")
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        process_levels(spark, sf_dir, out.as_posix(), since=SINCE_ALL)
+    assert _cache_empty(spark)
+    # the other levels still committed
+    for name in ("level1", "level3", "level4"):
+        assert read_level(spark, out.as_posix(), name).count() > 0, name
+    assert (out / "level2").read_text() == "not a directory"

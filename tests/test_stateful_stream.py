@@ -140,15 +140,16 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path):
     assert got[base + dt.timedelta(hours=3)] == (True, 110.0)
 
 
-def test_stream_dedup_state_partitions_sized_from_bytes(spark, sf_dir, tmp_path):
+def test_stream_dedup_state_partitions_sized_from_bytes(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Round 15 (ST6_STAGES/ST6_STATEPARTS_AB): the dedup stream's
     state-store partition count derives from source BYTES (one
-    target-sized slice per partition, min 8), not the session's
-    core-count floor; results are partition-count-invariant; and the
-    session conf is restored after the stream."""
-    from cosmoz_data_pipeline_spark.session import (
-        SHUFFLE_TARGET_INPUT_BYTES,
-    )
+    target-sized slice per partition, min 8, capped), not the
+    session's core-count floor; results are partition-count-invariant;
+    and the session conf is restored after the stream."""
+    from cosmoz_data_pipeline_spark import session
+    from cosmoz_data_pipeline_spark.session import SHUFFLE_PARTITIONS_CAP, _path_bytes
     from cosmoz_data_pipeline_spark.streaming import incremental as inc
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -165,13 +166,17 @@ def test_stream_dedup_state_partitions_sized_from_bytes(spark, sf_dir, tmp_path)
         assert inc._state_partitions(spark, src) == 17
     finally:
         inc.STREAM_STATE_PARTITIONS = prev_flag
-    sz = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(src)
-        for f in fs
-    )
-    want_big = max(8, sz * 100 // SHUFFLE_TARGET_INPUT_BYTES)
-    assert want_big == 8 or want_big > 8  # rule is monotone in bytes
+    # bytes-derived branch: with a target slice of 1/20 of the source
+    # the count is bytes // target; with a 1-byte target it clamps at
+    # the cap
+    sz = _path_bytes(src, spark)
+    assert sz > SHUFFLE_PARTITIONS_CAP
+    target = sz // 20
+    monkeypatch.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", target)
+    assert inc._state_partitions(spark, src) == sz // target > 8
+    monkeypatch.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", 1)
+    assert inc._state_partitions(spark, src) == SHUFFLE_PARTITIONS_CAP
+    monkeypatch.undo()
 
     # end-to-end: same deduped key set at the auto count and at a
     # pinned high count, and the session conf is untouched after
