@@ -57,14 +57,13 @@ def idot_raw(a: Column, b: Column) -> Column:
     """Integer dot product fold WITHOUT idot's per-element casts and
     null-coalescing — for arrays already bigint and structurally
     null-free (the IVF quantized vectors: fixed 64 dims built by
-    F.array). Null semantics match :func:`l2sq`, not :func:`idot`: a
-    null element (or ragged zip padding) PROPAGATES to a null sum, so
-    the expanded d2 = qq − 2·ab + ww is null exactly when the pairwise
-    fold would be. Measured on 100M 64-dim evaluations
-    (tools/ivf_fold_micro.py, x1000 vectors): 32.6 s vs 39.0 s for
-    the cast+coalesce idot and 37.4 s for the pairwise l2sq fold —
-    the per-element Cast/Coalesce nodes are pure interpreter overhead
-    on bigint input."""
+    F.array). Unlike :func:`idot`, a null element (or ragged zip
+    padding) PROPAGATES to a null sum. Measured on 100M 64-dim
+    evaluations of x1000 vectors: 32.6 s vs 39.0 s for the
+    cast+coalesce idot and 37.4 s for a pairwise squared-L2 fold
+    (an isolated micro-benchmark, tools/ivf_fold_micro.py in git
+    history) — the per-element Cast/Coalesce nodes are pure
+    interpreter overhead on bigint input."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("bigint"),
@@ -74,9 +73,8 @@ def idot_raw(a: Column, b: Column) -> Column:
 
 def idot_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Fixed-dimension INTEGER dot product as an explicit
-    left-associative sum of ``getItem`` terms over bigint arrays —
-    the integer sibling of :func:`dot_unrolled`, with the same
-    small-expression-only caveat: faster than the fold ONLY while the
+    left-associative sum of ``getItem`` terms over bigint arrays.
+    Faster than the fold ONLY while the
     fused stage stays inside whole-stage codegen (a 16-term expression
     compiles where the 64-term one measured 433 s vs 43 s interpreted,
     see :func:`dot`). Inputs must already be bigint and null-free
@@ -135,63 +133,12 @@ def qnorm(qv: Column) -> Column:
     return F.sqrt(idot(qv, qv).cast("double"))
 
 
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance as a ``zip_with``/``aggregate`` fold (see
-    :func:`dot` for why the fold beats an unrolled expression on big
-    stages). Intended for INTEGER (quantized) arrays: every term and
-    the sum are exact in int64, so the result is independent of
-    evaluation order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Fixed-dimension dot product as an explicit left-associative sum
-    of ``getItem`` terms. Faster than :func:`dot` ONLY while the fused
-    stage stays within whole-stage-codegen method limits — true for
-    small plans, false for the large scoring joins (see :func:`dot`),
-    which is why no data-scaled path uses it. Kept for narrow
-    fixed-size expressions (e.g. K-row centroid jobs) where the stage
-    is tiny and compiles. Accumulation order is identical to the
-    fold's, so results are bit-for-bit equal to :func:`dot`."""
-    out = F.lit(0.0)
-    for i in range(dim):
-        out = out + a.getItem(i) * b.getItem(i)
-    return out
-
-
-def l2sq_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Fixed-dimension squared L2 distance as an explicit sum of
-    ``getItem`` terms — same small-stage-only caveat as
-    :func:`dot_unrolled`; data-scaled paths use :func:`l2sq`. Intended
-    for INTEGER (quantized) arrays: every term and the sum are exact
-    in int64, so the result is independent of evaluation order."""
-    out = None
-    for i in range(dim):
-        d = a.getItem(i) - b.getItem(i)
-        out = d * d if out is None else out + d * d
-    return out
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
-
-
 def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return dot(a, b) / (norm_a * norm_b)
-
-
-def cosine_unrolled(
-    a: Column, b: Column, norm_a: Column, norm_b: Column, dim: int
-) -> Column:
-    return dot_unrolled(a, b, dim) / (norm_a * norm_b)
 
 
 # --------------------------------------------------- SRP (sign random
@@ -301,7 +248,7 @@ def srp_band_buckets(
     order-independent, so the DuckDB oracle CTEs are untouched and
     parity stays exact), and it cannot fall off the codegen cliff
     because it never unrolls — the same round-5 fold-kernel lesson as
-    sim.dot/cosine/l2sq. The band structs are EXPLODED FIRST (an
+    sim.dot/cosine. The band structs are EXPLODED FIRST (an
     attribute of the broadcast weight row, never a computed array, so
     nothing is re-evaluated per output row), then each output row
     folds only its own band's planes — total work is unchanged. The

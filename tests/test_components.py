@@ -161,29 +161,29 @@ def test_label_propagation_matches_union_find(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_lazy_tail_checkpoint_identical_labels(spark, sf_dir):
-    # round 12 (COMPONENTS_LAZY_TAIL_CKPT): lazy checkpoints on
-    # skip-probe rounds change materialization timing, never values —
-    # the tiny corpus keeps every frontier below
-    # COMPONENTS_PROBE_LAZY_BELOW, so the lazy branch actually runs
+def test_lazy_tail_checkpoint_identical_labels(spark, sf_dir, monkeypatch):
+    # skip-probe supersteps checkpoint lazily (eager=not skip_probe):
+    # that changes materialization timing, never values. The tiny
+    # corpus keeps every frontier below COMPONENTS_PROBE_LAZY_BELOW,
+    # so the shipped run takes the lazy branch; at 0 every superstep
+    # probes and checkpoints eagerly.
     from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext as CE
     from cosmoz_data_pipeline_spark.plans.registry import release_persists
 
-    shipped = CE.COMPONENTS_LAZY_TAIL_CKPT
-
     def run():
+        trace: list = []
+        monkeypatch.setattr(CE, "COMPONENTS_TRACE", trace)
         rows = sorted(
             tuple(r)
             for r in REGISTRY["x_dedup_components"].run(spark, sf_dir).collect()
         )
         release_persists()
-        return rows
+        return rows, sum(t["changed"] is None for t in trace)
 
-    try:
-        CE.COMPONENTS_LAZY_TAIL_CKPT = False
-        base = run()
-        assert base
-        CE.COMPONENTS_LAZY_TAIL_CKPT = True
-        assert run() == base
-    finally:
-        CE.COMPONENTS_LAZY_TAIL_CKPT = shipped
+    base, n_lazy = run()
+    assert base
+    assert n_lazy > 0  # the lazy-checkpoint branch actually ran
+    monkeypatch.setattr(CE, "COMPONENTS_PROBE_LAZY_BELOW", 0)
+    eager, n_lazy = run()
+    assert n_lazy == 0
+    assert eager == base

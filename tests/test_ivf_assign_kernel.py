@@ -1,13 +1,17 @@
-"""IVF_ASSIGN_NUMPY (catalog_ext) swaps the HOF fold assignment for
-an Arrow/numpy mapInPandas kernel whose float64 matmuls are EXACT
-integer arithmetic below the 2^22-per-component guard — so flipping
-it must leave every IVF output bit-identical: the trained centroid
-table (i.e. every intermediate Lloyd assignment) AND the final
-top-k, on BOTH assignment branches (flat K<64, two-level K>=64).
-Tie-breaks are the risk surface the synthetic pins: duplicate
-centroid coordinates produce exactly tied d2 where the HOF path's
-min(struct(d2, j)) / array_sort(struct(d2, gid)) ordering must match
-np.argmin's first-occurrence / stable argsort.
+"""The IVF assignment kernel (catalog_ext._ivf_assign_kernel) computes
+every Lloyd and add assignment in an Arrow/numpy mapInPandas pass whose
+float64 matmuls are EXACT integer arithmetic below the
+2^22-per-component guard. It must pick the same centroid as the
+expression path that ranks query probes (_ivf_candidates + lowest
+(d2, j)) on BOTH assignment branches (flat K<64, two-level K>=64),
+so swapping that expression path in for the kernel must leave every
+IVF output bit-identical: the trained centroid table (i.e. every
+intermediate Lloyd assignment) AND the final top-k. Tie-breaks are the risk surface the synthetic pins: duplicate
+centroid coordinates produce exactly tied d2 where the expression
+path's min(struct(d2, j)) / array_sort(struct(d2, gid)) ordering must
+match np.argmin's first-occurrence / stable argsort. The IVF queries
+themselves are oracle-checked in tests/test_oracle_parity.py (flat)
+and tests/test_ivf_twolevel_parity.py (two-level).
 """
 
 from __future__ import annotations
@@ -45,20 +49,27 @@ def twolevel_dir(spark, tmp_path_factory):
     return d
 
 
-@pytest.fixture()
-def assign_kernel():
+def _expr_assign(qv, cent_df, k, bc_sink=None):
+    """(vec_id, cluster) by the expression path: the nearest
+    _ivf_candidates centroid, ties to the lowest j."""
     from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
 
-    shipped = CE.IVF_ASSIGN_NUMPY
+    return (
+        CE._ivf_candidates(qv, cent_df, k)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct(F.col("d2").alias("d"), F.col("j").alias("j"))).alias("m"))
+        .select("vec_id", F.col("m.j").alias("cluster"))
+    )
 
-    def _set(on: bool):
-        # the index memo caches one variant's assignment — a stale
-        # memo would leak it into the other variant's run
-        CE.IVF_ASSIGN_NUMPY = on
-        CE._IVF_CENTROIDS.clear()
 
-    yield _set
-    CE.IVF_ASSIGN_NUMPY = shipped
+@pytest.fixture()
+def fresh_index():
+    """Clear the trained-index memo around a test, so each run trains
+    (and assigns) with the assignment in force at that moment."""
+    from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
+
+    CE._IVF_CENTROIDS.clear()
+    yield CE._IVF_CENTROIDS.clear
     CE._IVF_CENTROIDS.clear()
 
 
@@ -77,29 +88,33 @@ def _run(spark, sf_dir, name):
     return rows
 
 
-@pytest.mark.parametrize("name", ["x_ann_ivf_topk", "x_ann_ivf_topk_train"])
-def test_flat_branch_identity(spark, sf_dir, assign_kernel, name):
-    assign_kernel(False)
+def _identity(spark, sf_dir, monkeypatch, clear, name):
+    from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
+
     base = _run(spark, sf_dir, name)
     assert base
-    assign_kernel(True)
+    clear()
+    monkeypatch.setattr(CE, "_ivf_assign_kernel", _expr_assign)
     assert _run(spark, sf_dir, name) == base
 
 
 @pytest.mark.parametrize("name", ["x_ann_ivf_topk", "x_ann_ivf_topk_train"])
-def test_twolevel_branch_identity(spark, twolevel_dir, assign_kernel, name):
-    assign_kernel(False)
-    base = _run(spark, twolevel_dir, name)
-    assert base
-    assign_kernel(True)
-    assert _run(spark, twolevel_dir, name) == base
+def test_flat_branch_identity(spark, sf_dir, monkeypatch, fresh_index, name):
+    _identity(spark, sf_dir, monkeypatch, fresh_index, name)
+
+
+@pytest.mark.parametrize("name", ["x_ann_ivf_topk", "x_ann_ivf_topk_train"])
+def test_twolevel_branch_identity(
+    spark, twolevel_dir, monkeypatch, fresh_index, name
+):
+    _identity(spark, twolevel_dir, monkeypatch, fresh_index, name)
 
 
 def _synthetic(spark, n_cents: int):
     """Tie-heavy assignment inputs: every vector replicated 4x and
     centroid coordinates duplicated (cent j and j + n/2 share wa), so
     d2 ties are everywhere and only matching tie-break order keeps
-    the variants identical."""
+    the two paths identical."""
     from cosmoz_data_pipeline_spark.functions import similarity as sim
 
     base = [
@@ -127,9 +142,7 @@ def test_tie_break_identity_direct(spark, n_cents):
     qv, cent_df = _synthetic(spark, n_cents)
     hof = {
         r["vec_id"]: r["cluster"]
-        for r in CE._argmin_cluster(
-            CE._ivf_candidates(qv, cent_df, n_cents)
-        ).collect()
+        for r in _expr_assign(qv, cent_df, n_cents).collect()
     }
     krn = {
         r["vec_id"]: r["cluster"]

@@ -1,9 +1,8 @@
-"""IVF_D2_EXPAND (catalog_ext) is an arithmetic identity — d2(a,b) =
-a·a − 2·a·b + b·b over exact int64 — so flipping it must leave every
-IVF output bit-identical: the trained centroid table AND the final
-top-k, on BOTH assignment branches (flat K<64, two-level K>=64).
-These tests pin that variant-vs-variant, the same way
-tests/test_level1_dupw_hash.py pins the level1 window layouts.
+"""The IVF distance catalog_ext._d2_pair is the expanded form d2(a,b) =
+a·a − 2·a·b + b·b over exact int64 — an arithmetic identity with the
+pairwise fold Σ(a−b)², so swapping that fold in must leave every IVF
+output bit-identical: the trained centroid table AND the final top-k,
+on BOTH assignment branches (flat K<64, two-level K>=64).
 """
 
 from __future__ import annotations
@@ -11,6 +10,8 @@ from __future__ import annotations
 import hashlib
 
 import pytest
+
+from pyspark.sql import functions as F
 
 N_VECS = 6400
 N_CLUSTERS = 80  # > IVF_TWOLEVEL_MIN_K -> two-level branch
@@ -39,21 +40,26 @@ def twolevel_dir(spark, tmp_path_factory):
     return d
 
 
+def _d2_pairwise(qa, wa, qq, ww):
+    """Squared L2 as the pairwise fold Σ(a−b)²; exact in int64."""
+    return F.aggregate(
+        F.zip_with(qa, wa, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
 @pytest.fixture()
-def d2_expand():
+def pairwise_d2(monkeypatch):
     from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
 
-    shipped = CE.IVF_D2_EXPAND
-
-    def _set(on: bool):
-        # the quantized-vector schema (qq column) and the index memo
-        # depend on the flag — a stale memo would leak one variant's
-        # plan into the other's run
-        CE.IVF_D2_EXPAND = on
+    def _set():
+        # the index memo holds the expanded-form run's plan
         CE._IVF_CENTROIDS.clear()
+        monkeypatch.setattr(CE, "_d2_pair", _d2_pairwise)
 
+    CE._IVF_CENTROIDS.clear()
     yield _set
-    CE.IVF_D2_EXPAND = shipped
     CE._IVF_CENTROIDS.clear()
 
 
@@ -73,18 +79,16 @@ def _run(spark, sf_dir, name):
 
 
 @pytest.mark.parametrize("name", ["x_ann_ivf_topk", "x_ann_ivf_topk_train"])
-def test_flat_branch_identity(spark, sf_dir, d2_expand, name):
-    d2_expand(False)
+def test_flat_branch_identity(spark, sf_dir, pairwise_d2, name):
     base = _run(spark, sf_dir, name)
     assert base
-    d2_expand(True)
+    pairwise_d2()
     assert _run(spark, sf_dir, name) == base
 
 
 @pytest.mark.parametrize("name", ["x_ann_ivf_topk", "x_ann_ivf_topk_train"])
-def test_twolevel_branch_identity(spark, twolevel_dir, d2_expand, name):
-    d2_expand(False)
+def test_twolevel_branch_identity(spark, twolevel_dir, pairwise_d2, name):
     base = _run(spark, twolevel_dir, name)
     assert base
-    d2_expand(True)
+    pairwise_d2()
     assert _run(spark, twolevel_dir, name) == base

@@ -1,14 +1,14 @@
-"""MINHASH_SIG_KERNEL (catalog_ext) swaps the explode → lead-window →
-min-aggregate MinHash signature build for a scan-local per-doc Python
-kernel. Flipping it must leave both consumers' outputs identical:
-x_dedup_minhash_lsh (signatures → banding → est_jaccard) and
-x_dedup_ngram_jaccard (signatures + exact shingle-set verify). The
-risk surfaces are the tokenize/shingle edge semantics the kernel
-re-implements in Python — Spark trim() strips spaces only (not
-Python strip()'s full whitespace), Java \\s is ASCII-only (not
-Python's Unicode \\s), the <3-token whole-text fallback, empty
-strings kept by concat_ws, null text emitting nothing — pinned here
-variant-vs-variant on adversarial docs and end-to-end on the corpus.
+"""The MinHash signature kernel (catalog_ext._minhash_sigs_kernel)
+re-implements the explode → lead-window → min-aggregate signature
+build in one scan-local Python pass; both x_dedup_minhash_lsh and
+x_dedup_ngram_jaccard run it. The risk surfaces are the
+tokenize/shingle edge semantics it re-implements — Spark trim() strips
+spaces only (not Python strip()'s full whitespace), Java \\s is
+ASCII-only (not Python's Unicode \\s), the <3-token whole-text
+fallback, empty strings kept by concat_ws, null text emitting nothing
+— pinned here against the explode reference builders on adversarial
+docs and end-to-end on the corpus. The queries themselves are
+oracle-checked in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -18,17 +18,6 @@ from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext as CE
 from cosmoz_data_pipeline_spark.plans.registry import release_persists
-
-
-@pytest.fixture()
-def sig_kernel():
-    shipped = CE.MINHASH_SIG_KERNEL
-
-    def _set(on: bool | None):
-        CE.MINHASH_SIG_KERNEL = on
-
-    yield _set
-    CE.MINHASH_SIG_KERNEL = shipped
 
 
 def _rows(df):
@@ -95,77 +84,19 @@ def test_kernel_matches_fold_on_edge_docs(spark, edge_docs, with_set):
 @pytest.mark.parametrize(
     "name", ["x_dedup_minhash_lsh", "x_dedup_ngram_jaccard"]
 )
-def test_query_output_identical_with_kernel(spark, sf_dir, sig_kernel, name):
+def test_query_output_identical_with_kernel(spark, sf_dir, monkeypatch, name):
+    # end to end: the query's output is unchanged when the explode
+    # reference builder stands in for the kernel
     def run():
         rows = _rows(REGISTRY[name].run(spark, sf_dir))
         release_persists()
         return rows
 
-    sig_kernel(False)
     base = run()
     assert base, "corpus must produce rows for this test to bite"
-    sig_kernel(True)
-    assert run() == base
-
-
-@pytest.fixture()
-def hash_where():
-    """Force where the kernel's per-shingle md5 runs (round 12,
-    MINHASH_HASH_WHERE), restoring the shipped default."""
-    shipped = CE.MINHASH_HASH_WHERE
-
-    def _set(v: str):
-        CE.MINHASH_HASH_WHERE = v
-
-    yield _set
-    CE.MINHASH_HASH_WHERE = shipped
-
-
-@pytest.mark.parametrize("with_set", [False, True])
-def test_jvm_hash_kernel_matches_python_and_fold(
-    spark, edge_docs, hash_where, with_set
-):
-    # round 12 (VERDICT r11 next #6): moving the md5 prefix JVM-side
-    # (kernel emits shingle strings; hashing + 12 affine minima are
-    # codegen expressions) must leave signatures and sets identical to
-    # BOTH the Python-hash kernel and the fold
-    fold = {r["doc_id"]: r for r in _fold_per_doc(edge_docs, with_set).collect()}
-    outs = {}
-    for v in ("python", "jvm"):
-        hash_where(v)
-        outs[v] = {
-            r["doc_id"]: r
-            for r in CE._minhash_sigs_kernel(edge_docs, with_set=with_set).collect()
-        }
-    assert set(fold) == set(outs["python"]) == set(outs["jvm"])
-    for did, fr in fold.items():
-        assert (
-            list(fr["sig"])
-            == list(outs["python"][did]["sig"])
-            == list(outs["jvm"][did]["sig"])
-        ), did
-        if with_set:
-            assert (
-                set(fr["sh_set"])
-                == set(outs["python"][did]["sh_set"])
-                == set(outs["jvm"][did]["sh_set"])
-            ), did
-
-
-@pytest.mark.parametrize(
-    "name", ["x_dedup_minhash_lsh", "x_dedup_ngram_jaccard"]
-)
-def test_query_output_identical_across_hash_where(
-    spark, sf_dir, sig_kernel, hash_where, name
-):
-    def run():
-        rows = _rows(REGISTRY[name].run(spark, sf_dir))
-        release_persists()
-        return rows
-
-    sig_kernel(True)
-    hash_where("python")
-    base = run()
-    assert base
-    hash_where("jvm")
+    monkeypatch.setattr(
+        CE,
+        "_minhash_sigs_kernel",
+        lambda docs, with_set=False: _fold_per_doc(docs, with_set),
+    )
     assert run() == base

@@ -1,11 +1,14 @@
-"""The coarse pre-verify screen (catalog_ext.NEARDUP_PRESCREEN_HEAD)
-is a physical optimization: the Cauchy-Schwarz upper bound
+"""The coarse pre-verify screen (catalog_ext._neardup_prescreen) is a
+physical optimization: the Cauchy-Schwarz upper bound
 (head_dot + tail_norm_a * tail_norm_b) / (nrm_a * nrm_b) dominates the
 exact quantized cosine, so screening on it must never change the
 output pair set — only how many candidates reach the full-vector
-verify join. These tests pin that superset property end-to-end (query
-output identical with the screen on/off) and unit-pin the bound
-against exact cosines on adversarial vectors.
+verify join. These tests pin that superset property end-to-end
+(every output pair survives the screen, and the output is identical
+with the scale gate forcing the screen on), on ragged vectors, and
+unit-pin the bound against exact cosines on adversarial vectors. The
+scale gate that engages the screen is checked against the oracle in
+tests/test_catalog_gates.py.
 """
 
 from __future__ import annotations
@@ -17,20 +20,6 @@ from cosmoz_data_pipeline_spark.functions import similarity as sim
 from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext, release_persists
 
 
-@pytest.fixture()
-def prescreen(request):
-    """Set the screen head width for one test, restoring the shipped
-    module default (None = corpus-gated auto since round 10; head16
-    where the >=128-partition gate engages) afterward."""
-    shipped = catalog_ext.NEARDUP_PRESCREEN_HEAD
-
-    def _set(h: int):
-        catalog_ext.NEARDUP_PRESCREEN_HEAD = h
-
-    yield _set
-    catalog_ext.NEARDUP_PRESCREEN_HEAD = shipped
-
-
 def _pairs(spark, sf_dir):
     rows = REGISTRY["x_embed_cosine_neardup"].run(spark, sf_dir).collect()
     release_persists()
@@ -38,15 +27,23 @@ def _pairs(spark, sf_dir):
 
 
 @pytest.mark.parametrize("head", [8, 16])
-def test_query_output_identical_with_screen(spark, sf_dir, prescreen, head):
-    prescreen(0)  # unscreened reference pair set
+def test_query_output_identical_with_screen(spark, sf_dir, head):
+    # the verify is per pair, so the screened query's output is the
+    # unscreened output restricted to the screen's survivors: output
+    # identity holds iff every output pair survives the screen
+    assert catalog_ext._prescreen_head(spark, sf_dir) == 0  # unscreened
     base = _pairs(spark, sf_dir)
     assert base, "corpus must produce near-dup pairs for this test to bite"
-    prescreen(head)
-    assert _pairs(spark, sf_dir) == base
+    vecs, cand = catalog_ext._neardup_cands(spark, sf_dir)
+    kept = {
+        (r["vec_a"], r["vec_b"])
+        for r in catalog_ext._neardup_prescreen(vecs, cand, head).collect()
+    }
+    release_persists()
+    assert set(base) <= kept, sorted(set(base) - kept)[:5]
 
 
-def test_bound_dominates_exact_cosine(spark, prescreen):
+def test_bound_dominates_exact_cosine(spark):
     # adversarial shapes: all-head mass, all-tail mass, sign flips on
     # the boundary between head and tail, near-identical pair at the
     # threshold — the bound must be >= the exact quantized cosine for
@@ -115,7 +112,7 @@ def test_bound_dominates_exact_cosine(spark, prescreen):
         assert r["ub"] >= r["cos"] - 1e-12, (r["ub"], r["cos"])
 
 
-def test_screen_actually_screens(spark, sf_dir, prescreen):
+def test_screen_actually_screens(spark, sf_dir):
     # evidence the screen is not a no-op: at least one candidate pair
     # must be eliminated before the verify join on the test corpus
     from cosmoz_data_pipeline_spark.plans.catalog_ext import (
@@ -130,43 +127,45 @@ def test_screen_actually_screens(spark, sf_dir, prescreen):
     assert n_kept < n_all, (n_kept, n_all)
 
 
-@pytest.fixture()
-def screen_dot():
-    """Force the screen's head-dot implementation for one test
-    (NEARDUP_SCREEN_DOT, round 11), restoring the shipped default."""
-    shipped = catalog_ext.NEARDUP_SCREEN_DOT
+def test_screen_dot_variants_identical(spark, sf_dir, monkeypatch):
+    # the screen's head dot (the unrolled bigint expression) computes
+    # the same integer sum as the int fold and the raw bigint fold on
+    # every corpus candidate, and the query output with the scale gate
+    # forcing the screen on equals the unscreened output
+    base = _pairs(spark, sf_dir)
+    assert base
+    monkeypatch.setattr(catalog_ext, "SCALE_MIN_N", 0)
+    assert catalog_ext._prescreen_head(spark, sf_dir) == 16
+    assert _pairs(spark, sf_dir) == base
 
-    def _set(v: str):
-        catalog_ext.NEARDUP_SCREEN_DOT = v
+    h = 16
+    vecs, cand = catalog_ext._neardup_cands(spark, sf_dir)
+    head = F.transform(F.slice("qv", 1, h), lambda x: x.cast("bigint"))
+    va = vecs.select(F.col("vec_id").alias("vec_a"), head.alias("ha"))
+    vb = vecs.select(F.col("vec_id").alias("vec_b"), head.alias("hb"))
+    dots = (
+        cand.join(va, "vec_a")
+        .join(vb, "vec_b")
+        .select(
+            sim.idot(F.col("ha"), F.col("hb")).alias("fold"),
+            sim.idot_raw(F.col("ha"), F.col("hb")).alias("raw"),
+            sim.idot_unrolled(F.col("ha"), F.col("hb"), h).alias("unrolled"),
+        )
+        .collect()
+    )
+    release_persists()
+    assert dots
+    for r in dots:
+        assert r["fold"] == r["raw"] == r["unrolled"], r
 
-    yield _set
-    catalog_ext.NEARDUP_SCREEN_DOT = shipped
 
-
-def test_screen_dot_variants_identical(spark, sf_dir, prescreen, screen_dot):
-    # the three head-dot implementations (int32 fold / bigint raw fold
-    # / bigint unrolled expression) compute the identical integer sum,
-    # so the query output must be identical under each — with the
-    # screen forced ON so the variant actually executes
-    prescreen(16)
-    outs = []
-    for v in ("fold", "raw", "unrolled"):
-        screen_dot(v)
-        outs.append(_pairs(spark, sf_dir))
-    assert outs[0] == outs[1] == outs[2]
-    assert outs[0]
-
-
-def test_screen_dot_variants_identical_on_ragged_vectors(spark, screen_dot):
-    # round 12 (ADVICE r11): a qv SHORTER than the head width h slices
-    # to a short array; the raw/unrolled dots read h positional terms,
-    # so without the slim-build zero-padding a missing term would
-    # propagate NULL through ub and silently DROP the pair where the
-    # fold's per-product coalesce kept it. All three variants must
-    # keep the identical pair set on ragged input — and near-identical
-    # short vectors must actually SURVIVE the screen.
-    from cosmoz_data_pipeline_spark.plans.catalog_ext import _neardup_prescreen
-
+def test_screen_dot_variants_identical_on_ragged_vectors(spark):
+    # ADVICE r11: a qv SHORTER than the head width h slices to a short
+    # array; the unrolled dot reads h positional terms, so without the
+    # slim-build zero-padding a missing term would propagate NULL
+    # through ub and silently DROP the pair. Every pair the exact
+    # verify keeps must survive the screen on ragged input — and
+    # near-identical short vectors must actually SURVIVE it.
     h = 16
     vs = [
         (1, [0.4] * 4),                   # shorter than h
@@ -185,18 +184,23 @@ def test_screen_dot_variants_identical_on_ragged_vectors(spark, screen_dot):
     cand = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "vec_a int, vec_b int"
     )
-    kept = {}
-    for v in ("fold", "raw", "unrolled"):
-        screen_dot(v)
-        kept[v] = {
-            (r["vec_a"], r["vec_b"])
-            for r in _neardup_prescreen(vecs, cand, h).collect()
-        }
-    assert kept["fold"] == kept["raw"] == kept["unrolled"]
+    kept = {
+        (r["vec_a"], r["vec_b"])
+        for r in catalog_ext._neardup_prescreen(vecs, cand, h).collect()
+    }
+    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"), F.col("nrm").alias("na"))
+    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"), F.col("nrm").alias("nb"))
+    cos = F.round(
+        sim.idot(F.col("qa"), F.col("qb")).cast("double") / (F.col("na") * F.col("nb")), 6
+    )
+    verified = {
+        (r["vec_a"], r["vec_b"])
+        for r in cand.join(va, "vec_a").join(vb, "vec_b").where(cos >= 0.9).collect()
+    }
     # the ragged twins' bound is cosine 1.0 >= keep threshold: the
     # pair the null-propagation bug dropped must be present
-    assert (1, 2) in kept["fold"]
-    assert (3, 4) in kept["fold"]
+    assert {(1, 2), (3, 4)} <= verified
+    assert verified <= kept, sorted(verified - kept)
 
 
 def test_count_memo_pair_refills_together(spark, sf_dir):

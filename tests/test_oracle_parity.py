@@ -21,6 +21,13 @@ FAST = [
     "level1_scan_local",
     "level3",
     "x_dedup_exact",
+    "x_dedup_minhash_lsh",
+    "x_dedup_ngram_jaccard",
+    "x_dedup_simhash_pairs",
+    "x_dedup_components",
+    "x_embed_cosine_neardup",
+    "x_decontaminate",
+    "x_ann_ivf_topk",
     "x_text_fingerprint",
 ]
 

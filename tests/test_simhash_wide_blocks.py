@@ -61,101 +61,24 @@ def test_wide_and_narrow_blockings_verify_to_identical_pairs(spark, sf_dir):
     )
 
 
-def test_fused_verify_row_identity(spark, sf_dir):
-    """SIMHASH_FUSED_VERIFY is a physical reshape only: the band-carry
-    plan (verify map-side after the self-join, distinct on verified
-    rows) must produce row-for-row what the shipped joined shape
-    produces — every output column, both blocking schemes."""
-    from cosmoz_data_pipeline_spark.plans import REGISTRY
+def test_shj_hint_pair_identity_and_plan(spark, sf_dir, monkeypatch):
+    """The SHUFFLE_HASH hint on the band self-join is physical strategy
+    only — identical verified pairs — and the scale gate engages it by
+    docs count (below SCALE_MIN_N the planner's broadcast stays)."""
     from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
 
-    shipped = CE.SIMHASH_FUSED_VERIFY
-
-    def rows():
-        df = REGISTRY["x_dedup_simhash_pairs"].run(spark, sf_dir)
-        out = sorted(tuple(r) for r in df.collect())
-        release_persists()
-        return out
-
-    try:
-        CE.SIMHASH_FUSED_VERIFY = False
-        base = rows()
-        assert base
-        CE.SIMHASH_FUSED_VERIFY = True
-        assert rows() == base
-        # and under the wide scheme (both shapes share _simhash_blocks)
-        import cosmoz_data_pipeline_spark.plans.catalog_ext as ce
-
-        orig_wide = ce.SIMHASH_WIDE_N
-        try:
-            ce.SIMHASH_WIDE_N = 1  # force 8-block/C(8,5) keys
-            CE.SIMHASH_FUSED_VERIFY = True
-            wide_fused = rows()
-            CE.SIMHASH_FUSED_VERIFY = False
-            assert rows() == wide_fused == base
-        finally:
-            ce.SIMHASH_WIDE_N = orig_wide
-    finally:
-        CE.SIMHASH_FUSED_VERIFY = shipped
-
-
-def test_preagg_cands_pair_identity(spark, sf_dir):
-    """SIMHASH_PREAGG_CANDS is a physical reshape only: grouped
-    id-list pair expansion must produce exactly the joined shape's
-    candidate pair set — both blocking schemes — and the verified
-    pairs must match too."""
-    from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
-
-    shipped = CE.SIMHASH_PREAGG_CANDS
     try:
         sigs = scoped_persist(tx.simhash64_bands(_docs_aug(spark, sf_dir)))
         n = _docs_aug_count(spark, sf_dir)
-        for wide in (False, True):
-            CE.SIMHASH_PREAGG_CANDS = False
-            joined = {
-                (r.doc_a, r.doc_b)
-                for r in _simhash_combo_cands(sigs, n, wide=wide).collect()
-            }
-            CE.SIMHASH_PREAGG_CANDS = True
-            grouped = {
-                (r.doc_a, r.doc_b)
-                for r in _simhash_combo_cands(sigs, n, wide=wide).collect()
-            }
-            assert joined and joined == grouped, (
-                f"wide={wide}: joined-only={sorted(joined - grouped)[:5]} "
-                f"grouped-only={sorted(grouped - joined)[:5]}"
-            )
-            v_j = _verified_pairs(_simhash_combo_cands(sigs, n, wide=wide), sigs)
-            CE.SIMHASH_PREAGG_CANDS = False
-            assert _verified_pairs(
-                _simhash_combo_cands(sigs, n, wide=wide), sigs
-            ) == v_j
-    finally:
-        CE.SIMHASH_PREAGG_CANDS = shipped
-        release_persists()
-
-
-def test_shj_hint_pair_identity_and_plan(spark, sf_dir):
-    """Round 15 (SIMHASH_SHJ_AB): the SHUFFLE_HASH hint on the band
-    self-join is physical-strategy only — identical candidate pairs —
-    and the auto gate engages it by docs count (below
-    SIMHASH_SHJ_MIN_N the planner's broadcast must stay)."""
-    from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
-
-    prev = CE.SIMHASH_BAND_SHJ
-    try:
-        sigs = scoped_persist(tx.simhash64_bands(_docs_aug(spark, sf_dir)))
-        n = _docs_aug_count(spark, sf_dir)
-        assert n < CE.SIMHASH_SHJ_MIN_N  # test corpus keeps broadcast
-        CE.SIMHASH_BAND_SHJ = False
+        assert not CE._band_shj_on(n)  # test corpus keeps broadcast
         base = _verified_pairs(_simhash_combo_cands(sigs, n), sigs)
-        CE.SIMHASH_BAND_SHJ = True
+        monkeypatch.setattr(CE, "SCALE_MIN_N", 0)
+        assert CE._band_shj_on(n)
         hinted_cand = _simhash_combo_cands(sigs, n)
         assert "ShuffledHashJoin" in hinted_cand._sc._jvm.PythonSQLUtils.explainString(
             hinted_cand._jdf.queryExecution(), "formatted"
         )
         hinted = _verified_pairs(hinted_cand, sigs)
     finally:
-        CE.SIMHASH_BAND_SHJ = prev
         release_persists()
     assert base and base == hinted

@@ -1,12 +1,15 @@
-"""SIMHASH_SIG_KERNEL / DECON_GRAM_KERNEL (catalog_ext): the per-doc
-Python kernels replacing the exploded-token shuffles in
-tx.simhash64_bands and _decon_sides must be bit-identical to the
-explode paths. Risk surfaces pinned here: duplicate tokens voting
-repeatedly, empty-string tokens voting (split of "" yields [""]),
-the vote sign at exactly zero (c > 0 strict), decon's NO-fallback
-rule for < 3-token docs (they vanish, unlike MinHash's whole-text
-shingle), distinct-set semantics, and null text emitting nothing.
-End-to-end query identity on the corpus closes both.
+"""The SimHash and decontamination kernels (catalog_ext
+_simhash_sigs_kernel / _decon_gram_sets_kernel) replace the
+exploded-token shuffles of tx.simhash64_bands and _decon_sides' fold
+and must be bit-identical to them. Risk surfaces pinned here:
+duplicate tokens voting repeatedly, empty-string tokens voting (split
+of "" yields [""]), the vote sign at exactly zero (c > 0 strict),
+decon's NO-fallback rule for < 3-token docs (they vanish, unlike
+MinHash's whole-text shingle), distinct-set semantics, and null text
+emitting nothing. End-to-end query identity on the corpus closes
+both. Both queries are also oracle-checked in
+tests/test_oracle_parity.py, and x_decontaminate's kernel side of its
+scale gate in tests/test_catalog_gates.py.
 """
 
 from __future__ import annotations
@@ -77,20 +80,6 @@ def test_decon_kernel_matches_explode_path(spark, edge_docs):
         assert set(fr["hs"]) == set(kern[did]["hs"]), did
 
 
-@pytest.fixture()
-def kernel_flags():
-    s1, s2 = CE.SIMHASH_SIG_KERNEL, CE.DECON_GRAM_KERNEL
-
-    def _set(simhash=None, decon=None):
-        if simhash is not None:
-            CE.SIMHASH_SIG_KERNEL = simhash
-        if decon is not None:
-            CE.DECON_GRAM_KERNEL = decon
-
-    yield _set
-    CE.SIMHASH_SIG_KERNEL, CE.DECON_GRAM_KERNEL = s1, s2
-
-
 def _rows(df):
     return sorted(
         (tuple(r) for r in df.collect()),
@@ -101,51 +90,20 @@ def _rows(df):
 @pytest.mark.parametrize(
     "name,flag", [("x_dedup_simhash_pairs", "simhash"), ("x_decontaminate", "decon")]
 )
-def test_query_output_identical_with_kernel(spark, sf_dir, kernel_flags, name, flag):
+def test_query_output_identical_with_kernel(spark, sf_dir, monkeypatch, name, flag):
     def run():
         rows = _rows(REGISTRY[name].run(spark, sf_dir))
         release_persists()
         return rows
 
-    kernel_flags(**{flag: False})
     base = run()
     assert base, "corpus must produce rows for this test to bite"
-    kernel_flags(**{flag: True})
+    if flag == "simhash":
+        # the explode reference builder stands in for the kernel
+        monkeypatch.setattr(CE, "_simhash_sigs_kernel", tx.simhash64_bands)
+    else:
+        # the corpus sits below the scale gate (fold); force the kernel
+        assert not CE._decon_kernel_on(spark, sf_dir)
+        monkeypatch.setattr(CE, "SCALE_MIN_N", 0)
+        assert CE._decon_kernel_on(spark, sf_dir)
     assert run() == base
-
-
-def test_decon_kernel_jvm_hash_matches_python(spark, edge_docs):
-    # round 12 (VERDICT r11 next #6): DECON_HASH_WHERE="jvm" moves the
-    # gram md5 JVM-side; the per-doc int hash sets must be identical
-    shipped = CE.DECON_HASH_WHERE
-    try:
-        CE.DECON_HASH_WHERE = "python"
-        py = {r["doc_id"]: set(r["hs"]) for r in CE._decon_gram_sets_kernel(edge_docs).collect()}
-        CE.DECON_HASH_WHERE = "jvm"
-        jvm = {r["doc_id"]: set(r["hs"]) for r in CE._decon_gram_sets_kernel(edge_docs).collect()}
-    finally:
-        CE.DECON_HASH_WHERE = shipped
-    assert py == jvm
-    assert py  # the edge corpus must produce >= 1 gram set
-
-
-def test_decontaminate_identical_across_hash_where(spark, sf_dir):
-    from cosmoz_data_pipeline_spark.plans import REGISTRY
-    from cosmoz_data_pipeline_spark.plans.registry import release_persists
-
-    shipped = (CE.DECON_GRAM_KERNEL, CE.DECON_HASH_WHERE)
-
-    def run():
-        rows = sorted(tuple(r) for r in REGISTRY["x_decontaminate"].run(spark, sf_dir).collect())
-        release_persists()
-        return rows
-
-    try:
-        CE.DECON_GRAM_KERNEL = True
-        CE.DECON_HASH_WHERE = "python"
-        base = run()
-        assert base
-        CE.DECON_HASH_WHERE = "jvm"
-        assert run() == base
-    finally:
-        CE.DECON_GRAM_KERNEL, CE.DECON_HASH_WHERE = shipped

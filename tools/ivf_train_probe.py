@@ -12,9 +12,8 @@ cold cost and shuffle/spill metrics fall out directly. The shipped
 loop lazily fuses the Lloyd chain into one job, so the per-stage SUM
 exceeds the shipped wall time by the fusion savings — the artifact
 records the shipped end-to-end time in the same session for that
-comparison. Assignment arithmetic is the shipped helpers'
-(_ivf_candidates/_argmin_cluster), so attribution measures the real
-operators.
+comparison. Assignment is the shipped kernel (_ivf_assign_kernel),
+so attribution measures the real operators.
 
 Usage: python tools/ivf_train_probe.py [dir:mult ...]
   default: x100, x1000
@@ -78,15 +77,8 @@ def probe_once(spark, sf_dir: str) -> dict:
     _timed(spark, rec, "qv_persist", qv.count)
     qv_train = qv.where(F.col("vec_id") % m == 0) if m > 1 else qv
 
-    # probe the SHIPPED assignment branch (round 10: the numpy kernel
-    # replaced the HOF fold path — IVF_ASSIGN_AB.json)
-    use_kernel = CE._ivf_assign_numpy_on(qv)
-    rec["assign_branch"] = "numpy_kernel" if use_kernel else "hof_fold"
-
-    def _assign(vecs, cents):
-        if use_kernel:
-            return CE._ivf_assign_kernel(vecs, cents, k)
-        return CE._argmin_cluster(CE._ivf_candidates(vecs, cents, k))
+    # the shipped assignment: the numpy kernel (IVF_ASSIGN_AB.json)
+    rec["assign_branch"] = "numpy_kernel"
 
     seed = (
         load_table(spark, sf_dir, "embeddings")
@@ -111,7 +103,7 @@ def probe_once(spark, sf_dir: str) -> dict:
             spark,
             rec,
             f"asg{it}",
-            lambda c=cent: CE._iter_checkpoint(_assign(qv_train, c), eager=True),
+            lambda c=cent: CE._iter_checkpoint(CE._ivf_assign_kernel(qv_train, c, k), eager=True),
         )
 
         def _update(c=cent, a=assign):
@@ -147,7 +139,7 @@ def probe_once(spark, sf_dir: str) -> dict:
         spark,
         rec,
         "add_assign",
-        lambda: CE._iter_checkpoint(_assign(qv, cent), eager=True),
+        lambda: CE._iter_checkpoint(CE._ivf_assign_kernel(qv, cent, k), eager=True),
     )
     release_persists()
     CE._IVF_CENTROIDS.clear()

@@ -9,8 +9,7 @@ prefixes), so stage costs are prefix DIFFERENCES:
              against the broadcast plane bank)
   cand     — + banded self-join + distinct (the candidate pairs)
   screen   — + the head-16 Cauchy–Schwarz pre-verify screen
-             (resolved exactly as the query resolves it: forced
-             value, else the shared corpus gate)
+             (the query's own gate, catalog_ext._prescreen_head)
   full     — the shipped registry query end-to-end (verify join +
              threshold on top of screen)
 
@@ -108,16 +107,7 @@ def probe_once(spark, sf_dir: str) -> dict:
 
     def screened():
         vecs, cand = CE._neardup_cands(spark, sf_dir)
-        head = (
-            (
-                16
-                if CE._emb_aug_count(spark, sf_dir)
-                >= CE.NEARDUP_PRESCREEN_MIN_N
-                else 0
-            )
-            if CE.NEARDUP_PRESCREEN_HEAD is None
-            else CE.NEARDUP_PRESCREEN_HEAD
-        )
+        head = CE._prescreen_head(spark, sf_dir)
         rec["prescreen_head"] = head
         if not head:
             return None

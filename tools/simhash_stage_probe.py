@@ -6,10 +6,8 @@ of the shipped pipeline (persists released, memos cleared between
 prefixes), so stage costs are prefix DIFFERENCES:
 
   docs     — augmented documents scan (originals + exact + near copies)
-  sigs     — + the shipped signature table (the query's own
-             SIMHASH_SIG_KERNEL gate — r12: explode above 1M docs;
-             r13: always the batch-vectorized kernel) incl. the
-             scoped_persist the query ships
+  sigs     — + the shipped signature table (the batch-vectorized
+             kernel) incl. the scoped_persist the query ships
   bands    — + posexplode of the C(b,m) Manku combo keys (scan-local)
   selfjoin — + band-key self equi-join with doc_a < doc_b, NO distinct
              (separates join cost from the distinct's shuffle)
@@ -37,7 +35,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cosmoz_data_pipeline_spark.functions import text as tx  # noqa: E402
 from cosmoz_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from cosmoz_data_pipeline_spark.plans import catalog_ext as CE  # noqa: E402
 from cosmoz_data_pipeline_spark.plans.registry import (  # noqa: E402
@@ -80,12 +77,8 @@ def probe_once(spark, sf_dir: str) -> dict:
     rec: dict = {}
 
     def sigs_df():
-        # the query's own gate (catalog_ext.q_dedup_simhash_pairs)
-        docs = CE._docs_aug(spark, sf_dir)
-        use_kernel = CE.SIMHASH_SIG_KERNEL is not False
-        return scoped_persist(
-            CE._simhash_sigs_kernel(docs) if use_kernel else tx.simhash64_bands(docs)
-        )
+        # the query's own signature build (catalog_ext.q_dedup_simhash_pairs)
+        return scoped_persist(CE._simhash_sigs_kernel(CE._docs_aug(spark, sf_dir)))
 
     def n_docs():
         return CE._docs_aug_count(spark, sf_dir)
@@ -99,24 +92,9 @@ def probe_once(spark, sf_dir: str) -> dict:
         lambda: CE._simhash_band_rows(sigs_df(), n_docs()).count(),
     )
 
+    # the query's own band join, incl. its _band_shj_on hint gate
     def selfjoin_count():
-        from pyspark.sql import functions as F
-
-        bands = CE._simhash_band_rows(sigs_df(), n_docs())
-        a, b = bands.alias("a"), bands.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .count()
-        )
+        return CE._simhash_band_join(sigs_df(), n_docs()).count()
 
     _timed(spark, rec, "selfjoin", selfjoin_count)
     _timed(
