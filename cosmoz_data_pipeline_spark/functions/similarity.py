@@ -229,58 +229,25 @@ def srp_band_buckets(
     vec_df, spark, bands: int, planes_per_band: int, dim: int,
     id_col: str = "vec_id", vec_col: str = "v",
     quantized: bool = False,
-    n: int | None = None,
 ):
-    """(id, band, bucket) SRP assignments as ONE in-row fold per
-    (vector, band) against the broadcast single-row weight literal
-    (round-6 rebuild): each plane's integer projection is a
-    zip_with/aggregate dot over the quantized vector, its sign
-    contributes ``bitval`` to the band's bucket, and the only rows
-    that ever exist are the ``bands`` output rows per vector — no dim
-    posexplode, no (id, plane) shuffle, no partial aggs. The previous
-    relational shape (posexplode dims → broadcast weight join → two
-    id-keyed aggs) was right that unrolling bands×planes×dim literal
-    TERMS breaks codegen, but it generated N×P×D join rows and
-    shuffled N×P projections — at the x1000 corpus (5.2 M augmented
-    vectors × 160 planes × 64 dims ≈ 5×10¹⁰ join rows) it died
-    spilling 70+ GB. The fold performs the identical integer
-    arithmetic with zero intermediate rows (integer sums are
-    order-independent, so the DuckDB oracle CTEs are untouched and
-    parity stays exact), and it cannot fall off the codegen cliff
-    because it never unrolls — the same round-5 fold-kernel lesson as
-    sim.dot/cosine. The band structs are EXPLODED FIRST (an
-    attribute of the broadcast weight row, never a computed array, so
-    nothing is re-evaluated per output row), then each output row
-    folds only its own band's planes — total work is unchanged. The
-    1-row crossJoin plans as a BroadcastNestedLoopJoin; the plan
-    assertions allow that ONLY for this single-row weight-bank shape
-    (same as the IVF reps row) — candidates still come from the
-    equi-join on (band, bucket).
+    """(id, band, bucket) SRP assignments as ONE interpreted in-row fold
+    per (vector, band) against the broadcast single-row weight literal:
+    each plane's integer projection is a zip_with/aggregate dot over the
+    quantized vector, and its sign contributes ``bitval`` to the band's
+    bucket. The queries run :func:`srp_band_buckets_kernel` instead;
+    this fold is the reference that kernel is tested against
+    (tests/test_srp_kernel.py, tests/test_lsh_properties.py) — it
+    performs the same integer arithmetic as the DuckDB oracle CTEs
+    (:func:`srp_sql_ctes`), row by row. The 1-row crossJoin
+    plans as a BroadcastNestedLoopJoin.
 
     ``quantized=True`` means ``vec_col`` already holds the
-    floor(v*1e6) integer array (see :func:`quantize`) — the caller
-    computed it once and persists the narrow form; the fold skips the
-    re-quantization. Products coalesce null to 0 (module
+    floor(v*1e6) integer array (see :func:`quantize`); the fold skips
+    the re-quantization. Products coalesce null to 0 (module
     :func:`idot`), so ragged/null elements null-skip exactly like the
     oracle's SUM (ADVICE r6); a fully-null/empty vector folds to
     bucket 0, which is also what the oracle's generate_series CTEs
-    emit for it.
-
-    ``n`` is the caller's memoized corpus row count — the SRP_KERNEL
-    auto-gate basis (round 11): at ``n >= SRP_KERNEL_MIN_N`` the
-    projection runs through the bit-identical numpy matmul kernel
-    (:func:`srp_band_buckets_kernel`) instead of the interpreted
-    fold. ``None`` (count unknown) keeps the fold."""
-    use_kernel = (
-        (n is not None and n >= SRP_KERNEL_MIN_N)
-        if SRP_KERNEL is None
-        else SRP_KERNEL
-    )
-    if use_kernel:
-        return srp_band_buckets_kernel(
-            vec_df, bands, planes_per_band, dim,
-            id_col=id_col, vec_col=vec_col, quantized=quantized,
-        )
+    emit for it."""
     wrow = srp_weights_row(spark, bands, planes_per_band, dim)
     qa = F.col(vec_col) if quantized else quantize(F.col(vec_col))
 
@@ -304,40 +271,21 @@ def srp_band_buckets(
 
 
 # --- Arrow/numpy SRP projection kernel (round 11) -------------------
-# The round-10 stage probe (NEARDUP_STAGES.json) localized 117.6 s of
-# x_embed_cosine_neardup's 171.2 s x1000 wall to the bands stage: the
-# per-(vector, band) HOF fold evaluates bands*r*dim interpreted
-# multiply-adds per vector (~9.7k at the x1000 banding), row by row.
-# The identical integer arithmetic is one (N x dim) @ (dim x P) matmul
-# against the broadcast plane bank — the same shape, exactness
-# envelope, and adoption pattern as the IVF assignment kernel that won
-# 3.23x in round 10 (catalog_ext._ivf_assign_kernel). Exactness:
-# |w| <= SRP_HALF = 1e6 and quantize() bounds |q| < 2^31, so every
-# projection sum is < dim * 2^31 * 1e6 ~ 1.4e17 < 2^63 — EXACT in
-# int64; while max|q| stays <= 2^53/(dim*SRP_HALF) (~1.4e8 at dim 64;
-# the shipped corpora peak at ~4.3e5) the float64 BLAS matmul is also
-# exact and the kernel takes that fast path, falling back to the int64
-# matmul (exact, slower, never wrong) beyond it. Sign-to-bucket
-# packing ((s > 0) * bitval summed per band) is pure int64 either way,
-# so kernel and fold agree bit-for-bit on every input the fold
-# accepts — pinned by tests/test_srp_kernel.py.
-#
-# ADOPTED round 11, unconditionally (SRP_KERNEL_AB.json,
-# tools/srp_kernel_ab.py — interleaved, 2 repeats per scale, output
-# cell-hash identical across variants every run): the kernel won
-# EVERY measured scale on BOTH SRP consumers — x_embed_cosine_neardup
-# 2.16x at sf0.1 (3.39 s -> 1.57 s), 1.60x at x100, 1.90x at x1000
-# (217.0 s -> 114.3 s); x_ann_lsh_buckets 1.81x / 2.40x / 4.38x
-# (x1000 28.7 s -> 6.6 s). The anticipated small-corpus Arrow/worker
-# overhead did not materialize even at sf0.1's 25.8k vectors — other
-# queries already keep Python workers warm, and the fold's
-# interpreted per-element cost dominates from the first row.
-# False forces the fold (A/B hook); None = auto (kernel at
-# n >= SRP_KERNEL_MIN_N, the corpus-count gate basis kept for a
-# deployment that prefers gating — never session conf, per the
-# round-10 prescreen-gate precedent).
-SRP_KERNEL: bool | None = True
-SRP_KERNEL_MIN_N = 100_000
+# The per-(vector, band) fold evaluates bands*r*dim interpreted
+# multiply-adds per vector (~9.7k at the x1000 banding), row by row;
+# the identical integer arithmetic is one (N x dim) @ (dim x P) matmul
+# against the broadcast plane bank. Exactness: |w| <= SRP_HALF = 1e6
+# and quantize() bounds |q| < 2^31, so every projection sum is
+# < dim * 2^31 * 1e6 ~ 1.4e17 < 2^63 — EXACT in int64; while max|q|
+# stays <= 2^53/(dim*SRP_HALF) (~1.4e8 at dim 64; the shipped corpora
+# peak at ~4.3e5) the float64 BLAS matmul is also exact and the kernel
+# takes that fast path, falling back to the int64 matmul (exact,
+# slower, never wrong) beyond it. Sign-to-bucket packing
+# ((s > 0) * bitval summed per band) is pure int64 either way, so
+# kernel and fold agree bit-for-bit on every input the fold accepts —
+# pinned by tests/test_srp_kernel.py. Both SRP queries run the kernel
+# at every scale: it won every measured scale on both, from sf0.1 to
+# x1000 (SRP_KERNEL_AB.json).
 
 
 def srp_weight_matrix(bands: int, planes_per_band: int, dim: int):
@@ -405,7 +353,8 @@ def srp_band_buckets_kernel(
 ):
     """(id, band, bucket) SRP assignments via the Arrow/numpy matmul
     kernel — bit-identical to :func:`srp_band_buckets`'s fold on every
-    input the fold accepts (see SRP_KERNEL). One mapInPandas pass; the
+    input the fold accepts (exactness envelope above). One mapInPandas
+    pass; the
     plane bank rides a SparkContext broadcast (bands*r*dim int64s —
     ~80 KB at the x1000 banding), memoized per (session, banding
     shape) so repeated builds never accumulate copies.

@@ -29,10 +29,12 @@ TINY per-(site, file) boundary exchange:
   Whole-file tasks are deliberate: they make the operator immune to
   the file-split hazard above, at the price of parallelism = #files
   (the sink's writer controls file count; see ``write_time_tiled``).
-- boundary stitch: a column-pruned scan aggregates one row per
-  (site, file) — head/tail time + tail count — map-side combined, so
-  the only exchange carries #files rows, not data rows. A per-site
-  window over that tiny table chains each file to its predecessor;
+- boundary stitch: a second per-file kernel reads only the parquet
+  row groups that hold each (site, file)'s head and tail 29-min
+  windows and emits those zone rows; a one-row-per-(site, file)
+  aggregate over them (head/tail time + tail count) is the only
+  exchange, carrying #files rows, not data rows. A per-site window
+  over that tiny table chains each file to its predecessor;
   broadcast back, it patches each file's first-row ``prev_count``.
 - duplicate zone fix: a row can only need cross-file lookback if it
   sits within 29 min of its file's per-site head ("head zone"); its
@@ -71,17 +73,15 @@ shape against the shipped bucketed-window shape at x1000
 (LEVEL1_SCANLOCAL_AB.json: 5/6 interleaved pass wins, 0.3 MB vs
 13.13 GB shuffle, identity at 86.8M rows).
 
-Known residual (LEVEL1_STAGES.json r14, healthy window): of sl_l1's
-30.3 s at x1000, the per-file kernel is only 7.5 s — the zone-fix's
-SECOND full-width decode (the JVM scan feeding the exact cross-file
-duplicate confirm) plus the slim stitch scan carry most of the rest.
-The named lever, deliberately not taken this round: the sink writer
-controls parquet row-group size, so a paths-driven zone extraction
-could prune to just the row groups intersecting the per-(site, file)
-boundary windows (~50x less second-pass decode at 8 MB row groups);
-pyarrow prunes at row-group granularity only, so the win requires the
-writer's cooperation and degrades gracefully to today's cost on
-foreign coarse-row-group files.
+Second pass (LEVEL1_STAGES.json r14, LEVEL1_ZONERG_AB.json): the
+zone fix's rows used to come from a SECOND full-width decode of the
+sink plus a slim stitch scan, most of sl_l1's 30.3 s at x1000 against
+the per-file kernel's 7.5 s. The sink writer controls parquet
+row-group size (``write_time_tiled``), so the boundary kernel prunes
+that pass to the row groups intersecting the per-(site, file)
+boundary windows; pyarrow prunes at row-group granularity only, so
+foreign coarse-row-group files degrade gracefully to a whole-file
+read.
 """
 
 from __future__ import annotations
@@ -91,18 +91,8 @@ from pyspark.sql import functions as F
 
 DUP_WINDOW_SECS = 29 * 60
 
-# Round-14 optimization hook: when True (the default via None=auto),
-# the duplicate zone fix and the boundary stitch read their rows from
-# a second per-file mapInPandas kernel that prunes to just the parquet
-# ROW GROUPS intersecting each (site, file)'s head/tail 29-min windows
-# (guide §6: make pruning reach the scan; §2.3: decide with small
-# rows) — instead of a second full-width JVM decode of the whole sink
-# plus a third slim (site, time, count) pass. False forces the
-# round-13 full-scan shape for interleaved A/B
-# (tools/level1_zonerg_ab.py → LEVEL1_ZONERG_AB.json). Files whose
-# row-group statistics are missing degrade per-file to a whole-file
-# read inside the kernel — never to a wrong answer.
-SCANLOCAL_BOUNDARY_KERNEL: bool | None = None
+# Arrow batch size of the per-file main kernel's streaming read.
+BATCH_ROWS = 131072
 
 # Row-group size write_time_tiled asks of the parquet writer. Small
 # row groups are what make the boundary kernel's pruning effective
@@ -140,15 +130,6 @@ def _local_path(uri: str) -> str:
 
     u = urlparse(uri)
     return unquote(u.path) if u.scheme == "file" else uri
-
-
-def _fpath_col() -> F.Column:
-    """``_metadata.file_path`` canonicalized to match ``_local_path``
-    over ``df.inputFiles()``: Hadoop renders local files as
-    ``file:/p`` (single slash) while inputFiles returns the
-    percent-encoded ``file:///p`` URI — joining the two raw strings
-    silently matches nothing."""
-    return F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
 
 
 def _tus(series) -> "np.ndarray":  # noqa: F821
@@ -270,7 +251,7 @@ def _dup_flags(seg, c_tus, h, pay_arrays, r_us):
 
 
 def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
-                 count_col, batch_rows):
+                 count_col):
     """Build the per-file mapInPandas kernel. ``paths`` is captured in
     the closure (one broadcast-pickled list; fine into the 100k-file
     range)."""
@@ -299,7 +280,7 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
         last_time_us = None
         run_head_us = None
 
-        for rb in pf.iter_batches(batch_size=batch_rows, columns=list(all_cols)):
+        for rb in pf.iter_batches(batch_size=BATCH_ROWS, columns=list(all_cols)):
             pdf = rb.to_pandas()
             if not len(pdf):
                 continue
@@ -478,8 +459,8 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
     stat whose length reaches 64 bytes cannot be distinguished from a
     truncated one and the file degrades; numeric/temporal stats are
     never truncated). The per-row filter keeps the emitted set EXACTLY
-    the set the full-scan shape selects (same floor-second arithmetic
-    as Spark's ``cast(time as long)``; corpus timestamps are post-1970
+    the head ∪ tail zone set (same floor-second arithmetic as the zone
+    fix's Spark ``cast(time as long)``; corpus timestamps are post-1970
     so floor == Spark's truncation)."""
     R_S = DUP_WINDOW_SECS
 
@@ -585,9 +566,8 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
         # layout contract: site keys must be non-null (ADVICE r14 —
         # groupby(dropna=True) silently drops a null site from h_us
         # and the .map() below would then raise an opaque NaN cast
-        # error; the r13 full-scan shape silently excluded null-site
-        # rows from the zone fix instead. Out-of-contract either way:
-        # refuse loudly, naming the file and the cause.)
+        # error. Out-of-contract: refuse loudly, naming the file and
+        # the cause.)
         if pd.isna(site).any():
             raise ValueError(
                 f"scan_local layout violation in {path}: null "
@@ -595,7 +575,7 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
                 "non-null site keys"
             )
         # exact zone predicate, floor-second arithmetic == Spark's
-        # cast(time as long) used by the full-scan shape
+        # cast(time as long) used by the zone fix
         hs_map = (h_us // 1_000_000).to_dict()
         ts_map = (t_us // 1_000_000).to_dict()
         hs_row = pd.Series(site).map(hs_map).to_numpy(dtype=np.int64)
@@ -618,8 +598,6 @@ def scan_local_raw_flags(
     site_col: str = "site_no",
     time_col: str = "time",
     count_col: str = "count",
-    batch_rows: int = 131072,
-    validate: bool = True,
 ) -> DataFrame:
     """Raw columns + ``prev_count`` + ``is_duplicate`` over a
     layout-contracted parquet dataset at ``path`` — row-for-row what
@@ -651,16 +629,10 @@ def scan_local_raw_flags(
     )
     kernel = _make_kernel(
         files, all_cols, list(payload_cols), site_col, time_col, count_col,
-        batch_rows,
     )
     ids = spark.range(0, n_files, 1, numPartitions=n_files)
     main = ids.mapInPandas(kernel, schema=out_schema)
 
-    use_bk = (
-        bool(SCANLOCAL_BOUNDARY_KERNEL)
-        if SCANLOCAL_BOUNDARY_KERNEL is not None
-        else True
-    )
     secs = F.col(time_col).cast("long")
 
     def _persist(df):
@@ -671,48 +643,27 @@ def scan_local_raw_flags(
         except Exception:  # pragma: no cover - registry unavailable
             return df.persist()
 
-    if use_bk:
-        # --- boundary kernel (round 14): the stitch aggregate AND the
-        # zone rows come from one row-group-pruned per-file pass; no
-        # second full-width decode, no third slim scan
-        # (LEVEL1_ZONERG_AB.json). The head/tail rows of every (site,
-        # file) are zone rows by construction, so the aggregate
-        # derived from zone rows is exactly the full-scan aggregate.
-        zschema = T.StructType(
-            list(src.schema.fields)
-            + [
-                T.StructField("__fp", T.LongType()),
-                T.StructField("__hs", T.LongType()),
-                T.StructField("__ts", T.LongType()),
-            ]
-        )
-        bkernel = _make_boundary_kernel(files, all_cols, site_col, time_col)
-        zrows = _persist(ids.mapInPandas(bkernel, schema=zschema))
-        agg = zrows.groupBy(site_col, "__fp").agg(
-            F.min(time_col).alias("__head_t"),
-            F.max(time_col).alias("__tail_t"),
-            F.max_by(count_col, secs).alias("__tail_count"),
-        )
-    else:
-        # --- round-13 full-scan shape, kept for interleaved A/B ------
-        pmap = F.broadcast(
-            spark.createDataFrame(
-                [(i, _local_path(p)) for i, p in enumerate(files)],
-                "`__fp` long, `__fpath` string",
-            )
-        )
-        slim = src.select(
-            site_col, time_col, count_col, _fpath_col().alias("__fpath")
-        )
-        agg = _persist(
-            slim.groupBy(site_col, "__fpath")
-            .agg(
-                F.min(time_col).alias("__head_t"),
-                F.max(time_col).alias("__tail_t"),
-                F.max_by(count_col, secs).alias("__tail_count"),
-            )
-            .join(pmap, "__fpath", "left")
-        )
+    # --- boundary kernel (round 14): the stitch aggregate AND the zone
+    # rows come from one row-group-pruned per-file pass; no second
+    # full-width decode, no third slim scan (LEVEL1_ZONERG_AB.json).
+    # The head/tail rows of every (site, file) are zone rows by
+    # construction, so the aggregate derived from zone rows is exactly
+    # the aggregate over all rows.
+    zschema = T.StructType(
+        list(src.schema.fields)
+        + [
+            T.StructField("__fp", T.LongType()),
+            T.StructField("__hs", T.LongType()),
+            T.StructField("__ts", T.LongType()),
+        ]
+    )
+    bkernel = _make_boundary_kernel(files, all_cols, site_col, time_col)
+    zrows = _persist(ids.mapInPandas(bkernel, schema=zschema))
+    agg = zrows.groupBy(site_col, "__fp").agg(
+        F.min(time_col).alias("__head_t"),
+        F.max(time_col).alias("__tail_t"),
+        F.max_by(count_col, secs).alias("__tail_count"),
+    )
     w_site = Window.partitionBy(site_col).orderBy("__head_t")
     patch = agg.select(
         site_col,
@@ -722,31 +673,15 @@ def scan_local_raw_flags(
         F.lag("__tail_count").over(w_site).alias("__prev_tail_count"),
         F.lag("__tail_t").over(w_site).alias("__prev_tail_t"),
     )
-    if validate:
-        # contract 2+3: per-site file ranges strictly disjoint (ties
-        # straddling files would make the zone fix nondeterministic
-        # against the single-window shape — refuse, don't guess);
-        # plus, full-scan shape only, path-canonicalization coverage:
-        # every scanned file must resolve to a kernel file index or
-        # the stitch is silently incomplete (the exact bug class
-        # _fpath_col guards; the boundary kernel indexes files
-        # directly, so there the mismatch is structurally impossible)
-        bad = patch.where(F.col("__prev_tail_t") >= F.col("__head_t")).count()
-        unmapped = (
-            0 if use_bk else agg.where(F.col("__fp").isNull()).count()
+    # contract 2+3: per-site file ranges strictly disjoint (ties
+    # straddling files would make the zone fix nondeterministic against
+    # the single-window shape — refuse, don't guess)
+    bad = patch.where(F.col("__prev_tail_t") >= F.col("__head_t")).count()
+    if bad:
+        raise ValueError(
+            f"scan_local layout violation under {path}: {bad} "
+            f"(site, file) ranges overlap or tie their predecessor"
         )
-        if unmapped:
-            raise ValueError(
-                f"scan_local: {unmapped} (site, file) groups under {path} "
-                "could not be mapped back to a scanned file — path "
-                "canonicalization mismatch between _metadata.file_path "
-                "and inputFiles()"
-            )
-        if bad:
-            raise ValueError(
-                f"scan_local layout violation under {path}: {bad} "
-                f"(site, file) ranges overlap or tie their predecessor"
-            )
 
     stitched = (
         main.join(
@@ -775,32 +710,16 @@ def scan_local_raw_flags(
     # predecessor, when within R, is in S; any same-payload row
     # between that predecessor and the row is within R too, hence
     # also in S).
+    # The kernel's zone rows carry per-row __hs/__ts and are exactly S
+    # (per-row keep filter in _make_boundary_kernel).
     R = DUP_WINDOW_SECS
-    if use_bk:
-        # kernel zone rows already carry per-row __hs/__ts and are
-        # exactly the set the full-scan join-and-filter below selects
-        # (per-row keep filter in _make_boundary_kernel)
-        zones = zrows
-    else:
-        bounds = F.broadcast(
-            agg.select(
-                site_col, "__fpath",
-                F.col("__head_t").cast("long").alias("__hs"),
-                F.col("__tail_t").cast("long").alias("__ts"),
-            )
-        )
-        zones = (
-            src.select(*all_cols, _fpath_col().alias("__fpath"))
-            .join(bounds, [site_col, "__fpath"])
-            .where((secs <= F.col("__hs") + R) | (secs >= F.col("__ts") - R))
-        )
     pay = F.struct(*[F.col(c) for c in payload_cols])
     dupw = Window.partitionBy(
         F.xxhash64(site_col, *payload_cols), site_col
     ).orderBy(pay, time_col)
     prev_pay = F.lag(pay).over(dupw)
     fix = (
-        zones.withColumn(
+        zrows.withColumn(
             "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag(time_col).over(dupw))
         )
         .withColumn(

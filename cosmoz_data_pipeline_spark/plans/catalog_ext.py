@@ -179,14 +179,13 @@ _DOCS_COUNT: dict[str, int] = {}
 
 def clear_counts() -> None:
     """Invalidate every corpus-cardinality memo as one unit (round 12,
-    ADVICE r11): the aug/base dicts are filled by the same scan, so
-    tools that clear only one of a pair leave the other to serve a
+    ADVICE r11): the docs aug/base dicts are filled by the same scan, so
+    tools that clear only one of the pair leave the other to serve a
     stale (or, with the recompute keyed on both, merely redundant)
     value. Tools should call this instead of clearing dicts piecemeal."""
     _DOCS_AUG_COUNT.clear()
     _DOCS_COUNT.clear()
     _EMB_AUG_COUNT.clear()
-    _EMB_COUNT.clear()
 
 
 def _docs_aug_count(spark: SparkSession, sf_dir: str) -> int:
@@ -1253,9 +1252,9 @@ FROM bk""",
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    b = sim.srp_band_buckets(
-        vecs, spark, 1, 8, EMBED_DIM, n=_emb_count(spark, sf_dir)
-    ).select("vec_id", "bucket")
+    b = sim.srp_band_buckets_kernel(vecs, 1, 8, EMBED_DIM).select(
+        "vec_id", "bucket"
+    )
     return b.select(
         "vec_id", "bucket", F.count(F.lit(1)).over(Window.partitionBy("bucket")).alias("bucket_size")
     )
@@ -1288,19 +1287,13 @@ emb_aug AS (
 # banding needs ONLY the row count, so derive it from a vec_id-pruned
 # scan (count + two modulo count_ifs) instead of materializing the
 # full 3-branch augmented projection — corpus size is index metadata,
-# same train-once rationale as _IVF_CENTROIDS. The base (unaugmented)
-# count rides the same scan — x_ann_lsh_buckets' SRP-kernel gate
-# (round 11) needs it and must never pay a second count job.
+# same train-once rationale as _IVF_CENTROIDS.
 _EMB_AUG_COUNT: dict[str, int] = {}
-_EMB_COUNT: dict[str, int] = {}
 
 
 def _emb_aug_count(spark: SparkSession, sf_dir: str) -> int:
     key = sf_dir.rstrip("/")
-    # recompute when EITHER memo of the pair is missing — see
-    # _docs_aug_count (ADVICE r11)
-    n = _EMB_AUG_COUNT.get(key) if key in _EMB_COUNT else None
-    if n is None:
+    if key not in _EMB_AUG_COUNT:
         r = (
             load_table(spark, sf_dir, "embeddings")
             .select(
@@ -1310,17 +1303,8 @@ def _emb_aug_count(spark: SparkSession, sf_dir: str) -> int:
             )
             .collect()[0]
         )
-        n = r["n"] + r["n11"] + r["n5"]
-        _EMB_AUG_COUNT[key] = n
-        _EMB_COUNT[key] = r["n"]
-    return n
-
-
-def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = sf_dir.rstrip("/")
-    if key not in _EMB_COUNT:
-        _emb_aug_count(spark, sf_dir)
-    return _EMB_COUNT[key]
+        _EMB_AUG_COUNT[key] = r["n"] + r["n11"] + r["n5"]
+    return _EMB_AUG_COUNT[key]
 
 
 def _emb_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1537,13 +1521,10 @@ def _neardup_cands(spark: SparkSession, sf_dir: str):
     planes = sim.srp_planes_for(n_aug)
     # persist: both sides of the candidate self-join read the band
     # table — uncached, each side would re-run the per-(vector, band)
-    # projection (round 6 replaced the dim-exploded agg with the
-    # in-row fold; round 11 swapped the fold for the numpy matmul
-    # kernel at >= SRP_KERNEL_MIN_N vectors — the persist still buys
-    # computing it once)
-    bands = scoped_persist(sim.srp_band_buckets(
-        vecs, spark, NEARDUP_BANDS, planes, EMBED_DIM,
-        vec_col="qv", quantized=True, n=n_aug,
+    # projection kernel
+    bands = scoped_persist(sim.srp_band_buckets_kernel(
+        vecs, NEARDUP_BANDS, planes, EMBED_DIM,
+        vec_col="qv", quantized=True,
     ))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (

@@ -65,11 +65,6 @@ _dir_bytes_memo: dict[str, tuple[object, int]] = {}
 _loaded_bytes_by_dir: dict[str, dict[str, int]] = {}
 _warned_unsizable: set[str] = set()
 
-# sentinel for a path recorded while autosize was off: no sizing I/O
-# may run inside a timed A/B region, so the walk/RPC is deferred to
-# the next autosize-enabled call
-_DEFERRED = -1
-
 
 def _local_mtime_token(path: str) -> int | None:
     """Top-level mtime (ns) of a local path, or None if not statable.
@@ -180,25 +175,8 @@ def scale_shuffle_partitions(spark: SparkSession, sf_dir: str, path: str) -> int
     the floor. Runtime-settable, so it also hardens externally-built
     sessions (the correctness driver's) exactly like harden_session.
     """
-    # record the load FIRST so tables seen while autosize is off still
-    # count toward the dir total once it is re-enabled — but with NO
-    # sizing I/O while it is off: the A/B tools disable autosize
-    # precisely so nothing walks a directory or issues a Hadoop RPC
-    # inside a timed measurement region. The path is stashed with a
-    # deferred sentinel and sized on the next enabled call.
     seen = _loaded_bytes_by_dir.setdefault(sf_dir, {})
-    try:
-        # measurement off-switch: the partition-count A/B tool forces
-        # explicit counts and must not be second-guessed mid-query
-        if spark.conf.get("spark.cosmoz.shuffle.autosize", "true") == "false":
-            seen.setdefault(path, _DEFERRED)
-            return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        pass
-    seen[path] = _DEFERRED
-    for p, b in list(seen.items()):
-        if b == _DEFERRED:
-            seen[p] = _path_bytes(p, spark)
+    seen[path] = _path_bytes(path, spark)
     # the floor is the session's own configured baseline (tests run 8,
     # build_session defaults to core count, the external driver
     # session has neither and gets the core-count default)

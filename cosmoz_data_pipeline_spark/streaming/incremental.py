@@ -94,9 +94,8 @@ def incremental_overwrite(
 # tuned to either local core count or a cluster fleet. At 100 TB the
 # bytes-derived count far exceeds any core floor (MORE state
 # parallelism than today); at bench scale it stops paying 32 commits
-# for 3 MB of input. None = derive from source bytes; an int pins it
-# (the A/B control).
-STREAM_STATE_PARTITIONS: int | None = None
+# for 3 MB of input (ST6_STATEPARTS_AB.json holds the interleaved
+# A/B). The engine derives the count; no caller pins it.
 _STATE_PARTS_MIN = 8
 
 
@@ -107,8 +106,6 @@ def _state_partitions(spark: SparkSession, source_dir: str) -> int:
         _path_bytes,
     )
 
-    if STREAM_STATE_PARTITIONS is not None:
-        return int(STREAM_STATE_PARTITIONS)
     return max(
         _STATE_PARTS_MIN,
         min(
@@ -171,7 +168,7 @@ def stream_dedup_to_sink(
 
     # state partitions are frozen into the NEW checkpoint at first
     # micro-batch — size them from the source bytes (see
-    # STREAM_STATE_PARTITIONS above), then restore the session conf
+    # _state_partitions above), then restore the session conf
     # (an existing checkpoint keeps its own count; this path always
     # starts fresh checkpoints)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")

@@ -204,18 +204,20 @@ def test_screen_dot_variants_identical_on_ragged_vectors(spark):
 
 
 def test_count_memo_pair_refills_together(spark, sf_dir):
-    # round 12 (ADVICE r11): clearing only the BASE count memo while
-    # the aug memo stays populated must not KeyError (the aug memo
-    # recomputes and refills both), and clear_counts() drops all four
+    # round 12 (ADVICE r11): clearing only the docs BASE count memo
+    # while the aug memo stays populated must not KeyError (the aug
+    # memo recomputes and refills both), and clear_counts() empties
+    # all three corpus-cardinality memos
     from cosmoz_data_pipeline_spark.plans import catalog_ext as ce
 
     n_docs = ce._docs_count(spark, sf_dir)
-    n_emb = ce._emb_count(spark, sf_dir)
+    n_docs_aug = ce._docs_aug_count(spark, sf_dir)
+    n_emb_aug = ce._emb_aug_count(spark, sf_dir)
     ce._DOCS_COUNT.clear()
-    ce._EMB_COUNT.clear()
     assert ce._docs_count(spark, sf_dir) == n_docs
-    assert ce._emb_count(spark, sf_dir) == n_emb
+    assert ce._docs_aug_count(spark, sf_dir) == n_docs_aug
     ce.clear_counts()
     assert not ce._DOCS_AUG_COUNT and not ce._DOCS_COUNT
-    assert not ce._EMB_AUG_COUNT and not ce._EMB_COUNT
+    assert not ce._EMB_AUG_COUNT
     assert ce._docs_count(spark, sf_dir) == n_docs
+    assert ce._emb_aug_count(spark, sf_dir) == n_emb_aug

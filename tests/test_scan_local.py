@@ -12,12 +12,15 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
 from cosmoz_data_pipeline_spark.operators.scan_local import (
     DUP_WINDOW_SECS,
+    TILE_ROWGROUP_BYTES,
     _dup_flags,
     write_time_tiled,
 )
@@ -33,10 +36,13 @@ def _rows(df):
     )
 
 
-def _mini_raw(spark, rows):
-    """(secs, site, count, battery, vwc1) tuples → a full raw frame."""
+def _mini_raw(spark, rows, site_type="int"):
+    """(secs, site, flag, count, battery, vwc1) tuples → a full raw
+    frame."""
     return spark.createDataFrame(
-        rows, "secs long, site_no int, flag int, count long, battery double, vwc1 double"
+        rows,
+        f"secs long, site_no {site_type}, flag int, count long, "
+        "battery double, vwc1 double",
     ).select(
         F.col("secs").cast("timestamp").alias("time"),
         "site_no",
@@ -212,38 +218,33 @@ def test_dup_flags_matches_real_hash_path():
 
 
 def test_scan_local_boundary_kernel_identity_and_pruning(spark, tmp_path):
-    """Round-14 boundary kernel (row-group-pruned zone read) vs the
-    round-13 full-scan zone shape: identical level1 rows on (a) the
-    domain corpus at default row groups and (b) a tiny forced
-    row-group size so each file holds MANY row groups and the pruning
-    + extras logic actually exercises (at the default 8 MiB the small
-    corpus gives one group per file and pruning is trivial)."""
-    from cosmoz_data_pipeline_spark.operators import scan_local as sl
+    """The boundary kernel (row-group-pruned zone read) vs the window
+    shape: identical level1 rows on (a) the domain corpus at default
+    row groups and (b) a tiny forced row-group size so each file holds
+    MANY row groups and the pruning + extras logic actually exercises
+    (at the default 8 MiB the small corpus gives one group per file
+    and pruning is trivial)."""
+    import os
+
+    import pyarrow.parquet as pq
 
     raw = load_domain(spark, SF_DIR)["raw_values"]
+    base = _rows(levels.raw_to_level1(raw, big=False))
+    assert base
     # 2 files in the tiny case: parquet-mr only checks row-group size
     # every ~100 records, so files need enough rows to split often
     for tag, n_files, rg_bytes in (
-        ("default", 8, sl.TILE_ROWGROUP_BYTES), ("tiny", 2, 2048)
+        ("default", 8, TILE_ROWGROUP_BYTES), ("tiny", 2, 2048)
     ):
         path = str(tmp_path / f"sink_{tag}")
         write_time_tiled(raw, path, n_files, rowgroup_bytes=rg_bytes)
         if tag == "tiny":
-            import pyarrow.parquet as pq
-
             nrg = [
                 pq.ParquetFile(f"{path}/{f}").metadata.num_row_groups
-                for f in __import__("os").listdir(path)
+                for f in os.listdir(path)
                 if f.endswith(".parquet")
             ]
             assert max(nrg) > 4, f"row groups not split: {nrg}"
-        prev = sl.SCANLOCAL_BOUNDARY_KERNEL
-        try:
-            sl.SCANLOCAL_BOUNDARY_KERNEL = False
-            base = _rows(levels.raw_to_level1_scan_local(spark, path))
-        finally:
-            sl.SCANLOCAL_BOUNDARY_KERNEL = prev
-        assert base
         assert _rows(levels.raw_to_level1_scan_local(spark, path)) == base
 
 
@@ -273,33 +274,24 @@ def test_boundary_kernel_truncation_guard_unit():
 
 def test_boundary_kernel_degrades_on_truncatable_string_sites(spark, tmp_path):
     """Integration: a sink whose string site keys are AT the
-    truncation length must still produce rows identical to the
-    full-scan shape — the kernel degrades those files to whole-file
-    reads rather than trusting possibly-prefix stats. Tiny row groups
-    force real pruning decisions per group."""
-    from cosmoz_data_pipeline_spark.operators import scan_local as sl
-
+    truncation length must still produce rows identical to the window
+    shape — the kernel degrades those files to whole-file reads rather
+    than trusting possibly-prefix stats. Tiny row groups force real
+    pruning decisions per group."""
     sites = ["s" * 63 + c for c in "abc"]  # 64-byte site keys
+    # counts cycle so the ±20 % jump flag reads prev_count, and every
+    # third reading repeats a payload within 29 min (a duplicate)
     rows = [
-        (1_600_000_000 + 600 * i, s, 100 + i, float(i))
+        (1_600_000_000 + 600 * i, s, 0, (1000, 1300, 1000, 800)[i % 4], 12.0,
+         float(i // 3))
         for s in sites
         for i in range(120)
     ]
-    df = spark.createDataFrame(
-        rows, "secs long, site_no string, count long, v double"
-    ).select(
-        F.col("secs").cast("timestamp").alias("time"), "site_no", "count", "v"
-    )
+    raw = _mini_raw(spark, rows, site_type="string")
+    base = _rows(levels.raw_to_level1(raw, big=False))
     path = str(tmp_path / "trunc_sink")
-    write_time_tiled(df, path, 3, rowgroup_bytes=2048)
-    prev = sl.SCANLOCAL_BOUNDARY_KERNEL
-    try:
-        sl.SCANLOCAL_BOUNDARY_KERNEL = False
-        base = _rows(sl.scan_local_raw_flags(spark, path, ["count", "v"]))
-        sl.SCANLOCAL_BOUNDARY_KERNEL = True
-        got = _rows(sl.scan_local_raw_flags(spark, path, ["count", "v"]))
-    finally:
-        sl.SCANLOCAL_BOUNDARY_KERNEL = prev
+    write_time_tiled(raw, path, 3, rowgroup_bytes=2048)
+    got = _rows(levels.raw_to_level1_scan_local(spark, path))
     assert base and got == base
 
 
@@ -320,10 +312,83 @@ def test_boundary_kernel_null_site_raises_named_error(spark, tmp_path):
     # write directly (write_time_tiled's range partitioner handles
     # nulls; the layout contract is about what the kernel READS)
     df.orderBy("site_no", "time").coalesce(1).write.parquet(path)
-    prev = sl.SCANLOCAL_BOUNDARY_KERNEL
-    try:
-        sl.SCANLOCAL_BOUNDARY_KERNEL = True
-        with pytest.raises(Exception, match="layout violation|non-null site"):
-            sl.scan_local_raw_flags(spark, path, ["count", "v"]).collect()
-    finally:
-        sl.SCANLOCAL_BOUNDARY_KERNEL = prev
+    with pytest.raises(Exception, match="layout violation|non-null site"):
+        sl.scan_local_raw_flags(spark, path, ["count", "v"]).collect()
+
+
+# --- property: scan-local level1 == the window shape ------------------
+# The reference is raw_to_level1's small (window) shape. Each drawn
+# sink tiles a regular 10-min grid over three sites into n_files time
+# windows, each written as its own (site, time)-sorted parquet file at
+# the drawn row-group size, and injects same-payload pairs placed
+# across a file boundary: the first row sits ``before`` seconds ahead
+# of the boundary, its twin ``after`` seconds past it, so the pair is
+# a duplicate iff before + after <= 29 min. Grid counts cycle through
+# three values, so in-file duplicates and ±20 % count jumps fire too.
+# Times never tie within a site (the window shape's lag order on ties
+# is arbitrary).
+_GRID_S = 600
+_GRID_N = 240
+_T0 = 1_650_000_000
+
+
+def _write_tiles(raw, path, bounds, rowgroup_bytes):
+    """One parquet file per [lo, hi) time window, sorted by (site,
+    time) — the layout contract, with file boundaries at ``bounds``."""
+    secs = F.col("time").cast("long")
+    edges = [None, *bounds, None]
+    for lo, hi in zip(edges, edges[1:]):
+        part = raw
+        if lo is not None:
+            part = part.where(secs >= lo)
+        if hi is not None:
+            part = part.where(secs < hi)
+        (
+            part.coalesce(1)
+            .sortWithinPartitions("site_no", "time")
+            .write.mode("append")
+            .option("parquet.block.size", str(rowgroup_bytes))
+            .parquet(path)
+        )
+
+
+_offset = st.integers(1, 899).filter(lambda x: x != _GRID_S // 2)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    n_files=st.integers(2, 4),
+    rowgroup_bytes=st.sampled_from([2048, 8192, TILE_ROWGROUP_BYTES]),
+    pairs=st.lists(
+        st.tuples(st.integers(1, 3), st.integers(0, 2), _offset, _offset),
+        min_size=1,
+        max_size=4,
+    ),
+)
+def test_scan_local_matches_window_shape_property(
+    spark, tmp_path_factory, n_files, rowgroup_bytes, pairs
+):
+    rows = [
+        (_T0 + _GRID_S * i, site, 0, (1000, 1300, 900)[(i + site) % 3], 12.0, 1.0)
+        for site in (1, 2, 3)
+        for i in range(_GRID_N)
+    ]
+    # boundaries sit half a grid step off the grid, so an offset other
+    # than _GRID_S / 2 never lands on a grid time
+    bounds = [
+        _T0 + (k * _GRID_N // n_files) * _GRID_S + _GRID_S // 2
+        for k in range(1, n_files)
+    ]
+    taken = {(r[1], r[0]) for r in rows}
+    for j, (site, b_ord, before, after) in enumerate(pairs):
+        bnd = bounds[b_ord % len(bounds)]
+        for t in (bnd - before, bnd + after):
+            if (site, t) not in taken:
+                taken.add((site, t))
+                rows.append((t, site, 0, 5000 + j, 11.5, 2.0))
+    raw = _mini_raw(spark, rows)
+    path = str(tmp_path_factory.mktemp("prop") / "sink")
+    _write_tiles(raw, path, bounds, rowgroup_bytes)
+    base = _rows(levels.raw_to_level1(raw, big=False))
+    assert base
+    assert _rows(levels.raw_to_level1_scan_local(spark, path)) == base

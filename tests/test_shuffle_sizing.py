@@ -76,36 +76,6 @@ def test_cap_bounds_local_mode(spark, synthetic_bytes):
     S.scale_shuffle_partitions(spark, "/sf", "/sf/t.parquet")
 
 
-def test_autosize_off_switch(spark, synthetic_bytes, monkeypatch):
-    synthetic_bytes["/big/events.parquet"] = 512 * S.SHUFFLE_TARGET_INPUT_BYTES
-    calls = []
-    real = S._path_bytes
-    monkeypatch.setattr(
-        S, "_path_bytes", lambda p, spark=None: calls.append(p) or real(p)
-    )
-    spark.conf.set("spark.cosmoz.shuffle.autosize", "false")
-    try:
-        got = S.scale_shuffle_partitions(spark, "/big", "/big/events.parquet")
-        # forced-count measurement mode: the sizing must not touch the
-        # session conf, whatever the corpus bytes say
-        assert got == 8
-        assert _conf(spark) == 8
-        # the load is RECORDED but NOT SIZED: no walk/RPC may run
-        # inside a timed A/B region, so the path carries the deferred
-        # sentinel and zero _path_bytes calls happened
-        assert S._loaded_bytes_by_dir["/big"]["/big/events.parquet"] == S._DEFERRED
-        assert calls == []
-    finally:
-        spark.conf.set("spark.cosmoz.shuffle.autosize", "true")
-    # once autosize returns, the deferred path is sized and counts
-    got = S.scale_shuffle_partitions(spark, "/big", "/big/events.parquet")
-    assert got == 512
-    assert "/big/events.parquet" in calls
-    # restore the floor for whoever runs next
-    synthetic_bytes["/sf/t.parquet"] = 1
-    S.scale_shuffle_partitions(spark, "/sf", "/sf/t.parquet")
-
-
 def test_floor_above_cap_never_clamped(spark, synthetic_bytes):
     # a cluster session may legitimately configure a floor above the
     # local-mode cap; the cap bounds only the byte-derived term

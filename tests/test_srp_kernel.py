@@ -1,39 +1,28 @@
-"""SRP_KERNEL (functions/similarity.py) swaps the interpreted
-per-(vector, band) HOF projection fold for an Arrow/numpy matmul
-kernel (round 11 — the round-10 stage probe localized 69 % of
-x_embed_cosine_neardup's x1000 wall to this fold). Flipping it must
-leave every (id, band, bucket) row bit-identical: the float64 matmul
-is exact integer arithmetic below the 2^53 partial-sum envelope and
-the kernel falls back to an exact int64 matmul beyond it, so the only
-risk surfaces are the edge semantics the fold gets from idot's
+"""functions/similarity.py's SRP projection runs as an Arrow/numpy
+matmul kernel (``srp_band_buckets_kernel``, round 11 — the round-10
+stage probe localized 69 % of x_embed_cosine_neardup's x1000 wall to
+the interpreted per-(vector, band) HOF fold it replaced). The fold
+``srp_band_buckets`` stays as the reference: every (id, band, bucket)
+row must be bit-identical between the two. The float64 matmul is exact
+integer arithmetic below the 2^53 partial-sum envelope and the kernel
+falls back to an exact int64 matmul beyond it, so the only risk
+surfaces are the edge semantics the fold gets from idot's
 null-coalescing — null elements, whole-null vectors, empty and ragged
 arrays — and the sign boundary (s == 0 contributes no bit). These
-tests pin all of them variant-vs-variant, plus end-to-end query
-identity on both SRP consumers.
+tests pin all of them kernel-vs-fold, plus end-to-end query identity
+on both SRP consumers.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401  (parity with suite style)
 
 from cosmoz_data_pipeline_spark.functions import similarity as sim
-from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext, release_persists
+from cosmoz_data_pipeline_spark.plans import REGISTRY, release_persists
 
 DIM = 8
 BANDS = 3
 PLANES = 5
-
-
-@pytest.fixture()
-def srp_kernel():
-    shipped = sim.SRP_KERNEL
-
-    def _set(on: bool | None):
-        sim.SRP_KERNEL = on
-
-    yield _set
-    sim.SRP_KERNEL = shipped
 
 
 def _rows(df):
@@ -43,19 +32,17 @@ def _rows(df):
     )
 
 
-def _both_variants(spark, srp_kernel, vec_df, quantized):
-    srp_kernel(False)
+def _fold_and_kernel(spark, vec_df, quantized):
     fold = _rows(
         sim.srp_band_buckets(vec_df, spark, BANDS, PLANES, DIM, quantized=quantized)
     )
-    srp_kernel(True)
     kern = _rows(
-        sim.srp_band_buckets(vec_df, spark, BANDS, PLANES, DIM, quantized=quantized)
+        sim.srp_band_buckets_kernel(vec_df, BANDS, PLANES, DIM, quantized=quantized)
     )
     return fold, kern
 
 
-def test_kernel_matches_fold_quantized_edges(spark, srp_kernel):
+def test_kernel_matches_fold_quantized_edges(spark):
     # adversarial quantized inputs: zero vector (every projection == 0,
     # strict > keeps the bit off), null elements (idot coalesces to 0),
     # whole-null and empty vectors (bucket 0), short vector (zip_with
@@ -76,12 +63,12 @@ def test_kernel_matches_fold_quantized_edges(spark, srp_kernel):
         (9, [2_000_000_000, 1, -2_000_000_000, 1, 2_000_000_000, -1, 1, -1]),
     ]
     vec_df = spark.createDataFrame(rows, "vec_id long, v array<int>")
-    fold, kern = _both_variants(spark, srp_kernel, vec_df, quantized=True)
+    fold, kern = _fold_and_kernel(spark, vec_df, quantized=True)
     assert kern == fold
     assert len(kern) == len(rows) * BANDS
 
 
-def test_kernel_matches_fold_raw_doubles(spark, srp_kernel):
+def test_kernel_matches_fold_raw_doubles(spark):
     # unquantized path: the kernel applies the identical floor(v*1e6)
     # IEEE grid, with null elements skipped and whole-null vectors
     # folding to bucket 0
@@ -96,62 +83,46 @@ def test_kernel_matches_fold_raw_doubles(spark, srp_kernel):
         (5, [2000.0, -2000.0, 1999.5, -1999.5, 0.1, -0.1, 2000.0, -2000.0]),
     ]
     vec_df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    fold, kern = _both_variants(spark, srp_kernel, vec_df, quantized=False)
+    fold, kern = _fold_and_kernel(spark, vec_df, quantized=False)
     assert kern == fold
 
 
-def test_kernel_raises_past_grid_bound_like_quantize(spark, srp_kernel):
+def test_kernel_raises_past_grid_bound_like_quantize(spark):
     # quantize() raises rather than letting the ANSI-off int cast wrap
     # (ADVICE r7); the kernel must refuse the same inputs
     vec_df = spark.createDataFrame(
         [(0, [3000.0] * DIM)], "vec_id long, v array<double>"
     )
-    srp_kernel(True)
     with pytest.raises(Exception, match="int32 grid bound"):
-        sim.srp_band_buckets(
-            vec_df, spark, BANDS, PLANES, DIM, quantized=False
+        sim.srp_band_buckets_kernel(
+            vec_df, BANDS, PLANES, DIM, quantized=False
         ).collect()
 
 
 @pytest.mark.parametrize("name", ["x_embed_cosine_neardup", "x_ann_lsh_buckets"])
-def test_query_output_identical_with_kernel(spark, sf_dir, srp_kernel, name):
+def test_query_output_identical_with_kernel(spark, sf_dir, monkeypatch, name):
     def run():
         rows = _rows(REGISTRY[name].run(spark, sf_dir))
         release_persists()
         return rows
 
-    srp_kernel(False)
-    base = run()
-    assert base, "corpus must produce rows for this test to bite"
-    srp_kernel(True)
-    assert run() == base
+    shipped = run()
+    assert shipped, "corpus must produce rows for this test to bite"
+    # reference: the interpreted fold swapped in for the kernel at
+    # the query's own call site
+    calls = []
 
+    def fold(vec_df, bands, planes_per_band, dim, id_col="vec_id",
+             vec_col="v", quantized=False):
+        calls.append(bands)
+        return sim.srp_band_buckets(
+            vec_df, vec_df.sparkSession, bands, planes_per_band, dim,
+            id_col=id_col, vec_col=vec_col, quantized=quantized,
+        )
 
-def test_auto_gate_reads_corpus_count_not_session_state(spark, srp_kernel):
-    # under None = auto, the gate basis is the caller-memoized
-    # per-corpus row count — the round-10 prescreen bug (session-conf
-    # proxy) is the precedent. n >= SRP_KERNEL_MIN_N plans the
-    # mapInPandas kernel, below keeps the in-JVM fold, n=None (count
-    # unknown) keeps the fold. (The shipped default is True —
-    # unconditional, SRP_KERNEL_AB.json.)
-    srp_kernel(None)
-    vec_df = spark.createDataFrame(
-        [(0, [1] * DIM)], "vec_id long, v array<int>"
-    )
-    plan_small = sim.srp_band_buckets(
-        vec_df, spark, BANDS, PLANES, DIM, quantized=True,
-        n=sim.SRP_KERNEL_MIN_N - 1,
-    )._jdf.queryExecution().executedPlan().toString()
-    plan_big = sim.srp_band_buckets(
-        vec_df, spark, BANDS, PLANES, DIM, quantized=True,
-        n=sim.SRP_KERNEL_MIN_N,
-    )._jdf.queryExecution().executedPlan().toString()
-    plan_none = sim.srp_band_buckets(
-        vec_df, spark, BANDS, PLANES, DIM, quantized=True,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan_small
-    assert "MapInPandas" in plan_big
-    assert "MapInPandas" not in plan_none
+    monkeypatch.setattr(sim, "srp_band_buckets_kernel", fold)
+    assert run() == shipped
+    assert calls, "the query must project through srp_band_buckets_kernel"
 
 
 def test_bank_broadcast_memo_evicts_dead_applications(spark):

@@ -160,12 +160,6 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
     # sizing rule (unit): tiny source → the 8-partition floor; a big
     # source → bytes-derived
     assert inc._state_partitions(spark, src) == 8
-    prev_flag = inc.STREAM_STATE_PARTITIONS
-    try:
-        inc.STREAM_STATE_PARTITIONS = 17
-        assert inc._state_partitions(spark, src) == 17
-    finally:
-        inc.STREAM_STATE_PARTITIONS = prev_flag
     # bytes-derived branch: with a target slice of 1/20 of the source
     # the count is bytes // target; with a 1-byte target it clamps at
     # the cap
@@ -179,14 +173,17 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
     monkeypatch.undo()
 
     # end-to-end: same deduped key set at the auto count and at a
-    # pinned high count, and the session conf is untouched after
+    # pinned high count (a smaller target slice raises the derived
+    # count), each frozen into its checkpoint's state store, and the
+    # session conf is untouched after
     base_parts = spark.conf.get("spark.sql.shuffle.partitions")
     outs = []
-    for tag, pin in (("auto", None), ("pinned", 16)):
+    for tag, target in (("auto", None), ("pinned", sz // 16)):
         sink, ckpt = str(tmp_path / f"sink_{tag}"), str(tmp_path / f"ckpt_{tag}")
-        prev = inc.STREAM_STATE_PARTITIONS
-        try:
-            inc.STREAM_STATE_PARTITIONS = pin
+        with monkeypatch.context() as m:
+            if target is not None:
+                m.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", target)
+            parts = inc._state_partitions(spark, src)
             inc.stream_dedup_to_sink(
                 spark,
                 source_dir=src,
@@ -196,8 +193,9 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
                 dedup_cols=["user_id", "event_type"],
                 time_col="ts",
             )
-        finally:
-            inc.STREAM_STATE_PARTITIONS = prev
+        assert parts == (8 if target is None else 16)
+        state = os.listdir(os.path.join(ckpt, "state", "0"))
+        assert len([d for d in state if d.isdigit()]) == parts
         assert spark.conf.get("spark.sql.shuffle.partitions") == base_parts
         outs.append(
             sorted(

@@ -80,14 +80,7 @@ def cold():
             memo.clear()
     # counts cleared as one unit — the aug/base memo pairs are filled
     # by the same scan and must be invalidated together (ADVICE r11)
-    cc = getattr(catalog_ext, "clear_counts", None)
-    if cc is not None:
-        cc()
-    else:  # older code state under A/B: clear piecemeal
-        for m in ("_EMB_AUG_COUNT", "_DOCS_AUG_COUNT", "_EMB_COUNT", "_DOCS_COUNT"):
-            memo = getattr(catalog_ext, m, None)
-            if memo is not None:
-                memo.clear()
+    catalog_ext.clear_counts()
 
 IVF_WARM = {"x_ann_ivf_topk_search"}
 

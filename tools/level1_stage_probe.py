@@ -175,7 +175,6 @@ def main() -> None:
                     "site_no",
                     "time",
                     "count",
-                    131072,
                 )
                 ids = spark.range(0, len(files), 1, numPartitions=len(files))
                 return ids.mapInPandas(kernel, schema=schema)

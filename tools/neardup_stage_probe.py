@@ -79,20 +79,17 @@ def probe_once(spark, sf_dir: str) -> dict:
         )
 
     def build_bands(vecs):
-        # resolve the projection variant exactly as the query resolves
-        # it: n drives the SRP_KERNEL corpus gate (round 11)
-        n_aug = CE._emb_aug_count(spark, sf_dir)
-        planes = sim.srp_planes_for(n_aug)
+        # project exactly as the query does: the SRP kernel at the
+        # banding sized from the augmented corpus count
+        planes = sim.srp_planes_for(CE._emb_aug_count(spark, sf_dir))
         return scoped_persist(
-            sim.srp_band_buckets(
+            sim.srp_band_buckets_kernel(
                 vecs,
-                spark,
                 CE.NEARDUP_BANDS,
                 planes,
                 CE.EMBED_DIM,
                 vec_col="qv",
                 quantized=True,
-                n=n_aug,
             )
         )
 

@@ -18,12 +18,10 @@ cost has an address:
                     per-partition state commit
 - ``readback``      sink read + count (the oracle-compare leg)
 
-plus a state-partition sensitivity row: ``stream_dedup`` re-run with
-``spark.sql.shuffle.partitions`` (= the state-store partition count,
-fixed at stream start) set to 8 instead of the session floor — each
-micro-batch writes one state delta + one commit per partition, so if
-the cost is the state-store file tax the low-partition run wins at
-small state exactly like the 8-core bench did.
+The state-store partition count is derived inside
+``stream_dedup_to_sink`` from the source bytes, so no stage here can
+pin it; ST6_STATEPARTS_AB.json holds the interleaved record of the
+pinned-vs-derived comparison.
 
 min-of-N per stage, fresh scratch dirs per run (no run reads a
 predecessor's checkpoint or sink).
@@ -101,8 +99,9 @@ def main() -> None:
         "stages": {},
     }
     out["sentinel_sec"] = sentinel_sec(spark, repeats=2)
-    base_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    out["session_shuffle_partitions"] = int(base_parts)
+    out["session_shuffle_partitions"] = int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
 
     def timed(name, fn, n=args.runs):
         best, met = float("inf"), None
@@ -143,26 +142,18 @@ def main() -> None:
 
         return run
 
-    def timed_stream(name, fn, parts=None, n=args.runs):
+    def timed_stream(name, fn, n=args.runs):
         best, met = float("inf"), None
         for _ in range(n):
             work = tempfile.mkdtemp(prefix="st6_probe_")
             try:
-                if parts is not None:
-                    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
                 hwm = _stage_hwm(spark)
                 dt = _with_src(fn)(work)
                 if dt < best:
                     best, met = dt, _metrics_since(spark, hwm)
             finally:
-                if parts is not None:
-                    spark.conf.set("spark.sql.shuffle.partitions", base_parts)
                 shutil.rmtree(work, ignore_errors=True)
-        out["stages"][name] = {
-            "t": round(best, 3),
-            "run_bytes": met,
-            **({"shuffle_partitions": parts} if parts is not None else {}),
-        }
+        out["stages"][name] = {"t": round(best, 3), "run_bytes": met}
         print(f"  {name:28s} {best:7.2f}s", flush=True)
 
     def nodedup(src, sink, ckpt, schema):
@@ -181,7 +172,6 @@ def main() -> None:
 
     timed_stream("stream_nodedup", nodedup)
     timed_stream("stream_dedup", dedup)
-    timed_stream("stream_dedup_parts8", dedup, parts=8)
 
     # stage 4: the sink readback (built once outside the timer)
     work = tempfile.mkdtemp(prefix="st6_probe_")
