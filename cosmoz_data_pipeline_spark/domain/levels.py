@@ -26,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators import bucketed_window
 from ..operators.asof import asof_join_both
-from ..operators.bucketed_window import BUCKET_SECS, bucketed_auto, bucketed_lag
+from ..operators.bucketed_window import BUCKET_SECS, bucketed_lag
+from ..profile import bucketed_auto, chain_big, path_bytes
 from . import physics
 
 # payload columns compared by the duplicate detector. The reference
@@ -58,7 +58,7 @@ LEVEL1_FIELDS = RAW_PAYLOAD[:-1]  # sans flag (recomputed)
 # Physical shape. Each level has one logical definition and exactly two
 # physical shapes, chosen once per chain by one scale decision ``big``
 # (the chain entries at the bottom of this module measure it):
-# - small (every corpus below BUCKETED_MIN_INPUT_BYTES): per-site
+# - small (every corpus below profile.BUCKETED_MIN_INPUT_BYTES): per-site
 #   windows — plain lag, the composite-key duplicate window, level2's
 #   two grain joins plus one as-of union;
 # - big: balanced (site, week-bucket) groups, because a window keyed on
@@ -569,10 +569,8 @@ def run_pipeline_scan_local(
     LEVEL1_SCANLOCAL_AB / LEVEL1_ZONERG_AB) and levels 2-4 are the
     shared tail. The scan-local level1 enters through per-file kernels
     over ``spark.range``, so it has no file lineage to size; the scale
-    decision is the sink's own bytes against the same crossover
+    decision is the sink's own bytes through the same gate
     ``bucketed_auto`` uses."""
-    from ..session import _path_bytes
-
-    big = _path_bytes(sink_path, spark) >= bucketed_window.BUCKETED_MIN_INPUT_BYTES
+    big = chain_big(path_bytes(spark, sink_path))
     l1 = raw_to_level1_scan_local(spark, sink_path)
     return _levels_2_to_4(l1, intensity, silo_data, all_stations, spec_mode, big)

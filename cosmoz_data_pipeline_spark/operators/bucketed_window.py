@@ -1,5 +1,5 @@
 """Scale-safe per-key sequence windows via time-bucketing + boundary
-exchange, and the one scale gate that picks the level chain's shape.
+exchange (the level chain's big shape; profile.chain_big picks it).
 
 The domain keys everything on ~22 sites (reference
 pipeline/all_stations.tsv; one OS process per site,
@@ -38,66 +38,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BUCKET_SECS = 7 * 86400
-
-
-# engage the bucketed shapes when the frame's own INPUT bytes say the
-# corpus has outgrown the domain's key count. 512 MiB is the same
-# crossover the retired >=128-shuffle-partition proxy encoded
-# (128 partitions x 4 MiB target input): the x1000 events table
-# (~1+ GiB) engages, sf0.01/sf0.1/x100 keep the fused single-window
-# plans that measure faster at small scale (LEVEL_BUCKETED_AB.json:
-# bucketed level4 0.89x at x100 vs 1.25x at x1000).
-BUCKETED_MIN_INPUT_BYTES = 512 << 20
-
-
-def bucketed_auto(df: DataFrame) -> bool:
-    """The level chain's scale decision (``levels.run_pipeline``'s
-    ``big``; catalog_ext's IVF assign gate reuses it): True when the
-    bytes of the files actually backing ``df``'s plan
-    (``df.inputFiles()``, sized through session._path_bytes' memo)
-    exceed BUCKETED_MIN_INPUT_BYTES.
-
-    A frame's input-file bytes are a property of the frame itself, so
-    the decision does not depend on what else the session loaded (the
-    session-global shuffle-partition basis it replaced did). Frames
-    with no file lineage (in-memory test frames, streams) size to 0
-    and keep the small-scale shape; the identity tests pass both
-    values of ``big`` explicitly."""
-    from urllib.parse import unquote, urlparse
-
-    from ..session import _path_bytes
-
-    try:
-        spark = df.sparkSession
-        total = 0
-        for f in df.inputFiles():
-            # inputFiles returns URIs; file: URIs strip (and
-            # percent-DECODE — a path with spaces arrives as %20,
-            # which the local stat would miss, ADVICE r11) to a plain
-            # memoized stat, other schemes go through the session's
-            # Hadoop-FS sizing path
-            u = urlparse(f)
-            p = unquote(u.path) if u.scheme == "file" else f
-            total += _path_bytes(p, spark)
-            if total >= BUCKETED_MIN_INPUT_BYTES:
-                return True
-        return False
-    except Exception as e:
-        # NOT silent (round 12, VERDICT r11 wrong #3): on a cluster a
-        # transient inputFiles()/sizing failure would otherwise keep
-        # the small-scale single-window plan at exactly the scale
-        # where the bucketed shape wins 3.14x — the same
-        # silent-perf-degradation class session._path_bytes warns
-        # about. The fallback plan is still CORRECT, so warn + False.
-        import sys
-
-        print(
-            f"cosmoz: WARNING bucketed_auto could not size the frame's "
-            f"inputs ({type(e).__name__}: {e}) - falling back to the "
-            "small-scale single-window plan; large corpora may spill",
-            file=sys.stderr,
-        )
-        return False
 
 
 def bucketed_lag(

@@ -23,8 +23,10 @@ import time as _time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import profile
 from ..functions import similarity as sim
 from ..functions import text as tx
+from ..profile import IdStats, id_stats, table_fingerprint
 from ..sources.tables import load_table
 from .registry import REGISTRY, register, release_persists, scoped_persist
 
@@ -32,11 +34,6 @@ MINHASH_K = 12
 LSH_BANDS = 4
 LSH_ROWS = 3
 EMBED_DIM = 64  # embeddings-table vector width (TESTDATA.md)
-# The one scale threshold. Three gates pick between two shipped
-# shapes, each of which wins on its own side of it; each counts its
-# own basis: _decon_kernel_on (raw documents), _band_shj_on (augmented
-# documents) and _prescreen_head (augmented vectors).
-SCALE_MIN_N = 100_000
 # Below this frontier size the components fix-point probes convergence
 # only every 2nd superstep (see q_dedup_components): the probe's
 # driver round-trip outweighs the risk of one extra cheap superstep.
@@ -119,22 +116,23 @@ docs_aug AS (
 )"""
 
 
-# Offset memo, keyed by (table, corpus dir): corpus metadata like
-# _EMB_AUG_COUNT — one scalar max() per corpus (answered from parquet
-# column stats), then free for every later query in the session.
-_AUG_OFF: dict[tuple[str, str], int] = {}
+def _docs_stats(spark: SparkSession, sf_dir: str) -> IdStats:
+    return id_stats(spark, sf_dir, "documents", "doc_id")
 
 
-def _aug_offset(spark: SparkSession, sf_dir: str, table: str, id_col: str) -> int:
-    """Next power of ten above max(id) — the Spark mirror of the
-    d_off/e_off oracle CTEs (10^digits(max) in both engines)."""
-    key = (table, sf_dir.rstrip("/"))
-    off = _AUG_OFF.get(key)
-    if off is None:
-        max_id = load_table(spark, sf_dir, table).agg(F.max(id_col)).collect()[0][0]
-        off = 10 ** len(str(int(max_id)))
-        _AUG_OFF[key] = off
-    return off
+def _emb_stats(spark: SparkSession, sf_dir: str, fp: tuple | None = None) -> IdStats:
+    return id_stats(spark, sf_dir, "embeddings", "vec_id", fp)
+
+
+# The one corpus-stat cache is profile.id_stats'. bench.py and
+# perfbench clear it under this older name, so the name stays.
+_AUG_OFF = profile._ID_STATS
+
+
+def clear_counts() -> None:
+    """Empty the corpus-stat cache, so the next query runs cold."""
+    _AUG_OFF.clear()
+
 
 _TOKS_SQL = r"""
 tk AS (
@@ -152,7 +150,7 @@ sh AS (
 
 
 def _docs_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    off = _aug_offset(spark, sf_dir, "documents", "doc_id")
+    off = _docs_stats(spark, sf_dir).aug_offset
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
     exact = d.where(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + off).alias("doc_id"), "text", "lang", "source"
@@ -164,57 +162,6 @@ def _docs_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
     )
     return d.unionByName(exact).unionByName(near)
-
-
-# Augmented documents cardinality, memoized per corpus dir — the
-# SimHash blocking picks its block scheme from the corpus size (the
-# same sizing-needs-only-the-count rationale as _EMB_AUG_COUNT): one
-# id-pruned count, not a materialization of the augmented projection.
-# The base (unaugmented) count rides the same scan — x_decontaminate
-# runs on the RAW documents table, and its kernel auto-gate must not
-# pay a second count job.
-_DOCS_AUG_COUNT: dict[str, int] = {}
-_DOCS_COUNT: dict[str, int] = {}
-
-
-def clear_counts() -> None:
-    """Invalidate every corpus-cardinality memo as one unit (round 12,
-    ADVICE r11): the docs aug/base dicts are filled by the same scan, so
-    tools that clear only one of the pair leave the other to serve a
-    stale (or, with the recompute keyed on both, merely redundant)
-    value. Tools should call this instead of clearing dicts piecemeal."""
-    _DOCS_AUG_COUNT.clear()
-    _DOCS_COUNT.clear()
-    _EMB_AUG_COUNT.clear()
-
-
-def _docs_aug_count(spark: SparkSession, sf_dir: str) -> int:
-    key = sf_dir.rstrip("/")
-    # recompute when EITHER memo of the pair is missing (ADVICE r11):
-    # a tool that cleared only the base dict must not be answered from
-    # the aug memo without the base being refilled
-    n = _DOCS_AUG_COUNT.get(key) if key in _DOCS_COUNT else None
-    if n is None:
-        r = (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("doc_id") % 11 == 0).alias("n11"),
-                F.count_if(F.col("doc_id") % 5 == 0).alias("n5"),
-            )
-            .collect()[0]
-        )
-        n = r["n"] + r["n11"] + r["n5"]
-        _DOCS_AUG_COUNT[key] = n
-        _DOCS_COUNT[key] = r["n"]
-    return n
-
-
-def _docs_count(spark: SparkSession, sf_dir: str) -> int:
-    key = sf_dir.rstrip("/")
-    if key not in _DOCS_COUNT:
-        _docs_aug_count(spark, sf_dir)
-    return _DOCS_COUNT[key]
 
 
 # ---------------------------------------------------------------- dedup
@@ -364,7 +311,7 @@ def _minhash_sigs_kernel(docs: DataFrame, with_set: bool = False) -> DataFrame:
 # whole-text fallback here, unlike MinHash shingles). Both shapes ship:
 # the kernel wins from x100 up (TOKENSTATS_KERNEL_AB.json), while at
 # sf0.1 the full-round bench read it slower (BENCH_AB_r11.json), so
-# _decon_kernel_on picks by corpus size.
+# profile.decon_kernel picks by corpus size.
 
 
 def _simhash_sigs_kernel(docs: DataFrame) -> DataFrame:
@@ -622,35 +569,6 @@ sg64 AS (
     FROM cs)"""
 
 
-# Above this many (augmented) documents, the SimHash blocking widens
-# from the 6-block to the 8-block Manku scheme. Why: the narrowest
-# 6-block combo keys are 24 bits (three 8-bit blocks), so the random-
-# collision term in the candidate count is ~4 * N^2 / 2^25 — invisible
-# below ~1M docs, ~20% of all candidates at 5M (measured: SCALE_r08
-# stage_counts grew 21.6x over the x100->x1000 decade against 9.4x
-# output growth), and DOMINANT ~N^2 by ~1e9. The 8-block scheme's
-# narrowest key is 40 bits (5 x 8-bit blocks): its random term stays
-# negligible past 1e9 docs, at the price of 56-vs-20 band rows per
-# document.
-#
-# The threshold is the MEASURED cost crossover, not the point where
-# collisions first appear. Band rows feed BOTH sides of the
-# sort-merge self-join, so widening costs ~(56-20)*2 = 72 extra
-# sorted-and-shuffled row-units per doc, while a surviving narrow-key
-# collision costs ~1 (join output + distinct + exact verify). At
-# N=5e6 the trade was measured both ways on the same corpus
-# (SCALE_r08 x1000 decade): narrow = 65.7 s / 14.5M candidates /
-# zero spill; wide = 333.0 s / 1.05M candidates / 2x shuffle bytes +
-# 39 GB spill — the 36N extra band rows (180M) dwarf the 13.5M saved
-# candidates ~27:1. The crossover is where the random term passes the
-# extra band-row cost: 4*N^2/2^25 > 72*N, i.e. N > 18*2^25 ~= 2^29.
-# Same corpus-scaled-keyspace principle as srp_planes_for (the r5
-# 16-bit saturation, one level up); the wide scheme's completeness
-# and pair-set parity stay pinned by tests/test_simhash_wide_blocks.py
-# regardless of which side of the threshold the corpus falls on.
-SIMHASH_WIDE_N = 1 << 29
-
-
 def _simhash_blocks(wide: bool) -> tuple[list, int]:
     """(blocks, blocks_per_combo) for the Manku multi-block scheme.
     Blocks are (column, bit-width) over the four 16-bit signature
@@ -684,7 +602,7 @@ def _simhash_band_rows(
     from itertools import combinations
 
     if wide is None:
-        wide = n_docs >= SIMHASH_WIDE_N
+        wide = profile.simhash_wide(n_docs)
     blocks, m = _simhash_blocks(wide)
     keys = []
     for combo in combinations(range(len(blocks)), m):
@@ -700,15 +618,6 @@ def _simhash_band_rows(
     )
 
 
-def _band_shj_on(n_docs: int) -> bool:
-    """Scale gate: hint the band self-join SHUFFLE_HASH at >=
-    SCALE_MIN_N augmented docs. The hint skips both sort-merge sorts
-    (SIMHASH_SHJ_AB.json: 1.18x at x100, 1.24x at x1000, identical
-    bytes), but it outranks size-based broadcast, which the planner
-    picks for the band table at the small SFs."""
-    return n_docs >= SCALE_MIN_N
-
-
 def _simhash_band_join(
     sigs: DataFrame, n_docs: int, wide: bool | None = None
 ) -> DataFrame:
@@ -716,7 +625,7 @@ def _simhash_band_join(
     distinct; one row per shared (band_idx, band_val)."""
     bands = _simhash_band_rows(sigs, n_docs, wide)
     a, b = bands.alias("a"), bands.alias("b")
-    if _band_shj_on(n_docs):
+    if profile.band_shj(n_docs):
         b = b.hint("shuffle_hash")  # physical strategy only: same pairs
     return a.join(
         b,
@@ -732,7 +641,7 @@ def _simhash_combo_cands(
     """Distinct (doc_a, doc_b) candidates from the Manku WWW'07
     multi-block blocking over a (doc_id, s0..s3) SimHash table, one
     equi-join on (band_idx, band_val). The block scheme is
-    CORPUS-SCALED via ``n_docs`` (see SIMHASH_WIDE_N); both schemes
+    CORPUS-SCALED via ``n_docs`` (see profile.SIMHASH_WIDE_N); both
     are complete for Hamming <= 3 and the verify filter is exact, so
     the final pair set is identical whichever is active (pinned by
     tests/test_lsh_properties.py + tests/test_simhash_wide_blocks.py).
@@ -802,7 +711,7 @@ WHERE bit_count(xor(sa.s0, sb.s0)) + bit_count(xor(sa.s1, sb.s1))
 )
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = scoped_persist(_simhash_sigs_kernel(_docs_aug(spark, sf_dir)))
-    n = _docs_aug_count(spark, sf_dir)
+    n = _docs_stats(spark, sf_dir).aug_n
     cand = _simhash_combo_cands(sigs, n)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -910,19 +819,12 @@ DECON_EVAL_SOURCE = "src0"
 DECON_FRAC = 5e-2
 
 
-def _decon_kernel_on(spark: SparkSession, sf_dir: str) -> bool:
-    """Scale gate: the decon gram-set kernel at >= SCALE_MIN_N raw
-    documents, the explode + window fold below (see the kernel's
-    comment for the evidence on each side)."""
-    return _docs_count(spark, sf_dir) >= SCALE_MIN_N
-
-
 def _decon_sides(spark: SparkSession, sf_dir: str):
     """(train inverted rows, eval inverted rows) for x_decontaminate —
     split out so the scale sweep can count both sides and the pre-agg
     match rows as stage metrics through the exact query code path."""
     docs = load_table(spark, sf_dir, "documents")
-    if _decon_kernel_on(spark, sf_dir):
+    if profile.decon_kernel(_docs_stats(spark, sf_dir).n):
         # scale shape: distinct 3-gram hash sets per doc in one
         # scan-local pass — no explode, no window
         per_doc = _decon_gram_sets_kernel(docs)
@@ -1283,32 +1185,8 @@ emb_aug AS (
 )"""
 
 
-# Augmented-corpus cardinality, memoized per corpus dir: sizing the
-# banding needs ONLY the row count, so derive it from a vec_id-pruned
-# scan (count + two modulo count_ifs) instead of materializing the
-# full 3-branch augmented projection — corpus size is index metadata,
-# same train-once rationale as _IVF_CENTROIDS.
-_EMB_AUG_COUNT: dict[str, int] = {}
-
-
-def _emb_aug_count(spark: SparkSession, sf_dir: str) -> int:
-    key = sf_dir.rstrip("/")
-    if key not in _EMB_AUG_COUNT:
-        r = (
-            load_table(spark, sf_dir, "embeddings")
-            .select(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("vec_id") % 11 == 0).alias("n11"),
-                F.count_if(F.col("vec_id") % 5 == 0).alias("n5"),
-            )
-            .collect()[0]
-        )
-        _EMB_AUG_COUNT[key] = r["n"] + r["n11"] + r["n5"]
-    return _EMB_AUG_COUNT[key]
-
-
 def _emb_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    off = _aug_offset(spark, sf_dir, "embeddings", "vec_id")
+    off = _emb_stats(spark, sf_dir).aug_offset
     e = load_table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     exact = base.where(F.col("vec_id") % 11 == 0).select(
@@ -1353,22 +1231,13 @@ NEARDUP_BANDS = 8
 # 139 M candidates before the wide join: 1.37x there and 1.07x at x100
 # (NEARDUP_PRESCREEN_AB.json), but a consistent ~9 % cost at sf0.1
 # where the verify is already sub-second (BENCH_AB_r10.json) — hence
-# the _prescreen_head gate. The head dot is the unrolled 16-term
+# the profile.prescreen_head gate. The head dot is the unrolled 16-term
 # codegen expression (SCREEN_DOT_AB.json beat the idot fold and the
 # raw fold).
 # keep every pair the exact verify could keep: round(c,6) >= 0.9 means
 # c >= 0.8999995; the bound's own floating error is ~1e-15 relative,
 # so a 5e-7 slack is orders of magnitude more than safe
 _PRESCREEN_KEEP = 0.899999
-
-
-def _prescreen_head(spark: SparkSession, sf_dir: str) -> int:
-    """Scale gate: the screen's head width — 16 at >= SCALE_MIN_N
-    augmented vectors, 0 (no screen) below. The basis is the memoized
-    corpus count, not a session shuffle-partition proxy, so the gate
-    does not depend on what else the session loaded
-    (NEARDUP_STAGES.json)."""
-    return 16 if _emb_aug_count(spark, sf_dir) >= SCALE_MIN_N else 0
 
 
 def _neardup_prescreen(vecs: DataFrame, cand: DataFrame, h: int) -> DataFrame:
@@ -1478,7 +1347,7 @@ WHERE round(CAST(list_aggregate(list_transform(generate_series(1, len(a.qv)),
 )
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs, cand = _neardup_cands(spark, sf_dir)
-    head = _prescreen_head(spark, sf_dir)
+    head = profile.prescreen_head(_emb_stats(spark, sf_dir).aug_n)
     if head:
         cand = _neardup_prescreen(vecs, cand, head)
     # No join-strategy hint on the verify, deliberately: SHUFFLE_HASH
@@ -1517,7 +1386,7 @@ def _neardup_cands(spark: SparkSession, sf_dir: str):
     # (memoized), NOT a count over the full augmented projection; the
     # persist above materializes lazily inside the final job instead
     # of behind a sequential driver wall
-    n_aug = _emb_aug_count(spark, sf_dir)
+    n_aug = _emb_stats(spark, sf_dir).aug_n
     planes = sim.srp_planes_for(n_aug)
     # persist: both sides of the candidate self-join read the band
     # table — uncached, each side would re-run the per-(vector, band)
@@ -2064,7 +1933,9 @@ def _ivf_assign_kernel(
     )
 
 
-# Trained-centroid memo, keyed by (applicationId, corpus dir). An IVF
+# Trained-index memo, keyed by (applicationId, corpus dir) and checked
+# against the embeddings listing's fingerprint, so a corpus rewritten
+# in place retrains instead of searching a stale index. An IVF
 # index is built once and amortized over every subsequent search (the
 # faiss train/add/search split); re-deriving the coarse quantizer per
 # query would be like rebuilding a B-tree per lookup. Training is fully
@@ -2077,13 +1948,13 @@ def _ivf_assign_kernel(
 # warm memo survives executor loss), never collected to the driver.
 # applicationId (not id(spark)): CPython reuses object ids after GC,
 # so a dead session's memo could leak into a new one. The value is
-# (cent_df, k, asg_df): the full index — centroids AND the
+# (fingerprint, cent_df, k, asg_df): the full index — centroids AND the
 # inverted-list assignment (faiss train+add). Memoizing only the
 # centroids (rounds ≤4) silently re-ran the whole-corpus assignment
 # inside every "warm" search; the assignment is index state, built
 # once and stored (at deployment scale: written out cluster-
 # partitioned, the layout tests/test_scale_evidence.py prunes on).
-_IVF_CENTROIDS: dict[tuple[str, str], tuple[DataFrame, int, DataFrame]] = {}
+_IVF_CENTROIDS: dict[tuple[str, str], tuple[tuple, DataFrame, int, DataFrame]] = {}
 
 
 def _ivf_train(spark: SparkSession, sf_dir: str):
@@ -2109,10 +1980,11 @@ def _ivf_train(spark: SparkSession, sf_dir: str):
 
     qv = scoped_persist(_ivf_quantized(spark, sf_dir))
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
+    fp = table_fingerprint(spark, sf_dir, "embeddings")
     memo = _IVF_CENTROIDS.get(key)
-    if memo is not None:
-        return qv, memo[0], memo[1], memo[2]
-    n = load_table(spark, sf_dir, "embeddings").count()
+    if memo is not None and memo[0] == fp:
+        return qv, memo[1], memo[2], memo[3]
+    n = _emb_stats(spark, sf_dir, fp).n
     k = isqrt(n)
     target = IVF_TRAIN_PER_CENTROID * k
     m = (n + target - 1) // target
@@ -2190,7 +2062,7 @@ def _ivf_train(spark: SparkSession, sf_dir: str):
     # unreferenced — free driver AND executor copies (ADVICE r10)
     for b in kernel_bcs:
         b.destroy()
-    _IVF_CENTROIDS[key] = (cent_df, k, asg_df)
+    _IVF_CENTROIDS[key] = (fp, cent_df, k, asg_df)
     return qv, cent_df, k, asg_df
 
 
@@ -2248,7 +2120,8 @@ def load_ivf_index(spark: SparkSession, sf_dir: str, path: str):
         "vec_id", F.col("cluster").cast("int").alias("cluster")
     )
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    _IVF_CENTROIDS[key] = (cent_df, int(k), asg_df)
+    fp = table_fingerprint(spark, sf_dir, "embeddings")
+    _IVF_CENTROIDS[key] = (fp, cent_df, int(k), asg_df)
     return cent_df, int(k), asg_df
 
 
@@ -2659,7 +2532,7 @@ def _probe_simhash(spark: SparkSession, sf_dir: str) -> dict:
     try:
         return {
             "candidate_pairs": _simhash_combo_cands(
-                sigs, _docs_aug_count(spark, sf_dir)
+                sigs, _docs_stats(spark, sf_dir).aug_n
             ).count()
         }
     finally:

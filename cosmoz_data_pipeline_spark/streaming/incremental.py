@@ -26,6 +26,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import profile
+
 
 def incremental_overwrite(
     transformed: DataFrame,
@@ -76,42 +78,12 @@ def incremental_overwrite(
     )
 
 
-# Round-15 state-partition sizing (VERDICT r14 task 3, ST6_STAGES
-# .json): a stateful streaming query fixes its state-store partition
-# count at FIRST micro-batch from spark.sql.shuffle.partitions, and
-# every micro-batch thereafter pays one state commit (delta file +
-# snapshot bookkeeping) PER PARTITION regardless of how many rows it
-# holds. With the session floor at core count (32 here) and a tiny
-# backlog, that per-partition commit tax dominated the query: the
-# sf0.1 decomposition reads stream_nodedup 0.97 s / stream_dedup
-# 3.02 s / stream_dedup@8parts 1.79 s — i.e. ~60 % of the state leg
-# was commit overhead over EMPTY partitions (the same signature as
-# PERF_r14's 0.39 low-core ratio, where the 8-core bench beat the
-# 32-core one on identical code). The fix is the engine's standard
-# answer (session.scale_shuffle_partitions, guide §2): derive the
-# partition count from the source's BYTES — one target-sized input
-# slice per state partition, min 8, capped — instead of a constant
-# tuned to either local core count or a cluster fleet. At 100 TB the
-# bytes-derived count far exceeds any core floor (MORE state
-# parallelism than today); at bench scale it stops paying 32 commits
-# for 3 MB of input (ST6_STATEPARTS_AB.json holds the interleaved
-# A/B). The engine derives the count; no caller pins it.
-_STATE_PARTS_MIN = 8
-
-
 def _state_partitions(spark: SparkSession, source_dir: str) -> int:
-    from ..session import (
-        SHUFFLE_PARTITIONS_CAP,
-        SHUFFLE_TARGET_INPUT_BYTES,
-        _path_bytes,
-    )
-
-    return max(
-        _STATE_PARTS_MIN,
-        min(
-            SHUFFLE_PARTITIONS_CAP,
-            _path_bytes(source_dir, spark) // SHUFFLE_TARGET_INPUT_BYTES,
-        ),
+    """State-store partitions for a dedup stream over ``source_dir``:
+    derived from the source's bytes, floored at
+    ``profile._STATE_PARTS_MIN`` (see its comment for the evidence)."""
+    return profile.partitions_for(
+        profile.path_bytes(spark, source_dir), profile._STATE_PARTS_MIN
     )
 
 

@@ -14,9 +14,9 @@ import datetime as dt
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
-from cosmoz_data_pipeline_spark.operators import bucketed_window as bw
 from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_lag
 from cosmoz_data_pipeline_spark.operators.scan_local import write_time_tiled
 
@@ -156,7 +156,7 @@ def test_one_scale_decision_on_both_entry_routes(spark, sf_dir, tmp_path, monkey
     base4 = _rows(small["level4"])
     assert base4
 
-    monkeypatch.setattr(bw, "BUCKETED_MIN_INPUT_BYTES", 1)
+    monkeypatch.setattr(profile, "BUCKETED_MIN_INPUT_BYTES", 1)
     for out in (
         levels.run_pipeline(d["raw_values"], *dims),
         levels.run_pipeline_scan_local(spark, sink, *dims),
@@ -171,25 +171,25 @@ def test_auto_gate_reads_frame_input_bytes(spark, sf_dir, tmp_path):
     # loaded first) must not flip the plan shape
 
     # in-memory frame: no file lineage -> small-scale shape
-    assert bw.bucketed_auto(spark.range(1)) is False
+    assert profile.bucketed_auto(spark.range(1)) is False
     # a real (small) scan stays below the crossover…
     small = spark.read.parquet(f"{sf_dir}/events.parquet")
-    assert bw.bucketed_auto(small) is False
+    assert profile.bucketed_auto(small) is False
     # …regardless of the session-global conf the retired proxy read
     spark.conf.set("spark.sql.shuffle.partitions", "256")
     try:
-        assert bw.bucketed_auto(small) is False
+        assert profile.bucketed_auto(small) is False
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
     # and the same frame engages once its inputs cross the threshold
-    shipped = bw.BUCKETED_MIN_INPUT_BYTES
-    bw.BUCKETED_MIN_INPUT_BYTES = 1
+    shipped = profile.BUCKETED_MIN_INPUT_BYTES
+    profile.BUCKETED_MIN_INPUT_BYTES = 1
     try:
-        assert bw.bucketed_auto(small) is True
+        assert profile.bucketed_auto(small) is True
         # derived frames inherit their source files
-        assert bw.bucketed_auto(small.select("user_id").limit(3)) is True
+        assert profile.bucketed_auto(small.select("user_id").limit(3)) is True
     finally:
-        bw.BUCKETED_MIN_INPUT_BYTES = shipped
+        profile.BUCKETED_MIN_INPUT_BYTES = shipped
 
 
 def test_auto_gate_decodes_percent_encoded_paths(spark, sf_dir, tmp_path, capfd):
@@ -203,21 +203,21 @@ def test_auto_gate_decodes_percent_encoded_paths(spark, sf_dir, tmp_path, capfd)
     d.mkdir()
     shutil.copy(f"{sf_dir}/events.parquet", d / "events.parquet")
     df = spark.read.parquet(str(d / "events.parquet"))
-    shipped = bw.BUCKETED_MIN_INPUT_BYTES
-    bw.BUCKETED_MIN_INPUT_BYTES = 1
+    shipped = profile.BUCKETED_MIN_INPUT_BYTES
+    profile.BUCKETED_MIN_INPUT_BYTES = 1
     try:
         capfd.readouterr()
-        assert bw.bucketed_auto(df) is True
+        assert profile.bucketed_auto(df) is True
         assert "WARNING could not size" not in capfd.readouterr().err
     finally:
-        bw.BUCKETED_MIN_INPUT_BYTES = shipped
+        profile.BUCKETED_MIN_INPUT_BYTES = shipped
 
 
 def test_auto_gate_warns_on_sizing_failure(spark, sf_dir, capfd):
     # round 12 (VERDICT r11 wrong #3): a sizing failure must warn on
     # stderr — silently keeping the small-scale plan at cluster scale
-    # is the silent-perf-degradation class _path_bytes already warns
-    # about — and still fall back to False (plan stays correct)
+    # is the silent-perf-degradation class profile.path_bytes already
+    # warns about — and still fall back to False (plan stays correct)
     class Boom:
         @property
         def sparkSession(self):
@@ -227,7 +227,7 @@ def test_auto_gate_warns_on_sizing_failure(spark, sf_dir, capfd):
             raise RuntimeError("transient sizing failure")
 
     capfd.readouterr()
-    assert bw.bucketed_auto(Boom()) is False
+    assert profile.bucketed_auto(Boom()) is False
     err = capfd.readouterr().err
     assert "bucketed_auto could not size" in err
     assert "transient sizing failure" in err

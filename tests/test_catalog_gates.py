@@ -1,9 +1,9 @@
-"""The three scale gates in catalog_ext each pick between two shipped
-shapes of one query: the decon gram-set kernel (_decon_kernel_on), the
-SHUFFLE_HASH band self-join (_band_shj_on) and the head-16 neardup
-pre-verify screen (_prescreen_head). The test corpus sits below
-SCALE_MIN_N, so tests/test_oracle_parity.py checks the small side;
-here SCALE_MIN_N = 0 forces the big side, and each test asserts that
+"""The three row-count scale gates in profile each pick between two
+shipped shapes of one catalog_ext query: the decon gram-set kernel
+(decon_kernel), the SHUFFLE_HASH band self-join (band_shj) and the
+head-16 neardup pre-verify screen (prescreen_head). The test corpus
+sits below SCALE_MIN_N, so tests/test_oracle_parity.py checks the
+small side; here SCALE_MIN_N = 0 forces the big side, and each test asserts that
 the big shape is in the plan and that the output still matches the
 DuckDB oracle.
 """
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext, release_persists
 from tools.compare import compare, duckdb_connection
 
@@ -34,7 +35,7 @@ def test_big_shape_matches_oracle(spark, sf_dir, monkeypatch, name):
     q = REGISTRY[name]
     assert BIG_SHAPE[name] not in _plan(q.run(spark, sf_dir))
     release_persists()
-    monkeypatch.setattr(catalog_ext, "SCALE_MIN_N", 0)
+    monkeypatch.setattr(profile, "SCALE_MIN_N", 0)
     try:
         df = q.run(spark, sf_dir)
         assert BIG_SHAPE[name] in _plan(df)

@@ -16,8 +16,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.functions import similarity as sim
 from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext, release_persists
+
+
+def _head(spark, sf_dir):
+    return profile.prescreen_head(catalog_ext._emb_stats(spark, sf_dir).aug_n)
 
 
 def _pairs(spark, sf_dir):
@@ -31,7 +36,7 @@ def test_query_output_identical_with_screen(spark, sf_dir, head):
     # the verify is per pair, so the screened query's output is the
     # unscreened output restricted to the screen's survivors: output
     # identity holds iff every output pair survives the screen
-    assert catalog_ext._prescreen_head(spark, sf_dir) == 0  # unscreened
+    assert _head(spark, sf_dir) == 0  # unscreened
     base = _pairs(spark, sf_dir)
     assert base, "corpus must produce near-dup pairs for this test to bite"
     vecs, cand = catalog_ext._neardup_cands(spark, sf_dir)
@@ -134,8 +139,8 @@ def test_screen_dot_variants_identical(spark, sf_dir, monkeypatch):
     # forcing the screen on equals the unscreened output
     base = _pairs(spark, sf_dir)
     assert base
-    monkeypatch.setattr(catalog_ext, "SCALE_MIN_N", 0)
-    assert catalog_ext._prescreen_head(spark, sf_dir) == 16
+    monkeypatch.setattr(profile, "SCALE_MIN_N", 0)
+    assert _head(spark, sf_dir) == 16
     assert _pairs(spark, sf_dir) == base
 
     h = 16
@@ -204,20 +209,34 @@ def test_screen_dot_variants_identical_on_ragged_vectors(spark):
 
 
 def test_count_memo_pair_refills_together(spark, sf_dir):
-    # round 12 (ADVICE r11): clearing only the docs BASE count memo
-    # while the aug memo stays populated must not KeyError (the aug
-    # memo recomputes and refills both), and clear_counts() empties
-    # all three corpus-cardinality memos
-    from cosmoz_data_pipeline_spark.plans import catalog_ext as ce
+    # the corpus stats the augmented corpora size and number their
+    # copies from (count, the two copy-subset counts and max id) come
+    # from one cache: they equal DuckDB's aggregates, a second call on
+    # unchanged files runs no Spark job, and clear_counts() empties
+    # the cache, after which the next call refills it
+    from cosmoz_data_pipeline_spark.profile import id_stats
+    from tools.compare import duckdb_connection
 
-    n_docs = ce._docs_count(spark, sf_dir)
-    n_docs_aug = ce._docs_aug_count(spark, sf_dir)
-    n_emb_aug = ce._emb_aug_count(spark, sf_dir)
-    ce._DOCS_COUNT.clear()
-    assert ce._docs_count(spark, sf_dir) == n_docs
-    assert ce._docs_aug_count(spark, sf_dir) == n_docs_aug
-    ce.clear_counts()
-    assert not ce._DOCS_AUG_COUNT and not ce._DOCS_COUNT
-    assert not ce._EMB_AUG_COUNT
-    assert ce._docs_count(spark, sf_dir) == n_docs
-    assert ce._emb_aug_count(spark, sf_dir) == n_emb_aug
+    import os
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    con = duckdb_connection(sf)
+    sc = spark.sparkContext
+    for table, col in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        want = con.execute(
+            f"SELECT count(*), count_if({col} % 11 = 0), count_if({col} % 5 = 0), "
+            f"max({col}) FROM {table}"
+        ).fetchone()
+        catalog_ext.clear_counts()
+        assert not catalog_ext._AUG_OFF
+        got = id_stats(spark, sf, table, col)
+        assert (got.n, got.n11, got.n5, got.max_id) == want
+        assert catalog_ext._AUG_OFF  # refilled
+        group = f"id-stats-warm-{table}"
+        sc.setJobGroup(group, "warm id_stats")
+        try:
+            assert id_stats(spark, sf, table, col) == got
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

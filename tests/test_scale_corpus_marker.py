@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import tools.scale_corpus as sc
 
 
@@ -87,3 +89,15 @@ def test_matching_marker_extends_missing_tables_only(tmp_path, monkeypatch):
     # now everything is covered -> full request is a no-op
     assert sc.ensure_corpus(None, d, 1000) is False
     assert len(calls) == 1
+
+
+def test_unmarked_corpus_dir_is_never_overwritten(tmp_path):
+    """A directory with tables but no marker is a real corpus (a test SF
+    dir passed by mistake), not a generated one: generate() refuses
+    before touching it."""
+    d = str(tmp_path)
+    (tmp_path / "documents.parquet").write_bytes(b"real")
+    with pytest.raises(ValueError, match="refusing to overwrite"):
+        sc.generate(None, d, 1, tables=("documents",))
+    assert (tmp_path / "documents.parquet").read_bytes() == b"real"
+    assert not (tmp_path / "corpus_meta.json").exists()

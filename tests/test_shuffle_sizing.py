@@ -1,4 +1,5 @@
-"""Spill-aware shuffle sizing (session.scale_shuffle_partitions).
+"""Spill-aware shuffle sizing (session.scale_shuffle_partitions over
+profile.path_bytes and profile.partitions_for).
 
 AQE only coalesces BELOW spark.sql.shuffle.partitions, so the
 configured count is the engine's one upward scale knob; pinning it at
@@ -12,8 +13,11 @@ they run in milliseconds.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from cosmoz_data_pipeline_spark import profile as P
 from cosmoz_data_pipeline_spark import session as S
 
 
@@ -22,7 +26,7 @@ def synthetic_bytes(monkeypatch):
     """Feed scale_shuffle_partitions from a dict instead of the disk,
     and isolate the per-dir accumulator."""
     table = {}
-    monkeypatch.setattr(S, "_path_bytes", lambda p, spark=None: table[p])
+    monkeypatch.setattr(S, "path_bytes", lambda spark, p: table[p])
     monkeypatch.setattr(S, "_loaded_bytes_by_dir", {})
     return table
 
@@ -41,7 +45,7 @@ def test_small_corpus_stays_at_session_floor(spark, synthetic_bytes):
 
 
 def test_big_table_scales_and_small_dim_never_shrinks(spark, synthetic_bytes):
-    fact = 512 * S.SHUFFLE_TARGET_INPUT_BYTES
+    fact = 512 * P.SHUFFLE_TARGET_INPUT_BYTES
     synthetic_bytes["/big/events.parquet"] = fact
     synthetic_bytes["/big/nation.parquet"] = 1 << 10
     got = S.scale_shuffle_partitions(spark, "/big", "/big/events.parquet")
@@ -57,7 +61,7 @@ def test_big_table_scales_and_small_dim_never_shrinks(spark, synthetic_bytes):
 
 
 def test_stepping_back_to_small_dir_resets(spark, synthetic_bytes):
-    synthetic_bytes["/big/events.parquet"] = 512 * S.SHUFFLE_TARGET_INPUT_BYTES
+    synthetic_bytes["/big/events.parquet"] = 512 * P.SHUFFLE_TARGET_INPUT_BYTES
     synthetic_bytes["/sf/events.parquet"] = 1 << 20
     S.scale_shuffle_partitions(spark, "/big", "/big/events.parquet")
     assert _conf(spark) == 512
@@ -67,10 +71,10 @@ def test_stepping_back_to_small_dir_resets(spark, synthetic_bytes):
 
 def test_cap_bounds_local_mode(spark, synthetic_bytes):
     synthetic_bytes["/huge/events.parquet"] = (
-        10 * S.SHUFFLE_PARTITIONS_CAP * S.SHUFFLE_TARGET_INPUT_BYTES
+        10 * P.SHUFFLE_PARTITIONS_CAP * P.SHUFFLE_TARGET_INPUT_BYTES
     )
     got = S.scale_shuffle_partitions(spark, "/huge", "/huge/events.parquet")
-    assert got == S.SHUFFLE_PARTITIONS_CAP
+    assert got == P.SHUFFLE_PARTITIONS_CAP
     # leave the session back at its floor for whoever runs next
     synthetic_bytes["/sf/t.parquet"] = 1
     S.scale_shuffle_partitions(spark, "/sf", "/sf/t.parquet")
@@ -79,11 +83,11 @@ def test_cap_bounds_local_mode(spark, synthetic_bytes):
 def test_floor_above_cap_never_clamped(spark, synthetic_bytes):
     # a cluster session may legitimately configure a floor above the
     # local-mode cap; the cap bounds only the byte-derived term
-    synthetic_bytes["/big/events.parquet"] = 512 * S.SHUFFLE_TARGET_INPUT_BYTES
-    spark.conf.set("spark.cosmoz.shuffle.floor", str(S.SHUFFLE_PARTITIONS_CAP * 2))
+    synthetic_bytes["/big/events.parquet"] = 512 * P.SHUFFLE_TARGET_INPUT_BYTES
+    spark.conf.set("spark.cosmoz.shuffle.floor", str(P.SHUFFLE_PARTITIONS_CAP * 2))
     try:
         got = S.scale_shuffle_partitions(spark, "/big", "/big/events.parquet")
-        assert got == S.SHUFFLE_PARTITIONS_CAP * 2
+        assert got == P.SHUFFLE_PARTITIONS_CAP * 2
     finally:
         spark.conf.set("spark.cosmoz.shuffle.floor", "8")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -97,44 +101,45 @@ def test_hadoop_fs_sizes_scheme_uri(spark, tmp_path):
     data.mkdir()
     (data / "part-0").write_bytes(b"x" * 4096)
     (data / "part-1").write_bytes(b"y" * 1024)
-    got = S._path_bytes("file://" + str(data), spark)
-    assert got == 5120
+    assert P.path_bytes(spark, "file://" + str(data)) == 5120
+    got = P.listing(spark, "file://" + str(data))
+    assert sum(f[1] for f in got) == 5120 and len(got) == 2
 
 
 def test_hadoop_size_memoized_until_mtime_moves(spark, tmp_path):
-    # getContentSummary is a recursive NameNode traversal on HDFS and
-    # a full O(objects) prefix listing on S3A/GCS — it must run once
-    # per (path, mtime), validated by a single cheap getFileStatus
-    # per load, not on every load_table call
-    import os
+    # the corpus stats of a scheme-URI corpus are an aggregate job: it
+    # must run once per listing fingerprint, validated by the one
+    # Hadoop listing per call, not on every call
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    data = tmp_path / "remote.parquet"
-    data.mkdir()
-    (data / "part-0").write_bytes(b"x" * 2048)
-    uri = "file://" + str(data)
-    assert S._path_bytes(uri, spark) == 2048
-    # poison the memo under the CURRENT token: a hit proves the next
-    # call consulted the memo instead of re-running getContentSummary
-    token, _ = S._dir_bytes_memo[uri]
-    S._dir_bytes_memo[uri] = (token, 999)
-    assert S._path_bytes(uri, spark) == 999
-    # bump the dir mtime: the one-stat validator must notice and
-    # re-summarize (overwriting in place — one entry per path, no
-    # unbounded growth across mtimes)
-    (data / "part-1").write_bytes(b"y" * 1024)
+    data = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": pa.array(range(10), pa.int64())}), data)
+    uri = "file://" + str(tmp_path)
+    n = P.id_stats(spark, uri, "documents", "doc_id").n
+    assert n == 10
+    # poison the cache under the CURRENT fingerprint: a hit proves the
+    # next call consulted the cache instead of re-running the job
+    key = (uri, "documents", "doc_id")
+    fp, _ = P._ID_STATS[key]
+    P._ID_STATS[key] = (fp, P.IdStats(999, 0, 0, 0))
+    assert P.id_stats(spark, uri, "documents", "doc_id").n == 999
+    # move the file mtime: the listing must notice and recount
+    # (overwriting in place — one entry per path, no unbounded growth
+    # across fingerprints)
     st = data.stat()
     os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
-    assert S._path_bytes(uri, spark) == 3072
-    assert isinstance(S._dir_bytes_memo[uri], tuple)  # single entry, overwritten
+    assert P.id_stats(spark, uri, "documents", "doc_id").n == n
+    assert isinstance(P._ID_STATS[key], tuple)  # single entry, overwritten
 
 
 def test_unsizable_path_warns_once(spark, capsys):
-    S._warned_unsizable.discard("file:///nonexistent/cosmoz/t.parquet")
-    got = S._path_bytes("file:///nonexistent/cosmoz/t.parquet", spark)
+    P._warned_unsizable.discard("file:///nonexistent/cosmoz/t.parquet")
+    got = P.path_bytes(spark, "file:///nonexistent/cosmoz/t.parquet")
     assert got == 0
     assert "could not size" in capsys.readouterr().err
     # second call is silent (once per path per process)
-    got = S._path_bytes("file:///nonexistent/cosmoz/t.parquet", spark)
+    got = P.path_bytes(spark, "file:///nonexistent/cosmoz/t.parquet")
     assert got == 0
     assert "could not size" not in capsys.readouterr().err
 
@@ -143,20 +148,42 @@ def test_memo_invalidates_on_dir_growth(tmp_path):
     data = tmp_path / "grow.parquet"
     data.mkdir()
     (data / "part-0").write_bytes(b"x" * 1024)
-    assert S._path_bytes(str(data)) == 1024
+    assert P.path_bytes(None, str(data)) == 1024
     (data / "part-1").write_bytes(b"y" * 2048)
     # force a distinct dir mtime even on coarse-resolution filesystems
     st = data.stat()
-    import os
-
     os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    assert S._path_bytes(str(data)) == 3072
+    assert P.path_bytes(None, str(data)) == 3072
+
+
+def test_partition_append_resizes(spark, tmp_path):
+    # a file appended inside a site_no= partition moves only that leaf
+    # directory's mtime, not the table root's; the next size must
+    # still count it
+    data = tmp_path / "events.parquet"
+    for site in (1, 2):
+        (data / f"site_no={site}").mkdir(parents=True)
+
+    def sparse(path):  # 64 MiB of size, no disk blocks
+        with open(path, "wb") as f:
+            f.truncate(64 << 20)
+
+    sparse(data / "site_no=1" / "part-0")
+    try:
+        assert S.scale_shuffle_partitions(spark, str(tmp_path), str(data)) == 16
+        top = data.stat().st_mtime_ns
+        sparse(data / "site_no=2" / "part-0")
+        assert data.stat().st_mtime_ns == top  # only the leaf dir moved
+        assert P.path_bytes(spark, str(data)) == 128 << 20
+        assert S.scale_shuffle_partitions(spark, str(tmp_path), str(data)) == 32
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
 
 
 def test_ceiling_rises_when_table_grows(spark, tmp_path, monkeypatch):
     # integration of the two: a session that appends to a table
     # re-sizes its next shuffle without a session rebuild
-    monkeypatch.setattr(S, "SHUFFLE_TARGET_INPUT_BYTES", 1024)
+    monkeypatch.setattr(P, "SHUFFLE_TARGET_INPUT_BYTES", 1024)
     monkeypatch.setattr(S, "_loaded_bytes_by_dir", {})
     data = tmp_path / "events.parquet"
     data.mkdir()
@@ -166,8 +193,6 @@ def test_ceiling_rises_when_table_grows(spark, tmp_path, monkeypatch):
         assert got == 64
         (data / "part-1").write_bytes(b"y" * 64 * 1024)
         st = data.stat()
-        import os
-
         os.utime(data, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
         got = S.scale_shuffle_partitions(spark, str(tmp_path), str(data))
         assert got == 128
@@ -191,17 +216,14 @@ def test_real_scale_corpus_raises_ceiling(spark):
     # configured ceiling must rise well above the 8-partition test
     # floor — this is the integration half of the synthetic contract
     # tests above
-    import os
-
     d = "/tmp/cosmoz_scale_x100"
     if not os.path.isdir(os.path.join(d, "events.parquet")):
         pytest.skip("x100 scale corpus not on disk (tools/scale_corpus.py)")
-    from cosmoz_data_pipeline_spark import session as S
     from cosmoz_data_pipeline_spark.sources.tables import load_table
 
     load_table(spark, d, "events")
     got = _conf(spark)
-    assert got >= 170 * (1 << 20) // S.SHUFFLE_TARGET_INPUT_BYTES // 2, got
+    assert got >= 170 * (1 << 20) // P.SHUFFLE_TARGET_INPUT_BYTES // 2, got
     # and stepping back to the tiny fixture corpus restores the floor
     load_table(spark, "/root/testdata/sf0.001", "events")
     assert _conf(spark) == 8

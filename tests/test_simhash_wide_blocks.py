@@ -12,15 +12,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.functions import text as tx
 from cosmoz_data_pipeline_spark.plans import release_persists
 from cosmoz_data_pipeline_spark.plans.catalog_ext import (
-    SIMHASH_WIDE_N,
     _docs_aug,
-    _docs_aug_count,
+    _docs_stats,
     _simhash_combo_cands,
 )
 from cosmoz_data_pipeline_spark.plans.registry import scoped_persist
+from cosmoz_data_pipeline_spark.profile import SIMHASH_WIDE_N
 
 
 def _verified_pairs(cand, sigs):
@@ -48,7 +49,7 @@ def _verified_pairs(cand, sigs):
 def test_wide_and_narrow_blockings_verify_to_identical_pairs(spark, sf_dir):
     try:
         sigs = scoped_persist(tx.simhash64_bands(_docs_aug(spark, sf_dir)))
-        n = _docs_aug_count(spark, sf_dir)
+        n = _docs_stats(spark, sf_dir).aug_n
         assert n < SIMHASH_WIDE_N  # test corpus picks the narrow scheme
         narrow = _verified_pairs(_simhash_combo_cands(sigs, n, wide=False), sigs)
         wide = _verified_pairs(_simhash_combo_cands(sigs, n, wide=True), sigs)
@@ -65,15 +66,13 @@ def test_shj_hint_pair_identity_and_plan(spark, sf_dir, monkeypatch):
     """The SHUFFLE_HASH hint on the band self-join is physical strategy
     only — identical verified pairs — and the scale gate engages it by
     docs count (below SCALE_MIN_N the planner's broadcast stays)."""
-    from cosmoz_data_pipeline_spark.plans import catalog_ext as CE
-
     try:
         sigs = scoped_persist(tx.simhash64_bands(_docs_aug(spark, sf_dir)))
-        n = _docs_aug_count(spark, sf_dir)
-        assert not CE._band_shj_on(n)  # test corpus keeps broadcast
+        n = _docs_stats(spark, sf_dir).aug_n
+        assert not profile.band_shj(n)  # test corpus keeps broadcast
         base = _verified_pairs(_simhash_combo_cands(sigs, n), sigs)
-        monkeypatch.setattr(CE, "SCALE_MIN_N", 0)
-        assert CE._band_shj_on(n)
+        monkeypatch.setattr(profile, "SCALE_MIN_N", 0)
+        assert profile.band_shj(n)
         hinted_cand = _simhash_combo_cands(sigs, n)
         assert "ShuffledHashJoin" in hinted_cand._sc._jvm.PythonSQLUtils.explainString(
             hinted_cand._jdf.queryExecution(), "formatted"

@@ -148,8 +148,8 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
     target-sized slice per partition, min 8, capped), not the
     session's core-count floor; results are partition-count-invariant;
     and the session conf is restored after the stream."""
-    from cosmoz_data_pipeline_spark import session
-    from cosmoz_data_pipeline_spark.session import SHUFFLE_PARTITIONS_CAP, _path_bytes
+    from cosmoz_data_pipeline_spark import profile
+    from cosmoz_data_pipeline_spark.profile import SHUFFLE_PARTITIONS_CAP, path_bytes
     from cosmoz_data_pipeline_spark.streaming import incremental as inc
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -163,12 +163,12 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
     # bytes-derived branch: with a target slice of 1/20 of the source
     # the count is bytes // target; with a 1-byte target it clamps at
     # the cap
-    sz = _path_bytes(src, spark)
+    sz = path_bytes(spark, src)
     assert sz > SHUFFLE_PARTITIONS_CAP
     target = sz // 20
-    monkeypatch.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", target)
+    monkeypatch.setattr(profile, "SHUFFLE_TARGET_INPUT_BYTES", target)
     assert inc._state_partitions(spark, src) == sz // target > 8
-    monkeypatch.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", 1)
+    monkeypatch.setattr(profile, "SHUFFLE_TARGET_INPUT_BYTES", 1)
     assert inc._state_partitions(spark, src) == SHUFFLE_PARTITIONS_CAP
     monkeypatch.undo()
 
@@ -182,7 +182,7 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
         sink, ckpt = str(tmp_path / f"sink_{tag}"), str(tmp_path / f"ckpt_{tag}")
         with monkeypatch.context() as m:
             if target is not None:
-                m.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", target)
+                m.setattr(profile, "SHUFFLE_TARGET_INPUT_BYTES", target)
             parts = inc._state_partitions(spark, src)
             inc.stream_dedup_to_sink(
                 spark,

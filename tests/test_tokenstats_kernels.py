@@ -17,6 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.functions import text as tx
 from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext as CE
 from cosmoz_data_pipeline_spark.plans.registry import release_persists
@@ -103,7 +104,7 @@ def test_query_output_identical_with_kernel(spark, sf_dir, monkeypatch, name, fl
         monkeypatch.setattr(CE, "_simhash_sigs_kernel", tx.simhash64_bands)
     else:
         # the corpus sits below the scale gate (fold); force the kernel
-        assert not CE._decon_kernel_on(spark, sf_dir)
-        monkeypatch.setattr(CE, "SCALE_MIN_N", 0)
-        assert CE._decon_kernel_on(spark, sf_dir)
+        assert not profile.decon_kernel(CE._docs_stats(spark, sf_dir).n)
+        monkeypatch.setattr(profile, "SCALE_MIN_N", 0)
+        assert profile.decon_kernel(CE._docs_stats(spark, sf_dir).n)
     assert run() == base

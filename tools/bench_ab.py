@@ -72,14 +72,7 @@ spark.read.parquet(f"{SF_DIR}/nation.parquet").count()  # JVM warmup
 def cold():
     release_persists()
     spark.catalog.clearCache()
-    # getattr: stay compatible with older code states that may lack
-    # one of the memos
-    for m in ("_IVF_CENTROIDS", "_AUG_OFF"):
-        memo = getattr(catalog_ext, m, None)
-        if memo is not None:
-            memo.clear()
-    # counts cleared as one unit — the aug/base memo pairs are filled
-    # by the same scan and must be invalidated together (ADVICE r11)
+    catalog_ext._IVF_CENTROIDS.clear()
     catalog_ext.clear_counts()
 
 IVF_WARM = {"x_ann_ivf_topk_search"}

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cosmoz_data_pipeline_spark.domain import levels  # noqa: E402
 from cosmoz_data_pipeline_spark.domain.synth import load_domain  # noqa: E402
-from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_auto  # noqa: E402
+from cosmoz_data_pipeline_spark.profile import bucketed_auto  # noqa: E402
 from cosmoz_data_pipeline_spark.operators.scan_local import (  # noqa: E402
     write_time_tiled,
 )

@@ -33,10 +33,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cosmoz_data_pipeline_spark.domain import levels  # noqa: E402
 from cosmoz_data_pipeline_spark.domain.synth import load_domain  # noqa: E402
-from cosmoz_data_pipeline_spark.operators.bucketed_window import (  # noqa: E402
-    bucketed_auto,
-    bucketed_lag,
-)
+from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_lag  # noqa: E402
+from cosmoz_data_pipeline_spark.profile import bucketed_auto  # noqa: E402
 from cosmoz_data_pipeline_spark.sentinel import (  # noqa: E402
     SENTINEL_REF_SEC,
     io_sentinel_sec,

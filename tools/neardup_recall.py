@@ -81,8 +81,9 @@ def true_pairs(ids: np.ndarray, mat: np.ndarray) -> dict[tuple[int, int], float]
 def injected_pairs(ids: np.ndarray, mat: np.ndarray) -> dict[tuple[int, int], float]:
     """O(N) constructive ground truth: the planted (base, copy,
     perturbed) within-group pairs with true cosine >= THRESHOLD."""
-    # recover _aug_offset: off = 10^len(str(max base id)), and the max
-    # augmented id is 2*off + m with m < off, so off = 10^(digits-1)
+    # recover the copy-id offset (profile.IdStats.aug_offset): off =
+    # 10^len(str(max base id)), and the max augmented id is 2*off + m
+    # with m < off, so off = 10^(digits-1)
     off = 10 ** (len(str(int(ids.max()))) - 1)
     idx = {int(i): k for k, i in enumerate(ids.tolist())}
     nrm = np.linalg.norm(mat, axis=1)

@@ -9,7 +9,7 @@ prefixes), so stage costs are prefix DIFFERENCES:
              against the broadcast plane bank)
   cand     — + banded self-join + distinct (the candidate pairs)
   screen   — + the head-16 Cauchy–Schwarz pre-verify screen
-             (the query's own gate, catalog_ext._prescreen_head)
+             (the query's own gate, profile.prescreen_head)
   full     — the shipped registry query end-to-end (verify join +
              threshold on top of screen)
 
@@ -33,6 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cosmoz_data_pipeline_spark import profile  # noqa: E402
 from cosmoz_data_pipeline_spark.functions import similarity as sim  # noqa: E402
 from cosmoz_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from cosmoz_data_pipeline_spark.plans import catalog_ext as CE  # noqa: E402
@@ -81,7 +82,7 @@ def probe_once(spark, sf_dir: str) -> dict:
     def build_bands(vecs):
         # project exactly as the query does: the SRP kernel at the
         # banding sized from the augmented corpus count
-        planes = sim.srp_planes_for(CE._emb_aug_count(spark, sf_dir))
+        planes = sim.srp_planes_for(CE._emb_stats(spark, sf_dir).aug_n)
         return scoped_persist(
             sim.srp_band_buckets_kernel(
                 vecs,
@@ -104,7 +105,7 @@ def probe_once(spark, sf_dir: str) -> dict:
 
     def screened():
         vecs, cand = CE._neardup_cands(spark, sf_dir)
-        head = CE._prescreen_head(spark, sf_dir)
+        head = profile.prescreen_head(CE._emb_stats(spark, sf_dir).aug_n)
         rec["prescreen_head"] = head
         if not head:
             return None

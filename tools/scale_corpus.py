@@ -132,7 +132,24 @@ def generate(
 ) -> None:
     """Write the requested tables, then a corpus_meta.json marker with
     the generator version/parameters — written LAST, so a crashed or
-    interrupted generation never leaves a validly-marked corpus."""
+    interrupted generation never leaves a validly-marked corpus.
+
+    A directory with no marker at all is only written if it holds none
+    of the requested tables: pointed at a real corpus (a test SF dir),
+    the overwrite would replace its tables with synthetic ones. A
+    placeholder marker goes down first, so an interrupted generation
+    can still be regenerated."""
+    meta_path = os.path.join(out_dir, "corpus_meta.json")
+    if not os.path.exists(meta_path):
+        theirs = [t for t in tables if os.path.exists(f"{out_dir}/{t}.parquet")]
+        if theirs:
+            raise ValueError(
+                f"{out_dir} holds {theirs} but no corpus_meta.json: not a "
+                "generated corpus, refusing to overwrite it"
+            )
+        os.makedirs(out_dir, exist_ok=True)
+        with open(meta_path, "w") as f:
+            json.dump({"generator_version": None}, f)
     if "events" in tables:
         gen_events(spark, BASE_EVENTS * mult).write.mode("overwrite").parquet(
             f"{out_dir}/events.parquet"

@@ -81,7 +81,7 @@ def probe_once(spark, sf_dir: str) -> dict:
         return scoped_persist(CE._simhash_sigs_kernel(CE._docs_aug(spark, sf_dir)))
 
     def n_docs():
-        return CE._docs_aug_count(spark, sf_dir)
+        return CE._docs_stats(spark, sf_dir).aug_n
 
     _timed(spark, rec, "docs", lambda: CE._docs_aug(spark, sf_dir).count())
     _timed(spark, rec, "sigs", lambda: sigs_df().count())
@@ -92,7 +92,7 @@ def probe_once(spark, sf_dir: str) -> dict:
         lambda: CE._simhash_band_rows(sigs_df(), n_docs()).count(),
     )
 
-    # the query's own band join, incl. its _band_shj_on hint gate
+    # the query's own band join, incl. its profile.band_shj hint gate
     def selfjoin_count():
         return CE._simhash_band_join(sigs_df(), n_docs()).count()
 
