@@ -32,7 +32,7 @@ uses this same policy, so cross-round and vs-BASELINE.json
 comparisons stay apples-to-apples, and correctness runs (driver gate,
 tools/check_all.py) fully materialize every column — the pruned work
 is verified correct, just not timed here. Full-materialization
-timings live in the noop-write probes (tools/level4_stage_probe.py,
+timings live in the noop-write probes (`tools/probe.py level4`,
 LEVEL4_STAGES.json); set SPARK_GRAFT_BENCH_FORCE=noop to time THIS
 harness with a noop write instead of count() (off the comparable
 record — do not hand such totals to the BASELINE comparison).

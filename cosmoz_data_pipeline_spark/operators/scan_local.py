@@ -68,7 +68,7 @@ counts are 4-digit).
 100 TB design: shuffle bytes for both legs drop from O(data) to
 O(#files); the Python leg is Arrow-batched and scan-local, so it
 scales with executors instead of fighting a 22-key sort. Adoption is
-measured, not assumed — tools/level1_scanlocal_ab.py interleaves this
+measured, not assumed — `tools/ab.py level1` interleaves this
 shape against the shipped bucketed-window shape at x1000
 (LEVEL1_SCANLOCAL_AB.json: 5/6 interleaved pass wins, 0.3 MB vs
 13.13 GB shuffle, identity at 86.8M rows).

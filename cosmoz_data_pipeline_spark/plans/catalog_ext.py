@@ -41,7 +41,7 @@ EMBED_DIM = 64  # embeddings-table vector width (TESTDATA.md)
 # the next probed round's job: one job launch and one label-table
 # write saved per tail round (COMPONENTS_TAIL_AB.json).
 COMPONENTS_PROBE_LAZY_BELOW = 4096
-# tool hook (tools/components_stages.py): when a list, the components
+# trace hook (tests/test_components.py): when a list, the components
 # loop appends one dict per superstep — wall seconds split into the
 # checkpoint-materialization and probe actions, plus the probed
 # changed-count (None on skip-probe rounds). Timing only; labels are
@@ -149,8 +149,10 @@ sh AS (
 )"""
 
 
-def _docs_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    off = _docs_stats(spark, sf_dir).aug_offset
+def _docs_aug(spark: SparkSession, sf_dir: str, stats: IdStats | None = None) -> DataFrame:
+    """Originals + exact + near copies. ``stats`` is the query's
+    ``_docs_stats`` when it has taken them (one listing per query)."""
+    off = (stats or _docs_stats(spark, sf_dir)).aug_offset
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
     exact = d.where(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + off).alias("doc_id"), "text", "lang", "source"
@@ -710,9 +712,9 @@ WHERE bit_count(xor(sa.s0, sb.s0)) + bit_count(xor(sa.s1, sb.s1))
     "oracle keeps the simpler 4x16 pigeonhole rule and must agree.",
 )
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = scoped_persist(_simhash_sigs_kernel(_docs_aug(spark, sf_dir)))
-    n = _docs_stats(spark, sf_dir).aug_n
-    cand = _simhash_combo_cands(sigs, n)
+    stats = _docs_stats(spark, sf_dir)
+    sigs = scoped_persist(_simhash_sigs_kernel(_docs_aug(spark, sf_dir, stats)))
+    cand = _simhash_combo_cands(sigs, stats.aug_n)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{k}").alias(f"sa{k}") for k in range(4)],
@@ -1185,8 +1187,8 @@ emb_aug AS (
 )"""
 
 
-def _emb_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
-    off = _emb_stats(spark, sf_dir).aug_offset
+def _emb_aug(spark: SparkSession, sf_dir: str, stats: IdStats | None = None) -> DataFrame:
+    off = (stats or _emb_stats(spark, sf_dir)).aug_offset
     e = load_table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     exact = base.where(F.col("vec_id") % 11 == 0).select(
@@ -1346,8 +1348,9 @@ WHERE round(CAST(list_aggregate(list_transform(generate_series(1, len(a.qv)),
     "ints.",
 )
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs, cand = _neardup_cands(spark, sf_dir)
-    head = profile.prescreen_head(_emb_stats(spark, sf_dir).aug_n)
+    stats = _emb_stats(spark, sf_dir)
+    vecs, cand = _neardup_cands(spark, sf_dir, stats)
+    head = profile.prescreen_head(stats.aug_n)
     if head:
         cand = _neardup_prescreen(vecs, cand, head)
     # No join-strategy hint on the verify, deliberately: SHUFFLE_HASH
@@ -1373,12 +1376,13 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _neardup_cands(spark: SparkSession, sf_dir: str):
+def _neardup_cands(spark: SparkSession, sf_dir: str, stats: IdStats | None = None):
     """(quantized-vector table, candidate-pair table) for
     x_embed_cosine_neardup — split out so the scale sweep can count
     candidates as a stage metric (VERDICT r6 task 2) through the
-    exact code path the query runs."""
-    vecs = scoped_persist(_emb_aug(spark, sf_dir).select(
+    exact code path the query runs. ``stats`` as in ``_docs_aug``."""
+    stats = stats or _emb_stats(spark, sf_dir)
+    vecs = scoped_persist(_emb_aug(spark, sf_dir, stats).select(
         "vec_id",
         sim.quantize(F.col("v")).alias("qv"),
     ).select("vec_id", "qv", sim.qnorm(F.col("qv")).alias("nrm")))
@@ -1386,7 +1390,7 @@ def _neardup_cands(spark: SparkSession, sf_dir: str):
     # (memoized), NOT a count over the full augmented projection; the
     # persist above materializes lazily inside the final job instead
     # of behind a sequential driver wall
-    n_aug = _emb_stats(spark, sf_dir).aug_n
+    n_aug = stats.aug_n
     planes = sim.srp_planes_for(n_aug)
     # persist: both sides of the candidate self-join read the band
     # table — uncached, each side would re-run the per-(vector, band)
@@ -2528,13 +2532,10 @@ def _probe_simhash(spark: SparkSession, sf_dir: str) -> dict:
     # finally-release: probes persist outside any registry release
     # scope, so a standalone caller must not leak cache into whatever
     # (timed) job runs next (VERDICT r7 task 4)
-    sigs = scoped_persist(_simhash_sigs_kernel(_docs_aug(spark, sf_dir)))
+    stats = _docs_stats(spark, sf_dir)
+    sigs = scoped_persist(_simhash_sigs_kernel(_docs_aug(spark, sf_dir, stats)))
     try:
-        return {
-            "candidate_pairs": _simhash_combo_cands(
-                sigs, _docs_stats(spark, sf_dir).aug_n
-            ).count()
-        }
+        return {"candidate_pairs": _simhash_combo_cands(sigs, stats.aug_n).count()}
     finally:
         release_persists()
 

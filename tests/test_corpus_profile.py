@@ -76,3 +76,27 @@ def test_rewrite_in_place_gets_fresh_offset_and_index(spark, sf_dir, tmp_path):
         _rewrite_ids(p, col)
         assert 1000 <= _max_id(p, col) < 10000  # offset 10000
     _run_all(spark, d)
+
+
+def test_one_listing_per_table_per_query(spark, sf_dir, monkeypatch):
+    """Each id-keyed query lists its table once: the fingerprint that
+    checks the id-stats cache is a file walk per call (a few py4j calls
+    per file on a non-local store), so the query takes the stats once
+    and hands them to every builder that needs them."""
+    from cosmoz_data_pipeline_spark import profile
+
+    calls = []
+    listing = profile.listing
+    monkeypatch.setattr(
+        profile, "listing", lambda spark_, path: calls.append(path) or listing(spark_, path)
+    )
+    for name, table in (
+        ("x_embed_cosine_neardup", "embeddings"),
+        ("x_dedup_simhash_pairs", "documents"),
+    ):
+        calls.clear()
+        try:
+            REGISTRY[name].run(spark, sf_dir)
+        finally:
+            release_persists()
+        assert [p for p in calls if table in p] == [f"{sf_dir}/{table}.parquet"], name

@@ -326,7 +326,11 @@ def test_boundary_kernel_null_site_raises_named_error(spark, tmp_path):
 # a duplicate iff before + after <= 29 min. Grid counts cycle through
 # three values, so in-file duplicates and ±20 % count jumps fire too.
 # Times never tie within a site (the window shape's lag order on ties
-# is arbitrary).
+# is arbitrary). Three more draws cover the edges that otherwise have
+# only fixed cases: string site keys of 64 bytes, whose parquet stats
+# may be truncated prefixes (STAT_TRUNC_LEN); empty files in the sink;
+# and a null site key, which is out of contract and must raise the
+# named layout error instead of returning rows.
 _GRID_S = 600
 _GRID_N = 240
 _T0 = 1_650_000_000
@@ -364,9 +368,12 @@ _offset = st.integers(1, 899).filter(lambda x: x != _GRID_S // 2)
         min_size=1,
         max_size=4,
     ),
+    long_sites=st.booleans(),
+    empty_files=st.integers(0, 2),
+    null_site=st.booleans(),
 )
 def test_scan_local_matches_window_shape_property(
-    spark, tmp_path_factory, n_files, rowgroup_bytes, pairs
+    spark, tmp_path_factory, n_files, rowgroup_bytes, pairs, long_sites, empty_files, null_site
 ):
     rows = [
         (_T0 + _GRID_S * i, site, 0, (1000, 1300, 900)[(i + site) % 3], 12.0, 1.0)
@@ -386,9 +393,19 @@ def test_scan_local_matches_window_shape_property(
             if (site, t) not in taken:
                 taken.add((site, t))
                 rows.append((t, site, 0, 5000 + j, 11.5, 2.0))
-    raw = _mini_raw(spark, rows)
+    if null_site:
+        rows[0] = (rows[0][0], None, *rows[0][2:])
+    if long_sites:
+        rows = [(r[0], None if r[1] is None else "s" * 63 + str(r[1]), *r[2:]) for r in rows]
+    raw = _mini_raw(spark, rows, site_type="string" if long_sites else "int")
     path = str(tmp_path_factory.mktemp("prop") / "sink")
     _write_tiles(raw, path, bounds, rowgroup_bytes)
+    for _ in range(empty_files):
+        raw.limit(0).coalesce(1).write.mode("append").parquet(path)
+    if null_site:
+        with pytest.raises(Exception, match="layout violation|non-null site"):
+            levels.raw_to_level1_scan_local(spark, path).collect()
+        return
     base = _rows(levels.raw_to_level1(raw, big=False))
     assert base
     assert _rows(levels.raw_to_level1_scan_local(spark, path)) == base

@@ -1,0 +1,72 @@
+"""The measuring harness (tools/probe.py, tools/ab.py) end to end.
+
+Each case runs in a subprocess: the event log the tools read is a
+session startup conf, which the test session's own Spark cannot take.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
+from cosmoz_data_pipeline_spark import profile
+
+REPO = Path(__file__).resolve().parents[1]
+
+
+def _py(*args: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, *args], cwd=REPO, capture_output=True, text=True, timeout=600
+    )
+
+
+def test_probe_level4_prefixes_leave_the_corpus_alone(sf_dir, tmp_path):
+    root = os.path.dirname(sf_dir)
+    before = (sorted(os.listdir(root)), profile.listing(None, sf_dir))
+    out = tmp_path / "level4.json"
+    p = _py(
+        "tools/probe.py", "level4", sf_dir,
+        "--work", str(tmp_path / "work"), "--out", str(out), "--runs", "1",
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    prefixes = json.loads(out.read_text())["prefixes"]
+    assert list(prefixes) == ["level1", "level2", "level3", "level4"]
+    assert all(v["t"] > 0 for v in prefixes.values())
+    tasks = [v["tasks"] for v in prefixes.values()]
+    assert tasks[0] > 0 and tasks == sorted(tasks), tasks
+    assert (sorted(os.listdir(root)), profile.listing(None, sf_dir)) == before
+
+
+AB_SCRIPT = textwrap.dedent(
+    """
+    import json, sys
+    from tools import ab, probe
+
+    spark, log_dir = probe.session("ab-test", sys.argv[1])
+    rows = lambda: spark.range(200).selectExpr("id", "id % 7 AS k")
+    same = ab.interleave(spark, {"A": rows, "B": lambda: rows().repartition(3)}, 2)
+    try:
+        ab.interleave(spark, {"A": rows, "B": lambda: rows().where("id != 99")}, 1)
+        dropped = None
+    except ab.IdentityError as e:
+        dropped = str(e)
+    spark.stop()
+    rec = ab.summarize(*same, probe.Counters(log_dir))
+    print(json.dumps({"rec": rec, "dropped": dropped}))
+    """
+)
+
+
+def test_ab_pins_identity(tmp_path):
+    p = _py("-c", AB_SCRIPT, str(tmp_path / "work"))
+    assert p.returncode == 0, p.stderr[-3000:]
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    rec = got["rec"]
+    assert rec["identity"]["match"] and rec["identity"]["A"][0] == 200
+    assert [r["first"] for r in rec["runs"]] == ["A", "B"]
+    assert all(r[k]["t"] > 0 and r[k]["tasks"] > 0 for r in rec["runs"] for k in "AB")
+    assert got["dropped"] is not None and "(200," in got["dropped"]

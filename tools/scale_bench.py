@@ -20,22 +20,16 @@ over event-time are where a dense sub-hourly burst or a hot site
 first bites, and the extension pipeline should not be the only code
 with third-decade evidence.
 
-Round-7 evidence upgrades (VERDICT r6 tasks 1-2):
-
-- Per timed run, shuffle-write / shuffle-read / memory-spill /
-  disk-spill BYTES are read off the Spark status REST API (stages
-  newer than the pre-run high-water stageId; the session enables the
-  UI for this). "The x1000 tax is single-box shuffle spill, not plan
-  superlinearity" is thereby a recorded measurement, not prose.
-- Per decade, intermediate-stage COUNTS (candidate pairs, shingle
-  rows, match rows) are computed through the SAME builders the
-  queries run (catalog_ext.STAGE_PROBES, outside the timer), so
-  "work grows linearly with candidates+output" is auditable from the
-  artifact alone. Derivable stages are not re-counted:
-  x_dedup_minhash_lsh's candidates ARE its output rows (no verify
-  filter), x_dedup_ngram_jaccard's candidates equal minhash's rows
-  (same signatures+banding), and x_dedup_components' edges are 2x
-  x_dedup_simhash_pairs' rows.
+Per timed run, shuffle-write / shuffle-read / memory-spill /
+disk-spill bytes are the event-log totals of the jobs submitted inside
+the best run's span (tools/probe.py ``Counters``), so "the x1000 tax
+is single-box shuffle spill, not plan superlinearity" is a recorded
+measurement. Per decade, intermediate-stage counts (candidate pairs,
+shingle rows, match rows) come from the queries' own builders
+(catalog_ext.STAGE_PROBES, outside the timer). Derivable stages are
+not re-counted: x_dedup_minhash_lsh's candidates are its output rows,
+x_dedup_ngram_jaccard's candidates equal minhash's rows, and
+x_dedup_components' edges are 2x x_dedup_simhash_pairs' rows.
 
 st1_write_path times the incremental-overwrite write stage with the
 day grid of the x1 corpus at every scale (rows per (site, day)
@@ -54,33 +48,32 @@ stale corpus feed published numbers after a generator change
 (ADVICE r4). Tables added later (the x1000 events for level4) extend
 an existing corpus in place; per-table generation is deterministic.
 
-Each timing is cold: scope-tracked persists are released, the SQL
-cache cleared, and the IVF/corpus-metadata memos reset between runs,
-so min-of-2 measures a full cold execution at every scale.
+Each timing is cold (tools/probe.py ``cold``), min-of-2.
 
-Usage: python tools/scale_bench.py [dir:mult ...] [query ...]
-  default: /tmp/cosmoz_scale_x1:1 /tmp/cosmoz_scale_x10:10
+Usage: python tools/scale_bench.py [dir:mult ...] [query ...] --work DIR --out FILE
+  default corpora: /tmp/cosmoz_scale_x1:1 /tmp/cosmoz_scale_x10:10
            /tmp/cosmoz_scale_x100:100   (+ x1000 for X1000_QUERIES)
-Writes SCALE_r07.json at the repo root (bare query names run a
-subset and MERGE into the existing file).
+Bare query names run a subset and MERGE into an existing --out. The
+event log and the st1 sinks live under --work; run_bytes are filled in
+when the session ends, so the per-query checkpoints of --out hold null
+run_bytes until then.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
 import shutil
 import sys
-import tempfile
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.tracing import Tracer  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from cosmoz_data_pipeline_spark.plans import REGISTRY, release_persists  # noqa: E402
+from cosmoz_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from cosmoz_data_pipeline_spark.plans import catalog_ext  # noqa: E402
 from cosmoz_data_pipeline_spark.sentinel import (  # noqa: E402
     SENTINEL_REF_SEC,
@@ -88,10 +81,8 @@ from cosmoz_data_pipeline_spark.sentinel import (  # noqa: E402
     io_window,
     sentinel_sec,
 )
-from cosmoz_data_pipeline_spark.session import build_session  # noqa: E402
+from tools.probe import Counters, cold, noop, session  # noqa: E402
 from tools.scale_corpus import ALL_TABLES, BASE_EVENTS, ensure_corpus  # noqa: E402
-
-OUT_NAME = os.environ.get("SCALE_OUT", "SCALE_r08.json")
 
 QUERIES = (
     "level4",
@@ -113,144 +104,35 @@ DEFAULT_CORPORA = (
 )
 
 X1000 = ("/tmp/cosmoz_scale_x1000", 1000)
-# Round 7: every swept query gets the third decade — the doc/embedding
-# set since r6, plus the level pipeline and the st1 write path
-# (VERDICT r6 task 3). The x1000 corpus carries all tables (events
-# added in place by ensure_corpus's incremental extension).
-X1000_QUERIES = {
-    "x_ann_ivf_topk",
-    "x_dedup_simhash_pairs",
-    "x_dedup_minhash_lsh",
-    "x_dedup_ngram_jaccard",
-    "x_decontaminate",
-    "x_embed_cosine_neardup",
-    "x_dedup_components",
-    "level4",
-    "level4_sort_floor",
-    "st1_write_path",
-}
+# Every swept query gets the third decade; the x1000 corpus carries
+# all tables (events added in place by ensure_corpus's extension).
+X1000_QUERIES = set(QUERIES)
 
 _X1_GRID_SPAN_S = (BASE_EVENTS // 8) * 1200  # x1 raw_values span, seconds
 _EPOCH_S = 1609459200  # 2021-01-01 00:00:00 UTC
 
-METRIC_FIELDS = {
-    "shuffle_write_bytes": "shuffleWriteBytes",
-    "shuffle_read_bytes": "shuffleReadBytes",
-    "mem_spill_bytes": "memoryBytesSpilled",
-    "disk_spill_bytes": "diskBytesSpilled",
-}
 
-
-def _stages(spark) -> list[dict] | None:
-    """All stages the status store still retains, via the stable REST
-    API (the session runs with spark.ui.enabled=true for this).
-    Returns None — NOT [] — when the endpoint cannot be read (ADVICE
-    r7: an unreachable status API must surface as 'metrics
-    unavailable', never as an all-zero or corpus-polluted byte sum)."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages") as r:
-            return json.load(r)
-    except Exception as exc:
-        print(f"WARNING: status REST API unreadable ({exc!r}); "
-              "run_bytes will be null for this run", file=sys.stderr)
-        return None
-
-
-def _stage_hwm(spark) -> int | None:
-    stages = _stages(spark)
-    if stages is None:
-        return None
-    return max((s.get("stageId", -1) for s in stages), default=-1)
-
-
-def _metrics_since(spark, hwm: int | None) -> dict[str, int] | None:
-    """Summed byte counters over stages submitted after ``hwm``. The
-    status store retains spark.ui.retainedStages (1000) stages, far
-    more than one timed run submits, and only OLDER stages are ever
-    evicted — so a since-high-water-mark sum is eviction-proof where a
-    totals diff is not. Returns None (→ null in the artifact) when
-    either REST read failed: a missing high-water mark would otherwise
-    sum every retained stage including corpus generation."""
-    if hwm is None:
-        return None
-    stages = _stages(spark)
-    if stages is None:
-        return None
-    out = dict.fromkeys(METRIC_FIELDS, 0)
-    for s in stages:
-        if s.get("stageId", -1) > hwm:
-            for k, field in METRIC_FIELDS.items():
-                out[k] += int(s.get(field, 0) or 0)
-    return out
-
-
-def _cold(spark) -> None:
-    release_persists()
-    spark.catalog.clearCache()
-    catalog_ext._IVF_CENTROIDS.clear()
-    catalog_ext.clear_counts()
-    catalog_ext._AUG_OFF.clear()
-    # Shuffle files are only reclaimed when ContextCleaner sees the
-    # ShuffleDependency objects garbage-collected — and a 64 GiB-heap
-    # driver can go the whole sweep without a single full GC, so dead
-    # shuffle temp accumulates across queries and decades (~100 GB by
-    # the late x1000 runs; it filled the disk and killed a sweep).
-    # Force the JVM GC between cold runs so each run's footprint is
-    # its own live shuffle, not the session's history.
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-
-
-def time_query(spark, name: str, sf_dir: str, runs: int = 2):
-    # count() shares bench.py's policy (and its round-9-documented
-    # caveat: final-projection expressions a count does not need are
-    # pruned — level4's ±3h collect_list windows). Artifacts stay
-    # comparable across rounds; SPARK_GRAFT_BENCH_FORCE=noop times
-    # full materialization instead (off the comparable record — the
-    # level4_sort_floor/stage-probe pseudo-queries already use noop
-    # writes unconditionally because sorts NEED the forcing).
-    force_noop = os.environ.get("SPARK_GRAFT_BENCH_FORCE") == "noop"
-    best, rows, met = math.inf, 0, {}
-    for _ in range(runs):
-        _cold(spark)
-        hwm = _stage_hwm(spark)
-        # run() MUST stay inside the timer: iterative queries
-        # (x_dedup_components' fix-point loop, IVF training) do their
-        # work eagerly in run(), not in the returned plan — timing
-        # only the final action would miss it (caught round 9: a
-        # refactor that hoisted run() reported components at 0.17 s
-        # instead of ~78 s at x1000)
-        t0 = time.time()
+def query_run(spark, name: str, sf_dir: str, work: str, span) -> int:
+    """One registry query inside ``span``. run() stays inside it:
+    iterative queries (components, IVF training) work eagerly in run().
+    count() shares bench.py's policy (it prunes final projections a
+    count does not need, e.g. level4's +-3h windows);
+    SPARK_GRAFT_BENCH_FORCE=noop times full materialization and counts
+    rows outside the span."""
+    with span:
         df = REGISTRY[name].run(spark, sf_dir)
-        if force_noop:
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            # capture metrics BEFORE the untimed count: it is a second
-            # full execution whose shuffle/spill must not be attributed
-            # to the timed noop write
-            run_met = _metrics_since(spark, hwm)
-            rows = df.count()
-        else:
-            rows = df.count()
-            dt = time.time() - t0
-            run_met = _metrics_since(spark, hwm)
-        if dt < best:
-            best, met = dt, run_met
-    _cold(spark)
-    return round(best, 3), rows, met
+        if os.environ.get("SPARK_GRAFT_BENCH_FORCE") != "noop":
+            return df.count()
+        noop(df)
+    return df.count()
 
 
-def st1_write_run(spark, sf_dir: str) -> tuple[float, int]:
-    """One cold run of the incremental-overwrite write path (backfill +
-    later-window overwrite, the st1 shape) on a density-scaled raw
-    table: timestamps wrap at the x1 grid span, so every scale writes
-    the same ~1.4k (site, day) partitions with 10x more rows per
-    decade. The timer covers the two writes; the read-back count is
-    validity only."""
+def st1_write_run(spark, sf_dir: str, work: str, span) -> int:
+    """The incremental-overwrite write path (backfill + later-window
+    overwrite, the st1 shape) on a density-scaled raw table:
+    timestamps wrap at the x1 grid span, so every scale writes the same
+    ~1.4k (site, day) partitions with 10x more rows per decade. The
+    span covers the two writes; the read-back count is validity only."""
     from cosmoz_data_pipeline_spark.domain.synth import load_domain
     from cosmoz_data_pipeline_spark.streaming.incremental import incremental_overwrite
 
@@ -264,154 +146,111 @@ def st1_write_run(spark, sf_dir: str) -> tuple[float, int]:
             "timestamp"
         ),
     )
-    sink = tempfile.mkdtemp(prefix="cosmoz_st1_scale_")
-    try:
-        t0 = time.time()
+    sink = os.path.join(work, "st1_sink")
+    shutil.rmtree(sink, ignore_errors=True)
+    with span:
         incremental_overwrite(wrapped, sink, since="2021-01-01 00:00:00")
         incremental_overwrite(wrapped, sink, since="2021-01-10 12:00:00")
-        dt = time.time() - t0
-        rows = spark.read.parquet(sink).count()
-    finally:
-        shutil.rmtree(sink, ignore_errors=True)
-    return dt, rows
+    rows = spark.read.parquet(sink).count()
+    shutil.rmtree(sink, ignore_errors=True)
+    return rows
 
 
-def sort_floor_run(spark, sf_dir: str) -> tuple[float, int]:
-    """Bare shuffle+sort of level4's input at the same bytes — the
+def sort_floor_run(spark, sf_dir: str, work: str, span) -> int:
+    """Bare shuffle+sort of level4's input at the same bytes: the
     O(N log N) floor under the level pipeline's dominant physical op
-    (Window.partitionBy(site_no).orderBy(time) over the wide
-    raw_values table, domain/levels.py raw_to_level1). level4's sized
-    x1000 decade runs alpha=1.087 (SCALE_r08_SIZED.json) and the README
-    attributed the residual over linear to this sort floor by argument;
-    this probe measures the floor's own decade exponent so the residual
-    is level4_alpha - sort_floor_alpha, a number. The sort is forced
-    through a noop write (Catalyst's EliminateSorts would drop a sort
-    under a count), carrying every column level4's first window
-    carries."""
+    (the site_no-partitioned time window over the wide raw_values
+    table), so level4's residual over linear is level4_alpha -
+    sort_floor_alpha, a number. Forced through a noop write (Catalyst
+    drops a sort under a count), carrying every raw column."""
     from cosmoz_data_pipeline_spark.domain.synth import load_domain
 
     raw = load_domain(spark, sf_dir)["raw_values"]
     df = raw.repartition("site_no").sortWithinPartitions("site_no", "time")
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    return dt, raw.count()
+    with span:
+        noop(df)
+    return raw.count()
 
 
-def time_sort_floor(spark, sf_dir: str, runs: int = 2):
-    best, rows, met = math.inf, 0, {}
+def time_best(spark, tr: Tracer, run, sf_dir: str, work: str, runs: int = 2):
+    """(best span, rows) over ``runs`` cold runs of ``run``."""
+    best = None
     for _ in range(runs):
-        _cold(spark)
-        hwm = _stage_hwm(spark)
-        dt, rows = sort_floor_run(spark, sf_dir)
-        if dt < best:
-            best, met = dt, _metrics_since(spark, hwm)
-    _cold(spark)
-    return round(best, 3), rows, met
-
-
-def time_st1_write(spark, sf_dir: str, runs: int = 2):
-    best, rows, met = math.inf, 0, {}
-    for _ in range(runs):
-        _cold(spark)
-        hwm = _stage_hwm(spark)
-        dt, rows = st1_write_run(spark, sf_dir)
-        if dt < best:
-            best, met = dt, _metrics_since(spark, hwm)
-    _cold(spark)
-    return round(best, 3), rows, met
+        cold(spark)
+        rows = run(spark, sf_dir, work, tr.span("run"))
+        if best is None or tr.spans[-1].dur < best[0].dur:
+            best = (tr.spans[-1], rows)
+    cold(spark)
+    return best
 
 
 def main() -> None:
-    # args: either dir:mult corpus overrides, or bare query names to
-    # run a SUBSET (results MERGE into the existing OUT_NAME file, so
-    # a long sweep can be split into resumable pieces)
-    corpora_args = [a for a in sys.argv[1:] if ":" in a]
-    only = {a for a in sys.argv[1:] if ":" not in a}
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("args", nargs="*", help="dir:mult corpora and/or query names")
+    ap.add_argument("--work", required=True, help="event log and st1 sinks")
+    ap.add_argument("--out", required=True, help="artifact JSON path (merged)")
+    opts = ap.parse_args()
+    # dir:mult args define the sweep exactly (smoke runs on a tiny
+    # corpus must not drag the x1000 decade in); bare query names run a
+    # subset that merges into --out, so a long sweep can be resumed
+    corpora_args = [a for a in opts.args if ":" in a]
+    only = {a for a in opts.args if ":" not in a}
     corpora = (
         [(a.rsplit(":", 1)[0], int(a.rsplit(":", 1)[1])) for a in corpora_args]
         if corpora_args
         else list(DEFAULT_CORPORA)
     )
-    # explicit dir:mult args define the sweep exactly (smoke runs on a
-    # tiny corpus must not drag the x1000 decade in); the default
-    # sweep appends x1000 per X1000_QUERIES
     with_x1000 = not corpora_args
-    # Size the JVM for the x1000 decade (the spill-aware knob from the
-    # README's scale contract): the default 24g session OOMed
-    # (UNABLE_TO_ACQUIRE_MEMORY) in the 680M-row MinHash shingle
-    # aggregation at 13M docs — 32 concurrent tasks contending for
-    # ~14g of execution memory. A 1000-executor cluster sizes
-    # executor memory to its partition volume; the single-JVM sweep
-    # must do the same (the box has 128 GiB; the driver-gate and
-    # bench sessions stay at their own defaults).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
-    spark = build_session(
-        app_name="scale-bench", extra_conf={"spark.ui.enabled": "true"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, log_dir = session("scale-bench", opts.work)
+    cores = spark.sparkContext.defaultParallelism
     for d, mult in corpora:
         if ensure_corpus(spark, d, mult):
             print(f"(re)generated x{mult} corpus at {d}", file=sys.stderr)
     if with_x1000 and ensure_corpus(spark, *X1000, tables=ALL_TABLES):
         print(f"(re)generated/extended x1000 corpus at {X1000[0]}", file=sys.stderr)
 
+    tr = Tracer("scale-bench")
     out: dict[str, dict] = {}
+    spans: dict[str, dict] = {}
     for name in QUERIES:
         if only and name not in only:
             continue
         q_corpora = list(corpora)
         if with_x1000 and name in X1000_QUERIES:
             q_corpora.append(X1000)
-        timer = (
-            time_st1_write
-            if name == "st1_write_path"
-            else time_sort_floor
-            if name == "level4_sort_floor"
-            else (lambda s, d, _n=name: time_query(s, _n, d))
+        run = {"st1_write_path": st1_write_run, "level4_sort_floor": sort_floor_run}.get(
+            name, lambda s, d, w, sp, _n=name: query_run(s, _n, d, w, sp)
         )
         probe = catalog_ext.STAGE_PROBES.get(name)
-        # drift sentinel (round 12, VERDICT r11 wrong #1): a frozen
-        # host-speed token captured immediately before EACH query's
-        # decades — multi-hour sweeps drift WITHIN a session, so a
-        # per-sweep token is not enough. t_sec_normalized is what the
-        # timing would read on the reference-speed host.
+        # a host-speed token captured just before each query's decades:
+        # multi-hour sweeps drift within a session
         snt = sentinel_sec(spark, repeats=2)
-        print(f"{name:28s} sentinel {snt:.2f}s "
-              f"(ref {SENTINEL_REF_SEC})", file=sys.stderr)
-        times, rows, mets, counts = [], [], [], []
+        print(f"{name:28s} sentinel {snt:.2f}s (ref {SENTINEL_REF_SEC})", file=sys.stderr)
+        times, rows, counts = [], [], []
         io_tokens: dict[str, dict[str, float]] = {}
         for d, mult in q_corpora:
-            # I/O drift detector (round 13, SCALE_r12 io_drift_note):
-            # multi-GB-shuffle decades swing ~2.4x on host I/O
-            # bimodality the CPU sentinel can't see. Bracket each
-            # >=x1000 decade with one io-sentinel pass on each side so
-            # a reader can tell a slow-I/O window from a plan change —
-            # raw seconds on a bracketed-slow cell are adjudicated on
-            # run_bytes instead.
+            # multi-GB-shuffle decades swing ~2.4x on host I/O the CPU
+            # sentinel cannot see: bracket each >=x1000 decade with an
+            # io-sentinel pass so a slow-I/O window is told from a plan
+            # change (such cells are graded on run_bytes)
             io_pre = io_sentinel_sec(spark, repeats=1) if mult >= 1000 else None
-            t, r, m = timer(spark, d)
+            span, r = time_best(spark, tr, run, d, opts.work)
             if io_pre is not None:
                 io_post = io_sentinel_sec(spark, repeats=1)
                 io_tokens[f"x{mult}"] = {
                     "pre": io_pre,
                     "post": io_post,
-                    # r13 calibrated classifier (sentinel.io_window):
-                    # 'drift' cells are graded on run_bytes, not seconds
                     "window": io_window(io_pre, io_post),
                 }
-            times.append(t)
+            times.append(round(span.dur, 3))
             rows.append(r)
-            mets.append(m)
+            spans.setdefault(name, {})[f"x{mult}"] = span
             if probe is not None:
-                _cold(spark)
+                cold(spark)
                 counts.append(probe(spark, d))
-                _cold(spark)
-            _m = m or {}
+                cold(spark)
             print(
-                f"{name:28s} x{mult:<5d} {t:8.2f}s rows={r} "
-                f"spill={_m.get('disk_spill_bytes', 0) >> 20}MiB "
-                f"shw={_m.get('shuffle_write_bytes', 0) >> 20}MiB"
+                f"{name:28s} x{mult:<5d} {times[-1]:8.2f}s rows={r}"
                 + (f" counts={counts[-1]}" if probe else ""),
                 file=sys.stderr,
             )
@@ -435,9 +274,7 @@ def main() -> None:
                 f"x{q_corpora[i][1]}->x{q_corpora[i + 1][1]}": alphas[i]
                 for i in range(len(alphas))
             },
-            "run_bytes": {
-                f"x{mult}": m for (_, mult), m in zip(q_corpora, mets)
-            },
+            "run_bytes": {f"x{mult}": None for _, mult in q_corpora},
         }
         if io_tokens:
             entry["io_sentinel_sec"] = io_tokens
@@ -446,18 +283,18 @@ def main() -> None:
                 f"x{mult}": c for (_, mult), c in zip(q_corpora, counts)
             }
         out[name] = entry
-        # checkpoint after EVERY query, merging with whatever is on
-        # disk — a crash late in the sweep (the x1000 decades run last
-        # and are the fragile ones) must not lose the finished queries
-        _write_artifact(out)
+        # checkpoint after every query: a crash late in the sweep (the
+        # x1000 decades run last) must not lose the finished queries
+        _write_artifact(out, opts.out, cores)
 
-    _write_artifact(out)
+    spark.stop()
+    log = Counters(log_dir)
+    for name, per in spans.items():
+        out[name]["run_bytes"] = {k: log.over([s])["run_bytes"] for k, s in per.items()}
+    _write_artifact(out, opts.out, cores)
 
 
-def _write_artifact(out: dict[str, dict]) -> None:
-    out_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), OUT_NAME
-    )
+def _write_artifact(out: dict[str, dict], out_path: str, cores: int) -> None:
     extra_top = {}
     if os.path.exists(out_path):  # merge partial/resumed runs
         try:
@@ -477,6 +314,7 @@ def _write_artifact(out: dict[str, dict]) -> None:
         out = {k: prev[k] for k in QUERIES if k in prev}
     result = {
         "metric": "multi_decade_scaling",
+        "cores": cores,
         "sentinel_ref_sec": SENTINEL_REF_SEC,
         "sentinel_policy": "per-query min-of-2 of the frozen sentinel "
         "(cosmoz_data_pipeline_spark/sentinel.py), captured just before "
@@ -498,7 +336,7 @@ def _write_artifact(out: dict[str, dict]) -> None:
         "policy": "min-of-2 cold (persists released, caches + index/corpus-"
         "metadata memos cleared); st1_write_path holds the partition grid at "
         "the x1 span so decades scale rows-per-partition, not directory count; "
-        "run_bytes = status-API stage totals for the best run (shuffle write/"
+        "run_bytes = event-log stage totals for the best run (shuffle write/"
         "read, memory/disk spill); stage_counts run the queries' own builders "
         "outside the timer. Derivable stages not re-counted: minhash "
         "candidates == its rows; ngram_jaccard candidates == minhash rows "
