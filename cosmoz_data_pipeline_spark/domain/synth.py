@@ -43,6 +43,8 @@ LIMIT-7 cap of the level-4 moving average). Edge cases injected per
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import load_table
@@ -184,15 +186,20 @@ def domain_prelude(*extra_ctes: tuple[str, str]) -> str:
     return f"WITH {body}"
 
 
-def load_domain(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Materialize the four domain tables as DataFrames.
+# the tables a CTE body reads: the two corpus tables and raw_base
+_SOURCE_REF = re.compile(r"\bFROM (events|nation|raw_base)\b")
 
-    The same CTE text the oracle embeds is executed by Spark SQL, so
-    both engines derive identical inputs from the shared parquet.
+
+def load_domain(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Materialize the five domain tables as DataFrames.
+
+    The same CTE bodies the oracle embeds are executed by Spark SQL, so
+    both engines derive identical inputs from the shared parquet. Each
+    body reads the frames it names bound as ``spark.sql`` arguments, so
+    ``raw_base`` is built once and shared, and no temp view of the
+    caller's session is created or replaced.
     """
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    out: dict[str, DataFrame] = {}
-    for name, _ in DOMAIN_CTES:
-        out[name] = spark.sql(f"{domain_prelude()} SELECT * FROM {name}")
-    return out
+    frames = {name: load_table(spark, sf_dir, name) for name in ("events", "nation")}
+    for name, sql in DOMAIN_CTES:
+        frames[name] = spark.sql(_SOURCE_REF.sub(r"FROM {\1}", sql), **frames)
+    return {name: frames[name] for name, _ in DOMAIN_CTES}

@@ -12,6 +12,12 @@ run ``local[N]``. Every knob below is motivated by the 100 TB target:
 - nanos-as-long: the driver test parquet stores TIMESTAMP(NANOS)
   which Spark's vectorized reader rejects; we read the raw int64 and
   convert explicitly (sources/tables.py).
+- a fork-free ``file:`` filesystem (``jvm/``): pip-installed PySpark
+  ships no ``libhadoop``, so Hadoop's local filesystem starts a
+  ``chmod`` process for every file and directory it creates and a
+  ``readlink`` process for every link-status check (hundreds per
+  stream tick, ~4 per level partition file). The jar's classes give
+  the same results through ``java.nio``; other schemes keep Hadoop's.
 """
 
 from __future__ import annotations
@@ -23,6 +29,9 @@ from pyspark.sql import SparkSession
 from .profile import partitions_for, path_bytes
 
 APP_NAME = "cosmoz-data-pipeline-spark"
+
+# Built from the sources beside it (README, "Local filesystem").
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "cosmoz-localfs.jar")
 
 
 def default_parallelism() -> int:
@@ -108,6 +117,12 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.extraClassPath", LOCALFS_JAR)
+        .config("spark.executor.extraClassPath", LOCALFS_JAR)
+        .config("spark.hadoop.fs.file.impl", "cosmoz.localfs.NioLocalFileSystem")
+        # FileContext (streaming checkpoints, state store) resolves the
+        # scheme separately from FileSystem
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "cosmoz.localfs.NioLocalFs")
     )
     # Durable-checkpoint mode (the cluster deployment shape): every
     # iterative-loop superstep checkpoints to reliable storage instead

@@ -19,19 +19,6 @@ from pyspark.sql import functions as F
 
 from ..session import harden_session, scale_shuffle_partitions
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # columns stored as TIMESTAMP(NANOS) in the test corpus → arrive as
 # int64 under nanosAsLong and need explicit conversion
 _NANOS_COLS = {"events": ("ts",)}
@@ -52,13 +39,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 col, F.expr(f"CAST(timestamp_micros({col} div 1000) AS TIMESTAMP_NTZ)")
             )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view (for spark.sql use)."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,7 +1,8 @@
-"""The measuring harness (tools/probe.py, tools/ab.py) end to end.
+"""The measuring harness (tools/probe.py, tools/ab.py) and the plan
+record (tools/explain_all.py) end to end.
 
-Each case runs in a subprocess: the event log the tools read is a
-session startup conf, which the test session's own Spark cannot take.
+The harness cases run in a subprocess: the event log the tools read is
+a session startup conf, which the test session's own Spark cannot take.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ import subprocess
 import sys
 import textwrap
 from pathlib import Path
+
+import pytest
 
 from cosmoz_data_pipeline_spark import profile
 
@@ -70,3 +73,16 @@ def test_ab_pins_identity(tmp_path):
     assert [r["first"] for r in rec["runs"]] == ["A", "B"]
     assert all(r[k]["t"] > 0 and r[k]["tasks"] > 0 for r in rec["runs"] for k in "AB")
     assert got["dropped"] is not None and "(200," in got["dropped"]
+
+
+def test_explain_all_writes_only_its_out(spark, sf_dir, tmp_path):
+    from tools import explain_all
+
+    plans = REPO / "PLANS.md"
+    before = plans.read_bytes()
+    with pytest.raises(SystemExit):
+        explain_all.main([sf_dir])  # --out is required
+    out = tmp_path / "plans.md"
+    explain_all.main(["--out", str(out), sf_dir, "level1"])
+    assert "## level1" in out.read_text()
+    assert plans.read_bytes() == before

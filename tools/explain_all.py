@@ -12,11 +12,15 @@ whose two sides are both broadcastable can still flip its build side
 between runs: AQE picks it from whichever side finished first.) Input
 paths are written relative to the corpus directory, as ``<sf_dir>``.
 
-Usage: python tools/explain_all.py [sf_dir]   (default sf0.01)
+Usage: python tools/explain_all.py --out PLANS.md SF_DIR [name ...]
+(default: every query). Writes only ``--out``; to refresh the
+committed record (taken over sf0.01), pass the checkout's own
+``PLANS.md``.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -43,9 +47,14 @@ def normalize_ids(plan: str) -> str:
     return plan
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sf_dir = os.path.abspath(sf_dir)
+def main(argv: list[str] | None = None) -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("sf_dir", help="the corpus directory")
+    p.add_argument("names", nargs="*", help="registry queries (default: all)")
+    p.add_argument("--out", required=True, help="the markdown file to write")
+    args = p.parse_args(argv)
+    sf_dir = os.path.abspath(args.sf_dir)
+    names = args.names or list(REGISTRY)
     spark = build_session(app_name="cosmoz-explain")
     spark.sparkContext.setLogLevel("ERROR")
     out = [
@@ -67,7 +76,7 @@ def main() -> None:
     ]
     from cosmoz_data_pipeline_spark.plans import release_persists  # noqa: E402
 
-    for name in REGISTRY:
+    for name in names:
         df = REGISTRY[name].run(spark, sf_dir)
         df.collect()  # finalize the AQE plan
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -83,9 +92,9 @@ def main() -> None:
         out += [f"## {name}", "", f"`{signals}`", "", "```", text.rstrip(), "```", ""]
         release_persists()
         spark.catalog.clearCache()
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(args.out, "w") as f:
         f.write("\n".join(out))
-    print(f"PLANS.md written ({len(REGISTRY)} queries)")
+    print(f"{args.out} written ({len(names)} queries)")
 
 
 if __name__ == "__main__":

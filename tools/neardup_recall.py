@@ -19,13 +19,15 @@ up to r = 16; x10 (r = 15) is the first corpus that actually tests
 that claim. The artifact records the analytic prediction next to the
 measurement so the model itself is checked, per pair-cosine observed.
 
-Usage: python tools/neardup_recall.py [dir ...]
+Usage: python tools/neardup_recall.py --out RECALL.json [dir ...]
        (default: sf0.01, sf0.1, /tmp/cosmoz_scale_x10 if present)
-Writes NEARDUP_RECALL.json at the repo root.
+Writes only ``--out``; to refresh the committed record, pass the
+checkout's own NEARDUP_RECALL.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
@@ -129,7 +131,11 @@ def predicted_recall(cosines: list[float], r: int, bands: int) -> float:
 
 
 def main() -> None:
-    dirs = sys.argv[1:] or [
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("dirs", nargs="*")
+    p.add_argument("--out", required=True, help="the JSON file to write")
+    args = p.parse_args()
+    dirs = args.dirs or [
         "/root/testdata/sf0.01",
         "/root/testdata/sf0.1",
         "/tmp/cosmoz_scale_x10",
@@ -186,14 +192,10 @@ def main() -> None:
               f"true={rec['true_pairs']} found={rec['found_pairs']} "
               f"recall={rec['recall']} (predicted {rec['predicted_recall']}) "
               f"extra={rec['extra_pairs']} [{rec['t_sec']}s]", flush=True)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "NEARDUP_RECALL.json",
-    )
-    with open(path, "w") as f:
+    with open(args.out, "w") as f:
         json.dump(out, f, indent=1)
         f.write("\n")
-    print(f"wrote {path}")
+    print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":
