@@ -56,17 +56,6 @@ from pyspark.sql import functions as F
 SHUFFLE_TARGET_INPUT_BYTES = 4 << 20
 SHUFFLE_PARTITIONS_CAP = 4096
 
-# Floor of the stream dedup's state-store partition count. A stateful
-# stream freezes that count into its checkpoint at the first
-# micro-batch, and every micro-batch then pays one state commit per
-# partition however few rows it holds: at sf0.1 a 32-partition floor
-# made ~60 % of the state leg commit overhead over EMPTY partitions
-# (ST6_STAGES.json, ST6_STATEPARTS_AB.json). The count is
-# partitions_for(source bytes, 8) — at 100 TB the bytes term far
-# exceeds any core floor, at bench scale it stops paying 32 commits
-# for 3 MB of input.
-_STATE_PARTS_MIN = 8
-
 # The level chain's big shapes engage when the chain's input bytes say
 # the corpus has outgrown the domain's key count. 512 MiB is the same
 # crossover the retired >=128-shuffle-partition proxy encoded (128
@@ -113,7 +102,20 @@ SIMHASH_WIDE_N = 1 << 29
 
 # ----------------------------------------------------------------- gates
 
-
+# State use (streaming/incremental.py: the dedup stream's state store,
+# floor 1). A stateful stream freezes its state partition count into
+# its checkpoint at the first micro-batch, and every micro-batch then
+# pays one task and one state commit per partition however few rows it
+# holds. At sf0.1 a 32-partition core floor made ~60 % of the state leg
+# commit overhead over EMPTY partitions; bytes-derived with a floor of
+# 8 halved st6 (ST6_STAGES.json, ST6_STATEPARTS_AB.json). The hourly
+# ingest appends a few dozen rows per tick and its state is bounded by
+# the 24 h watermark, so the floor went to 1 (interleaved A/Bs on a
+# 4-core host, 8 → 1): perfbench ingest_dedup job_s median 0.787 →
+# 0.557 s, 10/10 pairs; a traced tick's state stage runs 1 task, not
+# 8 (exec.tasks 85 → 15 over a cycle); st6 at sf0.1 (one 100k-row
+# batch) 1.76 → 1.50 s, 7,500 rows both. The bytes term still sets the
+# count for a large first batch (a backlog replay).
 def partitions_for(nbytes: int, floor: int) -> int:
     """Shuffle (or state) partitions for ``nbytes`` of input: one
     target-sized slice per partition, never below ``floor``. The cap

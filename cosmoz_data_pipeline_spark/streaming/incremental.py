@@ -80,11 +80,9 @@ def incremental_overwrite(
 
 def _state_partitions(spark: SparkSession, source_dir: str) -> int:
     """State-store partitions for a dedup stream over ``source_dir``:
-    derived from the source's bytes, floored at
-    ``profile._STATE_PARTS_MIN`` (see its comment for the evidence)."""
-    return profile.partitions_for(
-        profile.path_bytes(spark, source_dir), profile._STATE_PARTS_MIN
-    )
+    one target-sized slice of the source's bytes per partition, at
+    least 1 (see ``profile.partitions_for`` for the evidence)."""
+    return profile.partitions_for(profile.path_bytes(spark, source_dir), 1)
 
 
 def stream_dedup_to_sink(
@@ -138,11 +136,16 @@ def stream_dedup_to_sink(
         out = transform(batch) if transform is not None else batch
         out.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
-    # state partitions are frozen into the NEW checkpoint at first
-    # micro-batch — size them from the source bytes (see
-    # _state_partitions above), then restore the session conf
-    # (an existing checkpoint keeps its own count; this path always
-    # starts fresh checkpoints)
+    # the state partition count is frozen into the checkpoint at its
+    # first micro-batch: size it from the source bytes (see
+    # _state_partitions above), then restore the session conf. Once
+    # the offset log exists Spark ignores the conf, so a checkpoint
+    # reused across ticks (the hourly ingest) keeps the count its first
+    # batch chose for its whole life, however large the source grows.
+    # The stream stays in the caller's session rather than a
+    # newSession() with its own conf: StreamingQueryManager is per
+    # session, so a listener on the caller's spark.streams would stop
+    # seeing the query
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set(

@@ -145,7 +145,7 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
 ):
     """Round 15 (ST6_STAGES/ST6_STATEPARTS_AB): the dedup stream's
     state-store partition count derives from source BYTES (one
-    target-sized slice per partition, min 8, capped), not the
+    target-sized slice per partition, min 1, capped), not the
     session's core-count floor; results are partition-count-invariant;
     and the session conf is restored after the stream."""
     from cosmoz_data_pipeline_spark import profile
@@ -157,9 +157,9 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
     ev.coalesce(1).write.parquet(src)
     schema = spark.read.parquet(src).schema
 
-    # sizing rule (unit): tiny source → the 8-partition floor; a big
-    # source → bytes-derived
-    assert inc._state_partitions(spark, src) == 8
+    # sizing rule (unit): tiny source → one partition; a big source →
+    # bytes-derived
+    assert inc._state_partitions(spark, src) == 1
     # bytes-derived branch: with a target slice of 1/20 of the source
     # the count is bytes // target; with a 1-byte target it clamps at
     # the cap
@@ -193,7 +193,7 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
                 dedup_cols=["user_id", "event_type"],
                 time_col="ts",
             )
-        assert parts == (8 if target is None else 16)
+        assert parts == (1 if target is None else 16)
         state = os.listdir(os.path.join(ckpt, "state", "0"))
         assert len([d for d in state if d.isdigit()]) == parts
         assert spark.conf.get("spark.sql.shuffle.partitions") == base_parts
@@ -207,3 +207,100 @@ def test_stream_dedup_state_partitions_sized_from_bytes(
             )
         )
     assert outs[0] == outs[1] and outs[0]
+
+
+def _append_keys(src: str, name: str, keys) -> None:
+    """One parquet file ``name`` in ``src`` with rows (k, ts), ts = a
+    fixed hour + k minutes, so a re-sent key is an exact duplicate."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = dt.datetime(2024, 6, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array(list(keys), pa.int64()),
+                "ts": pa.array(
+                    [base + dt.timedelta(minutes=k) for k in keys], pa.timestamp("us")
+                ),
+            }
+        ),
+        os.path.join(src, name),
+    )
+
+
+def _dedup_tick(spark, tmp_path, schema) -> None:
+    from cosmoz_data_pipeline_spark.streaming.incremental import stream_dedup_to_sink
+
+    stream_dedup_to_sink(
+        spark,
+        source_dir=str(tmp_path / "src"),
+        sink_dir=str(tmp_path / "sink"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=schema,
+        dedup_cols=["k", "ts"],
+        time_col="ts",
+    )
+
+
+def test_reused_checkpoint_keeps_its_first_state_partition_count(
+    spark, tmp_path, monkeypatch
+):
+    """The hourly ingest reuses one checkpoint across ticks: the state
+    partition count its first batch chose stays for the checkpoint's
+    life, even once the source's bytes would size more, and the state
+    still drops every re-sent key."""
+    from cosmoz_data_pipeline_spark import profile
+    from cosmoz_data_pipeline_spark.streaming import incremental as inc
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_keys(str(src), "tick0.parquet", range(50))
+    schema = spark.read.parquet(str(src)).schema
+    _dedup_tick(spark, tmp_path, schema)
+
+    # the second tick re-sends half of the first tick's keys and grows
+    # the source past four target slices
+    _append_keys(str(src), "tick1.parquet", range(25, 100))
+    monkeypatch.setattr(
+        profile, "SHUFFLE_TARGET_INPUT_BYTES", profile.path_bytes(spark, str(src)) // 4
+    )
+    assert inc._state_partitions(spark, str(src)) == 4
+    _dedup_tick(spark, tmp_path, schema)
+
+    state = os.listdir(tmp_path / "ckpt" / "state" / "0")
+    assert [d for d in state if d.isdigit()] == ["0"]
+    sink = spark.read.parquet(str(tmp_path / "sink"))
+    keys = [tuple(r) for r in sink.select("k", "ts").collect()]
+    assert len(keys) == len(set(keys)) == 100
+
+
+def test_callers_listener_sees_the_dedup_stream(spark, tmp_path):
+    """The stream runs in the caller's session: perfbench's listener,
+    registered on the caller's ``spark.streams``, gets its progress
+    (the traced ``stream.*`` metrics read it), with the one state
+    partition a tiny source sizes, and the caller's shuffle conf comes
+    back."""
+    from perfbench.tracing import stream_progress_listener
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_keys(str(src), "tick0.parquet", range(20))
+    schema = spark.read.parquet(str(src)).schema
+    base_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = stream_progress_listener()
+    spark.streams.addListener(listener)
+    try:
+        _dedup_tick(spark, tmp_path, schema)
+        # progress events reach Python on the listener bus, after the
+        # query may already have terminated
+        deadline = time.monotonic() + 60
+        while not listener.events and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    parts = {op["numShufflePartitions"] for e in listener.events for op in e["stateOperators"]}
+    assert parts == {1}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == base_parts

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -86,3 +87,32 @@ def test_explain_all_writes_only_its_out(spark, sf_dir, tmp_path):
     explain_all.main(["--out", str(out), sf_dir, "level1"])
     assert "## level1" in out.read_text()
     assert plans.read_bytes() == before
+
+
+def test_plan_ids_normalize_across_digit_counts():
+    from tools.explain_all import normalize_ids
+
+    def plan(ids):
+        a, b, c, d, e = ids
+        return (
+            f"*({e}) Filter (isnotnull(ts#{a}) AND (value#{b}L > 3.0))\n"
+            f"+- FileScan parquet [ts#{a},value#{b}L] DataFilters: "
+            f"[isnotnull(ts#{a}), (cast(value#{b}L as double) > 3.0)], "
+            f"ShuffleQueryStage {c}, plan_id={d}"
+        )
+
+    assert normalize_ids(plan((7, 8, 1, 9, 2))) == normalize_ids(
+        plan((70123, 998877, 12, 104, 10))
+    )
+
+
+def test_explain_all_cuts_no_metadata_string(spark, sf_dir, tmp_path):
+    """Spark's default cut of long scan metadata falls before the id
+    rewrite, so its position would move with the ids' digit counts."""
+    from tools import explain_all
+
+    out = tmp_path / "plans.md"
+    explain_all.main(["--out", str(out), sf_dir, "s01_scan_pushdown"])
+    filters = re.findall(r"DataFilters: (.*?), Format: ", out.read_text())
+    assert filters and max(map(len, filters)) > 100
+    assert all(f.endswith("]") and "..." not in f for f in filters), filters

@@ -11,6 +11,10 @@ cleanly and a diff across commits shows only plan changes. (A join
 whose two sides are both broadcastable can still flip its build side
 between runs: AQE picks it from whichever side finished first.) Input
 paths are written relative to the corpus directory, as ``<sf_dir>``.
+Spark cuts long scan metadata (``DataFilters: [...``) at a fixed length
+BEFORE the ids are rewritten, so a cut point would move with the digit
+count of the ids; the tool's session therefore cuts no metadata string
+(a plan here is longer than Spark's default ``explain``).
 
 Usage: python tools/explain_all.py --out PLANS.md SF_DIR [name ...]
 (default: every query). Writes only ``--out``; to refresh the
@@ -56,6 +60,7 @@ def main(argv: list[str] | None = None) -> None:
     sf_dir = os.path.abspath(args.sf_dir)
     names = args.names or list(REGISTRY)
     spark = build_session(app_name="cosmoz-explain")
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(2**31 - 1))
     spark.sparkContext.setLogLevel("ERROR")
     out = [
         "# Physical plans (executed, AQE-final) — full registry",
