@@ -67,7 +67,6 @@ def _cold(spark) -> None:
     spark.catalog.clearCache()
     catalog_ext._IVF_CENTROIDS.clear()
     catalog_ext.clear_counts()
-    catalog_ext._AUG_OFF.clear()
 
 
 def main() -> None:

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.asof import asof_join_both
+from ..operators.asof import asof_join
 from ..operators.bucketed_window import BUCKET_SECS, bucketed_lag
 from ..profile import bucketed_auto, chain_big, path_bytes
 from . import physics
@@ -175,8 +175,8 @@ def _fused_temporal_attach(
         .orderBy(F.col(_ORD2).desc(), F.col(_SRC2).desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # as-of carry across buckets (asof_join_both's tail/carry,
-    # single value column); picks never need one — period-aligned
+    # as-of carry across buckets (single value column); picks never
+    # need one — period-aligned
     nn = F.when(F.col("__iv").isNotNull(), F.col(_ORD2))
     tails = u.groupBy("site_no", _BKT2).agg(
         F.max_by("__iv", nn).alias("__tl_bw"),
@@ -384,9 +384,9 @@ def level1_to_level2(
         )
         # both as-of directions in ONE union+shuffle+sort; the forward
         # side's tie-blindness is safe behind the backward coalesce
-        enriched = asof_join_both(
+        enriched = asof_join(
             enriched, int_slim, on=["site_no"], left_time="time", right_time="time",
-            values=["intensity"], backward_suffix="_bw", forward_suffix="_fw",
+            values=["intensity"], sides={"_bw": ("backward", False), "_fw": ("forward", True)},
         )
     enriched = enriched.join(stations, "site_no")
 
@@ -562,7 +562,6 @@ def run_pipeline_scan_local(
     intensity: DataFrame,
     silo_data: DataFrame,
     all_stations: DataFrame,
-    spec_mode: bool = False,
 ) -> dict[str, DataFrame]:
     """Full pipeline over a layout-contracted raw SINK: the level1
     prefix runs the scan-local shape (zero wide sequence shuffles,
@@ -573,4 +572,4 @@ def run_pipeline_scan_local(
     ``bucketed_auto`` uses."""
     big = chain_big(path_bytes(spark, sink_path))
     l1 = raw_to_level1_scan_local(spark, sink_path)
-    return _levels_2_to_4(l1, intensity, silo_data, all_stations, spec_mode, big)
+    return _levels_2_to_4(l1, intensity, silo_data, all_stations, False, big)

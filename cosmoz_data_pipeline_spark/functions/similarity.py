@@ -159,29 +159,35 @@ SRP_QUANT = 1_000_000  # vector components → floor(v * 1e6)
 # instead of letting the ANSI-off cast wrap (ADVICE r7).
 SRP_QUANT_MAX_ABS = (2**31) / SRP_QUANT  # ≈ 2147.483
 SRP_MAX_PLANES = 30  # bucket ids must stay well inside int64
+EMBED_DIM = 64  # embeddings-table vector width (TESTDATA.md)
+# the id column the SRP builders read and write (embeddings' key)
+SRP_ID_COL = "vec_id"
+# expected vectors per SRP bucket; srp_planes_for and its DuckDB mirror
+# srp_sql_cfg both read it, so the two engines agree by construction
+SRP_TARGET_BUCKET = 8
 
 
-def srp_planes_for(n: int, target_bucket: int = 8) -> int:
+def srp_planes_for(n: int) -> int:
     """Planes per band scaled to the corpus: the smallest r with
-    2^r >= ceil(n / target_bucket) (expected bucket occupancy stays
-    ~target_bucket however large n grows — a FIXED plane count makes
-    buckets, and the within-bucket candidate join, grow linearly with
-    the corpus), clamped to [8, 30]. Pure integer arithmetic
+    2^r >= ceil(n / SRP_TARGET_BUCKET) (expected bucket occupancy stays
+    ~SRP_TARGET_BUCKET however large n grows — a FIXED plane count
+    makes buckets, and the within-bucket candidate join, grow linearly
+    with the corpus), clamped to [8, 30]. Pure integer arithmetic
     (bit_length ≡ LENGTH(bin(x)) in DuckDB) so both engines derive the
     identical r from the same count."""
-    m = (n + target_bucket - 1) // target_bucket
+    m = (n + SRP_TARGET_BUCKET - 1) // SRP_TARGET_BUCKET
     r = (m - 1).bit_length() if m > 1 else 0
     return min(SRP_MAX_PLANES, max(8, r))
 
 
-def srp_sql_cfg(src: str, target_bucket: int = 8) -> str:
+def srp_sql_cfg(src: str) -> str:
     """``cfg`` CTE: the DuckDB mirror of :func:`srp_planes_for` over
     ``src``'s row count."""
-    t1 = target_bucket - 1
+    t, t1 = SRP_TARGET_BUCKET, SRP_TARGET_BUCKET - 1
     return f"""cfg AS (
     SELECT LEAST({SRP_MAX_PLANES}, GREATEST(8,
-        CASE WHEN (COUNT(*) + {t1}) // {target_bucket} <= 1 THEN 0
-             ELSE LENGTH(bin((COUNT(*) + {t1}) // {target_bucket} - 1)) END)) AS r
+        CASE WHEN (COUNT(*) + {t1}) // {t} <= 1 THEN 0
+             ELSE LENGTH(bin((COUNT(*) + {t1}) // {t} - 1)) END)) AS r
     FROM {src})"""
 
 
@@ -227,8 +233,7 @@ def srp_weights_row(spark, bands: int, planes_per_band: int, dim: int):
 
 def srp_band_buckets(
     vec_df, spark, bands: int, planes_per_band: int, dim: int,
-    id_col: str = "vec_id", vec_col: str = "v",
-    quantized: bool = False,
+    vec_col: str = "v", quantized: bool = False,
 ):
     """(id, band, bucket) SRP assignments as ONE interpreted in-row fold
     per (vector, band) against the broadcast single-row weight literal:
@@ -261,9 +266,9 @@ def srp_band_buckets(
     )
     return (
         vec_df.crossJoin(F.broadcast(wrow))
-        .select(id_col, vec_col, F.explode("srp_bands").alias("bd"))
+        .select(SRP_ID_COL, vec_col, F.explode("srp_bands").alias("bd"))
         .select(
-            id_col,
+            SRP_ID_COL,
             F.col("bd.band").alias("band"),
             bucket.alias("bucket"),
         )
@@ -348,8 +353,7 @@ _SRP_BANK_BC: dict[tuple[str, int, int, int], object] = {}
 
 def srp_band_buckets_kernel(
     vec_df, bands: int, planes_per_band: int, dim: int,
-    id_col: str = "vec_id", vec_col: str = "v",
-    quantized: bool = False,
+    vec_col: str = "v", quantized: bool = False,
 ):
     """(id, band, bucket) SRP assignments via the Arrow/numpy matmul
     kernel — bit-identical to :func:`srp_band_buckets`'s fold on every
@@ -389,9 +393,9 @@ def srp_band_buckets_kernel(
     # quantize() hard-bounds |q| < 2^31, where the int64 matmul is
     # exact (dim * 2^31 * 1e6 ~ 1.4e17 < 2^63)
     f64_qmax = (2**53) // (SRP_HALF * max(dim, 1))
-    vid_type = vec_df.schema[id_col].dataType.simpleString()
-    src = vec_df.select(id_col, vec_col) if quantized else vec_df.select(
-        id_col, quantize(F.col(vec_col)).alias(vec_col)
+    vid_type = vec_df.schema[SRP_ID_COL].dataType.simpleString()
+    src = vec_df.select(SRP_ID_COL, vec_col) if quantized else vec_df.select(
+        SRP_ID_COL, quantize(F.col(vec_col)).alias(vec_col)
     )
 
     def project(batches):
@@ -413,18 +417,18 @@ def srp_band_buckets_kernel(
             buckets = (pos.reshape(-1, r) @ bitvals).reshape(len(q), bands)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy().repeat(bands),
+                    SRP_ID_COL: pdf[SRP_ID_COL].to_numpy().repeat(bands),
                     "band": np.tile(band_ids, len(q)),
                     "bucket": buckets.reshape(-1),
                 }
             )
 
     return src.mapInPandas(
-        project, f"{id_col} {vid_type}, band int, bucket bigint"
+        project, f"{SRP_ID_COL} {vid_type}, band int, bucket bigint"
     )
 
 
-def srp_sql_ctes(src: str, bands: int, planes_per_band: int, dim: int = 64) -> str:
+def srp_sql_ctes(src: str, bands: int, planes_per_band: int) -> str:
     """DuckDB mirror of :func:`srp_band_buckets` as CTE text: ``wt``
     recomputes the identical md5 weights in SQL; integer projections
     make the parity exact regardless of DuckDB's aggregation order.
@@ -435,10 +439,10 @@ def srp_sql_ctes(src: str, bands: int, planes_per_band: int, dim: int = 64) -> s
            ('0x' || substr(md5('srp' || CAST(p AS VARCHAR) || '_'
                                 || CAST(i AS VARCHAR)), 1, 8))::BIGINT
              % {SRP_MOD} - {SRP_HALF} AS w
-    FROM generate_series(0, {total - 1}) t(p), generate_series(1, {dim}) s(i)),
+    FROM generate_series(0, {total - 1}) t(p), generate_series(1, {EMBED_DIM}) s(i)),
 qv AS (
     SELECT vec_id, i, CAST(floor(v[i] * {SRP_QUANT}) AS BIGINT) AS q
-    FROM {src}, generate_series(1, {dim}) s(i)),
+    FROM {src}, generate_series(1, {EMBED_DIM}) s(i)),
 proj AS (
     SELECT qv.vec_id, wt.p, sum(qv.q * wt.w) AS s
     FROM qv JOIN wt USING (i) GROUP BY 1, 2),
@@ -449,7 +453,7 @@ bk AS (
     FROM proj GROUP BY 1, 2)"""
 
 
-def srp_sql_ctes_dynamic(src: str, bands: int, dim: int = 64) -> str:
+def srp_sql_ctes_dynamic(src: str, bands: int) -> str:
     """Like :func:`srp_sql_ctes` but planes-per-band comes from the
     ``cfg`` CTE (:func:`srp_sql_cfg` must precede) so banding scales
     with the corpus. generate_series needs constant bounds in DuckDB,
@@ -461,11 +465,11 @@ def srp_sql_ctes_dynamic(src: str, bands: int, dim: int = 64) -> str:
            ('0x' || substr(md5('srp' || CAST(p AS VARCHAR) || '_'
                                 || CAST(i AS VARCHAR)), 1, 8))::BIGINT
              % {SRP_MOD} - {SRP_HALF} AS w
-    FROM generate_series(0, {maxp - 1}) t(p), generate_series(1, {dim}) s(i), cfg
+    FROM generate_series(0, {maxp - 1}) t(p), generate_series(1, {EMBED_DIM}) s(i), cfg
     WHERE p < {bands} * cfg.r),
 qv AS (
     SELECT vec_id, i, CAST(floor(v[i] * {SRP_QUANT}) AS BIGINT) AS q
-    FROM {src}, generate_series(1, {dim}) s(i)),
+    FROM {src}, generate_series(1, {EMBED_DIM}) s(i)),
 proj AS (
     SELECT qv.vec_id, wt.p, sum(qv.q * wt.w) AS s
     FROM qv JOIN wt USING (i) GROUP BY 1, 2),

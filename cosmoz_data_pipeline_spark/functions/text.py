@@ -1,6 +1,6 @@
 """Text-analysis column builders for the LLM-data-pipeline extensions:
-tokenization, shingling, MinHash signatures, SimHash, fingerprints,
-language scoring, quality scoring.
+tokenization, MinHash constants and LSH banding, SimHash,
+fingerprints, language scoring, quality scoring.
 
 All pure Catalyst higher-order-function expressions (transform/
 aggregate/filter over arrays) — JVM-side, codegen'd, no Python UDFs —
@@ -21,18 +21,6 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams; whole text as single shingle when shorter
-    than n tokens."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array(F.concat_ws(" ", toks))
-    )
-
-
 # MinHash universe: one md5 per shingle (the expensive part), truncated
 # to 32 bits, then k cheap independent integer hashes h_i = (a_i*h + b_i)
 # mod P derived from it. max(a_i) = A0 + 11*A_STEP = 2,088,590 < 2^21
@@ -41,32 +29,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 MINHASH_P = 2147483647
 MINHASH_A0, MINHASH_A_STEP = 976369, 101111
 MINHASH_B0, MINHASH_B_STEP = 67890, 12345
-
-
-def shingle_hash(shingles: Column) -> Column:
-    """One 32-bit integer hash per shingle: first 8 md5 hex digits."""
-    return F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint"),
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 12) -> Column:
-    """k-element MinHash signature over integer shingle hashes."""
-    hs = shingle_hash(shingles)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                hs,
-                lambda h: (
-                    (F.lit(MINHASH_A0) + F.lit(MINHASH_A_STEP) * i) * h
-                    + (F.lit(MINHASH_B0) + F.lit(MINHASH_B_STEP) * i)
-                )
-                % F.lit(MINHASH_P),
-            )
-        ),
-    )
 
 
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
@@ -97,12 +59,10 @@ SIMHASH_BITS = 64
 SIMHASH_BANDS = 4  # 4 × 16-bit bands — pigeonhole catches Hamming ≤ 3
 
 
-def simhash64_bands(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash per document, returned as 4 × 16-bit band columns
-    ``s0..s3`` (s0 = bits 0-15 … s3 = bits 48-63; split keeps every
-    value positive in signed int64 on any engine).
+def simhash64_bands(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash per ``(doc_id, text)`` row, returned as 4 × 16-bit
+    band columns ``s0..s3`` (s0 = bits 0-15 … s3 = bits 48-63; split
+    keeps every value positive in signed int64 on any engine).
 
     Bit j of the signature is the sign of Σ_tokens (±1 by bit j of the
     token's 64-bit md5 prefix). Shape chosen for 100 TB: explode the
@@ -113,11 +73,11 @@ def simhash64_bands(
     interpreted higher-order-function lambdas in the hot path.
     Integer arithmetic only — engine-exact.
     """
-    toked = docs.select(id_col, tokens(F.col(text_col)).alias("toks")).select(
-        id_col, F.explode("toks").alias("tok")
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("toks")).select(
+        "doc_id", F.explode("toks").alias("tok")
     )
-    hashed = toked.select(id_col, F.md5("tok").alias("m")).select(
-        id_col,
+    hashed = toked.select("doc_id", F.md5("tok").alias("m")).select(
+        "doc_id",
         F.conv(F.substring("m", 1, 8), 16, 10).cast("bigint").alias("h_hi"),
         F.conv(F.substring("m", 9, 8), 16, 10).cast("bigint").alias("h_lo"),
     )
@@ -128,7 +88,7 @@ def simhash64_bands(
             F.when(F.shiftright(h, j % 32).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"c{j}")
 
-    votes = hashed.groupBy(id_col).agg(*[bit_vote(j) for j in range(SIMHASH_BITS)])
+    votes = hashed.groupBy("doc_id").agg(*[bit_vote(j) for j in range(SIMHASH_BITS)])
 
     def band(k: int) -> Column:
         out = F.lit(0)
@@ -138,7 +98,7 @@ def simhash64_bands(
             )
         return out.cast("int").alias(f"s{k}")
 
-    return votes.select(id_col, *[band(k) for k in range(SIMHASH_BANDS)])
+    return votes.select("doc_id", *[band(k) for k in range(SIMHASH_BANDS)])
 
 
 def jaccard(set_a: Column, set_b: Column) -> Column:

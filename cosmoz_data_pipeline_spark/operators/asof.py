@@ -8,7 +8,7 @@ N+1 pattern. Here it is a single distributed plan:
 
     union(left-probe rows, right-value rows)
       → one shuffle on the key
-      → last(value, ignorenulls) over an ordered window
+      → last(value, ignorenulls) over one ordered window per side
       → keep probe rows
 
 Scale properties: exactly ONE shuffle (by join key), no broadcast of
@@ -20,13 +20,14 @@ QuestDB/kdb use) expressed in pure DataFrame ops.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _SRC = "__asof_src"
 _ORD = "__asof_ord"
+_VAL = "__v"
 
 # One physical shape per operator: a per-key window. The bucketed
 # (key, week-bucket) + tail-carry shape lost on user-grained keys
@@ -41,23 +42,32 @@ def asof_join(
     left_time: str,
     right_time: str,
     values: Sequence[str],
-    direction: str = "backward",
-    suffix: str = "_asof",
-    strict: bool = False,
+    sides: Mapping[str, tuple[str, bool]],
 ) -> DataFrame:
     """Attach to each ``left`` row the ``values`` of the nearest
-    ``right`` row per key group.
+    ``right`` row per key group, once per entry of ``sides``
+    (``{suffix: (direction, strict)}``), all in ONE union + ONE
+    shuffle: each side is one running-window pass over the same hash
+    partitioning, so the plan has a single Exchange and one Sort per
+    distinct window order.
 
     direction='backward': latest right row with rt <= lt (rt < lt when
     ``strict``); direction='forward': earliest right row with rt >= lt
     (rt > lt when ``strict``). Output = all left columns +
-    ``<value><suffix>`` columns (NULL when no match).
+    ``<value><suffix>`` per side, in ``sides`` order (NULL when no
+    match).
+
+    level2 asks for ``{"_bw": ("backward", False), "_fw": ("forward",
+    True)}``: its forward side only fires when the backward one found
+    nothing (the reference's cosmoz_process_levels.py:263-274 and
+    level1->level2.sql:113-124), so an equal-time row was already
+    caught backward and the forward side may be tie-blind.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(direction)
     on = list(on)
     values = list(values)
-    out_cols = [v + suffix for v in values]
+    for direction, _ in sides.values():
+        if direction not in ("backward", "forward"):
+            raise ValueError(direction)
 
     # probe rows carry their full payload; value rows carry only values
     left_cols = left.columns
@@ -65,7 +75,7 @@ def asof_join(
         *left_cols,
         F.col(left_time).alias(_ORD),
         F.lit(1).alias(_SRC),
-        *[F.lit(None).cast(right.schema[v].dataType).alias(c) for v, c in zip(values, out_cols)],
+        *[F.lit(None).cast(right.schema[v].dataType).alias(v + _VAL) for v in values],
     )
     rhs = right.select(
         *[
@@ -74,9 +84,8 @@ def asof_join(
         ],
         F.col(right_time).alias(_ORD),
         F.lit(0).alias(_SRC),
-        *[F.col(v).alias(c) for v, c in zip(values, out_cols)],
+        *[F.col(v).alias(v + _VAL) for v in values],
     )
-
     unioned = lhs.unionByName(rhs)
 
     # Both directions run as a GROWING frame ([unboundedPreceding,
@@ -85,90 +94,21 @@ def asof_join(
     # using [currentRow, unboundedFollowing]: Spark's unbounded-
     # FOLLOWING frame re-evaluates the aggregate from scratch per row
     # (O(n²) per key — measured 6.5 s vs 0.8 s on the level2 join).
-    if direction == "backward":
-        # ties: value rows sort before probe rows so rt == lt is
-        # visible (non-strict); strict reverses the tie order
-        order = [F.col(_ORD).asc(), F.col(_SRC).asc() if not strict else F.col(_SRC).desc()]
-    else:
-        # reversed scan: "earliest rt >= lt" == "latest in desc order";
-        # at equal time value rows must come first in scan order for
-        # non-strict (visible), after the probe for strict (hidden)
-        order = [F.col(_ORD).desc(), F.col(_SRC).asc() if not strict else F.col(_SRC).desc()]
+    # Ties: at equal time value rows scan before the probe row for
+    # non-strict (rt == lt visible), after it for strict (hidden).
+    picked = []
+    for suffix, (direction, strict) in sides.items():
+        t = F.col(_ORD).asc() if direction == "backward" else F.col(_ORD).desc()
+        src = F.col(_SRC).desc() if strict else F.col(_SRC).asc()
+        frame = (
+            Window.partitionBy(*on)
+            .orderBy(t, src)
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        picked += [
+            F.last(v + _VAL, ignorenulls=True).over(frame).alias(v + suffix)
+            for v in values
+        ]
 
-    frame = Window.partitionBy(*on).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    picked = [F.last(c, ignorenulls=True).over(frame).alias(c) for c in out_cols]
-
-    resolved = unioned.select(*left_cols, _ORD, _SRC, *picked)
-    return resolved.where(F.col(_SRC) == 1).drop(_ORD, _SRC)
-
-
-def asof_join_both(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_time: str,
-    right_time: str,
-    values: Sequence[str],
-    backward_suffix: str = "_bw",
-    forward_suffix: str = "_fw",
-) -> DataFrame:
-    """Backward AND forward as-of in ONE union + ONE shuffle: two
-    running-window passes (forward = backward over the reversed sort)
-    sharing the same hash partitioning, so the plan has a single
-    Exchange and two Sorts. Each pass is a growing-frame
-    last(ignorenulls) — O(n log n) per key; the naive
-    unbounded-FOLLOWING frame for the forward side would be O(n²)
-    (Spark re-evaluates that frame per row).
-
-    Tie semantics: the backward side sees rt == lt matches
-    (non-strict) while the forward side does NOT. That is exactly
-    right for the reference's fallback chain — the forward lookup only
-    fires when the backward one found nothing
-    (/root/reference/pipeline/cosmoz_process_levels.py:263-274,
-    level1->level2.sql:113-124), and an equal-time row would have been
-    caught backward. For standalone forward semantics use asof_join.
-    """
-    on = list(on)
-    values = list(values)
-    bw_cols = [v + backward_suffix for v in values]
-    fw_cols = [v + forward_suffix for v in values]
-
-    left_cols = left.columns
-    lhs = left.select(
-        *left_cols,
-        F.col(left_time).alias(_ORD),
-        F.lit(1).alias(_SRC),
-        *[F.lit(None).cast(right.schema[v].dataType).alias(v + "__v") for v in values],
-    )
-    rhs = right.select(
-        *[
-            (F.col(c) if c in on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in left_cols
-        ],
-        F.col(right_time).alias(_ORD),
-        F.lit(0).alias(_SRC),
-        *[F.col(v).alias(v + "__v") for v in values],
-    )
-    unioned = lhs.unionByName(rhs)
-
-    bw_frame = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(_ORD).asc(), F.col(_SRC).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # tie-blind forward: at equal time the probe row scans BEFORE the
-    # value row (src desc in desc order), hiding rt == lt matches
-    fw_frame = (
-        Window.partitionBy(*on)
-        .orderBy(F.col(_ORD).desc(), F.col(_SRC).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    picked = [
-        F.last(v + "__v", ignorenulls=True).over(bw_frame).alias(c)
-        for v, c in zip(values, bw_cols)
-    ] + [
-        F.last(v + "__v", ignorenulls=True).over(fw_frame).alias(c)
-        for v, c in zip(values, fw_cols)
-    ]
     resolved = unioned.select(*left_cols, _ORD, _SRC, *picked)
     return resolved.where(F.col(_SRC) == 1).drop(_ORD, _SRC)

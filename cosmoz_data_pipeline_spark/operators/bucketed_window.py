@@ -46,7 +46,6 @@ def bucketed_lag(
     time_col: str,
     cols: Sequence[str],
     out_names: Sequence[str],
-    bucket_secs: int = BUCKET_SECS,
 ) -> DataFrame:
     """``out_names[i] = lag(cols[i]) over (partitionBy(*keys)
     orderBy(time_col))``, computed without a per-key global sort.
@@ -61,7 +60,7 @@ def bucketed_lag(
     """
     keys = list(keys)
     secs = F.col(time_col).cast("long")
-    with_b = df.withColumn("__bkt", F.floor(secs / F.lit(bucket_secs)).cast("long"))
+    with_b = df.withColumn("__bkt", F.floor(secs / F.lit(BUCKET_SECS)).cast("long"))
     w_in = Window.partitionBy(*keys, "__bkt").orderBy(time_col)
     # per-bucket tail: the max-time row's values, one row per
     # (keys, bucket) — partial-aggregated map-side, so the shuffle

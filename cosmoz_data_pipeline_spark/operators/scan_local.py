@@ -101,23 +101,23 @@ BATCH_ROWS = 131072
 # trivial while giving ~16x pruning granularity per 128 MB of file.
 TILE_ROWGROUP_BYTES = 8 * 1024 * 1024
 
+# The layout contract's key and count columns (the raw table's).
+SITE_COL, TIME_COL, COUNT_COL = "site_no", "time", "count"
 
-def write_time_tiled(
-    df: DataFrame, path: str, n_files: int, site_col: str = "site_no",
-    time_col: str = "time", rowgroup_bytes: int = TILE_ROWGROUP_BYTES,
-) -> None:
+
+def write_time_tiled(df: DataFrame, path: str, n_files: int) -> None:
     """Write ``df`` as the layout-contracted parquet this module
     scans: ``n_files`` range-partitioned files, each sorted by
     (site, time). Range partitioning keeps every site's timeline a
     disjoint ordered tiling across files and never splits equal
-    (site, time) keys across two files. ``rowgroup_bytes`` bounds the
-    parquet row-group size so the boundary kernel can prune the zone
-    read to the row groups that matter (see module docstring)."""
+    (site, time) keys across two files. ``TILE_ROWGROUP_BYTES`` bounds
+    the parquet row-group size so the boundary kernel can prune the
+    zone read to the row groups that matter (see module docstring)."""
     (
-        df.repartitionByRange(n_files, F.col(site_col), F.col(time_col))
-        .sortWithinPartitions(site_col, time_col)
+        df.repartitionByRange(n_files, F.col(SITE_COL), F.col(TIME_COL))
+        .sortWithinPartitions(SITE_COL, TIME_COL)
         .write.mode("overwrite")
-        .option("parquet.block.size", str(int(rowgroup_bytes)))
+        .option("parquet.block.size", str(TILE_ROWGROUP_BYTES))
         .parquet(path)
     )
 
@@ -250,8 +250,7 @@ def _dup_flags(seg, c_tus, h, pay_arrays, r_us):
     return dup
 
 
-def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
-                 count_col):
+def _make_kernel(paths, all_cols, payload_cols):
     """Build the per-file mapInPandas kernel. ``paths`` is captured in
     the closure (one broadcast-pickled list; fine into the 100k-file
     range)."""
@@ -284,8 +283,8 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
             pdf = rb.to_pandas()
             if not len(pdf):
                 continue
-            site = pdf[site_col].to_numpy()
-            tus = _tus(pdf[time_col])
+            site = pdf[SITE_COL].to_numpy()
+            tus = _tus(pdf[TIME_COL])
 
             # --- layout contract validation (loud, names the file) ---
             if len(site) > 1:
@@ -295,7 +294,7 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
                 ).any():
                     raise ValueError(
                         f"scan_local layout violation in {path}: rows are "
-                        f"not sorted by ({site_col}, {time_col})"
+                        f"not sorted by ({SITE_COL}, {TIME_COL})"
                     )
             if last_site is not None and (
                 site[0] < last_site
@@ -314,8 +313,8 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
                 comb = pd.concat([carry, pdf], ignore_index=True)
             else:
                 comb = pdf.reset_index(drop=True)
-            c_site = comb[site_col].to_numpy()
-            c_tus = _tus(comb[time_col])
+            c_site = comb[SITE_COL].to_numpy()
+            c_tus = _tus(comb[TIME_COL])
             n = len(comb)
 
             # contiguous site runs over carry+batch
@@ -325,7 +324,7 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
             seg = np.cumsum(seg)
 
             # prev_count: shift within runs
-            cnt = comb[count_col].to_numpy()
+            cnt = comb[COUNT_COL].to_numpy()
             prev_cnt = np.empty(n, dtype=object)
             prev_cnt[0] = None
             if n > 1:
@@ -371,7 +370,7 @@ def _make_kernel(paths, all_cols, payload_cols, site_col, time_col,
                     sub = comb.iloc[ti]
                     tie[ti] = (
                         sub.groupby(
-                            [sub[site_col], pd.Series(c_tus[ti], index=sub.index)]
+                            [sub[SITE_COL], pd.Series(c_tus[ti], index=sub.index)]
                             + [sub[c] for c in payload_cols],
                             sort=False,
                             dropna=False,
@@ -441,7 +440,7 @@ def _maybe_truncated(stat) -> bool:
     return False
 
 
-def _make_boundary_kernel(paths, all_cols, site_col, time_col):
+def _make_boundary_kernel(paths, all_cols):
     """Per-file kernel emitting ONLY the zone rows the stitch and the
     duplicate zone fix need: for every (site, file), rows within
     29 min of the site's in-file head or tail. Reads row-group
@@ -485,7 +484,7 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
             return None
         names = [md.schema.column(i).path for i in range(md.num_columns)]
         try:
-            si, ti = names.index(site_col), names.index(time_col)
+            si, ti = names.index(SITE_COL), names.index(TIME_COL)
         except ValueError:
             si = -1
         stats = []
@@ -525,8 +524,8 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
             groups = sorted(bset)
         tbl = pf.read_row_groups(groups, columns=list(all_cols))
         pdf = tbl.to_pandas()
-        site = pdf[site_col].to_numpy()
-        tus = _tus(pdf[time_col])
+        site = pdf[SITE_COL].to_numpy()
+        tus = _tus(pdf[TIME_COL])
 
         # exact per-site head/tail: the true head/tail rows are in the
         # boundary row groups by construction
@@ -560,8 +559,8 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
             if extras:
                 t2 = pf.read_row_groups(sorted(extras), columns=list(all_cols))
                 pdf = pa.concat_tables([tbl, t2]).to_pandas()
-                site = pdf[site_col].to_numpy()
-                tus = _tus(pdf[time_col])
+                site = pdf[SITE_COL].to_numpy()
+                tus = _tus(pdf[TIME_COL])
 
         # layout contract: site keys must be non-null (ADVICE r14 —
         # groupby(dropna=True) silently drops a null site from h_us
@@ -571,7 +570,7 @@ def _make_boundary_kernel(paths, all_cols, site_col, time_col):
         if pd.isna(site).any():
             raise ValueError(
                 f"scan_local layout violation in {path}: null "
-                f"{site_col} values — the layout contract requires "
+                f"{SITE_COL} values — the layout contract requires "
                 "non-null site keys"
             )
         # exact zone predicate, floor-second arithmetic == Spark's
@@ -595,9 +594,6 @@ def scan_local_raw_flags(
     spark: SparkSession,
     path: str,
     payload_cols,
-    site_col: str = "site_no",
-    time_col: str = "time",
-    count_col: str = "count",
 ) -> DataFrame:
     """Raw columns + ``prev_count`` + ``is_duplicate`` over a
     layout-contracted parquet dataset at ``path`` — row-for-row what
@@ -611,7 +607,7 @@ def scan_local_raw_flags(
         raise ValueError(f"scan_local: no parquet files under {path}")
     n_files = len(files)
     all_cols = [f.name for f in src.schema.fields]
-    missing = [c for c in (site_col, time_col, count_col, *payload_cols)
+    missing = [c for c in (SITE_COL, TIME_COL, COUNT_COL, *payload_cols)
                if c not in all_cols]
     if missing:
         raise ValueError(f"scan_local: columns {missing} absent from {path}")
@@ -627,13 +623,11 @@ def scan_local_raw_flags(
             T.StructField("__tie", T.IntegerType()),
         ]
     )
-    kernel = _make_kernel(
-        files, all_cols, list(payload_cols), site_col, time_col, count_col,
-    )
+    kernel = _make_kernel(files, all_cols, list(payload_cols))
     ids = spark.range(0, n_files, 1, numPartitions=n_files)
     main = ids.mapInPandas(kernel, schema=out_schema)
 
-    secs = F.col(time_col).cast("long")
+    secs = F.col(TIME_COL).cast("long")
 
     def _persist(df):
         try:  # lazy import: plans imports operators at package load
@@ -657,16 +651,16 @@ def scan_local_raw_flags(
             T.StructField("__ts", T.LongType()),
         ]
     )
-    bkernel = _make_boundary_kernel(files, all_cols, site_col, time_col)
+    bkernel = _make_boundary_kernel(files, all_cols)
     zrows = _persist(ids.mapInPandas(bkernel, schema=zschema))
-    agg = zrows.groupBy(site_col, "__fp").agg(
-        F.min(time_col).alias("__head_t"),
-        F.max(time_col).alias("__tail_t"),
-        F.max_by(count_col, secs).alias("__tail_count"),
+    agg = zrows.groupBy(SITE_COL, "__fp").agg(
+        F.min(TIME_COL).alias("__head_t"),
+        F.max(TIME_COL).alias("__tail_t"),
+        F.max_by(COUNT_COL, secs).alias("__tail_count"),
     )
-    w_site = Window.partitionBy(site_col).orderBy("__head_t")
+    w_site = Window.partitionBy(SITE_COL).orderBy("__head_t")
     patch = agg.select(
-        site_col,
+        SITE_COL,
         "__fp",
         "__head_t",
         "__tail_t",
@@ -685,8 +679,8 @@ def scan_local_raw_flags(
 
     stitched = (
         main.join(
-            F.broadcast(patch.select(site_col, "__fp", "__prev_tail_count")),
-            [site_col, "__fp"],
+            F.broadcast(patch.select(SITE_COL, "__fp", "__prev_tail_count")),
+            [SITE_COL, "__fp"],
             "left",
         )
         .withColumn(
@@ -715,20 +709,20 @@ def scan_local_raw_flags(
     R = DUP_WINDOW_SECS
     pay = F.struct(*[F.col(c) for c in payload_cols])
     dupw = Window.partitionBy(
-        F.xxhash64(site_col, *payload_cols), site_col
-    ).orderBy(pay, time_col)
+        F.xxhash64(SITE_COL, *payload_cols), SITE_COL
+    ).orderBy(pay, TIME_COL)
     prev_pay = F.lag(pay).over(dupw)
     fix = (
         zrows.withColumn(
-            "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag(time_col).over(dupw))
+            "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag(TIME_COL).over(dupw))
         )
         .withColumn(
             "__zdup",
             F.col("__pt").isNotNull()
-            & (F.col("__pt") >= F.col(time_col) - F.expr("INTERVAL 29 MINUTE")),
+            & (F.col("__pt") >= F.col(TIME_COL) - F.expr("INTERVAL 29 MINUTE")),
         )
         .where(secs <= F.col("__hs") + R)  # verdicts used for head zone only
-        .groupBy(site_col, time_col, pay.alias("__pay"))
+        .groupBy(SITE_COL, TIME_COL, pay.alias("__pay"))
         .agg(
             F.count(F.lit(1)).alias("__k"),
             F.sum(F.col("__zdup").cast("int")).alias("__ndup"),
@@ -737,8 +731,8 @@ def scan_local_raw_flags(
     m_pay = F.struct(*[stitched[c] for c in payload_cols])
     joined = stitched.join(
         F.broadcast(fix),
-        (stitched[site_col] == fix[site_col])
-        & (stitched[time_col] == fix[time_col])
+        (stitched[SITE_COL] == fix[SITE_COL])
+        & (stitched[TIME_COL] == fix[TIME_COL])
         & m_pay.eqNullSafe(fix["__pay"]),
         "left",
     )

@@ -308,8 +308,7 @@ def q_asof_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="ts",
         values=["value"],
-        direction="backward",
-        suffix="_last_purchase",
+        sides={"_last_purchase": ("backward", False)},
     )
     return out.select(
         "event_id",
@@ -341,8 +340,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="ts",
         values=["value"],
-        direction="forward",
-        suffix="_next_purchase",
+        sides={"_next_purchase": ("forward", False)},
     )
     return out.select(
         "event_id", "user_id", F.col("value_next_purchase").alias("next_purchase_value")

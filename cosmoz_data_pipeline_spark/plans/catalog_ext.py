@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .. import profile
 from ..functions import similarity as sim
 from ..functions import text as tx
+from ..functions.similarity import EMBED_DIM
 from ..profile import IdStats, id_stats, table_fingerprint
 from ..sources.tables import load_table
 from .registry import REGISTRY, register, release_persists, scoped_persist
@@ -33,7 +34,6 @@ from .registry import REGISTRY, register, release_persists, scoped_persist
 MINHASH_K = 12
 LSH_BANDS = 4
 LSH_ROWS = 3
-EMBED_DIM = 64  # embeddings-table vector width (TESTDATA.md)
 # Below this frontier size the components fix-point probes convergence
 # only every 2nd superstep (see q_dedup_components): the probe's
 # driver round-trip outweighs the risk of one extra cheap superstep.
@@ -124,8 +124,8 @@ def _emb_stats(spark: SparkSession, sf_dir: str, fp: tuple | None = None) -> IdS
     return id_stats(spark, sf_dir, "embeddings", "vec_id", fp)
 
 
-# The one corpus-stat cache is profile.id_stats'. bench.py and
-# perfbench clear it under this older name, so the name stays.
+# The one corpus-stat cache is profile.id_stats'. perfbench clears it
+# under this older name, so the name stays.
 _AUG_OFF = profile._ID_STATS
 
 
@@ -595,17 +595,13 @@ def _simhash_blocks(wide: bool) -> tuple[list, int]:
     return blocks, 5
 
 
-def _simhash_band_rows(
-    sigs: DataFrame, n_docs: int, wide: bool | None = None
-) -> DataFrame:
+def _simhash_band_rows(sigs: DataFrame, n_docs: int) -> DataFrame:
     """(doc_id, band_idx, band_val) rows from the Manku multi-block
     scheme — one posexplode of the C(b, b-m) combo keys per signature
     row."""
     from itertools import combinations
 
-    if wide is None:
-        wide = profile.simhash_wide(n_docs)
-    blocks, m = _simhash_blocks(wide)
+    blocks, m = _simhash_blocks(profile.simhash_wide(n_docs))
     keys = []
     for combo in combinations(range(len(blocks)), m):
         k = None
@@ -620,12 +616,10 @@ def _simhash_band_rows(
     )
 
 
-def _simhash_band_join(
-    sigs: DataFrame, n_docs: int, wide: bool | None = None
-) -> DataFrame:
+def _simhash_band_join(sigs: DataFrame, n_docs: int) -> DataFrame:
     """(doc_a, doc_b) rows of the band-key self equi-join, before the
     distinct; one row per shared (band_idx, band_val)."""
-    bands = _simhash_band_rows(sigs, n_docs, wide)
+    bands = _simhash_band_rows(sigs, n_docs)
     a, b = bands.alias("a"), bands.alias("b")
     if profile.band_shj(n_docs):
         b = b.hint("shuffle_hash")  # physical strategy only: same pairs
@@ -637,9 +631,7 @@ def _simhash_band_join(
     ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
 
 
-def _simhash_combo_cands(
-    sigs: DataFrame, n_docs: int, wide: bool | None = None
-) -> DataFrame:
+def _simhash_combo_cands(sigs: DataFrame, n_docs: int) -> DataFrame:
     """Distinct (doc_a, doc_b) candidates from the Manku WWW'07
     multi-block blocking over a (doc_id, s0..s3) SimHash table, one
     equi-join on (band_idx, band_val). The block scheme is
@@ -647,11 +639,10 @@ def _simhash_combo_cands(
     are complete for Hamming <= 3 and the verify filter is exact, so
     the final pair set is identical whichever is active (pinned by
     tests/test_lsh_properties.py + tests/test_simhash_wide_blocks.py).
-    ``wide`` overrides the threshold for tests. The join-then-distinct
-    shape beat a grouped pair expansion at x1000
+    The join-then-distinct shape beat a grouped pair expansion at x1000
     (SIMHASH_PREAGG_AB.json) and a verify fused into the band rows
     (SIMHASH_FUSED_AB.json: a wall tie for +68 % shuffle bytes)."""
-    return _simhash_band_join(sigs, n_docs, wide).distinct()
+    return _simhash_band_join(sigs, n_docs).distinct()
 
 
 @register(
@@ -2293,21 +2284,16 @@ JOIN LATERAL (SELECT unnest(generate_series(1, hdr.b0 % 4 + 1)) AS frame_idx) t 
     "column is header-decoded (n_bytes/mode/width) and expanded to one "
     "row per sampled frame — real schema, partitioning, batch shape "
     "and variable fan-out, the exact shape an ffmpeg/PIL decode stage "
-    "has. The codec is a feature flag — spark.cosmoz.multimodal.codec="
-    "stub (default: 16-byte deterministic fake payload, THIS oracle "
-    "checks it arithmetically), =ppm (round 7: the media column is a "
-    "real binary P6 PPM image and the decode is a real pure-Python "
-    "header/pixel parse — oracle-gated separately as "
-    "x_multimodal_decode_ppm), or =pil (real Pillow decode of the same "
-    "PPM bytes; refuses loudly when Pillow is absent rather than "
-    "silently falling back, so a deployment that asked for real "
-    "decoding cannot get fake frames).",
+    "has. The codec is a deterministic stub (a 16-byte md5 payload "
+    "whose header byte picks mode, width and 1-4 frames), which THIS "
+    "oracle checks arithmetically. The same batch loop runs a real "
+    "pure-Python P6 PPM decode in x_multimodal_decode_ppm, oracle-gated "
+    "separately; only the per-row decoder differs.",
 )
 def q_multimodal_decode_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    codec = spark.conf.get("spark.cosmoz.multimodal.codec", "stub")
-    if codec not in ("stub", "ppm", "pil"):
-        raise ValueError(f"unknown multimodal codec {codec!r} (stub|ppm|pil)")
-    return _decode_frames(spark, sf_dir, codec)
+    docs = load_table(spark, sf_dir, "documents")
+    media = docs.select("doc_id", F.unhex(F.md5("text")).alias("media"))
+    return _decode_frames(media, _stub_frames)
 
 
 _FRAMES_SCHEMA = (
@@ -2375,78 +2361,28 @@ def parse_p6(data: bytes) -> tuple[int, int, bytes]:
     return w, h, pix
 
 
-def _decode_frames(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
+def _stub_frames(media: bytes) -> list[tuple[str, int, int]]:
+    """Stub codec: header byte b0 of the 16 md5 bytes gives the mode,
+    the width and b0 % 4 + 1 frames, frame k's byte is media[k]."""
+    b0 = media[0]
+    mode, width = "RGB" if b0 < 128 else "L", 16 + (b0 % 8) * 16
+    return [(mode, width, media[k]) for k in range(1, b0 % 4 + 2)]
+
+
+def _ppm_frames(media: bytes) -> list[tuple[str, int, int]]:
+    """REAL decode, no external libs: parse_p6 recovers w/h/pixels from
+    the bytes alone. PPM is single-frame and P6 is 3-channel by spec,
+    so the fan-out is 1 row; the variable-fan-out shape is pinned by
+    the stub codec's oracle."""
+    w, _h, pix = parse_p6(media)
+    return [("RGB", w, pix[0])]
+
+
+def _decode_frames(media_df: DataFrame, frames_of) -> DataFrame:
+    """(doc_id, media) → one row per frame that ``frames_of(media)``
+    yields as (mode, width, frame_byte), in one Arrow-batched
+    mapInPandas."""
     import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    if codec == "pil":
-        try:
-            import PIL  # noqa: F401
-        except ImportError as exc:
-            raise ImportError(
-                "spark.cosmoz.multimodal.codec=pil requires Pillow, which is "
-                "not installed in this environment; use codec=ppm for a real "
-                "decode without Pillow, or unset the conf for the stub "
-                "codec (the oracle-checked default)"
-            ) from exc
-
-        # REAL decode path (requires Pillow on executors): same Arrow
-        # mapInPandas plumbing and output schema; the media bytes are
-        # the same valid PPM images the ppm codec parses (Pillow reads
-        # PPM natively), so header/mode/width come from the actual
-        # image and frames from ImageSequence.
-        def decode_and_sample(batches):
-            import io
-
-            from PIL import Image, ImageSequence
-
-            for pdf in batches:
-                out = {k: [] for k in
-                       ("doc_id", "n_bytes", "header_byte", "mode", "width",
-                        "frame_idx", "frame_byte")}
-                for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-                    img = Image.open(io.BytesIO(media))
-                    for k, frame in enumerate(ImageSequence.Iterator(img), 1):
-                        out["doc_id"].append(doc_id)
-                        out["n_bytes"].append(len(media))
-                        out["header_byte"].append(media[0])
-                        out["mode"].append(frame.mode)
-                        out["width"].append(frame.width)
-                        out["frame_idx"].append(k)
-                        out["frame_byte"].append(frame.tobytes()[0])
-                yield pd.DataFrame(out).astype(
-                    {c: "int64" for c in out if c != "mode"}
-                )
-
-        return _ppm_media(docs).mapInPandas(decode_and_sample, _FRAMES_SCHEMA)
-
-    if codec == "ppm":
-        # REAL decode, no external libs: parse_p6 recovers w/h/pixels
-        # from the bytes alone. PPM is single-frame, so the fan-out is
-        # 1 row; the variable-fan-out shape is still pinned by the
-        # stub codec's oracle.
-        def decode_and_sample(batches):
-            for pdf in batches:
-                out = {k: [] for k in
-                       ("doc_id", "n_bytes", "header_byte", "mode", "width",
-                        "frame_idx", "frame_byte")}
-                for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-                    w, h, pix = parse_p6(media)
-                    out["doc_id"].append(doc_id)
-                    out["n_bytes"].append(len(media))
-                    out["header_byte"].append(media[0])
-                    out["mode"].append("RGB")  # P6 is 3-channel by spec
-                    out["width"].append(w)
-                    out["frame_idx"].append(1)
-                    out["frame_byte"].append(pix[0])
-                yield pd.DataFrame(out).astype(
-                    {c: "int64" for c in out if c != "mode"}
-                )
-
-        return _ppm_media(docs).mapInPandas(decode_and_sample, _FRAMES_SCHEMA)
-
-    with_bin = docs.select("doc_id", F.unhex(F.md5("text")).alias("media"))
 
     def decode_and_sample(batches):
         for pdf in batches:
@@ -2454,20 +2390,19 @@ def _decode_frames(spark: SparkSession, sf_dir: str, codec: str) -> DataFrame:
                    ("doc_id", "n_bytes", "header_byte", "mode", "width",
                     "frame_idx", "frame_byte")}
             for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-                b0 = media[0]
-                for k in range(1, b0 % 4 + 2):
+                for k, (mode, width, frame_byte) in enumerate(frames_of(media), 1):
                     out["doc_id"].append(doc_id)
                     out["n_bytes"].append(len(media))
-                    out["header_byte"].append(b0)
-                    out["mode"].append("RGB" if b0 < 128 else "L")
-                    out["width"].append(16 + (b0 % 8) * 16)
+                    out["header_byte"].append(media[0])
+                    out["mode"].append(mode)
+                    out["width"].append(width)
                     out["frame_idx"].append(k)
-                    out["frame_byte"].append(media[k])
+                    out["frame_byte"].append(frame_byte)
             yield pd.DataFrame(out).astype(
                 {c: "int64" for c in out if c != "mode"}
             )
 
-    return with_bin.mapInPandas(decode_and_sample, _FRAMES_SCHEMA)
+    return media_df.mapInPandas(decode_and_sample, _FRAMES_SCHEMA)
 
 
 @register(
@@ -2491,9 +2426,9 @@ SELECT doc_id,
        (strpos('0123456789abcdef', substr(h1, 3, 1)) - 1) * 16
          + (strpos('0123456789abcdef', substr(h1, 4, 1)) - 1) AS frame_byte
 FROM g""",
-    doc="The ppm codec path of x_multimodal_decode_frames as its own "
-    "oracle-gated query (VERDICT r6 task 4: execute a REAL decode, not "
-    "a stub hash). The media column is a valid binary P6 PPM built "
+    doc="x_multimodal_decode_frames' batch loop with a REAL decoder "
+    "(VERDICT r6 task 4: execute a real decode, not a stub hash). The "
+    "media column is a valid binary P6 PPM built "
     "with JVM expressions; the Arrow mapInPandas stage recovers "
     "width/height/pixels by genuinely parsing the bytes (parse_p6: "
     "magic, whitespace/comment-tolerant header, maxval, payload bounds "
@@ -2506,7 +2441,7 @@ FROM g""",
     "tests/test_multimodal_codec.py.",
 )
 def q_multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _decode_frames(spark, sf_dir, "ppm")
+    return _decode_frames(_ppm_media(load_table(spark, sf_dir, "documents")), _ppm_frames)
 
 
 # -------------------------------------------------- scale-sweep probes

@@ -72,6 +72,27 @@ def scale_shuffle_partitions(spark: SparkSession, sf_dir: str, path: str) -> int
     return want
 
 
+def _runtime_confs() -> tuple[tuple[str, str], ...]:
+    """The runtime-settable SQL confs every session gets: set at build
+    time by ``build_session`` and on a live session by
+    ``harden_session``."""
+    return (
+        ("spark.sql.session.timeZone", "UTC"),
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.sql.adaptive.enabled", "true"),
+        # keep AQE from coalescing small-benchmark shuffles below the
+        # key parallelism (8-22 sites) — at production scale partitions
+        # far exceed these floors, so the settings are inert there
+        ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb"),
+        ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4mb"),
+        # split small file scans into >= core-count partitions (a
+        # scan-time split, NOT a shuffle): a 1-file dimension read
+        # otherwise serializes fan-out stages (explode) behind 1 task.
+        # At production scale input splits >> cores and this is inert.
+        ("spark.sql.files.minPartitionNum", str(default_parallelism())),
+    )
+
+
 def build_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
@@ -83,28 +104,16 @@ def build_session(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for key, value in _runtime_confs():
+        builder = builder.config(key, value)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # baseline for scale_shuffle_partitions: never size below the
         # caller's explicit choice, always return to it on small dirs
         .config("spark.cosmoz.shuffle.floor", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # keep AQE from coalescing small-benchmark shuffles below the
-        # key parallelism (8-22 sites) — at production scale partitions
-        # far exceed these floors, so the settings are inert there
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4mb")
-        # split small file scans into >= core-count partitions (a
-        # scan-time split, NOT a shuffle): a 1-file dimension read
-        # otherwise serializes fan-out stages (explode) behind 1 task.
-        # At production scale input splits >> cores and this is inert.
-        .config("spark.sql.files.minPartitionNum", str(cpus))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Parquet timestamps as TIMESTAMP_MICROS, not the deprecated
         # INT96 default: µs is Spark's own internal precision, every
         # engine (DuckDB, pyarrow) reads it natively, and pyarrow's
@@ -146,20 +155,13 @@ def build_session(
 
 
 def harden_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally-created session.
+    """Apply ``_runtime_confs`` to an externally-created session.
 
     The correctness driver builds its own SparkSession; these confs
     are all runtime-settable and required for deterministic,
     oracle-comparable results.
     """
-    for key, value in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb"),
-        ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4mb"),
-        ("spark.sql.files.minPartitionNum", str(default_parallelism())),
-    ):
+    for key, value in _runtime_confs():
         try:
             spark.conf.set(key, value)
         except Exception:

@@ -24,19 +24,22 @@ _DATA_LINE = r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}:\d{2};"
 
 NEST_BASE = "http://nmdb.eu/nest/draw_graph.php"
 
+#: the raw-line column :func:`parse_nmdb_lines` parses
+LINE_COL = "line"
 
-def parse_nmdb_lines(lines: DataFrame, column: str = "line") -> DataFrame:
+
+def parse_nmdb_lines(lines: DataFrame) -> DataFrame:
     """Parse `ts;value` records out of raw NEST response lines.
 
     Preamble/garbage lines (no leading timestamp) are dropped — the
     reference's "skip until RCORR_E" loop (data_getter.py:104-113);
     `null` markers survive as NULL intensity with a flag
     (data_getter.py:116-119 skips them; we keep the marker so callers
-    can choose). Columns other than ``column`` pass through (e.g. the
+    can choose). Columns other than ``line`` pass through (e.g. the
     station tag a fetcher attached).
     """
-    c = F.col(column)
-    passthrough = [col for col in lines.columns if col != column]
+    c = F.col(LINE_COL)
+    passthrough = [col for col in lines.columns if col != LINE_COL]
     parsed = lines.where(c.rlike(_DATA_LINE)).select(
         *passthrough,
         F.split(c, ";").getItem(0).alias("ts_str"),

@@ -21,25 +21,29 @@ pipeline/raw->level1.sql:69-70). Spark gives both:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import profile
 
+# The reference's keys and its 24 h event-time watermark
+# (nmdb/config.py:12-13): properties of the pipeline, not of a call.
+TIME_COL = "time"
+PARTITION_COL = "site_no"
+WATERMARK = "24 hours"
+
 
 def incremental_overwrite(
     transformed: DataFrame,
     sink_dir: str,
     since: str,
-    time_col: str = "time",
-    partition_col: str = "site_no",
 ) -> None:
-    """Write ``transformed`` rows with ``time_col >= since`` (floored
-    to the day) into a parquet table partitioned by
-    ``(partition_col, p_date)``, overwriting ONLY the day partitions
-    present in this batch (dynamic mode).
+    """Write ``transformed`` rows with ``time >= since`` (floored to
+    the day) into a parquet table partitioned by ``(site_no,
+    p_date)``, overwriting ONLY the day partitions present in this
+    batch (dynamic mode).
 
     The reference's incremental run point-overwrites the recomputed
     window (InfluxDB upserts on (time, tags); DROP SERIES is an
@@ -65,15 +69,15 @@ def incremental_overwrite(
     """
     day_start = F.to_date(F.lit(since).cast("timestamp_ntz"))
     (
-        transformed.where(F.to_date(time_col) >= day_start)
-        .withColumn("p_date", F.to_date(time_col))
-        .repartition(F.col(partition_col), F.col("p_date"))
+        transformed.where(F.to_date(TIME_COL) >= day_start)
+        .withColumn("p_date", F.to_date(TIME_COL))
+        .repartition(F.col(PARTITION_COL), F.col("p_date"))
         .write.mode("overwrite")
         # per-write option, not the session-global conf: concurrent
         # overwrites on the same SparkSession must not race on a
         # mutated spark.sql.sources.partitionOverwriteMode
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col, "p_date")
+        .partitionBy(PARTITION_COL, "p_date")
         .parquet(sink_dir)
     )
 
@@ -92,14 +96,13 @@ def stream_dedup_to_sink(
     checkpoint_dir: str,
     schema,
     dedup_cols: Sequence[str],
-    time_col: str = "time",
-    watermark: str = "24 hours",
-    transform: Callable[[DataFrame], DataFrame] | None = None,
+    time_col: str = TIME_COL,
 ) -> None:
-    """Structured-Streaming ingest: parquet append dir → watermark →
-    dropDuplicatesWithinWatermark → (optional batch transform) →
-    parquet sink, processing all available data then stopping
-    (Trigger.AvailableNow — the cron-style incremental run, ST1).
+    """Structured-Streaming ingest: parquet append dir → 24 h
+    watermark on ``time_col`` (``WATERMARK``) →
+    dropDuplicatesWithinWatermark on ``dedup_cols`` → parquet sink,
+    processing all available data then stopping (Trigger.AvailableNow
+    — the cron-style incremental run, ST1).
 
     The duplicate state is bounded by the watermark, so executor
     memory is O(keys within watermark) however large the backlog —
@@ -128,13 +131,12 @@ def stream_dedup_to_sink(
         # watermarks require TIMESTAMP (LTZ); under the UTC session tz
         # the NTZ→LTZ cast is a no-op rebase
         .withColumn(time_col, F.col(time_col).cast("timestamp"))
-        .withWatermark(time_col, watermark)
+        .withWatermark(time_col, WATERMARK)
         .dropDuplicatesWithinWatermark(list(dedup_cols))
     )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        out = transform(batch) if transform is not None else batch
-        out.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
+        batch.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
     # the state partition count is frozen into the checkpoint at its
     # first micro-batch: size it from the source bytes (see

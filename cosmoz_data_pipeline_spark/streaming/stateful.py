@@ -22,7 +22,10 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame
 
-MAX_GAP_SECONDS = 24 * 3600  # nmdb/config.py:12-13
+# the reference's validity band and staleness exemption
+# (nmdb/config.py:12-13)
+LOWER, UPPER = 0.8, 1.2
+MAX_GAP_SECONDS = 24 * 3600
 
 
 def validate_sequential(
@@ -31,17 +34,14 @@ def validate_sequential(
     time_col: str,
     value_col: str,
     order_cols: Iterable[str] = (),
-    lower: float = 0.8,
-    upper: float = 1.2,
-    max_gap_seconds: int = MAX_GAP_SECONDS,
 ) -> DataFrame:
     """Append ``valid: boolean`` and ``last_valid: double`` per row.
 
     Per key, ordered by (time_col, *order_cols):
     - first row: valid;
-    - gap since last valid row > max_gap_seconds: valid (staleness
+    - gap since last valid row > MAX_GAP_SECONDS: valid (staleness
       exemption — the reference skips the ±20 % check);
-    - else valid iff lower·last_valid <= value <= upper·last_valid.
+    - else valid iff LOWER·last_valid <= value <= UPPER·last_valid.
     Valid rows become the new ``last_valid`` reference.
     """
     from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
@@ -66,10 +66,10 @@ def validate_sequential(
         for t, v in zip(times, values):
             if last_val is None:
                 ok = True
-            elif t - last_time > max_gap_seconds:
+            elif t - last_time > MAX_GAP_SECONDS:
                 ok = True
             else:
-                ok = lower * last_val <= v <= upper * last_val
+                ok = LOWER * last_val <= v <= UPPER * last_val
             valid.append(ok)
             last_vals.append(v if ok else last_val)
             if ok:
@@ -86,9 +86,6 @@ def validate_sequential_stream(
     key: str,
     time_col: str,
     value_col: str,
-    lower: float = 0.8,
-    upper: float = 1.2,
-    max_gap_seconds: int = MAX_GAP_SECONDS,
 ) -> DataFrame:
     """The STREAMING form of :func:`validate_sequential`:
     ``applyInPandasWithState`` carries (last_valid, last_valid_time)
@@ -133,10 +130,10 @@ def validate_sequential_stream(
             for t, v in zip(times, values):
                 if last_val is None:
                     ok = True
-                elif t - last_time > max_gap_seconds:
+                elif t - last_time > MAX_GAP_SECONDS:
                     ok = True
                 else:
-                    ok = lower * last_val <= v <= upper * last_val
+                    ok = LOWER * last_val <= v <= UPPER * last_val
                 valid.append(ok)
                 last_vals.append(v if ok else last_val)
                 if ok:

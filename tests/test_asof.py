@@ -9,7 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from cosmoz_data_pipeline_spark.operators.asof import asof_join, asof_join_both
+from cosmoz_data_pipeline_spark.operators.asof import asof_join
 
 
 def _ts(h: int, m: int = 0) -> dt.datetime:
@@ -32,7 +32,7 @@ def test_backward_inclusive(spark):
     left, right = _frames(spark)
     out = asof_join(
         left, right, on=["site"], left_time="t", right_time="t",
-        values=["v"], direction="backward", suffix="_bw",
+        values=["v"], sides={"_bw": ("backward", False)},
     )
     got = {(r.site, r.t.hour): r.v_bw for r in out.collect()}
     # t=1h → last at-or-before is 0h; t=5h ties exactly → inclusive; t=9h → 7h
@@ -43,7 +43,7 @@ def test_backward_strict(spark):
     left, right = _frames(spark)
     out = asof_join(
         left, right, on=["site"], left_time="t", right_time="t",
-        values=["v"], direction="backward", suffix="_bw", strict=True,
+        values=["v"], sides={"_bw": ("backward", True)},
     )
     got = {(r.site, r.t.hour): r.v_bw for r in out.collect()}
     assert got[(1, 5)] == 10.0  # tie excluded under strict <
@@ -53,7 +53,7 @@ def test_forward_inclusive(spark):
     left, right = _frames(spark)
     out = asof_join(
         left, right, on=["site"], left_time="t", right_time="t",
-        values=["v"], direction="forward", suffix="_fw",
+        values=["v"], sides={"_fw": ("forward", False)},
     )
     got = {(r.site, r.t.hour): r.v_fw for r in out.collect()}
     assert got == {(1, 1): 50.0, (1, 5): 50.0, (1, 9): None, (2, 3): 40.0}
@@ -64,18 +64,19 @@ def test_single_shuffle_plan(spark):
     left, right = _frames(spark)
     out = asof_join(
         left, right, on=["site"], left_time="t", right_time="t",
-        values=["v"], direction="backward",
+        values=["v"], sides={"_asof": ("backward", False)},
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan  # no join operator anywhere
     assert plan.count("Exchange") <= 2  # union inputs share one hashpartition
 
 def test_both_directions_fused(spark):
-    """asof_join_both = backward asof_join + forward semantics, one
+    """Two sides in one call = backward + strict forward, one
     shuffle; forward side is tie-blind (safe behind backward coalesce)."""
     left, right = _frames(spark)
-    out = asof_join_both(
+    out = asof_join(
         left, right, on=["site"], left_time="t", right_time="t", values=["v"],
+        sides={"_bw": ("backward", False), "_fw": ("forward", True)},
     )
     got = {(r.site, r.t.hour): (r.v_bw, r.v_fw) for r in out.collect()}
     assert got[(1, 1)] == (10.0, 50.0)
@@ -121,7 +122,7 @@ def test_sparse_values_nulls_and_ties(spark, direction, strict):
         r.seq: r.v_asof
         for r in asof_join(
             left, right, on=["site_no"], left_time="time", right_time="time",
-            values=["v"], direction=direction, strict=strict,
+            values=["v"], sides={"_asof": (direction, strict)},
         ).collect()
     }
 

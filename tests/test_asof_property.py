@@ -13,7 +13,7 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from cosmoz_data_pipeline_spark.operators.asof import asof_join, asof_join_both
+from cosmoz_data_pipeline_spark.operators.asof import asof_join
 
 _BASE = dt.datetime(2021, 1, 1)
 
@@ -67,7 +67,7 @@ def test_asof_matches_bruteforce(spark, lf, rf, direction, strict):
 
     got = asof_join(
         left, right, on=["site"], left_time="t", right_time="t",
-        values=["v"], direction=direction, suffix="_x", strict=strict,
+        values=["v"], sides={"_x": (direction, strict)},
     ).collect()
     # row multiplicity must be preserved
     assert len(got) == len(left_rows)
@@ -84,8 +84,9 @@ def test_asof_matches_bruteforce(spark, lf, rf, direction, strict):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(lf=_frame, rf=_frame)
 def test_asof_both_matches_single_direction(spark, lf, rf):
-    """asof_join_both's backward side == asof_join backward; its
-    forward side == strict forward (tie-blind by design)."""
+    """A two-sided asof_join equals two one-sided calls: its backward
+    side == inclusive backward, its forward side == strict forward
+    (tie-blind by design), and both match the per-row scan."""
     left_rows = [(s, t) for (s, m), t in zip(lf, _mk([m for _, m in lf]))]
     right_rows = [
         (s, t, float(i)) for i, ((s, m), t) in enumerate(zip(rf, _mk([m for _, m in rf])))
@@ -93,10 +94,19 @@ def test_asof_both_matches_single_direction(spark, lf, rf):
     left = spark.createDataFrame(left_rows, "site int, t timestamp")
     right = spark.createDataFrame(right_rows, "site int, t timestamp, v double")
 
-    both = asof_join_both(
-        left, right, on=["site"], left_time="t", right_time="t", values=["v"],
+    kw = dict(on=["site"], left_time="t", right_time="t", values=["v"])
+    both = asof_join(
+        left, right, sides={"_bw": ("backward", False), "_fw": ("forward", True)}, **kw
     ).collect()
     assert len(both) == len(left_rows)
+    bw = {
+        (r.site, r.t): r.v_bw
+        for r in asof_join(left, right, sides={"_bw": ("backward", False)}, **kw).collect()
+    }
+    fw = {
+        (r.site, r.t): r.v_fw
+        for r in asof_join(left, right, sides={"_fw": ("forward", True)}, **kw).collect()
+    }
 
     exp_bw = _expected(left_rows, right_rows, "backward", strict=False)
     exp_fw = _expected(left_rows, right_rows, "forward", strict=True)
@@ -105,3 +115,9 @@ def test_asof_both_matches_single_direction(spark, lf, rf):
         want_bw, want_fw = exp_bw[key], exp_fw[key]
         assert (r.v_bw is None and want_bw is None) or r.v_bw in want_bw
         assert (r.v_fw is None and want_fw is None) or r.v_fw in want_fw
+        # equal to the one-sided calls wherever the pick is unique
+        # (among equal-time value rows any one is admissible)
+        if want_bw is None or len(want_bw) == 1:
+            assert r.v_bw == bw[(r.site, r.t)]
+        if want_fw is None or len(want_fw) == 1:
+            assert r.v_fw == fw[(r.site, r.t)]

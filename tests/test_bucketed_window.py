@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from cosmoz_data_pipeline_spark import profile
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
+from cosmoz_data_pipeline_spark.operators import bucketed_window
 from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_lag
 from cosmoz_data_pipeline_spark.operators.scan_local import write_time_tiled
 
@@ -42,10 +43,11 @@ def _ts(h, m=0, day=1):
     return dt.datetime(2021, 1, day, h, m)
 
 
-def test_bucketed_lag_matches_plain_window(spark):
+def test_bucketed_lag_matches_plain_window(spark, monkeypatch):
     # 20-min grid over 3 sites with gaps long enough to EMPTY whole
-    # buckets (bucket_secs=3600), plus null lagged values both
+    # buckets (BUCKET_SECS=3600), plus null lagged values both
     # mid-bucket and as a bucket tail
+    monkeypatch.setattr(bucketed_window, "BUCKET_SECS", 3600)
     rows = []
     for s in ("S1", "S2", "S3"):
         base = dt.datetime(2021, 1, 1)
@@ -59,25 +61,22 @@ def test_bucketed_lag_matches_plain_window(spark):
         "prev_count",
         F.lag("count").over(Window.partitionBy("site_no").orderBy("time")),
     )
-    buck = bucketed_lag(
-        df, ["site_no"], "time", ["count"], ["prev_count"], bucket_secs=3600
-    )
+    buck = bucketed_lag(df, ["site_no"], "time", ["count"], ["prev_count"])
     assert _rows(buck) == _rows(plain)
     assert sorted(buck.columns) == sorted(plain.columns)
 
 
-def test_bucketed_lag_tiny_buckets_every_row_a_boundary(spark):
+def test_bucketed_lag_tiny_buckets_every_row_a_boundary(spark, monkeypatch):
     # bucket width below the cadence: every bucket holds exactly one
     # row, so EVERY lag comes from the boundary chain
+    monkeypatch.setattr(bucketed_window, "BUCKET_SECS", 60)
     rows = [("A", _ts(0) + dt.timedelta(minutes=20 * i), i) for i in range(10)]
     df = spark.createDataFrame(rows, "site_no string, time timestamp, count int")
     plain = df.withColumn(
         "prev_count",
         F.lag("count").over(Window.partitionBy("site_no").orderBy("time")),
     )
-    buck = bucketed_lag(
-        df, ["site_no"], "time", ["count"], ["prev_count"], bucket_secs=60
-    )
+    buck = bucketed_lag(df, ["site_no"], "time", ["count"], ["prev_count"])
     assert _rows(buck) == _rows(plain)
 
 
@@ -86,7 +85,7 @@ def test_asof_both_bucketed_identity(spark):
     and rt == lt ties in both directions (visible backward, hidden
     forward) — the fused carry must reproduce every pick of a per-row
     scan."""
-    from cosmoz_data_pipeline_spark.operators.asof import asof_join_both
+    from cosmoz_data_pipeline_spark.operators.asof import asof_join
 
     base = dt.datetime(2021, 1, 1)
     probes = []
@@ -110,9 +109,9 @@ def test_asof_both_bucketed_identity(spark):
     right = spark.createDataFrame(
         vals, "site_no string, time timestamp, intensity double"
     )
-    out = asof_join_both(
+    out = asof_join(
         left, right, on=["site_no"], left_time="time", right_time="time",
-        values=["intensity"],
+        values=["intensity"], sides={"_bw": ("backward", False), "_fw": ("forward", True)},
     )
     got = {(r.site_no, r.seq): (r.intensity_bw, r.intensity_fw) for r in out.collect()}
 

@@ -14,31 +14,8 @@ from cosmoz_data_pipeline_spark.operators.rangejoin import banded_range_join
 
 def test_tokens_and_shingles(spark):
     df = spark.createDataFrame([("The quick  brown fox jumps",)], "text string")
-    row = df.select(
-        tx.tokens(F.col("text")).alias("toks"),
-        tx.word_shingles(tx.tokens(F.col("text"))).alias("sh"),
-    ).first()
+    row = df.select(tx.tokens(F.col("text")).alias("toks")).first()
     assert row.toks == ["the", "quick", "brown", "fox", "jumps"]
-    assert row.sh == ["the quick brown", "quick brown fox", "brown fox jumps"]
-    short = spark.createDataFrame([("one two",)], "text string")
-    assert short.select(
-        tx.word_shingles(tx.tokens(F.col("text"))).alias("sh")
-    ).first().sh == ["one two"]
-
-
-def test_minhash_identical_docs_agree(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, "alpha beta gamma delta epsilon zeta"),
-         (3, "totally different words entirely here now")],
-        "id int, text string",
-    )
-    sigs = df.select(
-        "id", tx.minhash_signature(tx.word_shingles(tx.tokens(F.col("text"))), 8).alias("sig")
-    ).collect()
-    by_id = {r.id: r.sig for r in sigs}
-    assert by_id[1] == by_id[2]
-    assert by_id[1] != by_id[3]
-    assert len(by_id[1]) == 8
 
 
 def test_jaccard_and_fingerprint(spark):

@@ -1,59 +1,26 @@
-"""Round 6 (VERDICT r5 task 6): the multimodal decode codec is a
-feature flag — ``spark.cosmoz.multimodal.codec`` — whose DEFAULT is
-the deterministic stub the DuckDB oracle checks; ``pil`` selects a
-real Pillow decode when the library exists and refuses loudly when it
-does not (no silent fake-frames fallback for a deployment that asked
-for real decoding)."""
+"""The multimodal decode queries: ``x_multimodal_decode_frames`` runs
+the deterministic stub codec the DuckDB oracle checks, and
+``x_multimodal_decode_ppm`` runs the same batch loop with a real P6
+PPM decoder."""
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
 import pytest
 
 SF = "/root/testdata/sf0.001"
 
 
-def _run(spark, sf_dir):
-    from cosmoz_data_pipeline_spark.plans import REGISTRY
-
-    return REGISTRY["x_multimodal_decode_frames"]
-
-
 def test_stub_is_default_and_oracle_checked(spark):
+    from cosmoz_data_pipeline_spark.plans import REGISTRY
     from tools.compare import compare, duckdb_connection
 
-    assert spark.conf.get("spark.cosmoz.multimodal.codec", "stub") == "stub"
-    q = _run(spark, SF)
-    con = duckdb_connection(SF)
-    ok, msg = compare(q.run(spark, SF), q.oracle, con)
+    q = REGISTRY["x_multimodal_decode_frames"]
+    ok, msg = compare(q.run(spark, SF), q.oracle, duckdb_connection(SF))
     assert ok, msg
 
 
-def test_pil_codec_requires_pillow(spark):
-    spark.conf.set("spark.cosmoz.multimodal.codec", "pil")
-    try:
-        if importlib.util.find_spec("PIL") is None:
-            with pytest.raises(ImportError, match="stub"):
-                _run(spark, SF).run(spark, SF)
-        else:  # container gained Pillow: the real path must at least plan
-            _run(spark, SF).run(spark, SF).schema
-    finally:
-        spark.conf.unset("spark.cosmoz.multimodal.codec")
-
-
-def test_unknown_codec_rejected(spark):
-    spark.conf.set("spark.cosmoz.multimodal.codec", "ffmpeg")
-    try:
-        with pytest.raises(ValueError, match="unknown multimodal codec"):
-            _run(spark, SF).run(spark, SF)
-    finally:
-        spark.conf.unset("spark.cosmoz.multimodal.codec")
-
-
 def test_ppm_codec_is_a_real_decode_matching_oracle(spark):
-    """Round 7 (VERDICT r6 task 4): with codec=ppm the media column is
+    """Round 7 (VERDICT r6 task 4): the ppm query's media column is
     a VALID binary P6 image and the mapInPandas stage genuinely parses
     it; the oracle predicts dimensions/bytes arithmetically, so this
     strict compare fails if the parser mis-tokenizes the header or
@@ -64,21 +31,6 @@ def test_ppm_codec_is_a_real_decode_matching_oracle(spark):
     q = REGISTRY["x_multimodal_decode_ppm"]
     ok, msg = compare(q.run(spark, SF), q.oracle, duckdb_connection(SF))
     assert ok, msg
-
-
-def test_ppm_flag_on_main_query_takes_real_path(spark):
-    """codec=ppm through the feature flag returns the same rows as the
-    dedicated tail query (one decode implementation, two entries)."""
-    from cosmoz_data_pipeline_spark.plans import REGISTRY
-
-    spark.conf.set("spark.cosmoz.multimodal.codec", "ppm")
-    try:
-        via_flag = REGISTRY["x_multimodal_decode_frames"].run(spark, SF)
-        direct = REGISTRY["x_multimodal_decode_ppm"].run(spark, SF)
-        assert via_flag.exceptAll(direct).count() == 0
-        assert direct.exceptAll(via_flag).count() == 0
-    finally:
-        spark.conf.unset("spark.cosmoz.multimodal.codec")
 
 
 def test_parse_p6_unit():

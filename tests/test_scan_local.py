@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
+from cosmoz_data_pipeline_spark.operators import scan_local
 from cosmoz_data_pipeline_spark.operators.scan_local import (
     DUP_WINDOW_SECS,
     TILE_ROWGROUP_BYTES,
@@ -217,7 +218,7 @@ def test_dup_flags_matches_real_hash_path():
     assert (a == b).all() and a.any()
 
 
-def test_scan_local_boundary_kernel_identity_and_pruning(spark, tmp_path):
+def test_scan_local_boundary_kernel_identity_and_pruning(spark, tmp_path, monkeypatch):
     """The boundary kernel (row-group-pruned zone read) vs the window
     shape: identical level1 rows on (a) the domain corpus at default
     row groups and (b) a tiny forced row-group size so each file holds
@@ -237,7 +238,8 @@ def test_scan_local_boundary_kernel_identity_and_pruning(spark, tmp_path):
         ("default", 8, TILE_ROWGROUP_BYTES), ("tiny", 2, 2048)
     ):
         path = str(tmp_path / f"sink_{tag}")
-        write_time_tiled(raw, path, n_files, rowgroup_bytes=rg_bytes)
+        monkeypatch.setattr(scan_local, "TILE_ROWGROUP_BYTES", rg_bytes)
+        write_time_tiled(raw, path, n_files)
         if tag == "tiny":
             nrg = [
                 pq.ParquetFile(f"{path}/{f}").metadata.num_row_groups
@@ -272,7 +274,7 @@ def test_boundary_kernel_truncation_guard_unit():
     )
 
 
-def test_boundary_kernel_degrades_on_truncatable_string_sites(spark, tmp_path):
+def test_boundary_kernel_degrades_on_truncatable_string_sites(spark, tmp_path, monkeypatch):
     """Integration: a sink whose string site keys are AT the
     truncation length must still produce rows identical to the window
     shape — the kernel degrades those files to whole-file reads rather
@@ -290,7 +292,8 @@ def test_boundary_kernel_degrades_on_truncatable_string_sites(spark, tmp_path):
     raw = _mini_raw(spark, rows, site_type="string")
     base = _rows(levels.raw_to_level1(raw, big=False))
     path = str(tmp_path / "trunc_sink")
-    write_time_tiled(raw, path, 3, rowgroup_bytes=2048)
+    monkeypatch.setattr(scan_local, "TILE_ROWGROUP_BYTES", 2048)
+    write_time_tiled(raw, path, 3)
     got = _rows(levels.raw_to_level1_scan_local(spark, path))
     assert base and got == base
 

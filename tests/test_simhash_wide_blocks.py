@@ -46,13 +46,15 @@ def _verified_pairs(cand, sigs):
     return {(r.doc_a, r.doc_b) for r in rows}
 
 
-def test_wide_and_narrow_blockings_verify_to_identical_pairs(spark, sf_dir):
+def test_wide_and_narrow_blockings_verify_to_identical_pairs(spark, sf_dir, monkeypatch):
     try:
         sigs = scoped_persist(tx.simhash64_bands(_docs_aug(spark, sf_dir)))
         n = _docs_stats(spark, sf_dir).aug_n
         assert n < SIMHASH_WIDE_N  # test corpus picks the narrow scheme
-        narrow = _verified_pairs(_simhash_combo_cands(sigs, n, wide=False), sigs)
-        wide = _verified_pairs(_simhash_combo_cands(sigs, n, wide=True), sigs)
+        narrow = _verified_pairs(_simhash_combo_cands(sigs, n), sigs)
+        monkeypatch.setattr(profile, "SIMHASH_WIDE_N", 0)
+        assert profile.simhash_wide(n)
+        wide = _verified_pairs(_simhash_combo_cands(sigs, n), sigs)
     finally:
         release_persists()
     assert narrow, "no verified pairs on the test corpus — fixture drift?"

@@ -112,12 +112,11 @@ def test_query_output_identical_with_kernel(spark, sf_dir, monkeypatch, name):
     # the query's own call site
     calls = []
 
-    def fold(vec_df, bands, planes_per_band, dim, id_col="vec_id",
-             vec_col="v", quantized=False):
+    def fold(vec_df, bands, planes_per_band, dim, vec_col="v", quantized=False):
         calls.append(bands)
         return sim.srp_band_buckets(
             vec_df, vec_df.sparkSession, bands, planes_per_band, dim,
-            id_col=id_col, vec_col=vec_col, quantized=quantized,
+            vec_col=vec_col, quantized=quantized,
         )
 
     monkeypatch.setattr(sim, "srp_band_buckets_kernel", fold)

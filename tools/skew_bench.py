@@ -52,7 +52,6 @@ def _cold(spark) -> None:
     spark.catalog.clearCache()
     catalog_ext._IVF_CENTROIDS.clear()
     catalog_ext.clear_counts()
-    catalog_ext._AUG_OFF.clear()
 
 
 def run_level2(spark, d, raw) -> tuple[float, int]:
