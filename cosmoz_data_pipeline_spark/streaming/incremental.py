@@ -21,7 +21,9 @@ pipeline/raw->level1.sql:69-70). Spark gives both:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import os
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,6 +91,45 @@ def _state_partitions(spark: SparkSession, source_dir: str) -> int:
     return profile.partitions_for(profile.path_bytes(spark, source_dir), 1)
 
 
+def _has_batch(spark: SparkSession, checkpoint_dir: str) -> bool:
+    """Whether the checkpoint's offset log holds a batch file (named by
+    its batch id). Reached as ``profile.path_bytes`` reaches a path: a
+    local listing, else the Hadoop FileSystem."""
+    log = f"{checkpoint_dir}/offsets"
+    if os.path.isdir(log):
+        return any(name.isdigit() for name in os.listdir(log))
+    fs, hpath = profile._hadoop_fs(spark, log)
+    return fs.exists(hpath) and any(
+        st.getPath().getName().isdigit() for st in fs.listStatus(hpath)
+    )
+
+
+# One micro-batch per tick for a time-keyed dedup: no no-data batch,
+# and late rows filtered against the batch's own watermark (see
+# stream_dedup_to_sink)
+_ONE_BATCH = {
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    "spark.sql.streaming.statefulOperator.allowMultiple": "false",
+}
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then give each key
+    back the value the caller had (unset if it had none)."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def stream_dedup_to_sink(
     spark: SparkSession,
     source_dir: str,
@@ -117,6 +158,24 @@ def stream_dedup_to_sink(
     ``sink_dir`` see an extra discovered ``batch_id`` partition column
     in the schema — project it away if unwanted.
 
+    One micro-batch per tick when ``time_col`` is one of ``dedup_cols``
+    (the hourly ingest's ``site_no, time``). By default a batch that
+    advances the watermark is followed by a no-data batch that only
+    evicts expired state: a second plan, state pass and empty
+    ``batch_id`` directory per tick. With the event time in the key,
+    when eviction happens cannot change the output: a key holding
+    event time t is evicted once the watermark passes t + 24 h, and by
+    then every row with that key is late and dropped before state is
+    read. Spark filters late rows against the previous batch's
+    watermark, which the no-data batch had brought up to date; without
+    it that watermark is one tick stale and a never-seen late row
+    would be emitted, so the stream runs in Spark's single-watermark
+    mode (``statefulOperator.allowMultiple=false``; the query has one
+    stateful operator), which filters against the batch's own
+    watermark. Keys without the event time (st6's ``user_id,
+    event_type``) keep the no-data batch: there a deferred eviction
+    would drop a key that should be emitted again.
+
     Dedup guarantee: ``dropDuplicatesWithinWatermark`` only dedups
     keys whose occurrences fall within one watermark span of state.
     A key recurring after the watermark expired its state is emitted
@@ -139,21 +198,20 @@ def stream_dedup_to_sink(
         batch.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
 
     # the state partition count is frozen into the checkpoint at its
-    # first micro-batch: size it from the source bytes (see
-    # _state_partitions above), then restore the session conf. Once
-    # the offset log exists Spark ignores the conf, so a checkpoint
-    # reused across ticks (the hourly ingest) keeps the count its first
-    # batch chose for its whole life, however large the source grows.
+    # first micro-batch: a new checkpoint sizes it from the source bytes
+    # (_state_partitions above). Once the offset log holds a batch Spark
+    # ignores the conf, so a reused checkpoint (the hourly ingest) keeps
+    # the count its first batch chose and the source is not walked.
     # The stream stays in the caller's session rather than a
     # newSession() with its own conf: StreamingQueryManager is per
     # session, so a listener on the caller's spark.streams would stop
     # seeing the query
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_state_partitions(spark, source_dir)),
-        )
+    confs = {}
+    if not _has_batch(spark, checkpoint_dir):
+        confs["spark.sql.shuffle.partitions"] = str(_state_partitions(spark, source_dir))
+    if time_col in dedup_cols:
+        confs.update(_ONE_BATCH)
+    with _session_confs(spark, confs):
         (
             stream.writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint_dir)
@@ -161,5 +219,3 @@ def stream_dedup_to_sink(
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

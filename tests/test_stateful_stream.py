@@ -7,9 +7,12 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.sources.tables import load_table
+from cosmoz_data_pipeline_spark.streaming.incremental import stream_dedup_to_sink
 from cosmoz_data_pipeline_spark.streaming.stateful import (
     validate_sequential,
     validate_sequential_stream,
@@ -232,8 +235,6 @@ def _append_keys(src: str, name: str, keys) -> None:
 
 
 def _dedup_tick(spark, tmp_path, schema) -> None:
-    from cosmoz_data_pipeline_spark.streaming.incremental import stream_dedup_to_sink
-
     stream_dedup_to_sink(
         spark,
         source_dir=str(tmp_path / "src"),
@@ -304,3 +305,76 @@ def test_callers_listener_sees_the_dedup_stream(spark, tmp_path):
     parts = {op["numShufflePartitions"] for e in listener.events for op in e["stateOperators"]}
     assert parts == {1}
     assert spark.conf.get("spark.sql.shuffle.partitions") == base_parts
+
+
+def test_reused_checkpoint_skips_the_source_walk(spark, tmp_path, monkeypatch):
+    """The state partition count is sized from the source's bytes only
+    for a new checkpoint: a tick on a checkpoint whose offset log holds
+    a batch neither walks the source nor writes the shuffle conf, which
+    Spark would ignore."""
+    from cosmoz_data_pipeline_spark import profile
+
+    walks, written = [], []
+    path_bytes, conf_set = profile.path_bytes, spark.conf.set
+    monkeypatch.setattr(
+        profile, "path_bytes", lambda s, p: walks.append(p) or path_bytes(s, p)
+    )
+    monkeypatch.setattr(
+        spark.conf, "set", lambda k, v: written.append(k) or conf_set(k, v)
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_keys(str(src), "tick0.parquet", range(20))
+    schema = spark.read.parquet(str(src)).schema
+
+    _dedup_tick(spark, tmp_path, schema)
+    assert walks == [str(src)]
+    assert "spark.sql.shuffle.partitions" in written
+
+    walks.clear()
+    written.clear()
+    _append_keys(str(src), "tick1.parquet", range(10, 30))
+    _dedup_tick(spark, tmp_path, schema)
+    assert walks == []
+    assert "spark.sql.shuffle.partitions" not in written
+    sink = spark.read.parquet(str(tmp_path / "sink"))
+    assert sink.count() == sink.select("k", "ts").distinct().count() == 30
+
+
+def test_stream_confs_restored_after_a_tick_and_a_failed_tick(spark, tmp_path):
+    """The stream's session confs come back as the caller had them, set
+    or unset, after a tick and after a tick whose stream raises."""
+    shuffle = "spark.sql.shuffle.partitions"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    single = "spark.sql.streaming.statefulOperator.allowMultiple"
+    prev = spark.conf.get(shuffle)
+    src = tmp_path / "src"
+    src.mkdir()
+    _append_keys(str(src), "tick0.parquet", range(10))
+    schema = spark.read.parquet(str(src)).schema
+    spark.conf.set(shuffle, "7")
+    try:
+        _dedup_tick(spark, tmp_path, schema)
+        assert spark.conf.get(shuffle) == "7"
+        assert spark.conf.get(no_data, None) is None
+        assert spark.conf.get(single, None) is None
+
+        # a sink under a regular file makes the batch's write raise
+        (tmp_path / "file").write_text("")
+        spark.conf.set(no_data, "true")
+        with pytest.raises(StreamingQueryException):
+            stream_dedup_to_sink(
+                spark,
+                source_dir=str(src),
+                sink_dir=str(tmp_path / "file" / "sink"),
+                checkpoint_dir=str(tmp_path / "ckpt_failed"),
+                schema=schema,
+                dedup_cols=["k", "ts"],
+                time_col="ts",
+            )
+        assert spark.conf.get(shuffle) == "7"
+        assert spark.conf.get(no_data, None) == "true"
+        assert spark.conf.get(single, None) is None
+    finally:
+        spark.conf.set(shuffle, prev)
+        spark.conf.unset(no_data)

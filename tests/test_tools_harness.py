@@ -93,16 +93,21 @@ def test_plan_ids_normalize_across_digit_counts():
     from tools.explain_all import normalize_ids
 
     def plan(ids):
-        a, b, c, d, e = ids
+        a, b, c, d, e, x, y = ids
         return (
             f"*({e}) Filter (isnotnull(ts#{a}) AND (value#{b}L > 3.0))\n"
             f"+- FileScan parquet [ts#{a},value#{b}L] DataFilters: "
             f"[isnotnull(ts#{a}), (cast(value#{b}L as double) > 3.0)], "
-            f"ShuffleQueryStage {c}, plan_id={d}"
+            f"ShuffleQueryStage {c}, plan_id={d}\n"
+            # a higher-order function's lambda variables are numbered in
+            # the order the session built them
+            f"aggregate(_sm_l#{a}, 0.0, lambdafunction((lambda x_{x}#{b} + "
+            f"lambda y_{y}#{c}), lambda x_{x}#{b}, lambda y_{y}#{c}, false), "
+            f"lambdafunction(lambda id#{d}, lambda id#{d}, false))"
         )
 
-    assert normalize_ids(plan((7, 8, 1, 9, 2))) == normalize_ids(
-        plan((70123, 998877, 12, 104, 10))
+    assert normalize_ids(plan((7, 8, 1, 9, 2, 13, 14))) == normalize_ids(
+        plan((70123, 998877, 12, 104, 10, 7, 108))
     )
 
 

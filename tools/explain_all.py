@@ -2,12 +2,14 @@
 PLANS.md — the ".explain until it's the plan you'd want" evidence,
 reviewable without running Spark. Each section also one-lines the
 health signals the plan tests assert (codegen spans, broadcast joins,
-absence of cartesian/nested-loop joins). Expression ids (``#123``) and
-plan ids (``plan_id=45``) depend on what the session built before, and
-AQE numbers query stages and codegen stages (``ShuffleQueryStage 5``,
-``*(6)``) in the order its stages happen to finish; all four are
-written as fixed tokens, so two regenerations of the same code diff
-cleanly and a diff across commits shows only plan changes. (A join
+absence of cartesian/nested-loop joins). Expression ids (``#123``),
+plan ids (``plan_id=45``) and the numbered lambda variables of
+higher-order functions (``lambda x_13``) depend on what the session
+built before, and AQE numbers query stages and codegen stages
+(``ShuffleQueryStage 5``, ``*(6)``) in the order its stages happen to
+finish; all five are written as fixed tokens, so two regenerations of
+the same code diff cleanly, a run over a few named queries matches the
+full-registry run, and a diff across commits shows only plan changes. (A join
 whose two sides are both broadcastable can still flip its build side
 between runs: AQE picks it from whichever side finished first.) Input
 paths are written relative to the corpus directory, as ``<sf_dir>``.
@@ -38,6 +40,7 @@ from cosmoz_data_pipeline_spark.session import build_session  # noqa: E402
 _RUN_ORDER_IDS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
     (re.compile(r"QueryStage \d+"), "QueryStage N"),
     (re.compile(r"\*\(\d+\)"), "*(N)"),
 )
