@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..operators.bucketed_window import BUCKET_SECS, bucketed_lag
-from ..profile import bucketed_auto, chain_big, path_bytes
+from ..operators.scan_local import flag_duplicates, flag_duplicates_hashed, scan_local_raw_flags
+from ..profile import bucketed_auto
 from . import physics
 
 # payload columns compared by the duplicate detector. The reference
@@ -57,7 +58,7 @@ LEVEL1_FIELDS = RAW_PAYLOAD[:-1]  # sans flag (recomputed)
 
 # Physical shape. Each level has one logical definition and exactly two
 # physical shapes, chosen once per chain by one scale decision ``big``
-# (the chain entries at the bottom of this module measure it):
+# (``run_pipeline`` at the bottom of this module measures it):
 # - small (every corpus below profile.BUCKETED_MIN_INPUT_BYTES): per-site
 #   windows — plain lag, the composite-key duplicate window, level2's
 #   two grain joins plus one as-of union;
@@ -250,10 +251,11 @@ def _finish_level1(flagged: DataFrame) -> DataFrame:
     )
 
 
-def raw_to_level1_scan_local(spark, sink_path: str) -> DataFrame:
+def raw_to_level1_scan_local(spark, sink: str | DataFrame) -> DataFrame:
     """raw→level1 over a layout-contracted raw SINK (time-sorted
-    site-tiled parquet, operators/scan_local.py) — row-for-row what
-    ``raw_to_level1(spark.read.parquet(sink_path))`` computes, with
+    site-tiled parquet, operators/scan_local.py; its path or its
+    parquet read) — row-for-row what
+    ``raw_to_level1(spark.read.parquet(sink))`` computes, with
     both wide sequence exchanges (prev_count lag + 29-min duplicate
     window, 73 of level1's 77 s at x1000 per LEVEL1_STAGES.json)
     replaced by per-file scan-local passes and a per-(site, file)
@@ -272,10 +274,7 @@ def raw_to_level1_scan_local(spark, sink_path: str) -> DataFrame:
     pinned by the ``level1_scan_local`` registry view at sf0.01 and
     sf0.1, boundary/tie/collision semantics by
     tests/test_scan_local.py."""
-    from ..operators.scan_local import scan_local_raw_flags
-
-    flagged = scan_local_raw_flags(spark, sink_path, RAW_PAYLOAD)
-    return _finish_level1(flagged)
+    return _finish_level1(scan_local_raw_flags(spark, sink, RAW_PAYLOAD))
 
 
 def raw_to_level1(raw: DataFrame, *, big: bool) -> DataFrame:
@@ -299,26 +298,14 @@ def raw_to_level1(raw: DataFrame, *, big: bool) -> DataFrame:
     """
     if big:
         # prev_count through balanced (site, week) groups + a boundary
-        # exchange. The duplicate window partitions by a payload hash,
-        # whose 8-byte sort prefix resolves nearly every comparison;
-        # identical payloads stay contiguous under the struct order,
-        # and the null-safe equality makes hash collisions harmless.
+        # exchange; duplicates through the hash-prefixed window
         with_prev = bucketed_lag(raw, ["site_no"], "time", ["count"], ["prev_count"])
-        pay = F.struct(*[F.col(c) for c in RAW_PAYLOAD])
-        dupw = Window.partitionBy(
-            F.xxhash64("site_no", *RAW_PAYLOAD), "site_no"
-        ).orderBy(pay, "time")
-        prev_time = F.when(F.lag(pay).over(dupw).eqNullSafe(pay), F.lag("time").over(dupw))
+        flagged = flag_duplicates_hashed(with_prev, RAW_PAYLOAD)
     else:
         seq = Window.partitionBy("site_no").orderBy("time")
         with_prev = raw.withColumn("prev_count", F.lag("count").over(seq))
         dupw = Window.partitionBy("site_no", *RAW_PAYLOAD).orderBy("time")
-        prev_time = F.lag("time").over(dupw)
-    flagged = with_prev.withColumn("prev_same_payload_time", prev_time).withColumn(
-        "is_duplicate",
-        F.col("prev_same_payload_time").isNotNull()
-        & (F.col("prev_same_payload_time") >= F.col("time") - F.expr("INTERVAL 29 MINUTE")),
-    )
+        flagged = flag_duplicates(with_prev, F.lag("time").over(dupw))
     return _finish_level1(flagged)
 
 
@@ -526,50 +513,36 @@ def level3_to_level4(
     return out
 
 
-def _levels_2_to_4(
-    l1: DataFrame,
-    intensity: DataFrame,
-    silo_data: DataFrame,
-    all_stations: DataFrame,
-    spec_mode: bool,
-    big: bool,
-) -> dict[str, DataFrame]:
-    """The tail both chain entries share, so one scale decision
-    engages the same shapes on either route."""
-    l2 = level1_to_level2(l1, intensity, silo_data, all_stations, big=big)
-    l3 = level2_to_level3(l2, all_stations)
-    l4 = level3_to_level4(l3, all_stations, spec_mode=spec_mode)
-    return {"level1": l1, "level2": l2, "level3": l3, "level4": l4}
-
-
 def run_pipeline(
-    raw: DataFrame,
+    raw: DataFrame | str,
     intensity: DataFrame,
     silo_data: DataFrame,
     all_stations: DataFrame,
     spec_mode: bool = False,
 ) -> dict[str, DataFrame]:
     """Full four-level pipeline as one lazily-composed logical plan.
-    The scale decision is the bytes of the files behind ``raw``."""
-    big = bucketed_auto(raw)
-    l1 = raw_to_level1(raw, big=big)
-    return _levels_2_to_4(l1, intensity, silo_data, all_stations, spec_mode, big)
 
+    ``raw`` is a raw-values frame, or the path of a layout-contracted
+    raw SINK (``operators.scan_local.write_time_tiled``). A frame runs
+    ``raw_to_level1``; a sink runs the scan-local level1
+    (``raw_to_level1_scan_local``: zero wide sequence shuffles,
+    LEVEL1_SCANLOCAL_AB / LEVEL1_ZONERG_AB). Levels 2-4 are the same
+    on both routes.
 
-def run_pipeline_scan_local(
-    spark,
-    sink_path: str,
-    intensity: DataFrame,
-    silo_data: DataFrame,
-    all_stations: DataFrame,
-) -> dict[str, DataFrame]:
-    """Full pipeline over a layout-contracted raw SINK: the level1
-    prefix runs the scan-local shape (zero wide sequence shuffles,
-    LEVEL1_SCANLOCAL_AB / LEVEL1_ZONERG_AB) and levels 2-4 are the
-    shared tail. The scan-local level1 enters through per-file kernels
-    over ``spark.range``, so it has no file lineage to size; the scale
-    decision is the sink's own bytes through the same gate
-    ``bucketed_auto`` uses."""
-    big = chain_big(path_bytes(spark, sink_path))
-    l1 = raw_to_level1_scan_local(spark, sink_path)
-    return _levels_2_to_4(l1, intensity, silo_data, all_stations, False, big)
+    The scale decision ``big`` is ``bucketed_auto`` of the frame, or of
+    the sink's parquet read: the bytes of the data files behind the
+    input on either route, so one decision engages the same shapes.
+    The sink is read (listed, schema inferred) once; that one read
+    feeds both the sizing and the scan-local level1."""
+    if isinstance(raw, str):
+        spark = intensity.sparkSession
+        src = spark.read.parquet(raw)
+        big = bucketed_auto(src)
+        l1 = raw_to_level1_scan_local(spark, src)
+    else:
+        big = bucketed_auto(raw)
+        l1 = raw_to_level1(raw, big=big)
+    l2 = level1_to_level2(l1, intensity, silo_data, all_stations, big=big)
+    l3 = level2_to_level3(l2, all_stations)
+    l4 = level3_to_level4(l3, all_stations, spec_mode=spec_mode)
+    return {"level1": l1, "level2": l2, "level3": l3, "level4": l4}

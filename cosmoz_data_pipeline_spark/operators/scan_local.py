@@ -39,13 +39,14 @@ TINY per-(site, file) boundary exchange:
 - duplicate zone fix: a row can only need cross-file lookback if it
   sits within 29 min of its file's per-site head ("head zone"); its
   potential matchers in earlier files provably sit within 29 min of
-  their file's per-site tail ("tail zone" — proof in
-  ``_zone_fix``). The exact duplicate window (the same hash-prefixed
-  expressions domain/levels.py ships) runs over just the zone rows,
-  and its verdicts for head-zone rows are joined back — keyed
-  null-safely on (site, time, payload struct) with a per-tie-group
-  count so equal-timestamp duplicate pairs resolve to exactly the
-  same number of drops as the single-window shape.
+  their file's per-site tail ("tail zone" — proof at the zone fix in
+  ``scan_local_raw_flags``). The exact duplicate window
+  (``flag_duplicates_hashed``, which level1's big shape runs too) runs
+  over just the zone rows, and its verdicts for head-zone rows are
+  joined back — keyed null-safely on (site, time, payload struct)
+  with a per-tie-group count so equal-timestamp duplicate pairs
+  resolve to exactly the same number of drops as the single-window
+  shape.
 
 Layout contract (validated, loud failure on breach):
   1. within each parquet file, rows are sorted by (site, time);
@@ -86,9 +87,14 @@ read.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..profile import local_path
+
+# The duplicate rule's lookback: a row is a duplicate iff an
+# identical-payload row of its site lies in [t - 29 min, t)
+# (cosmoz_process_levels.py:375-390).
 DUP_WINDOW_SECS = 29 * 60
 
 # Arrow batch size of the per-file main kernel's streaming read.
@@ -122,14 +128,33 @@ def write_time_tiled(df: DataFrame, path: str, n_files: int) -> None:
     )
 
 
-def _local_path(uri: str) -> str:
-    """file: URIs → plain paths for pyarrow; other schemes pass
-    through (pyarrow resolves hdfs/s3 when those filesystems are
-    available to the executors)."""
-    from urllib.parse import unquote, urlparse
+def flag_duplicates(df: DataFrame, prev_time: Column) -> DataFrame:
+    """``df`` + ``prev_same_payload_time`` (``prev_time``: the time of
+    the row's nearest earlier identical-payload row of its site, null
+    if none) + ``is_duplicate``, true iff that row lies within
+    ``DUP_WINDOW_SECS``."""
+    bound = F.expr(f"INTERVAL {DUP_WINDOW_SECS // 60} MINUTE")
+    return df.withColumn("prev_same_payload_time", prev_time).withColumn(
+        "is_duplicate",
+        F.col("prev_same_payload_time").isNotNull()
+        & (F.col("prev_same_payload_time") >= F.col(TIME_COL) - bound),
+    )
 
-    u = urlparse(uri)
-    return unquote(u.path) if u.scheme == "file" else uri
+
+def flag_duplicates_hashed(df: DataFrame, payload_cols) -> DataFrame:
+    """``flag_duplicates`` through the hash-prefixed duplicate window,
+    the shape both level1's big shape and the zone fix run. The window
+    partitions by a payload hash, whose 8-byte sort prefix resolves
+    nearly every comparison; identical payloads stay contiguous under
+    the struct order, and the null-safe equality makes hash collisions
+    harmless (LEVEL1_DUPW_AB.json)."""
+    pay = F.struct(*[F.col(c) for c in payload_cols])
+    dupw = Window.partitionBy(F.xxhash64(SITE_COL, *payload_cols), SITE_COL).orderBy(
+        pay, TIME_COL
+    )
+    return flag_duplicates(
+        df, F.when(F.lag(pay).over(dupw).eqNullSafe(pay), F.lag(TIME_COL).over(dupw))
+    )
 
 
 def _tus(series) -> "np.ndarray":  # noqa: F821
@@ -273,7 +298,7 @@ def _make_kernel(paths, all_cols, payload_cols):
         # timestamps past 2262-04-11 (the int64-ns horizon) — the x1000
         # corpus runs centuries past it, and a wrapped value reads as a
         # spurious layout violation (or worse, a wrong lag)
-        pf = pq.ParquetFile(_local_path(path), coerce_int96_timestamp_unit="us")
+        pf = pq.ParquetFile(local_path(path), coerce_int96_timestamp_unit="us")
         carry = None  # trailing-29-min frame of the last site run
         last_site = None
         last_time_us = None
@@ -477,7 +502,7 @@ def _make_boundary_kernel(paths, all_cols):
         import pyarrow.parquet as pq
 
         path = paths[fid]
-        pf = pq.ParquetFile(_local_path(path), coerce_int96_timestamp_unit="us")
+        pf = pq.ParquetFile(local_path(path), coerce_int96_timestamp_unit="us")
         md = pf.metadata
         nrg = md.num_row_groups
         if nrg == 0 or md.num_rows == 0:
@@ -592,16 +617,22 @@ def _make_boundary_kernel(paths, all_cols):
 
 def scan_local_raw_flags(
     spark: SparkSession,
-    path: str,
+    sink: str | DataFrame,
     payload_cols,
 ) -> DataFrame:
     """Raw columns + ``prev_count`` + ``is_duplicate`` over a
-    layout-contracted parquet dataset at ``path`` — row-for-row what
-    the window shapes in domain/levels.py compute, with zero wide
-    shuffles (see module docstring)."""
+    layout-contracted parquet dataset — its path, or its
+    ``spark.read.parquet`` frame when the caller has read it already —
+    row-for-row what the window shapes in domain/levels.py compute,
+    with zero wide shuffles (see module docstring)."""
     from pyspark.sql import types as T
 
-    src = spark.read.parquet(path)
+    from ..plans.registry import scoped_persist  # plans imports operators at load
+
+    if isinstance(sink, str):
+        path, src = sink, spark.read.parquet(sink)
+    else:
+        path, src = "the sink", sink
     files = sorted(src.inputFiles())
     if not files:
         raise ValueError(f"scan_local: no parquet files under {path}")
@@ -629,14 +660,6 @@ def scan_local_raw_flags(
 
     secs = F.col(TIME_COL).cast("long")
 
-    def _persist(df):
-        try:  # lazy import: plans imports operators at package load
-            from ..plans.registry import scoped_persist
-
-            return scoped_persist(df)
-        except Exception:  # pragma: no cover - registry unavailable
-            return df.persist()
-
     # --- boundary kernel (round 14): the stitch aggregate AND the zone
     # rows come from one row-group-pruned per-file pass; no second
     # full-width decode, no third slim scan (LEVEL1_ZONERG_AB.json).
@@ -652,7 +675,7 @@ def scan_local_raw_flags(
         ]
     )
     bkernel = _make_boundary_kernel(files, all_cols)
-    zrows = _persist(ids.mapInPandas(bkernel, schema=zschema))
+    zrows = scoped_persist(ids.mapInPandas(bkernel, schema=zschema))
     agg = zrows.groupBy(SITE_COL, "__fp").agg(
         F.min(TIME_COL).alias("__head_t"),
         F.max(TIME_COL).alias("__tail_t"),
@@ -706,26 +729,14 @@ def scan_local_raw_flags(
     # also in S).
     # The kernel's zone rows carry per-row __hs/__ts and are exactly S
     # (per-row keep filter in _make_boundary_kernel).
-    R = DUP_WINDOW_SECS
     pay = F.struct(*[F.col(c) for c in payload_cols])
-    dupw = Window.partitionBy(
-        F.xxhash64(SITE_COL, *payload_cols), SITE_COL
-    ).orderBy(pay, TIME_COL)
-    prev_pay = F.lag(pay).over(dupw)
     fix = (
-        zrows.withColumn(
-            "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag(TIME_COL).over(dupw))
-        )
-        .withColumn(
-            "__zdup",
-            F.col("__pt").isNotNull()
-            & (F.col("__pt") >= F.col(TIME_COL) - F.expr("INTERVAL 29 MINUTE")),
-        )
-        .where(secs <= F.col("__hs") + R)  # verdicts used for head zone only
+        flag_duplicates_hashed(zrows, payload_cols)
+        .where(secs <= F.col("__hs") + DUP_WINDOW_SECS)  # verdicts used for head zone only
         .groupBy(SITE_COL, TIME_COL, pay.alias("__pay"))
         .agg(
             F.count(F.lit(1)).alias("__k"),
-            F.sum(F.col("__zdup").cast("int")).alias("__ndup"),
+            F.sum(F.col("is_duplicate").cast("int")).alias("__ndup"),
         )
     )
     m_pay = F.struct(*[stitched[c] for c in payload_cols])

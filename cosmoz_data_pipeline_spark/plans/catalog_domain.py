@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..domain import levels, oracles
 from ..domain.synth import domain_prelude, load_domain
+from ..operators.scan_local import write_time_tiled
 from .registry import register
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -30,11 +31,36 @@ def _r6(df: DataFrame, cols: list[str]) -> DataFrame:
     return out
 
 
+_L4_VALUES = ["soil_moist", "effective_depth", "rainfall", "soil_moist_filtered", "depth_filtered"]
+
+
+def _level4_view(l4: DataFrame) -> DataFrame:
+    """level4 as the registry compares it: formatted time, values
+    rounded to 6 places."""
+    return _r6(_fmt_time(l4), _L4_VALUES).select("time", "site_no", *_L4_VALUES)
+
+
 def _pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     d = load_domain(spark, sf_dir)
     return levels.run_pipeline(
         d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"]
     )
+
+
+def _on_raw_sink(name: str, raw: DataFrame, view) -> DataFrame:
+    """``view(sink)`` over ``raw`` written as a 16-file layout-contracted
+    sink in a fresh scratch dir, detached from the sink. 16 files over
+    the small corpora keep per-site file spans near the 29-min window,
+    so boundary stitch + zone fix fire constantly under the oracle gate
+    (the at-scale A/Bs use 64-256 files)."""
+    # imported here: a module-level import would register the streaming
+    # queries before this module's, reordering the registry
+    from .catalog_streaming import _detach, _scratch
+
+    scratch = _scratch(name)
+    sink = f"{scratch}/raw_sink"
+    write_time_tiled(raw, sink, n_files=16)
+    return _detach(view(sink), scratch)
 
 
 @register(
@@ -74,19 +100,10 @@ def q_level1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the physical reshape must be row-for-row invisible.",
 )
 def q_level1_scan_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_streaming import _detach, _scratch
-
     raw = load_domain(spark, sf_dir)["raw_values"]
-    scratch = _scratch("l1sl")
-    sink = f"{scratch}/raw_sink"
-    # 16 files over the small corpora keeps per-site file spans near
-    # the 29-min window, so boundary stitch + zone fix fire constantly
-    # under the oracle gate (the at-scale A/B uses 256+ files)
-    from ..operators.scan_local import write_time_tiled
-
-    write_time_tiled(raw, sink, n_files=16)
-    out = _fmt_time(levels.raw_to_level1_scan_local(spark, sink))
-    return _detach(out, scratch)
+    return _on_raw_sink(
+        "l1sl", raw, lambda sink: _fmt_time(levels.raw_to_level1_scan_local(spark, sink))
+    )
 
 
 @register(
@@ -101,28 +118,13 @@ def q_level1_scan_local(spark: SparkSession, sf_dir: str) -> DataFrame:
     "invisible.",
 )
 def q_level4_scan_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog_streaming import _detach, _scratch
-
     d = load_domain(spark, sf_dir)
-    scratch = _scratch("l4sl")
-    sink = f"{scratch}/raw_sink"
-    # 16 files keeps per-site file spans near the 29-min window at the
-    # small SFs, so boundary stitch + zone fix fire constantly under
-    # the oracle gate (the at-scale A/B uses 64/256 files)
-    from ..operators.scan_local import write_time_tiled
-
-    write_time_tiled(d["raw_values"], sink, n_files=16)
-    l4 = levels.run_pipeline_scan_local(
-        spark, sink, d["intensity"], d["silo_data"], d["all_stations"]
-    )["level4"]
-    out = _r6(
-        _fmt_time(l4),
-        ["soil_moist", "effective_depth", "rainfall", "soil_moist_filtered", "depth_filtered"],
-    ).select(
-        "time", "site_no", "soil_moist", "effective_depth", "rainfall",
-        "soil_moist_filtered", "depth_filtered",
+    dims = (d["intensity"], d["silo_data"], d["all_stations"])
+    return _on_raw_sink(
+        "l4sl",
+        d["raw_values"],
+        lambda sink: _level4_view(levels.run_pipeline(sink, *dims)["level4"]),
     )
-    return _detach(out, scratch)
 
 
 @register(
@@ -160,14 +162,7 @@ def q_level3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(/root/reference/pipeline/cosmoz_process_levels.py:42-93).",
 )
 def q_level4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _fmt_time(_pipeline(spark, sf_dir)["level4"])
-    return _r6(
-        df,
-        ["soil_moist", "effective_depth", "rainfall", "soil_moist_filtered", "depth_filtered"],
-    ).select(
-        "time", "site_no", "soil_moist", "effective_depth", "rainfall",
-        "soil_moist_filtered", "depth_filtered",
-    )
+    return _level4_view(_pipeline(spark, sf_dir)["level4"])
 
 
 @register(
@@ -329,10 +324,4 @@ def q_level4_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
         d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"],
         spec_mode=True,
     )["level4"]
-    return _r6(
-        _fmt_time(l4),
-        ["soil_moist", "effective_depth", "rainfall", "soil_moist_filtered", "depth_filtered"],
-    ).select(
-        "time", "site_no", "soil_moist", "effective_depth", "rainfall",
-        "soil_moist_filtered", "depth_filtered",
-    )
+    return _level4_view(l4)

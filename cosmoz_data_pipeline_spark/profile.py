@@ -255,10 +255,21 @@ def listing(spark, path: str) -> tuple[tuple[str, int, int], ...]:
     return tuple(sorted(_hadoop_files(spark, path))) if spark is not None else ()
 
 
+def local_path(uri: str) -> str:
+    """A ``file:`` URI as a plain local path, percent-DECODED (a path
+    with spaces arrives as %20, which a local stat would miss, ADVICE
+    r11). Other schemes pass through for the Hadoop FS, or pyarrow on
+    the executors, to resolve."""
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
+
+
 def bucketed_auto(df) -> bool:
-    """``chain_big`` for a frame: the bytes of the files actually
-    backing ``df``'s plan (``df.inputFiles()``). ``levels.run_pipeline``
-    takes only frames, so this is its scale decision.
+    """``chain_big`` for a frame: the bytes of the data files actually
+    backing ``df``'s plan (``df.inputFiles()``, which leaves out
+    checksum sidecars and ``_``-prefixed markers). This is the level
+    chain's one scale decision: ``levels.run_pipeline`` passes its raw
+    frame, or the parquet read of its raw sink.
 
     A frame's input-file bytes are a property of the frame itself, so
     the decision does not depend on what else the session loaded.
@@ -268,13 +279,7 @@ def bucketed_auto(df) -> bool:
         spark = df.sparkSession
         total = 0
         for f in df.inputFiles():
-            # inputFiles returns URIs; file: URIs strip (and
-            # percent-DECODE — a path with spaces arrives as %20,
-            # which the local stat would miss, ADVICE r11) to a plain
-            # local listing, other schemes go through the Hadoop FS
-            u = urlparse(f)
-            p = unquote(u.path) if u.scheme == "file" else f
-            total += path_bytes(spark, p)
+            total += path_bytes(spark, local_path(f))
             if chain_big(total):
                 return True
         return False

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import harden_session, scale_shuffle_partitions
+from ..session import scale_shuffle_partitions
 
 # columns stored as TIMESTAMP(NANOS) in the test corpus → arrive as
 # int64 under nanosAsLong and need explicit conversion
@@ -25,7 +25,9 @@ _NANOS_COLS = {"events": ("ts",)}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    harden_session(spark)
+    """``sf_dir``'s table ``name``. The session is hardened already:
+    ``build_session`` sets the runtime confs, and ``__spark_entry__``
+    hardens the caller's session per query."""
     path = f"{sf_dir}/{name}.parquet"
     # spill-aware: size the shuffle-partition ceiling to the corpus
     # bytes loaded so far (AQE coalesces back down; see session.py)

@@ -28,6 +28,31 @@ LOWER, UPPER = 0.8, 1.2
 MAX_GAP_SECONDS = 24 * 3600
 
 
+def _walk(times, values, last_val, last_time):
+    """The validity recursion over one key's time-ordered rows, from
+    the (last_valid, last_valid_time) state before them (None, None
+    for a fresh key). Returns the per-row ``valid`` and ``last_valid``
+    lists and the state after the rows."""
+    valid, last_vals = [], []
+    for t, v in zip(times, values):
+        if last_val is None:
+            ok = True
+        elif t - last_time > MAX_GAP_SECONDS:
+            ok = True
+        else:
+            ok = LOWER * last_val <= v <= UPPER * last_val
+        valid.append(ok)
+        last_vals.append(v if ok else last_val)
+        if ok:
+            last_val, last_time = float(v), float(t)
+    return valid, last_vals, last_val, last_time
+
+
+def _epoch_seconds(col: pd.Series) -> pd.Series:
+    """Unit-agnostic epoch seconds (datetime64 may be ns or us)."""
+    return (col - pd.Timestamp("1970-01-01")).dt.total_seconds()
+
+
 def validate_sequential(
     df: DataFrame,
     key: str,
@@ -56,26 +81,10 @@ def validate_sequential(
 
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        # unit-agnostic epoch seconds (datetime64 may be ns or us)
-        times = (pdf[time_col] - pd.Timestamp("1970-01-01")).dt.total_seconds()
         values = pdf[value_col].astype("float64")
-        valid = []
-        last_vals = []
-        last_val = None
-        last_time = None
-        for t, v in zip(times, values):
-            if last_val is None:
-                ok = True
-            elif t - last_time > MAX_GAP_SECONDS:
-                ok = True
-            else:
-                ok = LOWER * last_val <= v <= UPPER * last_val
-            valid.append(ok)
-            last_vals.append(v if ok else last_val)
-            if ok:
-                last_val, last_time = v, t
-        pdf["valid"] = valid
-        pdf["last_valid"] = last_vals
+        pdf["valid"], pdf["last_valid"], _, _ = _walk(
+            _epoch_seconds(pdf[time_col]), values, None, None
+        )
         return pdf
 
     return df.groupBy(key).applyInPandas(check, schema=out_schema)
@@ -124,22 +133,10 @@ def validate_sequential_stream(
         last_val, last_time = state.get if state.exists else (None, None)
         for pdf in pdfs:
             pdf = pdf.sort_values(time_col, kind="mergesort").reset_index(drop=True)
-            times = (pdf[time_col] - pd.Timestamp("1970-01-01")).dt.total_seconds()
             values = pdf[value_col].astype("float64")
-            valid, last_vals = [], []
-            for t, v in zip(times, values):
-                if last_val is None:
-                    ok = True
-                elif t - last_time > MAX_GAP_SECONDS:
-                    ok = True
-                else:
-                    ok = LOWER * last_val <= v <= UPPER * last_val
-                valid.append(ok)
-                last_vals.append(v if ok else last_val)
-                if ok:
-                    last_val, last_time = float(v), float(t)
-            pdf["valid"] = valid
-            pdf["last_valid"] = last_vals
+            pdf["valid"], pdf["last_valid"], last_val, last_time = _walk(
+                _epoch_seconds(pdf[time_col]), values, last_val, last_time
+            )
             yield pdf
         if last_val is not None:
             state.update((last_val, last_time))

@@ -4,12 +4,13 @@ level chain's big shape are physical plan changes only: lag-1 through
 what the plain per-key window produces — including across empty
 buckets and null lagged values — and the chain's big shape must
 produce the small shape's rows. The scale decision itself reads the
-frame's own input bytes, and both chain entries take it the same way.
+frame's own input bytes, and both chain entry routes take it the same way.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -141,8 +142,8 @@ def _analyzed(df) -> str:
 
 
 def test_one_scale_decision_on_both_entry_routes(spark, sf_dir, tmp_path, monkeypatch):
-    """run_pipeline sizes its raw files, run_pipeline_scan_local its
-    sink; with the crossover at 1 byte both must build level2 with the
+    """run_pipeline sizes the files behind a raw frame or a raw sink;
+    with the crossover at 1 byte both routes must build level2 with the
     fused bucketed attach (its ``__l2_bkt`` column) and still produce
     the small shape's level4 rows."""
     d = load_domain(spark, sf_dir)
@@ -158,10 +159,30 @@ def test_one_scale_decision_on_both_entry_routes(spark, sf_dir, tmp_path, monkey
     monkeypatch.setattr(profile, "BUCKETED_MIN_INPUT_BYTES", 1)
     for out in (
         levels.run_pipeline(d["raw_values"], *dims),
-        levels.run_pipeline_scan_local(spark, sink, *dims),
+        levels.run_pipeline(sink, *dims),
     ):
         assert "__l2_bkt" in _analyzed(out["level2"])
         assert _rows(out["level4"]) == base4
+
+
+def test_routes_size_the_same_bytes(spark, sf_dir, tmp_path, monkeypatch):
+    """Both routes count the sink's data files only, not the checksum
+    sidecars and markers beside them: with the crossover strictly
+    between the data-file bytes and all the bytes under the sink, the
+    frame read of the sink and the sink itself both keep the small
+    level2."""
+    d = load_domain(spark, sf_dir)
+    dims = (d["intensity"], d["silo_data"], d["all_stations"])
+    sink = str(tmp_path / "sink")
+    write_time_tiled(d["raw_values"], sink, 4)
+    frame = spark.read.parquet(sink)
+    data = sum(os.path.getsize(profile.local_path(f)) for f in frame.inputFiles())
+    under = profile.path_bytes(spark, sink)
+    assert data + 1 < under, (data, under)
+
+    monkeypatch.setattr(profile, "BUCKETED_MIN_INPUT_BYTES", data + 1)
+    for raw in (frame, sink):
+        assert "__l2_bkt" not in _analyzed(levels.run_pipeline(raw, *dims)["level2"])
 
 
 def test_auto_gate_reads_frame_input_bytes(spark, sf_dir, tmp_path):

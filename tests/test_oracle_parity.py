@@ -78,3 +78,33 @@ def test_unrecorded_tail_matches_oracle(spark, sf_dir, duck, name):
     assert q.oracle is not None
     ok, msg = compare(q.run(spark, sf_dir), q.oracle, duck)
     assert ok, f"{name}: {msg}"
+
+
+def test_entry_queries_harden_an_unhardened_session(spark, sf_dir, duck):
+    """``load_table`` leaves the session's confs alone; each wrapper
+    that ``__spark_entry__.queries()`` returns hardens the caller's
+    session. With the parquet-nanos and time-zone confs unset
+    (events.ts is stored as TIMESTAMP(NANOS)), an events-reading query
+    run through its wrapper sets both again and still matches its
+    oracle.
+
+    What this pins is the wrapper's conf hardening: the conf assertion
+    is the one that fails if the wrapper stops hardening. The oracle
+    half does not discriminate — it also passes with the hardening
+    removed — so it is no guard on ``load_table``'s nanos/UTC
+    conversion."""
+    import __spark_entry__ as e
+
+    hardened = {"spark.sql.legacy.parquet.nanosAsLong": "true", "spark.sql.session.timeZone": "UTC"}
+    saved = {k: spark.conf.get(k) for k in hardened}
+    try:
+        for k in hardened:
+            spark.conf.unset(k)
+        name = "a04_minmax_time_per_key"
+        df = e.queries()[name](spark, sf_dir)
+        assert {k: spark.conf.get(k) for k in hardened} == hardened
+        ok, msg = compare(df, REGISTRY[name].oracle, duck)
+        assert ok, f"{name}: {msg}"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -79,7 +79,7 @@ def _level_arms(spark, sf_dir: str, work: str, level: str) -> dict:
     def scan_local():
         if level == "level1":
             return levels.raw_to_level1_scan_local(spark, sink)
-        return levels.run_pipeline_scan_local(spark, sink, *tail)["level4"]
+        return levels.run_pipeline(sink, *tail)["level4"]
 
     return {"A": window, "B": scan_local}
 

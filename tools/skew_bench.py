@@ -5,7 +5,7 @@ Part 1 — level pipeline: run level1→level2 over (a) the uniform
 8-site domain and (b) a skewed remap where sites 1-4 collapse onto
 site 1 (~50 % of all rows on ONE key — every site_no-keyed shuffle,
 window and as-of in the pipeline hits the hot key), and report
-min-of-2 wall times + the skew/uniform ratio. AQE skew-join splitting
+best-of-N wall times + the skew/uniform ratio. AQE skew-join splitting
 and the window ops' per-key-but-many-partition layout should keep the
 ratio near 1; a quadratic or single-reducer path would blow it up ~4×.
 
@@ -21,17 +21,21 @@ near-identical documents sharing a bucket), which is bounded by the
 4×2^16 bucket space and would surface as candidate-pair blow-up in
 the scale sweep's pair counts, not as source skew.
 
-Usage: python tools/skew_bench.py [sf_dir]   (default sf0.1)
+Usage:
+
+    python tools/skew_bench.py CORPUS --work DIR --out FILE
+
+CORPUS is as in ``probe.py``. The skewed documents corpus and the
+event log go under ``--work``; the JSON artifact only to ``--out``.
+Each timing is the best of ``RUNS`` cold runs (``probe.cold``).
 """
 
 from __future__ import annotations
 
-import json
+import argparse
 import math
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,37 +44,32 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cosmoz_data_pipeline_spark.domain import levels  # noqa: E402
 from cosmoz_data_pipeline_spark.domain.synth import load_domain  # noqa: E402
-from cosmoz_data_pipeline_spark.plans import REGISTRY, release_persists  # noqa: E402
-from cosmoz_data_pipeline_spark.plans import catalog_ext  # noqa: E402
-from cosmoz_data_pipeline_spark.session import build_session  # noqa: E402
+from cosmoz_data_pipeline_spark.plans import REGISTRY  # noqa: E402
+from tools.probe import cold, corpus, session, write_json  # noqa: E402
 
 DEDUP_QUERIES = ("x_dedup_simhash_pairs", "x_dedup_components")
+RUNS = 2
 
 
-def _cold(spark) -> None:
-    release_persists()
-    spark.catalog.clearCache()
-    catalog_ext._IVF_CENTROIDS.clear()
-    catalog_ext.clear_counts()
+def best_of(spark, build) -> tuple[float, int]:
+    """Best wall time of ``RUNS`` cold runs of ``build().count()``, and
+    the row count."""
+    best, rows = math.inf, 0
+    for _ in range(RUNS):
+        cold(spark)
+        t0 = time.time()
+        rows = build().count()
+        best = min(best, time.time() - t0)
+    cold(spark)
+    return round(best, 3), rows
 
 
-def run_level2(spark, d, raw) -> tuple[float, int]:
-    t0 = time.time()
-    out = levels.run_pipeline(
-        raw, d["intensity"], d["silo_data"], d["all_stations"]
-    )["level2"]
-    n = out.count()
-    dt = time.time() - t0
-    spark.catalog.clearCache()
-    return dt, n
-
-
-def make_skewed_docs_corpus(spark, sf_dir: str) -> str:
-    """Write a copy of the corpus whose documents table has src0-src9
-    remapped to src0 (~50 % of rows on one source); text/doc_id are
-    untouched, so pair results are identical and only the distribution
-    changes."""
-    out = tempfile.mkdtemp(prefix="cosmoz_skew_docs_")
+def make_skewed_docs_corpus(spark, sf_dir: str, work: str) -> str:
+    """Write, under ``work``, a corpus whose documents table has
+    src0-src9 remapped to src0 (~50 % of rows on one source);
+    text/doc_id are untouched, so pair results are identical and only
+    the distribution changes."""
+    out = os.path.join(work, "skew_docs")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     skewed = docs.withColumn(
         "source",
@@ -82,22 +81,9 @@ def make_skewed_docs_corpus(spark, sf_dir: str) -> str:
     return out
 
 
-def time_registry(spark, name: str, sf_dir: str, runs: int = 2) -> tuple[float, int]:
-    best, rows = math.inf, 0
-    for _ in range(runs):
-        _cold(spark)
-        t0 = time.time()
-        rows = REGISTRY[name].run(spark, sf_dir).count()
-        best = min(best, time.time() - t0)
-    _cold(spark)
-    return round(best, 3), rows
-
-
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = build_session(app_name="cosmoz-skew-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def skew_ratios(spark, sf_dir: str, work: str) -> dict:
     d = load_domain(spark, sf_dir)
+    dims = (d["intensity"], d["silo_data"], d["all_stations"])
     uniform = d["raw_values"]
     # sites 1-4 → 1: one hot key carrying ~50 % of rows
     skewed = uniform.withColumn(
@@ -106,42 +92,60 @@ def main() -> None:
     )
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()  # JVM warmup
 
-    times = {"uniform": [], "skewed": []}
-    counts = {}
-    for _ in range(2):
-        for name, raw in (("uniform", uniform), ("skewed", skewed)):
-            dt, n = run_level2(spark, d, raw)
-            times[name].append(dt)
-            counts[name] = n
-    tu, ts = min(times["uniform"]), min(times["skewed"])
+    def level2(raw):
+        return lambda: levels.run_pipeline(raw, *dims)["level2"]
+
+    tu, ru = best_of(spark, level2(uniform))
+    ts, rs = best_of(spark, level2(skewed))
     results = {
-        "metric": "skew_ratios",
-        "sf_dir": sf_dir,
         "level2": {
-            "uniform_sec": round(tu, 3),
-            "skewed_sec": round(ts, 3),
+            "uniform_sec": tu,
+            "skewed_sec": ts,
             "ratio": round(ts / tu, 3),
-            "rows": counts,
+            "rows": {"uniform": ru, "skewed": rs},
             "skew": "sites 1-4 -> 1 (~50% of rows on one site_no key)",
         },
     }
+    skew_dir = make_skewed_docs_corpus(spark, sf_dir, work)
+    for name in DEDUP_QUERIES:
+        tu2, ru2 = best_of(spark, lambda: REGISTRY[name].run(spark, sf_dir))
+        ts2, rs2 = best_of(spark, lambda: REGISTRY[name].run(spark, skew_dir))
+        results[name] = {
+            "uniform_sec": tu2,
+            "skewed_sec": ts2,
+            "ratio": round(ts2 / tu2, 3),
+            "rows": {"uniform": ru2, "skewed": rs2},
+            "skew": "src0-9 -> src0 (~50% of documents on one source)",
+        }
+    return results
 
-    skew_dir = make_skewed_docs_corpus(spark, sf_dir)
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("corpus", help="DIR (read in place) or DIR:MULT (built in DIR)")
+    ap.add_argument("--work", required=True, help="skewed corpus and event log")
+    ap.add_argument("--out", required=True, help="artifact JSON path")
+    args = ap.parse_args()
+
+    spark, _log_dir = session("skew-bench", args.work)
+    cores = spark.sparkContext.defaultParallelism
     try:
-        for name in DEDUP_QUERIES:
-            tu2, ru = time_registry(spark, name, sf_dir)
-            ts2, rs = time_registry(spark, name, skew_dir)
-            results[name] = {
-                "uniform_sec": tu2,
-                "skewed_sec": ts2,
-                "ratio": round(ts2 / tu2, 3),
-                "rows": {"uniform": ru, "skewed": rs},
-                "skew": "src0-9 -> src0 (~50% of documents on one source)",
-            }
+        sf_dir = corpus(spark, args.corpus)
+        results = skew_ratios(spark, sf_dir, args.work)
     finally:
-        shutil.rmtree(skew_dir, ignore_errors=True)
-    print(json.dumps(results))
+        spark.stop()
+    write_json(
+        args.out,
+        {
+            "metric": "skew_ratios",
+            "sf_dir": sf_dir,
+            "cores": cores,
+            "runs": RUNS,
+            **results,
+        },
+    )
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
