@@ -9,9 +9,13 @@ run ``local[N]``. Every knob below is motivated by the 100 TB target:
   /root/reference/pipeline/cosmoz_process_levels.py:739-744).
 - ``spark.sql.session.timeZone=UTC``: the reference computes entirely
   in UTC (/root/reference/pipeline/cosmoz_process_levels.py:44).
-- nanos-as-long: the driver test parquet stores TIMESTAMP(NANOS)
-  which Spark's vectorized reader rejects; we read the raw int64 and
-  convert explicitly (sources/tables.py).
+- nanos-as-long: Spark's parquet reader rejects a TIMESTAMP(NANOS)
+  column unless it may read it as the raw int64, which the loader
+  converts explicitly (sources/tables.py). The test corpora store
+  ``timestamp[us]``; the conf is for NANOS parquet from other writers.
+- a generated-class cache that holds the level chain's working set
+  (``CODEGEN_CACHE_ENTRIES``), so a warm process compiles each class
+  once, and no per-Column call-site capture in PySpark.
 - a fork-free ``file:`` filesystem (``jvm/``): pip-installed PySpark
   ships no ``libhadoop``, so Hadoop's local filesystem starts a
   ``chmod`` process for every file and directory it creates and a
@@ -32,6 +36,22 @@ APP_NAME = "cosmoz-data-pipeline-spark"
 
 # Built from the sources beside it (README, "Local filesystem").
 LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "cosmoz-localfs.jar")
+
+# Entries of Spark's generated-class cache
+# (``spark.sql.codegen.cache.maxEntries``, a static conf; Spark's
+# default is 100). The cache is LRU, and a working set larger than it
+# evicts each class before its next use, so every repeat recompiles.
+# Measured on a 4-core host: the first ``process_levels`` backfill of
+# sf0.001 compiles 117-119 classes; with 100 entries every later
+# backfill in the process recompiled 68-86 of them (0.5-0.7 s of
+# Janino plus the JIT work on each fresh class), while with 200, 400
+# or 1000 a repeat compiles 0-4 (codegen stages that AQE numbers
+# differently from run to run). 1000 is the smallest of these
+# that also holds ``bench.py``'s repeats at sf0.1: its three passes over
+# the registry touch 659 distinct classes, and passes 2 and 3
+# recompiled 862-867 classes each with 100 entries, 622-627 with 400
+# and 20-22 with 1000. Timings are in README "Session".
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -124,6 +144,13 @@ def build_session(
         # foreign INT96 files)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # no per-Column call-site capture: PySpark wraps every Column
+        # call in ~6 py4j round trips to record the Python frame for
+        # SQL error contexts (264 calls per run_pipeline). An analysis
+        # error still names the missing column; it loses only the
+        # Python line that built the failing Column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.driver.extraClassPath", LOCALFS_JAR)
@@ -159,7 +186,10 @@ def harden_session(spark: SparkSession) -> SparkSession:
 
     The correctness driver builds its own SparkSession; these confs
     are all runtime-settable and required for deterministic,
-    oracle-comparable results.
+    oracle-comparable results. ``build_session``'s static confs cannot
+    reach a live session: an externally built one keeps Spark's
+    100-entry codegen cache (so a warm process recompiles the level
+    chain's classes) and PySpark's per-Column call-site capture.
     """
     for key, value in _runtime_confs():
         try:

@@ -5,11 +5,14 @@ Reference analog: projected+predicated InfluxQL scans
 plain ``spark.read.parquet`` whose filters/projections Catalyst pushes
 into the columnar scan (PushedFilters / ReadSchema in .explain()).
 
-One wrinkle: the driver-generated parquet stores ``events.ts`` as
-INT64 TIMESTAMP(NANOS), which Spark's parquet reader only accepts with
+One wrinkle: an ``events.ts`` stored as INT64 TIMESTAMP(NANOS) is
+accepted by Spark's parquet reader only with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` (returns the raw int64).
 We convert nanos → TIMESTAMP_NTZ(micros) explicitly, matching DuckDB's
-truncating nanos→micros cast so both engines see identical values.
+truncating nanos→micros cast so both engines see identical values. The
+test corpora store ``timestamp[us]``, which skips the conversion; the
+branch is for NANOS parquet from other writers
+(tests/test_oracle_parity.py writes one).
 """
 
 from __future__ import annotations
@@ -19,8 +22,8 @@ from pyspark.sql import functions as F
 
 from ..session import scale_shuffle_partitions
 
-# columns stored as TIMESTAMP(NANOS) in the test corpus → arrive as
-# int64 under nanosAsLong and need explicit conversion
+# columns that, when stored as TIMESTAMP(NANOS), arrive as int64 under
+# nanosAsLong and need explicit conversion
 _NANOS_COLS = {"events": ("ts",)}
 
 

@@ -83,10 +83,9 @@ def test_unrecorded_tail_matches_oracle(spark, sf_dir, duck, name):
 def test_entry_queries_harden_an_unhardened_session(spark, sf_dir, duck):
     """``load_table`` leaves the session's confs alone; each wrapper
     that ``__spark_entry__.queries()`` returns hardens the caller's
-    session. With the parquet-nanos and time-zone confs unset
-    (events.ts is stored as TIMESTAMP(NANOS)), an events-reading query
-    run through its wrapper sets both again and still matches its
-    oracle.
+    session. With the parquet-nanos and time-zone confs unset, an
+    events-reading query run through its wrapper sets both again and
+    still matches its oracle.
 
     What this pins is the wrapper's conf hardening: the conf assertion
     is the one that fails if the wrapper stops hardening. The oracle
@@ -108,3 +107,36 @@ def test_entry_queries_harden_an_unhardened_session(spark, sf_dir, duck):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_nanos_events_match_oracle(spark, tmp_path):
+    """An ``events`` table whose ``ts`` is stored as TIMESTAMP(NANOS)
+    (the test corpora store µs; other writers store ns) goes through the
+    loader's raw-int64 branch and matches DuckDB, which truncates ns to
+    µs toward zero: -1 ns reads as the epoch, -1,000,001 ns as 1 ms
+    before it, so neither shifts its group's minimum or hour."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [-1, 0, 1_500, 1_614_000_000_123_456_789, -1_000_001, 3_600_000_000_001]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(ns)), pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([1, 1, 2, 2, 3, 3], pa.int64()),
+            "event_type": ["a", "a", "b", "b", "c", "c"],
+            "value": [1.0] * len(ns),
+            "props": [""] * len(ns),
+        }),
+        tmp_path / "events.parquet",
+    )
+    unit = pq.ParquetFile(tmp_path / "events.parquet").schema.column(1).logical_type
+    assert "nanoseconds" in str(unit)
+
+    name = "a04_minmax_time_per_key"
+    ok, msg = compare(
+        REGISTRY[name].run(spark, str(tmp_path)),
+        REGISTRY[name].oracle,
+        duckdb_connection(str(tmp_path)),
+    )
+    assert ok, f"{name}: {msg}"

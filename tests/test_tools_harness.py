@@ -42,6 +42,9 @@ def test_probe_level4_prefixes_leave_the_corpus_alone(sf_dir, tmp_path):
     assert all(v["t"] > 0 for v in prefixes.values())
     tasks = [v["tasks"] for v in prefixes.values()]
     assert tasks[0] > 0 and tasks == sorted(tasks), tasks
+    # one count per run; the first run of a fresh JVM compiles classes
+    assert all(len(v["codegen_compiles"]) == 1 for v in prefixes.values())
+    assert prefixes["level1"]["codegen_compiles"][0] > 0
     assert (sorted(os.listdir(root)), profile.listing(None, sf_dir)) == before
 
 
@@ -73,6 +76,7 @@ def test_ab_pins_identity(tmp_path):
     assert rec["identity"]["match"] and rec["identity"]["A"][0] == 200
     assert [r["first"] for r in rec["runs"]] == ["A", "B"]
     assert all(r[k]["t"] > 0 and r[k]["tasks"] > 0 for r in rec["runs"] for k in "AB")
+    assert all(r[k]["codegen_compiles"] >= 0 for r in rec["runs"] for k in "AB")
     assert got["dropped"] is not None and "(200," in got["dropped"]
 
 

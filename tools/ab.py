@@ -11,7 +11,8 @@ checkpoints. Both arms are first fingerprinted (row count and
 ``bit_xor(xxhash64(*))``); a mismatch raises ``IdentityError``. Then
 ``--repeats`` pairs run cold, each arm built and forced by a noop
 write inside its span, and the first arm alternates from pair to pair.
-Per-run tasks and run bytes come from the event log (``probe.py``).
+Per-run tasks and run bytes come from the event log, and each run's
+``codegen_compiles`` from the JVM's codegen metrics (``probe.py``).
 CORPUS is as in ``probe.py``.
 
 ``ref`` times the registry with the code at a git ref (A, checked out
@@ -39,7 +40,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from perfbench.tracing import Tracer  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from tools.probe import Counters, cold, corpus, noop, raw_sink, session, write_json  # noqa: E402
+from tools.probe import (  # noqa: E402
+    Counters,
+    codegen_compiles,
+    cold,
+    corpus,
+    noop,
+    raw_sink,
+    session,
+    write_json,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"  # bench.py's corpus
@@ -113,7 +123,8 @@ ARMS = {
 
 def interleave(spark, arms: dict, repeats: int) -> tuple[dict, list[dict]]:
     """Identity of both arms, then ``repeats`` cold pairs: per pair,
-    each arm's timed span, the first arm alternating."""
+    each arm's timed span and classes compiled, the first arm
+    alternating."""
     ident = {}
     for k, fn in arms.items():
         cold(spark)
@@ -126,9 +137,11 @@ def interleave(spark, arms: dict, repeats: int) -> tuple[dict, list[dict]]:
         order = ["A", "B"] if i % 2 == 0 else ["B", "A"]
         pair = {"first": order[0]}
         for k in order:
+            compiles = codegen_compiles(spark)
             with tr.span(k):
                 noop(arms[k]())
             pair[k] = tr.spans[-1]
+            pair[f"{k}_compiles"] = codegen_compiles(spark) - compiles
             cold(spark)
         pairs.append(pair)
         print(f"pair {i + 1}/{repeats}: A {pair['A'].dur:.2f}s  B {pair['B'].dur:.2f}s", flush=True)
@@ -137,7 +150,17 @@ def interleave(spark, arms: dict, repeats: int) -> tuple[dict, list[dict]]:
 
 def summarize(ident: dict, pairs: list[dict], log: Counters) -> dict:
     runs = [
-        {"first": p["first"], **{k: {"t": round(p[k].dur, 3), **log.over([p[k]])} for k in "AB"}}
+        {
+            "first": p["first"],
+            **{
+                k: {
+                    "t": round(p[k].dur, 3),
+                    "codegen_compiles": p[f"{k}_compiles"],
+                    **log.over([p[k]]),
+                }
+                for k in "AB"
+            },
+        }
         for p in pairs
     ]
     t = {k: [r[k]["t"] for r in runs] for k in "AB"}
@@ -171,7 +194,8 @@ def shapes(args) -> dict:
         "cores": cores,
         "policy": f"identity first, then {args.repeats} interleaved cold pairs, "
         "first arm alternating; each arm built and noop-forced inside its "
-        "span; tasks and run_bytes from the event log",
+        "span; tasks and run_bytes from the event log; codegen_compiles "
+        "per run from the JVM's codegen metrics",
         **summarize(ident, pairs, Counters(log_dir)),
     }
 

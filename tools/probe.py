@@ -15,6 +15,8 @@ forced through a noop write inside it. ``None`` means the step has
 already run (a write, a stream, a builder with eager work), so its
 whole call is timed. ``t`` is the best run; ``tasks``, ``stages`` and
 ``run_bytes`` are the event-log totals over that run's timed spans.
+``codegen_compiles`` lists, per run, the classes Spark's code generator
+compiled during it.
 Stage cost is the difference of adjacent prefixes, which
 over-attributes work Spark fuses into a shared scan to the earlier
 step.
@@ -132,6 +134,15 @@ class Counters(EventLog):
                 "disk_spill_bytes": split["disk_spill_bytes"],
             },
         }
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far
+    (the count of ``CodegenMetrics``' compile-time histogram). Its
+    difference across a run is the run's compile churn: classes the
+    codegen cache did not hold."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def corpus(spark, arg: str) -> str:
@@ -296,11 +307,12 @@ STEPS = {
 }
 
 
-def run_prefix(r: Run, tr: Tracer, steps) -> tuple[list, float]:
+def run_prefix(r: Run, tr: Tracer, steps) -> tuple[list, float, int]:
     """Run ``steps`` cold. Returns the spans that count toward the
-    prefix time and the seconds spent building DataFrames."""
+    prefix time, the seconds spent building DataFrames and the classes
+    compiled."""
     cold(r.spark)
-    timed, build_s = [], 0.0
+    timed, build_s, compiles = [], 0.0, codegen_compiles(r.spark)
     for _name, fn in steps:
         with tr.span("call"):
             out = fn(r)
@@ -312,17 +324,17 @@ def run_prefix(r: Run, tr: Tracer, steps) -> tuple[list, float]:
         with tr.span("force"):
             noop(out)
         timed.append(tr.spans[-1])
-    return timed, build_s
+    return timed, build_s, codegen_compiles(r.spark) - compiles
 
 
 def probe(spark, target: str, sf_dir: str, work: str, runs: int):
     """Per prefix, in order, ``runs`` back-to-back runs: each run's
-    (timed spans, build seconds)."""
+    (timed spans, build seconds, classes compiled)."""
     steps, tr = STEPS[target], Tracer(target)
     got = {}
     for k, (name, _) in enumerate(steps, 1):
         got[name] = [run_prefix(Run(spark, sf_dir, work), tr, steps[:k]) for _ in range(runs)]
-        ts = [f"{sum(s.dur for s in spans):.2f}s" for spans, _ in got[name]]
+        ts = [f"{sum(s.dur for s in spans):.2f}s" for spans, _, _ in got[name]]
         print(f"{name:12s} {' '.join(ts)}", flush=True)
     cold(spark)
     return got
@@ -331,13 +343,14 @@ def probe(spark, target: str, sf_dir: str, work: str, runs: int):
 def report(got: dict, log: Counters) -> dict:
     out, prev = {}, 0.0
     for name, rs in got.items():
-        ts = [round(sum(s.dur for s in spans), 3) for spans, _ in rs]
+        ts = [round(sum(s.dur for s in spans), 3) for spans, _, _ in rs]
         best = min(range(len(rs)), key=ts.__getitem__)
         out[name] = {
             "t": ts[best],
             "t_runs": ts,
             "marginal_t": round(ts[best] - prev, 3),
             "build_s": round(rs[best][1], 3),
+            "codegen_compiles": [c for _, _, c in rs],
             **log.over(rs[best][0]),
         }
         prev = ts[best]
@@ -371,7 +384,7 @@ def main() -> int:
             "policy": "cold cumulative prefixes; t = best run's timed spans "
             "(DataFrames forced by a noop write, build outside the timer, "
             "eager steps timed whole); tasks, stages and run_bytes from the "
-            "event log over that run's timed spans",
+            "event log over that run's timed spans; codegen_compiles per run",
             "prefixes": report(got, Counters(log_dir)),
         },
     )
