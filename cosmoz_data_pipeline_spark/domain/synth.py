@@ -196,8 +196,10 @@ def load_domain(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     The same CTE bodies the oracle embeds are executed by Spark SQL, so
     both engines derive identical inputs from the shared parquet. Each
     body reads the frames it names bound as ``spark.sql`` arguments, so
-    ``raw_base`` is built once and shared, and no temp view of the
-    caller's session is created or replaced.
+    ``raw_base`` is built once and shared, and no view name of the
+    caller's is created or replaced. (PySpark binds each frame as a
+    ``_pyspark_<uuid>`` temp view for the length of the ``spark.sql``
+    call and drops it after; ``pyspark/sql/sql_formatter.py``.)
     """
     frames = {name: load_table(spark, sf_dir, name) for name in ("events", "nation")}
     for name, sql in DOMAIN_CTES:

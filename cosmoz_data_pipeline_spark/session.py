@@ -105,6 +105,14 @@ def _runtime_confs() -> tuple[tuple[str, str], ...]:
         # far exceed these floors, so the settings are inert there
         ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb"),
         ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4mb"),
+        # let AQE coalesce the plans that persist() caches, as it does
+        # every other shuffle. Spark's default (false) keeps a cached
+        # frame at spark.sql.shuffle.partitions partitions, and every
+        # stage that builds or reads it runs that many tasks: a warm
+        # process_levels backfill of the perfbench cron corpus ran 105
+        # tasks with it off and 28 with it on (README "Session").
+        # Partitioning only, never rows.
+        ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
         # split small file scans into >= core-count partitions (a
         # scan-time split, NOT a shuffle): a 1-file dimension read
         # otherwise serializes fan-out stages (explode) behind 1 task.

@@ -15,6 +15,8 @@ from cosmoz_data_pipeline_spark.cli import (
     process_levels,
     read_level,
 )
+from cosmoz_data_pipeline_spark.domain import levels
+from cosmoz_data_pipeline_spark.domain.synth import load_domain
 from tools.probe import codegen_compiles
 
 SF01 = "/root/testdata/sf0.01"
@@ -83,6 +85,34 @@ def test_repeat_backfill_compiles_nothing_new(repeat_backfills):
     differently from run to run (~4 classes). With Spark's 100-entry
     default, every repeat recompiled ~70 of the ~117."""
     assert all(n < 0.1 * COLD_BACKFILL_COMPILES for n in repeat_backfills[1:]), repeat_backfills
+
+
+def test_cached_levels_are_coalesced(spark, sf_dir):
+    """AQE sizes the plans ``process_levels`` persists, as it does every
+    other shuffle: each cached level holds fewer partitions than
+    ``spark.sql.shuffle.partitions``. With Spark's default
+    (``canChangeCachedPlanOutputPartitioning=false``) every cached
+    level kept all of them, and every stage reading it ran one task
+    per partition."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext._jsc.sc()
+    before = {info.id() for info in sc.getRDDStorageInfo()}
+    d = load_domain(spark, sf_dir)
+    out = levels.run_pipeline(d["raw_values"], d["intensity"], d["silo_data"], d["all_stations"])
+    persisted = [out[name].persist() for name in LEVELS[:-1]]
+    try:
+        out["level4"].write.format("noop").mode("overwrite").save()
+        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        cached = [
+            (info.numPartitions(), info.numCachedPartitions())
+            for info in sc.getRDDStorageInfo()
+            if info.id() not in before
+        ]
+    finally:
+        for df in persisted:
+            df.unpersist()
+    assert len(cached) == len(persisted), cached
+    assert all(parts < shuffle for parts, _ in cached), (shuffle, cached)
 
 
 def test_resolve_since_timestamp_wins():
